@@ -20,6 +20,9 @@ DuckDB can reproduce signatures exactly.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -27,6 +30,29 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_weather_spark.functions.text import doc_fingerprint
+
+
+@contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """Cache ``df`` for the duration of one operator call — the
+    engine's only persist.
+
+    On entry the frame is persisted and eagerly counted: the count is a
+    materialization barrier, so consumer stages that AQE schedules
+    concurrently read the cache instead of each re-running the frame's
+    plan (without it the candidate generator ran once per consumer:
+    3× the minhash pipeline, +8 s on winnow at sf0.1). On exit — normal or by exception — the cache is released, so
+    no CacheManager entry outlives the call and none can silently serve
+    another query whose plan canonicalizes identically. Whatever the
+    block returns must therefore not read the cache lazily: end it with
+    an eager ``localCheckpoint`` or a driver collect.
+    """
+    cached = df.persist()
+    try:
+        cached.count()
+        yield cached
+    finally:
+        cached.unpersist()
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -877,55 +903,60 @@ def verify_candidates_jaccard(
     before any pair join, so the expensive exact comparison touches
     |candidate docs| ≪ corpus; the corpus-wide self-join of
     :func:`ngram_jaccard_pairs` never happens here. The candidate
-    pairs and the pruned shingle table are persisted AND eagerly
-    materialized (the count() calls): both have multiple consumers in
-    this plan, and a lazy persist lets AQE schedule those consumer
-    stages concurrently — each races to compute the not-yet-cached
-    candidate generator, re-running it per consumer (measured 3× the
-    minhash pipeline / +8s on winnow at sf0.1). The eager counts are
-    deliberate materialization barriers, the same pattern as an
-    iterative algorithm's per-round action. Both tables are
-    candidate-sized, not corpus-sized, so MEMORY_AND_DISK is safe at
-    scale.
-
-    Round 11: the verified (narrow) result is eagerly checkpointed and
-    BOTH caches are unpersisted before returning — the r9-r10 form left
-    them pinned in the CacheManager forever, which both leaked and
-    silently served other queries whose candidate plans canonicalize
-    identically (cross-query result caching; see OPTIMIZATION_r11.md).
+    pairs and the pruned shingle table both have several consumers in
+    this plan, so each is held by :func:`persisted` (eager count, then
+    unpersist on return); both are candidate-sized, not corpus-sized,
+    so MEMORY_AND_DISK is safe at scale. The verified (narrow) result
+    is eagerly checkpointed before the caches are released.
     """
-    pairs = cand.select("id_a", "id_b").persist()
-    pairs.count()
-    cand_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .union(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
+    jaccard = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+    return _verify_candidates(
+        docs, cand, text_col=text_col, id_col=id_col, shingle_n=shingle_n,
+        score=lambda sized: sized.select("id_a", "id_b", jaccard.alias("jaccard"))
+        .filter(F.col("jaccard") >= min_jaccard),
     )
-    sh = exploded_shingles(
-        docs.join(cand_ids, id_col, "left_semi"),
-        text_col=text_col, keep_cols=[id_col], n=shingle_n,
-    ).persist()
-    sh.count()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        pairs.join(sh.select(F.col(id_col).alias("id_a"), "sh"), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"), "sh"), ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    out = (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .select(
-            "id_a", "id_b",
-            (F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))).alias("jaccard"),
+
+
+def _verify_candidates(
+    docs: DataFrame,
+    cand: DataFrame,
+    *,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+    score: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Shared verify skeleton of :func:`verify_candidates_jaccard` and
+    :func:`verify_candidates_containment`: exact shingle intersections
+    for the candidate pairs, as (id_b, id_a, n_inter, n_a, n_b), handed
+    to ``score`` (the measure + threshold filter); its result is the
+    eagerly checkpointed output, so both caches are released on return."""
+    with persisted(cand.select("id_a", "id_b")) as pairs:
+        cand_ids = (
+            pairs.select(F.col("id_a").alias(id_col))
+            .union(pairs.select(F.col("id_b").alias(id_col)))
+            .distinct()
         )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .localCheckpoint(eager=True)
-    )
-    pairs.unpersist()
-    sh.unpersist()
-    return out
+        shingled = exploded_shingles(
+            docs.join(cand_ids, id_col, "left_semi"),
+            text_col=text_col, keep_cols=[id_col], n=shingle_n,
+        )
+        with persisted(shingled) as sh:
+            sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+            inter = (
+                pairs.join(sh.select(F.col(id_col).alias("id_a"), "sh"), "id_a")
+                .join(sh.select(F.col(id_col).alias("id_b"), "sh"), ["id_b", "sh"])
+                .groupBy("id_a", "id_b")
+                .agg(F.count(F.lit(1)).alias("n_inter"))
+            )
+            sized = inter.join(
+                sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")),
+                "id_a",
+            ).join(
+                sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")),
+                "id_b",
+            )
+            return score(sized).localCheckpoint(eager=True)
 
 
 def verify_pairs_jaccard_inline(
@@ -1109,40 +1140,43 @@ def prefix_filter_candidates(
     join (completeness asserted against ``ngram_jaccard_pairs`` in
     tests and by the shared oracle of queries.prefix_filter_jaccard).
 
-    The per-doc distinct shingle ARRAYS are persisted for the duration
-    of the operator call ONLY (persist → eager count → build + eagerly
-    checkpoint the NARROW candidate pairs → unpersist): the candidate
-    machinery reads this relation several times within one execution,
-    and with every cache correctly released (round 11 closed the
-    CacheManager leaks that silently served this family cross-query),
-    the honest interleaved A/B is decisive — prefix_filter_jaccard
-    4.91 s with the intra-call fence vs 18.2 s unfenced,
-    lsh_recall_audit 5.94 s vs 17.7 s (min-of-3, leak-free session).
-    Nothing outlives the call: the checkpointed candidate LEAF is the
-    only thing downstream consumers see. The ``size()``-on-array
-    improvement from r10 (vs the old explode→groupBy(sizes)→join size
-    shuffle) is kept.
+    The per-doc distinct shingle ARRAYS are cached for the duration of
+    the operator call ONLY (:func:`persisted`), and the NARROW candidate
+    pairs are eagerly checkpointed before the cache is released: the
+    candidate machinery reads this relation several times within one
+    execution, and with every cache correctly released the honest
+    interleaved A/B is decisive — prefix_filter_jaccard 4.91 s with the
+    intra-call fence vs 18.2 s unfenced, lsh_recall_audit 5.94 s vs
+    17.7 s (min-of-3, leak-free session). Nothing outlives the call:
+    the checkpointed candidate LEAF is the only thing downstream
+    consumers see. The ``size()``-on-array improvement from r10 (vs the
+    old explode→groupBy(sizes)→join size shuffle) is kept.
     """
+    with persisted(_shingle_sets(docs, text_col, id_col, shingle_n)) as shsets:
+        sh = shsets.select(id_col, "n_sh", F.explode("__sh_arr").alias("sh"))
+        return _candidates_from_sized_shingles(
+            sh, id_col=id_col, t=min_jaccard
+        ).localCheckpoint(eager=True)
+
+
+def _shingle_sets(
+    docs: DataFrame, text_col: str, id_col: str, shingle_n: int
+) -> DataFrame:
+    """(id, __sh_arr, n_sh): each doc's DISTINCT shingle array and its
+    size — the relation the prefix-filter operators cache per call.
+    Tokens are bound in their OWN projection first: passing the
+    tokens() expression straight into the shingle lambda would
+    re-evaluate the regex+split per element (the CollapseProject
+    inlining trap, see :func:`shingles`)."""
     toked = widen_narrow_input(docs, id_col).select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     )
-    shsets = (
-        toked.select(
-            F.col(id_col),
-            F.array_distinct(
-                shingles_of_tokens(F.col("__toks"), shingle_n)
-            ).alias("__sh_arr"),
-        )
-        .withColumn("n_sh", F.size("__sh_arr"))
-        .persist()
-    )
-    shsets.count()
-    sh = shsets.select(id_col, "n_sh", F.explode("__sh_arr").alias("sh"))
-    cand = _candidates_from_sized_shingles(
-        sh, id_col=id_col, t=min_jaccard
-    ).localCheckpoint(eager=True)
-    shsets.unpersist()
-    return cand
+    return toked.select(
+        F.col(id_col),
+        F.array_distinct(
+            shingles_of_tokens(F.col("__toks"), shingle_n)
+        ).alias("__sh_arr"),
+    ).withColumn("n_sh", F.size("__sh_arr"))
 
 
 def _candidates_from_sized_shingles(
@@ -1227,76 +1261,50 @@ def pruned_jaccard_pairs(
     """
     if min_jaccard <= 0:
         raise ValueError("pruned_jaccard_pairs requires min_jaccard > 0")
-    # One persisted table carries ALL the expensive text work: per-doc
+    # One cached table carries ALL the expensive text work: per-doc
     # DISTINCT shingle arrays. The prefix index, document frequencies,
     # and the verify stage all derive from it, so tokenization runs
     # once and the eager count is the single materialization barrier
     # (same AQE-race rationale as verify_candidates_jaccard, one
-    # barrier instead of two). Tokens are bound in their OWN projection
-    # first — passing the tokens() expression straight into the shingle
-    # lambda would re-evaluate the regex+split per element (the
-    # CollapseProject inlining trap, see :func:`shingles`).
-    toked = widen_narrow_input(docs, id_col).select(
-        F.col(id_col), tokens(F.col(text_col)).alias("__toks")
-    )
-    shsets = (
-        toked.select(
-            F.col(id_col),
-            F.array_distinct(
-                shingles_of_tokens(F.col("__toks"), shingle_n)
-            ).alias("__sh_arr"),
+    # barrier instead of two).
+    with persisted(_shingle_sets(docs, text_col, id_col, shingle_n)) as shsets:
+        sh = shsets.select(id_col, "n_sh", F.explode("__sh_arr").alias("sh"))
+        cand = _candidates_from_sized_shingles(sh, id_col=id_col, t=min_jaccard)
+        # verify: per-pair exact intersection over the cached shingle
+        # ARRAYS (JVM array_intersect), not a re-exploded shingle join —
+        # the join moves |cand| rows with two array payloads instead of
+        # |cand|×|shingles| slim rows. AQE broadcasts the shsets side
+        # while it is small and falls back to a keyed shuffle join when
+        # it is corpus-sized — exactly the scale behaviour wanted, so no
+        # hint.
+        sa = shsets.select(
+            F.col(id_col).alias("id_a"),
+            F.col("__sh_arr").alias("__a"),
+            F.col("n_sh").alias("n_a"),
         )
-        .withColumn("n_sh", F.size("__sh_arr"))
-        .persist()
-    )
-    shsets.count()
-    sh = shsets.select(id_col, "n_sh", F.explode("__sh_arr").alias("sh"))
-    cand = _candidates_from_sized_shingles(sh, id_col=id_col, t=min_jaccard)
-    # verify: per-pair exact intersection over the cached shingle ARRAYS
-    # (JVM array_intersect), not a re-exploded shingle join — the join
-    # moves |cand| rows with two array payloads instead of
-    # |cand|×|shingles| slim rows. AQE broadcasts the shsets side while
-    # it is small and falls back to a keyed shuffle join when it is
-    # corpus-sized — exactly the scale behaviour wanted, so no hint.
-    sa = shsets.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__sh_arr").alias("__a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    sb = shsets.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__sh_arr").alias("__b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    counted = cand.join(sa, "id_a").join(sb, "id_b").select(
-        "id_a", "id_b",
-        F.size(F.array_intersect("__a", "__b")).alias("__ni"),
-        "n_a", "n_b",
-    )
-    # aggregate fence against predicate-pushdown re-inlining (see
-    # verify_pairs_jaccard_inline's load-bearing-fence comment)
-    fenced = counted.groupBy("id_a", "id_b").agg(
-        F.max("__ni").alias("__ni"),
-        F.max("n_a").alias("n_a"),
-        F.max("n_b").alias("n_b"),
-    )
-    out = (
-        fenced.select(
+        sb = shsets.select(
+            F.col(id_col).alias("id_b"),
+            F.col("__sh_arr").alias("__b"),
+            F.col("n_sh").alias("n_b"),
+        )
+        counted = cand.join(sa, "id_a").join(sb, "id_b").select(
             "id_a", "id_b",
-            (
-                F.col("__ni") / (F.col("n_a") + F.col("n_b") - F.col("__ni"))
-            ).alias("jaccard"),
+            F.size(F.array_intersect("__a", "__b")).alias("__ni"),
+            "n_a", "n_b",
         )
-        .filter(F.col("jaccard") >= min_jaccard)
-        # round 11: materialize the narrow verified pairs and release
-        # the shingle cache — the unbalanced persist pinned one
-        # CacheManager relation per invocation AND silently served every
-        # other query whose (docs, n, t) canonicalize identically
-        # (cross-query result caching; see OPTIMIZATION_r11.md)
-        .localCheckpoint(eager=True)
-    )
-    shsets.unpersist()
-    return out
+        # aggregate fence against predicate-pushdown re-inlining (see
+        # verify_pairs_jaccard_inline's load-bearing-fence comment)
+        fenced = counted.groupBy("id_a", "id_b").agg(
+            F.max("__ni").alias("__ni"),
+            F.max("n_a").alias("n_a"),
+            F.max("n_b").alias("n_b"),
+        )
+        jaccard = F.col("__ni") / (F.col("n_a") + F.col("n_b") - F.col("__ni"))
+        return (
+            fenced.select("id_a", "id_b", jaccard.alias("jaccard"))
+            .filter(F.col("jaccard") >= min_jaccard)
+            .localCheckpoint(eager=True)
+        )
 
 
 _WB = np.uint64(1000003)  # polynomial base; uint64 wraparound = mod 2^64
@@ -1391,14 +1399,9 @@ def winnow_candidates(
     window: int = 4,
     min_shared: int = 5,
     max_doc_freq: int | None = 100,
-    persist_fps: bool = False,
 ) -> DataFrame:
     """Near-dup candidate pairs: docs sharing ≥ ``min_shared`` winnowed
     fingerprints, with the shared count.
-
-    ``persist_fps`` caches the fingerprint table across actions; the
-    plan itself consumes it exactly once, so this only matters when the
-    caller re-runs the query (leave False by default).
 
     Scale: the fingerprint table — ~2/(window+1) the size of a full
     shingle table — is shuffled ONCE, keyed by fingerprint, into a
@@ -1418,8 +1421,6 @@ def winnow_candidates(
     fps = winnow_fingerprints(
         docs, text_col=text_col, id_col=id_col, k=k, window=window
     )
-    if persist_fps:
-        fps = fps.persist()
     posting = fps.groupBy("fp").agg(F.collect_list(id_col).alias("ids"))
     posting = posting.filter(F.size("ids") >= 2)
     if max_doc_freq is not None:
@@ -1449,7 +1450,7 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    local_threshold: int | None = None,
+    local_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Connected components over an undirected pair graph:
     (node, cluster_id) with cluster_id = min node id in the component.
@@ -1482,47 +1483,42 @@ def connected_components(
     """
     # decide the path on the raw pair count BEFORE building the doubled
     # edge set: the union+distinct shuffle only pays off for the
-    # distributed iteration; the local path union-finds the pairs as-is.
-    # SPARK_GRAFT_CC_LOCAL_THRESHOLD overrides the default (0 forces the
-    # distributed path — used by scale benches to exercise it).
-    if local_threshold is None:
-        import os
+    # distributed iteration; the local path union-finds the pairs as-is
+    # (0 forces the distributed path).
+    with persisted(pairs.select(id_a, id_b)) as cached:
+        if local_threshold > 0 and cached.count() * 2 <= local_threshold:
+            collected = [(r[0], r[1]) for r in cached.collect()]
+        else:
+            # the cache serves the eager edge checkpoint; the returned
+            # node list re-reads ``pairs`` lazily once it is released
+            return cc_large_small_star(
+                cached, id_a=id_a, id_b=id_b, max_iter=max_iter
+            )
+    parent: dict = {}
 
-        local_threshold = int(
-            os.environ.get("SPARK_GRAFT_CC_LOCAL_THRESHOLD", 1_000_000)
-        )
-    pairs = pairs.select(id_a, id_b).persist()
-    if local_threshold > 0 and pairs.count() * 2 <= local_threshold:
-        collected = [(r[0], r[1]) for r in pairs.collect()]
-        pairs.unpersist()
-        parent: dict = {}
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
 
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for a, b in collected:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        nodes = {v for e in collected for v in e}
-        rows = [(n, find(n)) for n in sorted(nodes)]
-        spark = pairs.sparkSession
-        schema = T.StructType(
-            [
-                T.StructField("node", pairs.schema[id_a].dataType, False),
-                T.StructField("cluster_id", pairs.schema[id_a].dataType, False),
-            ]
-        )
-        return spark.createDataFrame(rows, schema)
-    result = cc_large_small_star(pairs, id_a=id_a, id_b=id_b, max_iter=max_iter)
-    pairs.unpersist()
-    return result
+    for a, b in collected:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    nodes = {v for e in collected for v in e}
+    rows = [(n, find(n)) for n in sorted(nodes)]
+    spark = pairs.sparkSession
+    schema = T.StructType(
+        [
+            T.StructField("node", pairs.schema[id_a].dataType, False),
+            T.StructField("cluster_id", pairs.schema[id_a].dataType, False),
+        ]
+    )
+    return spark.createDataFrame(rows, schema)
 
 
 def cc_large_small_star(
@@ -1889,57 +1885,41 @@ def containment_candidates(
     queries.containment_pairs' oracle (the naive shares-any-shingle
     SQL) matching at every SF.
     """
-    # per-doc distinct shingle arrays persisted for the duration of
-    # THIS call only (persist → count → eager candidate checkpoint →
-    # unpersist) — see prefix_filter_candidates for the leak-free A/B
+    # per-doc distinct shingle arrays cached for the duration of THIS
+    # call only — see prefix_filter_candidates for the leak-free A/B
     # evidence (intra-call fence 3.7x faster than unfenced once the
     # accidental cross-query caches were closed)
-    toked = widen_narrow_input(docs, id_col).select(
-        F.col(id_col), tokens(F.col(text_col)).alias("__toks")
-    )
-    shsets = (
-        toked.select(
-            F.col(id_col),
-            F.array_distinct(
-                shingles_of_tokens(F.col("__toks"), shingle_n)
-            ).alias("__sh_arr"),
-        )
-        .withColumn("n_sh", F.size("__sh_arr"))
-        .persist()
-    )
-    shsets.count()
-    sized = shsets.select(id_col, "n_sh", F.explode("__sh_arr").alias("sh"))
-    dfreq = sized.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     from pyspark.sql import Window
 
     w = Window.partitionBy(id_col).orderBy("df", "sh")
     t = float(min_containment)
-    prefix = (
-        sized.join(dfreq, "sh")
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(
-            F.col("rnk") <= F.col("n_sh") - F.ceil(F.lit(t) * F.col("n_sh")) + 1
+    with persisted(_shingle_sets(docs, text_col, id_col, shingle_n)) as shsets:
+        sized = shsets.select(id_col, "n_sh", F.explode("__sh_arr").alias("sh"))
+        dfreq = sized.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
+        prefix = (
+            sized.join(dfreq, "sh")
+            .withColumn("rnk", F.row_number().over(w))
+            .filter(
+                F.col("rnk") <= F.col("n_sh") - F.ceil(F.lit(t) * F.col("n_sh")) + 1
+            )
+            .select(F.col(id_col).alias("id_p"), "sh", F.col("n_sh").alias("n_p"))
         )
-        .select(F.col(id_col).alias("id_p"), "sh", F.col("n_sh").alias("n_p"))
-    )
-    index = sized.select(
-        F.col(id_col).alias("id_f"), "sh", F.col("n_sh").alias("n_f")
-    )
-    cand = (
-        prefix.join(index, "sh")
-        .filter(
-            (F.col("n_p") < F.col("n_f"))
-            | ((F.col("n_p") == F.col("n_f")) & (F.col("id_p") < F.col("id_f")))
+        index = sized.select(
+            F.col(id_col).alias("id_f"), "sh", F.col("n_sh").alias("n_f")
         )
-        .select(
-            F.least("id_p", "id_f").alias("id_a"),
-            F.greatest("id_p", "id_f").alias("id_b"),
+        return (
+            prefix.join(index, "sh")
+            .filter(
+                (F.col("n_p") < F.col("n_f"))
+                | ((F.col("n_p") == F.col("n_f")) & (F.col("id_p") < F.col("id_f")))
+            )
+            .select(
+                F.least("id_p", "id_f").alias("id_a"),
+                F.greatest("id_p", "id_f").alias("id_b"),
+            )
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    shsets.unpersist()
-    return cand
 
 
 def verify_candidates_containment(
@@ -1953,44 +1933,11 @@ def verify_candidates_containment(
 ) -> DataFrame:
     """Exact min-side containment for the candidate pairs only:
     (id_a, id_b, n_inter, n_a, n_b, containment) with containment =
-    |A∩B| / min(|A|,|B|) ≥ t. Same semi-join pruning — and round-11
-    checkpoint-then-unpersist cache hygiene — as
-    :func:`verify_candidates_jaccard`."""
-    pairs = cand.select("id_a", "id_b").persist()
-    pairs.count()
-    cand_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .union(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
+    |A∩B| / min(|A|,|B|) ≥ t. Same semi-join pruning and call-scoped
+    caches as :func:`verify_candidates_jaccard`."""
+    containment = F.col("n_inter") / F.least(F.col("n_a"), F.col("n_b"))
+    return _verify_candidates(
+        docs, cand, text_col=text_col, id_col=id_col, shingle_n=shingle_n,
+        score=lambda sized: sized.withColumn("containment", containment)
+        .filter(F.col("containment") >= min_containment),
     )
-    sh = exploded_shingles(
-        docs.join(cand_ids, id_col, "left_semi"),
-        text_col=text_col, keep_cols=[id_col], n=shingle_n,
-    ).persist()
-    sh.count()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        pairs.join(sh.select(F.col(id_col).alias("id_a"), "sh"), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"), "sh"), ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    out = (
-        inter.join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")),
-            "id_b",
-        )
-        .withColumn(
-            "containment",
-            F.col("n_inter") / F.least(F.col("n_a"), F.col("n_b")),
-        )
-        .filter(F.col("containment") >= min_containment)
-        .localCheckpoint(eager=True)
-    )
-    pairs.unpersist()
-    sh.unpersist()
-    return out

@@ -32,7 +32,7 @@ import math
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = ["heavy_hitters"]
@@ -82,17 +82,27 @@ def heavy_hitters(
     src = items.select(F.col(item_col).cast("string").alias("item")).filter(
         F.col("item").isNotNull()
     )
-    p1 = src.mapInPandas(_mg_kernel(k), "item string, n long").persist()
-    total = p1.filter(F.col("item").isNull()).agg(F.sum("n").alias("total_n"))
-    cands = p1.filter(F.col("item").isNotNull()).select("item").distinct()
+    p1 = src.mapInPandas(_mg_kernel(k), "item string, n long")
+    # the pass-1 summary has ONE consumer, so the Python pass runs once
+    # with no cache: the in-band total rides every candidate row. The
+    # unpartitioned window gathers ≤ k+1 rows per partition — the
+    # candidate set the broadcast below ships anyway.
+    total_n = F.sum(F.when(F.col("item").isNull(), F.col("n"))).over(
+        Window.partitionBy()
+    )
+    cands = (
+        p1.withColumn("total_n", total_n)
+        .filter(F.col("item").isNotNull())
+        .select("item", "total_n")
+        .distinct()
+    )
     exact = (
         src.join(F.broadcast(cands), "item")
-        .groupBy("item")
+        .groupBy("item", "total_n")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
     )
     return (
-        exact.crossJoin(F.broadcast(total))
-        .filter(
+        exact.filter(
             F.col("n_occurrences") >= F.ceil(F.lit(phi) * F.col("total_n"))
         )
         .select(F.col("item").alias(item_col), "n_occurrences", "total_n")

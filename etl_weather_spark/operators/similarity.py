@@ -18,7 +18,6 @@ computes one dot product per candidate pair.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -545,7 +544,9 @@ def ivf_cells_seeded(
             if cent_rows
             else np.zeros((0, 0), dtype=np.float64)
         )
-        top1 = topk_vs_ref_udf(c_ids, c_mat, k=1, exclude_self=False)
+        top1 = topk_vs_ref_udf(
+            c_ids, c_mat, k=1, sim_decimals=sim_decimals, exclude_self=False
+        )
         return e.select(
             "vec_id",
             F.element_at(top1("vec_id", "v"), 1)["neighbor_id"].alias("cell"),
@@ -753,12 +754,8 @@ def cosine_topk_pq(
         .collect()
     )
     n_sub, n_cd, sub = books.shape
-    multi_chunk = len(qrows) > query_chunk
-    if multi_chunk:
-        # several narrow scans ahead — materialize the code table once
-        codes = codes.persist()
 
-    def shortlist_for(chunk_rows) -> DataFrame:
+    def shortlist_for(codes: DataFrame, chunk_rows) -> DataFrame:
         qids = [r.i for r in chunk_rows]
         qm = np.stack([np.asarray(r.v, dtype=np.float64) for r in chunk_rows])
         qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
@@ -790,17 +787,19 @@ def cosine_topk_pq(
     chunks = [
         qrows[i : i + query_chunk] for i in range(0, len(qrows), query_chunk)
     ]
-    short = shortlist_for(chunks[0])
-    for chunk_rows in chunks[1:]:
-        short = short.unionByName(shortlist_for(chunk_rows))
-    if multi_chunk:
-        # materialize the unioned shortlist (≤ Q × shortlist narrow
-        # rows): truncates the ceil(Q/chunk)-branch union plan AND lets
-        # the code-table cache be released here — nothing downstream
-        # reads the codes again, so the persist cannot leak past the
-        # operator.
-        short = short.localCheckpoint(eager=True)
-        codes.unpersist()
+    if len(chunks) == 1:
+        short = shortlist_for(codes, chunks[0])
+    else:
+        # several narrow scans of the code table: cache it for the call
+        # and materialize the unioned shortlist (≤ Q × shortlist narrow
+        # rows), which also truncates the ceil(Q/chunk)-branch union plan
+        from etl_weather_spark.operators.dedup import persisted
+
+        with persisted(codes) as cached:
+            short = shortlist_for(cached, chunks[0])
+            for chunk_rows in chunks[1:]:
+                short = short.unionByName(shortlist_for(cached, chunk_rows))
+            short = short.localCheckpoint(eager=True)
 
     # exact re-rank: full vectors only for shortlist ids × queries
     c_full = corpus.select(
@@ -1179,10 +1178,8 @@ REF_PIN_MAX_ROWS = 65536
 #: is only the right shape while K is broadcast-small. K = 4·⌈√N⌉ grows
 #: with the corpus; past this cap the Catalyst broadcast-crossJoin +
 #: window-argmax form (bit-identical by construction — the kernel
-#: replicates ITS fold) is used instead. Env-tunable for cluster runs.
-IVF_KERNEL_MAX_CENTROIDS = int(
-    os.environ.get("SPARK_GRAFT_IVF_KERNEL_MAX_CENTROIDS", 8192)
-)
+#: replicates ITS fold) is used instead.
+IVF_KERNEL_MAX_CENTROIDS = 8192
 
 
 def _assert_finite(a: np.ndarray, what: str) -> None:

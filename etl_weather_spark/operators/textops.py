@@ -500,44 +500,16 @@ def bpe_pair_counts(vocab: DataFrame) -> DataFrame:
     )
 
 
-def bpe_apply_merge(vocab: DataFrame, best: DataFrame) -> DataFrame:
-    """Greedy left-to-right BPE merge of one (left_sym, right_sym) pair.
-
-    ``best`` is a 1-row DataFrame carrying the winning pair; it rides a
-    broadcast cross join so the plan stays lazy (no collect between
-    rounds). The merge itself is an ``F.aggregate`` fold over the
-    symbol array: if the accumulator's last symbol is ``left_sym`` and
-    the next symbol is ``right_sym``, the tail is replaced by the
-    concatenated symbol — exactly the sequential scan BPE specifies
-    ("aaaa" under (a,a) becomes [aa, aa], never [aa, a, a]).
-
-    Every column of ``vocab`` other than ``syms`` passes through
-    unchanged (so a ``word`` key survives for the encode-side join).
-    """
-    merged_sym = F.concat(F.col("left_sym"), F.col("right_sym"))
-    folded = F.aggregate(
-        F.col("syms"),
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.col("left_sym"))
-            & (x == F.col("right_sym")),
-            F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(merged_sym)),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-    carry = [c for c in vocab.columns if c != "syms"]
-    return vocab.crossJoin(F.broadcast(best.select("left_sym", "right_sym"))).select(
-        folded.alias("syms"), *carry
-    )
-
-
 def _bpe_fold_literal(syms: Column, left: str, right: str) -> Column:
     """One greedy left-to-right merge of a LITERAL (left, right) pair.
 
-    Same ``F.aggregate`` fold as :func:`bpe_apply_merge` but the winning
-    pair is a driver-side string (the batched trainer already collected
-    it), so no broadcast cross join is needed — the merge is a plain
-    projection expression, chainable ``batch``-deep in one select.
+    An ``F.aggregate`` fold over the symbol array: if the accumulator's
+    last symbol is ``left`` and the next symbol is ``right``, the tail
+    is replaced by the concatenated symbol — exactly the sequential
+    scan BPE specifies ("aaaa" under (a,a) becomes [aa, aa], never
+    [aa, a, a]). The pair is a driver-side string (the batched trainer
+    already collected it), so the merge is a plain projection
+    expression, chainable ``batch``-deep in one select.
     """
     merged = left + right
     return F.aggregate(
@@ -691,70 +663,19 @@ def _bpe_rounds(
     return merges, v
 
 
-#: budgets at or below this train on the fully-LAZY broadcast-fold
-#: path (zero driver collects, one Spark action at materialization);
-#: above it, the batched eager engine amortizes its per-round job cost
-BPE_LAZY_THRESHOLD = 8
-
-
-def _bpe_lazy_rounds(vocab: DataFrame, n_merges: int):
-    """Lazy round loop: each round's winner is a ``limit(1)`` subplan
-    riding a broadcast cross join into the next round's fold — nothing
-    executes until the caller materializes. Per-round vocabs are
-    persisted (round r+1's counts and the round-r output both read
-    them); the cache footprint is ≤ n_merges vocab-sized frames, which
-    is why this path is gated to small budgets. Returns (per-round
-    best frames, persisted per-round vocabs, final vocab) — callers
-    that materialize eagerly should unpersist the first two."""
-    bests = []
-    cached = []
-    v = vocab
-    for _ in range(n_merges):
-        best = (
-            bpe_pair_counts(v)
-            .orderBy(F.desc("pair_count"), "left_sym", "right_sym")
-            .limit(1)
-            .persist()
-        )
-        bests.append(best)
-        v = bpe_apply_merge(v, best).persist()
-        cached.append(v)
-    return bests, cached, v
-
-
 def bpe_train(vocab: DataFrame, n_merges: int, **round_opts) -> DataFrame:
     """``n_merges`` BPE rounds: (merge_round, left_sym, right_sym,
     merged, pair_count) — the merge-table artifact of tokenizer
     training. Classic BPE runs on the VOCAB (distinct word, freq), not
     the token stream.
 
-    Two execution strategies, identical results (both proven against
-    the pure-Python sequential reference in tests):
-
-    - budgets ≤ ``BPE_LAZY_THRESHOLD`` (and no explicit round
-      options): fully lazy — per-round 1-row winners ride broadcast
-      cross joins, the whole training tree executes as ONE action when
-      the caller materializes. Right for oracle-sized demos where
-      per-round job scheduling would dominate.
-    - larger budgets: the batched eager engine (:func:`_bpe_rounds`) —
-      one job per ~batch_cap merges, bounded driver transfer,
-      checkpoint-flat lineage; the only shape that survives 32k
-      merges. The merge table is driver-built and returned via an
-      Arrow local table (never a Python-RDD scan).
+    Runs the batched eager engine (:func:`_bpe_rounds`, proven
+    against the pure-Python sequential reference in tests): one job
+    per ~batch_cap merges, bounded driver transfer, checkpoint-flat
+    lineage — the shape that survives 32k merges. The merge table is
+    driver-built and returned via an Arrow local table (never a
+    Python-RDD scan), so it does not read ``vocab`` once returned.
     """
-    if n_merges <= BPE_LAZY_THRESHOLD and not round_opts:
-        bests, _cached, _v = _bpe_lazy_rounds(vocab, n_merges)
-        out = None
-        for r, best in enumerate(bests, start=1):
-            b = best.select(
-                F.lit(r).alias("merge_round"),
-                "left_sym",
-                "right_sym",
-                F.concat("left_sym", "right_sym").alias("merged"),
-                "pair_count",
-            )
-            out = b if out is None else out.unionAll(b)
-        return out.orderBy("merge_round")
     import pandas as pd  # noqa: PLC0415 — Arrow local-table build only
 
     merges, _ = _bpe_rounds(vocab, n_merges, **round_opts)
@@ -837,22 +758,11 @@ def bpe_encode_ranked(vocab: DataFrame, merges: list[tuple[str, str]]) -> DataFr
 def bpe_segment(vocab: DataFrame, n_merges: int, **round_opts) -> DataFrame:
     """ENCODE side of BPE: the vocab after ``n_merges`` trained rounds.
 
-    Same strategy split as :func:`bpe_train` (lazy broadcast-fold tree
-    under ``BPE_LAZY_THRESHOLD``, batched eager engine above), keeping
-    the segmented vocab (all non-``syms`` columns pass through) instead
-    of the merge table — the tokenizer-apply step.
-
-    Laziness contract: under the threshold the returned frame is LAZY
-    (the whole training tree fuses into the caller's first action —
-    zero extra materializations) and holds ≤ n_merges bounded
-    vocab-sized persists alive until then, so callers must keep the
-    input vocab cached. Above the threshold the result is
-    localCheckpoint-ed (eager, flat plan) and the input may be
-    unpersisted immediately.
+    Same engine as :func:`bpe_train` (:func:`_bpe_rounds`), keeping the
+    segmented vocab (all non-``syms`` columns pass through) instead of
+    the merge table — the tokenizer-apply step. The result is eagerly
+    ``localCheckpoint``-ed (flat plan), so it no longer reads ``vocab``.
     """
-    if n_merges <= BPE_LAZY_THRESHOLD and not round_opts:
-        _bests, _cached, v = _bpe_lazy_rounds(vocab, n_merges)
-        return v
     _, v = _bpe_rounds(vocab, n_merges, **round_opts)
     return v.localCheckpoint(eager=True)
 

@@ -661,7 +661,7 @@ ORDER BY merge_round
 )
 def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenizer TRAINING (Sennrich et al. ACL'16), 3
-    merge rounds entirely in Catalyst: count adjacent symbol pairs
+    merge rounds: count adjacent symbol pairs
     over the corpus vocabulary (frequency-weighted), pick the most
     frequent pair (ties: lexicographic), merge it greedily
     left-to-right in every word, repeat. The merge table this emits
@@ -670,22 +670,20 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The merge apply is an ``F.aggregate`` fold over the symbol array
     (replace trailing left-symbol + append, exactly the greedy scan) —
-    no Python anywhere; the oracle reruns the identical algorithm via
+    no Python UDF anywhere; the oracle reruns the identical algorithm via
     DuckDB's ``list_reduce`` twin over chr(31)-joined symbol strings.
 
     Scale: classic BPE runs on the VOCAB (distinct word, freq), not
     the token stream — the explode-heavy stage is the one vocab
-    groupBy. This 3-round demo sits under BPE_LAZY_THRESHOLD, so
-    training is FULLY LAZY (per-round 1-row winners ride broadcast
-    cross joins; the whole tree is one action — no per-round job
-    scheduling). Production budgets switch to the batched eager
-    trainer (operators/textops._bpe_rounds): one job per ~batch_cap
-    provably-sequential-equivalent merges, ≤ pool_size-row driver
-    transfer per round, localCheckpoint-flat lineage — so 32k merges
-    is ~32k/batch_cap jobs and never a 32k-deep plan (1k-merge
-    artifact: bpe1k.json).
+    groupBy. Training runs the batched eager trainer
+    (operators/textops._bpe_rounds) at every budget: one job per
+    ~batch_cap provably-sequential-equivalent merges, ≤ pool_size-row
+    driver transfer per round, localCheckpoint-flat lineage — so 32k
+    merges is ~32k/batch_cap jobs and never a 32k-deep plan (1k-merge
+    artifact: bpe1k.json). The vocab is cached for the call only: the
+    merge table comes back as a driver-built local table.
     """
-    from etl_weather_spark.operators.dedup import tokens
+    from etl_weather_spark.operators.dedup import persisted, tokens
     from etl_weather_spark.operators.textops import bpe_train
 
     docs = load(spark, sf_dir, "documents")
@@ -695,12 +693,9 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(F.split("word", "").alias("syms"), "freq")
-        .persist()
     )
-    # 3 rounds sit under BPE_LAZY_THRESHOLD: training stays fully lazy
-    # (one action at materialization), so the vocab cache must outlive
-    # this call — bounded, vocab-sized, same as the other input persists
-    return bpe_train(vocab, _BPE_MERGE_ROUNDS)
+    with persisted(vocab) as cached:
+        return bpe_train(cached, _BPE_MERGE_ROUNDS)
 
 #: shared oracle for BOTH encode-side BPE queries: replays 3 training
 #: rounds and the fold-based segmentation via the DuckDB list_reduce
@@ -752,25 +747,30 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB list_reduce twin.
     """
     from etl_weather_spark.operators.dedup import tokens
-    from etl_weather_spark.operators.textops import bpe_segment
 
     docs = load(spark, sf_dir, "documents")
-    tok = (
-        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("word"))
-        .filter(F.col("word").rlike("^[a-z0-9]+$"))
-        .persist()
-    )
+    tok = docs.select(
+        "doc_id", F.explode(tokens(F.col("text"))).alias("word")
+    ).filter(F.col("word").rlike("^[a-z0-9]+$"))
+    return _doc_piece_stats(tok, _bpe_segment_pieces(tok))
+
+
+def _bpe_segment_pieces(tok: DataFrame) -> DataFrame:
+    """(word, n_pieces) under the 3-round fold-replay segmentation of
+    ``tok``'s vocab — checkpointed by bpe_segment, so the vocab cache
+    (read by every training round) ends with this call."""
+    from etl_weather_spark.operators.dedup import persisted
+    from etl_weather_spark.operators.textops import bpe_segment
+
     vocab = (
         tok.groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(F.split("word", "").alias("syms"), "freq", "word")
-        .persist()
     )
-    # 3 rounds sit under BPE_LAZY_THRESHOLD: segmentation stays lazy and
-    # fuses into the final join action, so the vocab cache must outlive
-    # this call (bounded, vocab-sized)
-    seg = bpe_segment(vocab, 3).select("word", F.size("syms").alias("n_pieces"))
-    return _doc_piece_stats(tok, seg)
+    with persisted(vocab) as cached:
+        return bpe_segment(cached, 3).select(
+            "word", F.size("syms").alias("n_pieces")
+        )
 
 @query("bpe_ranked_encode_stats", _BPE_ENCODE_ORACLE)
 def bpe_ranked_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,26 +790,23 @@ def bpe_ranked_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookups, independent of table size, and is the encode every
     deployed BPE tokenizer runs.
     """
-    from etl_weather_spark.operators.dedup import tokens
+    from etl_weather_spark.operators.dedup import persisted, tokens
     from etl_weather_spark.operators.textops import _bpe_rounds, bpe_encode_ranked
 
     docs = load(spark, sf_dir, "documents")
-    tok = (
-        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("word"))
-        .filter(F.col("word").rlike("^[a-z0-9]+$"))
-        .persist()
-    )
+    tok = docs.select(
+        "doc_id", F.explode(tokens(F.col("text"))).alias("word")
+    ).filter(F.col("word").rlike("^[a-z0-9]+$"))
     vocab = (
         tok.groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(F.split("word", "").alias("syms"), "freq", "word")
-        .persist()
     )
-    merges, _ = _bpe_rounds(vocab, 3)
+    with persisted(vocab) as cached:
+        merges, _ = _bpe_rounds(cached, 3)
     seg = bpe_encode_ranked(
         vocab, [(left, right) for _rnd, left, right, _m, _c in merges]
     ).select("word", F.size("syms").alias("n_pieces"))
-    vocab.unpersist()
     return _doc_piece_stats(tok, seg)
 
 @query(
@@ -2349,25 +2346,13 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines exact.
     """
     from etl_weather_spark.operators.dedup import tokens
-    from etl_weather_spark.operators.textops import bpe_segment
 
     docs = load(spark, sf_dir, "documents")
-    tok = (
-        docs.select(
-            "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("word")
-        )
-        .filter(F.col("word").rlike("^[a-z0-9]+$"))
-        .persist()
-    )
-    vocab = (
-        tok.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select(F.split("word", "").alias("syms"), "freq", "word")
-        .persist()
-    )
-    seg = bpe_segment(vocab, 3).select("word", F.size("syms").alias("n_pieces"))
+    tok = docs.select(
+        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("word")
+    ).filter(F.col("word").rlike("^[a-z0-9]+$"))
     return (
-        tok.join(F.broadcast(seg), "word")
+        tok.join(F.broadcast(_bpe_segment_pieces(tok)), "word")
         .groupBy("lang")
         .agg(
             F.count_distinct("doc_id").cast("long").alias("n_docs"),
@@ -3889,7 +3874,7 @@ def tokenizer_cost_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     VOCAB and fans back over a word-keyed join; the rollup is
     |sources| rows.
     """
-    from etl_weather_spark.operators.dedup import tokens
+    from etl_weather_spark.operators.dedup import persisted, tokens
     from etl_weather_spark.operators.textops import bpe_encode_ranked
 
     merges = _bpe_merges_committed(spark, sf_dir)
@@ -3898,47 +3883,46 @@ def tokenizer_cost_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in merges.orderBy("merge_round").collect()
     ]
     docs = load(spark, sf_dir, "documents")
-    tok = (
-        docs.select(
-            "doc_id", "source", F.explode(tokens(F.col("text"))).alias("word")
+    words = docs.select(
+        "doc_id", "source", F.explode(tokens(F.col("text"))).alias("word")
+    ).filter(F.col("word").rlike(_BPE_TOKEN_FILTER))
+    # the token stream feeds three consumers (vocab, sw, nd): cached for
+    # the call, released once the per-source rollup is checkpointed
+    with persisted(words) as tok:
+        vocab = (
+            tok.groupBy("word")
+            .agg(F.count(F.lit(1)).alias("freq"))
+            .select(F.split("word", "").alias("syms"), "freq", "word")
         )
-        .filter(F.col("word").rlike(_BPE_TOKEN_FILTER))
-        .persist()
-    )
-    vocab = (
-        tok.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select(F.split("word", "").alias("syms"), "freq", "word")
-        .persist()
-    )
-    seg = bpe_encode_ranked(vocab, pairs).select(
-        "word", F.size("syms").cast("long").alias("n_pieces")
-    )
-    # pre-aggregate the token stream to (source, word) grain BEFORE the
-    # vocab join (round 10, VERDICT r9 next-item #4): the fan-back join
-    # then moves vocab-sized rows, not the token stream — the map-side
-    # partial agg collapses the big shuffle, and n_words/n_pieces fold
-    # as cnt-weighted sums. Every word in tok is in vocab, so the join
-    # preserves totals; n_docs is its own stream-grain countDistinct.
-    sw = tok.groupBy("source", "word").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    nd = tok.groupBy("source").agg(
-        F.countDistinct("doc_id").cast("long").alias("n_docs")
-    )
-    per = (
-        sw.join(seg, "word")
-        .groupBy("source")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_words"),
-            F.sum(F.col("cnt") * F.col("n_pieces")).cast("long").alias(
-                "n_pieces"
-            ),
+        seg = bpe_encode_ranked(vocab, pairs).select(
+            "word", F.size("syms").cast("long").alias("n_pieces")
         )
-        .join(nd, "source")
-        .select("source", "n_docs", "n_words", "n_pieces")
-        .localCheckpoint(eager=False)
-    )
+        # pre-aggregate the token stream to (source, word) grain BEFORE
+        # the vocab join (round 10, VERDICT r9 next-item #4): the
+        # fan-back join then moves vocab-sized rows, not the token
+        # stream — the map-side partial agg collapses the big shuffle,
+        # and n_words/n_pieces fold as cnt-weighted sums. Every word in
+        # tok is in vocab, so the join preserves totals; n_docs is its
+        # own stream-grain countDistinct.
+        sw = tok.groupBy("source", "word").agg(
+            F.count(F.lit(1)).cast("long").alias("cnt")
+        )
+        nd = tok.groupBy("source").agg(
+            F.countDistinct("doc_id").cast("long").alias("n_docs")
+        )
+        per = (
+            sw.join(seg, "word")
+            .groupBy("source")
+            .agg(
+                F.sum("cnt").cast("long").alias("n_words"),
+                F.sum(F.col("cnt") * F.col("n_pieces")).cast("long").alias(
+                    "n_pieces"
+                ),
+            )
+            .join(nd, "source")
+            .select("source", "n_docs", "n_words", "n_pieces")
+            .localCheckpoint(eager=True)
+        )
     tot = per.agg(F.sum("n_pieces").cast("long").alias("total_pieces"))
     return (
         per.crossJoin(F.broadcast(tot))

@@ -50,6 +50,7 @@ HTTP layer clever.
 from __future__ import annotations
 
 import json
+import threading
 from collections import OrderedDict
 from datetime import date, datetime
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -123,6 +124,9 @@ class EngineAPI:
         self.q = q
         self.registry = q.queries()
         self._cache: OrderedDict[str, list[dict]] = OrderedDict()
+        # guards the LRU's dict operations across ThreadingHTTPServer
+        # threads; never held while a result is computed
+        self._cache_lock = threading.Lock()
         self._geocode_dim = geocode_dim
         self._funfact_model = funfact_model or deterministic_fake_model
         self._funfact_cache: dict[str, str] = {}
@@ -165,8 +169,6 @@ class EngineAPI:
         return out
 
     def funfact(self, city: str, fresh: bool, fast: bool) -> dict:
-        import threading
-
         if fast and not fresh and city in self._funfact_cache:
             t = threading.Thread(
                 target=lambda: self._compute_funfact(city), daemon=True
@@ -251,19 +253,27 @@ class EngineAPI:
         }
 
     def _cached(self, key: str, compute, refresh: bool) -> list[dict]:
-        if not refresh and key in self._cache:
-            self._cache.move_to_end(key)
-            return self._cache[key]
+        if not refresh:
+            with self._cache_lock:
+                if key in self._cache:
+                    self._cache.move_to_end(key)
+                    return self._cache[key]
         out = compute()
-        self._cache[key] = out
-        self._cache.move_to_end(key)
-        while len(self._cache) > CACHE_MAX:
-            self._cache.popitem(last=False)  # bounded LRU (M3)
+        with self._cache_lock:
+            self._cache[key] = out
+            self._cache.move_to_end(key)
+            while len(self._cache) > CACHE_MAX:
+                self._cache.popitem(last=False)  # bounded LRU (M3)
         return out
 
     def handle(self, path: str, params: dict) -> tuple[int, dict | list]:
         refresh = params.get("refresh", ["false"])[0].lower() == "true"
-        limit = int(params["limit"][0]) if "limit" in params else None
+        limit = None
+        if "limit" in params:
+            limit_raw = params["limit"][0]
+            if not limit_raw.isdigit() or int(limit_raw) < 1:
+                return 400, {"error": f"bad limit: {limit_raw}"}
+            limit = int(limit_raw)
         if path == "/":
             # cached like any data route (the backing queries are the
             # same gold tables); the cache stores a 1-element record

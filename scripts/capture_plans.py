@@ -6,16 +6,26 @@ evidence for the optimization rounds). Usage:
     SPARK_GRAFT_PLAN_ROUND=r11 python scripts/capture_plans.py <tag> <query> [...]
 
 Tag is 'before' or 'after'. Data dir from $SPARK_GRAFT_SF_DIR
-(default sf0.1 — plans are built, not executed, so SF only affects
-AQE-estimated sizes, not shape).
+(default sf0.1).
 
-CAVEAT (round 11): "built, not executed" holds for the lazy
-localCheckpoint fences (the round-11 shingle-array fence included),
-but queries whose construction pins a bounded reference set —
-collect_ref_vectors / the IVF centroid pins in operators/similarity —
-DO run their small driver-side collect jobs while the plan is built;
-their capture is therefore slower but still cheap (the collects are
-hard-capped at REF_PIN_MAX_ROWS).
+CAVEAT: building a query's plan is NOT free of Spark jobs, so SF
+affects capture time and, through AQE statistics, plan shape:
+
+- under AQE a lazy ``localCheckpoint(eager=False)`` fence runs a real
+  job while the plan is built (AdaptiveSparkPlanExec materializes its
+  stages inside ``toRdd``; see ``_registry._build_concurrently``);
+- five dedup operators checkpoint eagerly inside a call-scoped
+  persist — prefix_filter_candidates, containment_candidates,
+  pruned_jaccard_pairs, verify_candidates_jaccard and
+  verify_candidates_containment — as does ``textops.bpe_segment``;
+- ``textops._bpe_rounds`` (bpe_train, bpe_segment and the BPE queries)
+  collects one pair-count pool per training round during construction;
+- bounded reference pins (collect_ref_vectors, the IVF centroid pins
+  in operators/similarity) run small driver-side collects, hard-capped
+  at REF_PIN_MAX_ROWS.
+
+The captured plan of such a query therefore starts at the checkpointed
+leaves, not at the source scans.
 """
 
 from __future__ import annotations

@@ -26,6 +26,20 @@ def _docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
 
 
+def test_persisted_unpersists_when_block_raises(spark):
+    """The scoped persist releases its cache on the error path too, so a
+    failing operator cannot leave a CacheManager entry behind."""
+    import pytest
+
+    from etl_weather_spark.operators.dedup import persisted
+
+    with pytest.raises(RuntimeError, match="inside the block"):
+        with persisted(spark.range(10).withColumn("x", F.col("id") * 3)) as cached:
+            assert cached.storageLevel.useMemory or cached.storageLevel.useDisk
+            raise RuntimeError("inside the block")
+    assert not (cached.storageLevel.useMemory or cached.storageLevel.useDisk)
+
+
 def test_exact_dedup(spark):
     out = exact_dedup(_docs(spark))
     ids = sorted(r.doc_id for r in out.collect())

@@ -53,9 +53,16 @@ NAMES = sorted(q.queries())
 @pytest.mark.parametrize("name", NAMES)
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     fn = q.queries()[name]
-    sdf = fn(spark, sf_dir)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    try:
+        sdf = fn(spark, sf_dir)
+        spark_cols = sdf.columns
+        spark_rows = [tuple(r) for r in sdf.collect()]
+    finally:
+        # no query may leave a CacheManager entry behind; clearing here
+        # keeps a leak from failing the queries that run after it
+        pinned = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        spark.catalog.clearCache()
+    assert not pinned, f"{name}: left a CacheManager entry after the query"
 
     if name not in ORACLES:
         # weaker rows-only check for non-SQL-expressible ops

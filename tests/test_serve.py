@@ -144,6 +144,48 @@ def test_search_count_validation(server):
     assert status == 400
 
 
+def test_limit_validation(server):
+    for bad in ("abc", "0"):
+        status, body = _get(server, f"/data/hourly?limit={bad}")
+        assert status == 400 and "bad limit" in body["error"]
+
+
+def test_cached_lru_is_thread_safe():
+    """Serving threads share one LRU: with 8 threads cycling through
+    2×CACHE_MAX keys, evictions interleave with hits constantly, and a
+    hit must never fail because another thread evicted its key between
+    the membership test and ``move_to_end``. Needs no Spark."""
+    import sys
+
+    from etl_weather_spark.serve import CACHE_MAX, EngineAPI
+
+    api = EngineAPI(None, "unused")
+    keys = [f"k{i}" for i in range(2 * CACHE_MAX)]
+    errors: list[BaseException] = []
+
+    def worker(seed: int) -> None:
+        try:
+            for i in range(10_000):
+                key = keys[(seed * 7 + i) % len(keys)]
+                assert api._cached(key, lambda: [key], False) == [key]
+        except Exception as ex:  # noqa: BLE001 - reported below
+            errors.append(ex)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(s,)) for s in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert len(api._cache) <= CACHE_MAX
+
+
 def test_funfact_url_encoded_city_decodes(server, tmp_path):
     server.api._funfact_model = lambda prompt: f"fact about [{prompt}]"
     status, body = _get(server, "/city/funfact/New%20York")

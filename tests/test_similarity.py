@@ -310,6 +310,34 @@ def test_zero_norm_vectors_are_deterministic_not_nan(spark):
     assert len(cells) == 9  # the zero vector still gets a cell assignment
 
 
+def test_ivf_kernel_honours_sim_decimals(spark, monkeypatch):
+    """The kernel path ranks centroids at ``sim_decimals`` like the
+    Catalyst fallback: vector 3 sits at cosine 0.9000 to centroid 0 and
+    0.9002 to centroid 1 — a tie at 3 dp (lowest id wins) but not at 6."""
+    import math
+
+    from etl_weather_spark.operators import similarity
+
+    theta = math.acos(0.9) + math.acos(0.9002)
+    rows = [
+        (0, [1.0, 0.0]),
+        (1, [math.cos(theta), math.sin(theta)]),
+        (2, [0.0, 1.0]),
+        (3, [0.9, math.sqrt(1 - 0.81)]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def cells():
+        out = similarity.ivf_cells_seeded(emb, cells_per_sqrt_n=1, sim_decimals=3)
+        return {r.vec_id: r.cell for r in out.collect()}
+
+    kernel = cells()
+    monkeypatch.setattr(similarity, "IVF_KERNEL_MAX_CENTROIDS", 0)
+    catalyst = cells()
+    assert catalyst[3] == 0  # the 3-dp tie breaks to the lower centroid id
+    assert kernel == catalyst
+
+
 def test_ivf_cells_seeded_sparse_offset_ids(spark):
     """Centroids are the K lowest ids BY RANK — an offset id space must
     still produce K centroids, not zero (review finding r3)."""

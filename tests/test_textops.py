@@ -306,20 +306,18 @@ def test_bpe_train_matches_python_reference(spark):
     assert got == _py_bpe(vocab, 4)
 
 
-def test_bpe_apply_merge_greedy_overlap(spark):
+def test_bpe_fold_greedy_overlap(spark):
     """The fold is greedy left-to-right: 'aaaa' under (a,a) segments to
     [aa, aa] and 'aaa' to [aa, a] — never re-merging the new symbol."""
     from pyspark.sql import functions as F
 
-    from etl_weather_spark.operators.textops import bpe_apply_merge
+    from etl_weather_spark.operators.textops import _bpe_fold_literal
 
     v = spark.createDataFrame(
         [("aaaa", 1), ("aaa", 1), ("baaab", 1)], "word string, freq long"
-    ).select(F.split("word", "").alias("syms"), "freq")
-    best = spark.createDataFrame(
-        [("a", "a")], "left_sym string, right_sym string"
-    )
-    got = sorted("".join("|".join(r.syms)) for r in bpe_apply_merge(v, best).collect())
+    ).select(F.split("word", "").alias("syms"))
+    folded = v.select(_bpe_fold_literal(F.col("syms"), "a", "a").alias("syms"))
+    got = sorted("|".join(r.syms) for r in folded.collect())
     assert got == sorted(["aa|aa", "aa|a", "b|aa|a|b"])
 
 
