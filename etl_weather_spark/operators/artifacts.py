@@ -39,6 +39,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import threading
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -252,12 +253,34 @@ def artifact_if_absent(
     version when its fingerprint is current; build + publish a new
     version when missing or stale, then read it back so every consumer
     — including the publisher itself — scans the same committed bytes.
+
+    The miss path holds a per-artifact lock and re-reads under it, so
+    two threads of one process that miss the same artifact together
+    build and publish it once; the second reads the first's commit.
+    The lock is per process: publishers in different processes can
+    still both commit (each a consistent version, see publish_artifact).
     """
     try:
         return read_artifact(spark, name, key, expect_fingerprint=fingerprint)
     except (ArtifactMissingError, ArtifactStaleError):
-        publish_artifact(build(), name, key, fingerprint=fingerprint, meta=meta)
-        return read_artifact(spark, name, key, expect_fingerprint=fingerprint)
+        pass
+    with _publish_lock(artifact_table(name, key)):
+        try:
+            return read_artifact(spark, name, key, expect_fingerprint=fingerprint)
+        except (ArtifactMissingError, ArtifactStaleError):
+            publish_artifact(build(), name, key, fingerprint=fingerprint, meta=meta)
+            return read_artifact(spark, name, key, expect_fingerprint=fingerprint)
+
+
+_PUBLISH_LOCKS: dict[str, threading.Lock] = {}
+_PUBLISH_LOCKS_GUARD = threading.Lock()
+
+
+def _publish_lock(table: str) -> threading.Lock:
+    """The one lock guarding artifact_if_absent's miss path for
+    ``table`` (one artifact name/key under the current root)."""
+    with _PUBLISH_LOCKS_GUARD:
+        return _PUBLISH_LOCKS.setdefault(table, threading.Lock())
 
 
 # ---------------------------------------------------------------------------

@@ -34,11 +34,13 @@ def _build_concurrently(builders):
     the per-leg plans, and therefore the results, are identical
     (corpus_prep_funnel_v2 A/B: 7.0 s → 4.4 s at sf0.1, rows equal).
 
-    Callers must keep publish-on-absent artifact work OUT of the pool
-    (build/commit it first, serially — the release queries call
-    _ensure_release and the funnels build trained_keep before fanning
-    out): artifact_if_absent's read-else-publish is not safe against
-    two concurrent publishers of the same missing artifact.
+    Legs that miss the same artifact do not double-publish it:
+    artifact_if_absent's miss path takes a per-artifact lock and
+    re-reads under it. The lock is per process (publishers in other
+    processes are not serialized), and a leg that waits on it idles for
+    the whole build, so callers still build shared artifacts before
+    fanning out (the release queries call _ensure_release and the
+    funnels build trained_keep first).
 
     Threads are pyspark.InheritableThread, NOT a ThreadPoolExecutor:
     under the pinned-thread mode every Python thread pins a dedicated

@@ -2487,37 +2487,6 @@ def _gopher_tuned_core(docs: DataFrame) -> DataFrame:
 
     return gopher_quality_profile(docs, min_stopwords=1)
 
-#: THE funnel gate chain, defined exactly once and consumed by all four
-#: funnel surfaces — v2's oracle + Spark body (full-corpus fits via the
-#: registered queries) and v3's oracle + Spark body (survivor refits
-#: via the cores). Adding/reordering a gate here updates every surface
-#: in lockstep; a per-surface copy once desynchronized silently.
-#: Tuples: (stage_name, registered query/oracle key, SQL keep
-#: condition, Spark keep filter, docs-parameterized core).
-_FUNNEL_GATES = [
-    ("lang_confident", "lang_id_confidence", "tier = 'high'",
-     lambda df: df.filter(F.col("tier") == "high"),
-     _lang_id_confidence_core),
-    ("not_code", "code_detect_stats", "NOT looks_like_code",
-     lambda df: df.filter(~F.col("looks_like_code")),
-     _code_detect_core),
-    ("gopher_keep", "gopher_quality_gate_tuned", "keep",
-     lambda df: df.filter(F.col("keep")),
-     _gopher_tuned_core),
-    ("quality_keep", "quality_logistic_filter", "keep",
-     lambda df: df.filter(F.col("keep")),
-     _quality_logistic_core),
-    ("length_sane", "mad_outlier_docs", "NOT is_outlier",
-     lambda df: df.filter(~F.col("is_outlier")),
-     _mad_outlier_core),
-    ("fluent", "ccnet_ppl_buckets", "bucket <> 'tail'",
-     lambda df: df.filter(F.col("bucket") != "tail"),
-     _ccnet_ppl_core),
-    ("dsir_keep", "dsir_importance_weights", "kept",
-     lambda df: df.filter(F.col("kept")),
-     _dsir_core),
-]
-
 def _domain_reweight_oracle() -> str:
     """Embed the registered bigram-LM oracle verbatim as the per-doc
     proxy-loss relation (the funnel-v2 embedding discipline)."""
@@ -3250,44 +3219,6 @@ def token_burstiness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "burstiness4",
         )
         .orderBy("rank")
-    )
-
-def _manifest_oracle() -> str:
-    """End-to-end pipeline oracle: the funnel-v2 survivor chain
-    (registered gate oracles embedded verbatim, the _funnel_v2_oracle
-    assembly), then the dedup_exact keeper restricted to the final
-    survivors, then the content-addressed shard rollup."""
-    gates = [(n, _ORACLES[k], c) for n, k, c, _f, _core in _FUNNEL_GATES]
-    ctes = ["s0 AS (SELECT doc_id FROM documents)"]
-    last = 0
-    for i, (_name, oracle, cond) in enumerate(gates, start=1):
-        ctes.append(f"g{i} AS (SELECT doc_id FROM ({oracle}\n) WHERE {cond})")
-        ctes.append(
-            f"s{i} AS (SELECT s.doc_id FROM s{i-1} s"
-            f" JOIN g{i} g ON g.doc_id = s.doc_id)"
-        )
-        last = i
-    ctes.append(
-        f"""keep AS MATERIALIZED (
-  SELECT MIN(d.doc_id) AS doc_id
-  FROM s{last} s JOIN documents d ON d.doc_id = s.doc_id
-  GROUP BY md5(lower(regexp_replace(trim(d.text), '\\s+', ' ', 'g')))
-)"""
-    )
-    ctes.append(
-        """sh AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(md5('shard|' || CAST(doc_id AS VARCHAR)), 1, 8))
-              AS BIGINT) % 16 AS shard_id
-  FROM keep
-)"""
-    )
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        + """SELECT shard_id,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(doc_id) AS BIGINT) AS id_checksum
-FROM sh GROUP BY shard_id ORDER BY shard_id"""
     )
 
 def _qnorm_oracle() -> str:

@@ -6,6 +6,7 @@ imports changed.
 """
 
 from __future__ import annotations
+from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from etl_weather_spark.functions.rounding import dsum, rnd, sql_dsum
@@ -28,19 +29,23 @@ from etl_weather_spark.queries.relational import (
     _FUNNEL_SQL,
     _POISSON_HEX_BOUNDS,
     _boot_weight_sql,
+    _mad_outlier_core,
     _scalable_rank,
 )
 from etl_weather_spark.queries.text import (
-    _FUNNEL_GATES,
     _bigram_logprob_core,
+    _ccnet_ppl_core,
+    _code_detect_core,
+    _dsir_core,
     _ensemble_oracle,
     _gopher_oracle,
     _gopher_tuned_core,
-    _manifest_oracle,
+    _lang_id_confidence_core,
     _quality_logistic_core,
     token_entropy_quality,
 )
 from etl_weather_spark.queries.dedup import _cc_membership_committed
+from etl_weather_spark.streaming.trained_funnel import STAGES
 
 
 @query("corpus_prep_funnel", _FUNNEL_SQL)
@@ -67,8 +72,6 @@ def corpus_prep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (materialize_if_absent) instead of recomputing the chain per
     downstream action.
     """
-    from functools import reduce
-
     from etl_weather_spark.operators.dedup import (
         connected_components,
         exploded_shingles,
@@ -132,36 +135,172 @@ def gopher_quality_gate_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents"), min_stopwords=1
     )
 
-def _funnel_v2_oracle() -> str:
-    """Assemble the v2 funnel oracle from the REGISTERED gate oracles
-    verbatim (each embedded as a nested-WITH derived table), so the
-    funnel's stage logic can never drift from the standalone queries'."""
-    gates = [(n, _ORACLES[k], c) for n, k, c, _f, _core in _FUNNEL_GATES]
-    ctes = ["s0 AS (SELECT doc_id FROM documents)"]
-    rows = [
-        "SELECT 0 AS stage, 'all_docs' AS stage_name,"
-        " CAST(COUNT(*) AS BIGINT) AS n_kept,"
-        " CAST(SUM(doc_id) AS BIGINT) AS id_checksum FROM s0"
-    ]
-    for i, (name, oracle, cond) in enumerate(gates, start=1):
-        ctes.append(
-            f"g{i} AS (SELECT doc_id FROM ({oracle}\n) WHERE {cond})"
+#: THE funnel gate chain, defined exactly once: every funnel-family
+#: surface (v2, v3, v4, the incremental funnel, the shard manifest, the
+#: attribution and bias audits, and the streaming trained funnel) reads
+#: its gates from here, Spark side and oracle side alike; a per-surface
+#: copy once desynchronized silently. Tuples: (stage_name, registered
+#: query/oracle key, SQL keep condition, docs-parameterized core). The
+#: Spark side filters with ``F.expr(cond)``, the same Catalyst predicate
+#: the oracle's WHERE states, so the two sides cannot drift apart.
+_FUNNEL_GATES = [
+    ("lang_confident", "lang_id_confidence", "tier = 'high'",
+     _lang_id_confidence_core),
+    ("not_code", "code_detect_stats", "NOT looks_like_code",
+     _code_detect_core),
+    ("gopher_keep", "gopher_quality_gate_tuned", "keep", _gopher_tuned_core),
+    ("quality_keep", "quality_logistic_filter", "keep",
+     _quality_logistic_core),
+    ("length_sane", "mad_outlier_docs", "NOT is_outlier", _mad_outlier_core),
+    ("fluent", "ccnet_ppl_buckets", "bucket <> 'tail'", _ccnet_ppl_core),
+    ("dsir_keep", "dsir_importance_weights", "kept", _dsir_core),
+]
+
+#: the per-doc gates of the delta funnels (the incremental query and
+#: the streaming trained funnel): the corpus-FITTED gates are re-fit by
+#: the nightly full run, never per delta
+_PER_DOC_GATES = [g for g in _FUNNEL_GATES if g[0] in STAGES]
+
+def _gate_flags(
+    spark: SparkSession, sf_dir: str, *cols: str, swap=None
+) -> tuple[DataFrame, list[str]]:
+    """The flags relation of the globally-fit funnels and its gate
+    names: every registered gate's full-corpus keep-set, built
+    concurrently (each construction runs its fences' jobs), LEFT-joined
+    onto the ``documents`` spine and projected as (doc_id, *cols,
+    k1..kn), k_i = 1 when gate i keeps the doc, else 0. ``swap`` =
+    (gate name, new name, keep relation) puts another keep-set in one
+    gate's place (v4's trained classifier); build it before the call
+    (see _build_concurrently on artifacts). Every keep-set has one row
+    per doc_id (test_funnel_gate_keep_sets_unique_per_doc), so the
+    joins never multiply spine rows."""
+    swap = swap or (None, None, None)
+    names = [swap[1] if n == swap[0] else n for n, *_ in _FUNNEL_GATES]
+
+    def keep(i: int, name: str, key: str, cond: str) -> DataFrame:
+        rel = (
+            swap[2]
+            if name == swap[0]
+            else _QUERIES[key](spark, sf_dir).filter(F.expr(cond))
         )
+        return rel.select("doc_id", F.lit(1).alias(f"__k{i}"))
+
+    keeps = _build_concurrently(
+        [
+            lambda i=i, g=g: keep(i, *g[:3])
+            for i, g in enumerate(_FUNNEL_GATES, start=1)
+        ]
+    )
+    flags = load(spark, sf_dir, "documents").select("doc_id", *cols)
+    for k in keeps:
+        flags = flags.join(k, "doc_id", "left")
+    ks = [
+        F.coalesce(F.col(f"__k{i}"), F.lit(0)).alias(f"k{i}")
+        for i in range(1, len(names) + 1)
+    ]
+    return flags.select("doc_id", *cols, *ks), names
+
+def _survivor_chain(
+    src: DataFrame, gates, trained=None, fence: bool = True
+) -> list[DataFrame]:
+    """The sequential survivor chain, ``src`` first: gate i's core is
+    fit on stage i-1's survivors and its keep-set semi-joined onto them;
+    ``trained`` (survivors -> keep-set), when given, is the last gate.
+    ``fence`` puts a lazy localCheckpoint on every level: in a batch
+    query each level has three consumers (its stage row, the next gate's
+    fit and the next semi-join), and unfenced the plan re-expands the
+    whole prior chain per level."""
+    keeps = [
+        lambda s, cond=cond, core=core: core(s).filter(F.expr(cond))
+        for _name, _key, cond, core in gates
+    ]
+    if trained is not None:
+        keeps.append(trained)
+    out = [src]
+    for keep in keeps:
+        s = out[-1].join(keep(out[-1]).select("doc_id"), "doc_id", "left_semi")
+        out.append(s.localCheckpoint(eager=False) if fence else s)
+    return out
+
+def _stage_rows(names: list[str], stages: list[DataFrame]) -> DataFrame:
+    """One (stage, stage_name, n_kept, id_checksum) row per survivor
+    relation, in stage order."""
+    rows = [
+        df.agg(
+            F.lit(i).cast("long").alias("stage"),
+            F.lit(name).alias("stage_name"),
+            F.count(F.lit(1)).cast("long").alias("n_kept"),
+            F.sum("doc_id").cast("long").alias("id_checksum"),
+        )
+        for i, (name, df) in enumerate(zip(names, stages, strict=True))
+    ]
+    return reduce(DataFrame.unionByName, rows).orderBy("stage")
+
+def _gate_sql(gates, swap=None) -> list[tuple[str, str]]:
+    """(stage name, ``g{i}`` CTE) per gate: the registered gate oracle
+    embedded verbatim (a nested-WITH derived table) under its SQL keep
+    condition, so no funnel oracle's stage logic can drift from the
+    standalone queries'. ``swap`` as in _gate_flags, its keep relation
+    given as SQL."""
+    out = []
+    for i, (name, key, cond, _core) in enumerate(gates, start=1):
+        if swap and name == swap[0]:
+            out.append((swap[1], f"g{i} AS {swap[2]}"))
+        else:
+            out.append(
+                (name, f"g{i} AS (SELECT doc_id FROM ({_ORACLES[key]}\n) WHERE {cond})")
+            )
+    return out
+
+def _chain_sql(swap=None) -> tuple[list[str], list[str]]:
+    """The oracle's survivor chain over the gate table, s0 = documents
+    and s_i = s_{i-1} JOIN g_i: its CTEs, and the stage names (all_docs
+    first) for _stage_report_sql."""
+    ctes = ["s0 AS (SELECT doc_id FROM documents)"]
+    names = ["all_docs"]
+    for i, (name, cte) in enumerate(_gate_sql(_FUNNEL_GATES, swap), start=1):
+        ctes.append(cte)
         ctes.append(
             f"s{i} AS (SELECT s.doc_id FROM s{i-1} s JOIN g{i} g ON g.doc_id = s.doc_id)"
         )
-        rows.append(
-            f"SELECT {i} AS stage, '{name}' AS stage_name,"
-            f" CAST(COUNT(*) AS BIGINT) AS n_kept,"
-            f" CAST(SUM(doc_id) AS BIGINT) AS id_checksum FROM s{i}"
+        names.append(name)
+    return ctes, names
+
+def _flags_sql(*cols: str) -> tuple[list[str], list[str]]:
+    """The oracle twin of _gate_flags: the g_i CTEs plus one
+    MATERIALIZED (doc_id, *cols, k1..kn) flags relation, and the gate
+    names."""
+    gates = _gate_sql(_FUNNEL_GATES)
+    ids = range(1, len(gates) + 1)
+    ctes = [cte for _name, cte in gates]
+    ctes.append(
+        "flags AS MATERIALIZED (SELECT "
+        + ", ".join(
+            [f"d.{c}" for c in ("doc_id", *cols)]
+            + [f"CASE WHEN g{i}.doc_id IS NULL THEN 0 ELSE 1 END AS k{i}" for i in ids]
         )
+        + " FROM documents d "
+        + " ".join(f"LEFT JOIN g{i} ON g{i}.doc_id = d.doc_id" for i in ids)
+        + ")"
+    )
+    return ctes, [name for name, _cte in gates]
+
+def _stage_report_sql(ctes: list[str], names: list[str], rel: str = "s") -> str:
+    """``WITH ctes`` and one (stage, stage_name, n_kept, id_checksum)
+    row per stage relation ``{rel}{i}``, in stage order."""
+    rows = [
+        f"SELECT {i} AS stage, '{name}' AS stage_name,"
+        f" CAST(COUNT(*) AS BIGINT) AS n_kept,"
+        f" CAST(SUM(doc_id) AS BIGINT) AS id_checksum FROM {rel}{i}"
+        for i, name in enumerate(names)
+    ]
     return (
         "WITH " + ",\n".join(ctes) + "\n"
         + "\nUNION ALL\n".join(rows)
         + "\nORDER BY stage"
     )
 
-@query("corpus_prep_funnel_v2", _funnel_v2_oracle())
+@query("corpus_prep_funnel_v2", _stage_report_sql(*_chain_sql()))
 def corpus_prep_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MODERN corpus-curation funnel: the rule-based, model-based
     and statistical gates intersected in pipeline order — language
@@ -198,61 +337,33 @@ def corpus_prep_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate_attribution_audit shape — the gates then compute CONCURRENTLY
     inside one job), each doc's survival depth = its first failing
     gate, and all 8 stage rows fall out of a single aggregation pass
-    over the fenced flags (conditional sums on depth ≥ i). Identical
+    over the flags (conditional sums on depth ≥ i). Identical
     rows to the chained form — intersections of globally-fit keep-sets
     commute — measured 6.2 s → ~4 s at sf0.1.
     """
-    return _funnel_stage_report(
-        spark,
-        sf_dir,
-        _build_concurrently(
-            [
-                lambda name=name, key=key, flt=flt: (
-                    name,
-                    flt(_QUERIES[key](spark, sf_dir)).select("doc_id"),
-                )
-                for name, key, _cond, flt, _core in _FUNNEL_GATES
-            ]
-        ),
-    )
+    return _funnel_stage_report(*_gate_flags(spark, sf_dir))
 
-def _funnel_stage_report(
-    spark: SparkSession, sf_dir: str, gates: list[tuple[str, DataFrame]]
-) -> DataFrame:
-    """Shared stage-attrition report for funnels whose gates are all
-    globally fit (v2 and v4): one flags relation (LEFT joins of the
-    narrow keep-sets onto the doc spine), per-doc survival depth =
-    count of leading gates passed, one unfenced aggregation pass
+def _funnel_stage_report(flags: DataFrame, names: list[str]) -> DataFrame:
+    """Stage-attrition report for funnels whose gates are all globally
+    fit (v2 and v4), over the _gate_flags relation: per-doc survival
+    depth = count of leading gates passed, one unfenced aggregation pass
     producing every stage row. Stage i survivors == the sequential
-    chain's, because
-    intersecting globally-fit keep-sets is order-insensitive; n_kept /
-    id_checksum use count(when)/sum(when) so empty stages yield 0/NULL
-    exactly like an aggregate over an empty survivor relation."""
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    flags = docs
-    for i, (_name, keep) in enumerate(gates, start=1):
-        flags = flags.join(
-            keep.select("doc_id", F.lit(1).alias(f"__k{i}")),
-            "doc_id",
-            "left",
-        )
+    chain's, because intersecting globally-fit keep-sets is
+    order-insensitive; n_kept / id_checksum use count(when)/sum(when) so
+    empty stages yield 0/NULL exactly like an aggregate over an empty
+    survivor relation."""
     # survival depth: number of LEADING gates passed (first fail stops).
-    # The null→0 coalesces and the depth fold land in ONE projection
-    # (round 11: the per-gate join+withColumn+drop re-analyzed the whole
-    # growing flags tree three times per gate — these queries are
-    # driver-bound, 85-95% plan construction at sf0.1), and the old
-    # localCheckpoint fence on `per` is GONE: since round 10 collapsed
-    # the 8 stage rows into this single aggregation pass, the fence had
-    # exactly one consumer — at scale it materialized a corpus-sized
-    # relation nothing re-read.
-    ks = [F.coalesce(F.col(f"__k{i}"), F.lit(0)) for i in range(1, len(gates) + 1)]
+    # No fence on the flags: this aggregation pass is their only
+    # consumer, so a localCheckpoint would materialize a corpus-sized
+    # relation nothing re-reads (round 11)
+    ks = [F.col(f"k{i}") for i in range(1, len(names) + 1)]
     depth = ks[0]
     prefix = ks[0]
-    for i in range(1, len(gates)):
-        prefix = prefix * ks[i]
+    for k in ks[1:]:
+        prefix = prefix * k
         depth = depth + prefix
     per = flags.select("doc_id", depth.alias("__depth"))
-    names = ["all_docs"] + [name for name, _keep in gates]
+    names = ["all_docs"] + names
     aggs = []
     for i in range(len(names)):
         cond = F.col("__depth") >= i
@@ -278,8 +389,6 @@ def _funnel_stage_report(
         .orderBy("stage")
     )
 
-#: funnel gate list shared by v3's Spark side and its oracle builder:
-#: (stage_name, registered-oracle key, SQL keep-condition)
 def _funnel_v3_oracle() -> str:
     """v3 oracle: the SAME registered gate oracles, but each one's
     ``documents`` references are mechanically rewritten to the previous
@@ -293,14 +402,7 @@ def _funnel_v3_oracle() -> str:
     import re
 
     ctes = ["s0 AS (SELECT doc_id FROM documents)"]
-    rows = [
-        "SELECT 0 AS stage, 'all_docs' AS stage_name,"
-        " CAST(COUNT(*) AS BIGINT) AS n_kept,"
-        " CAST(SUM(doc_id) AS BIGINT) AS id_checksum FROM s0"
-    ]
-    for i, (name, key, cond, _flt, _core) in enumerate(
-        _FUNNEL_GATES, start=1
-    ):
+    for i, (_name, key, cond, _core) in enumerate(_FUNNEL_GATES, start=1):
         refit = re.sub(r"\bdocuments\b", f"docs_s{i - 1}", _ORACLES[key])
         # MATERIALIZED fences: every gate oracle references its
         # restricted corpus several times, and each survivor set feeds
@@ -315,16 +417,7 @@ def _funnel_v3_oracle() -> str:
             f"s{i} AS MATERIALIZED"
             f" (SELECT doc_id FROM ({refit}\n) WHERE {cond})"
         )
-        rows.append(
-            f"SELECT {i} AS stage, '{name}' AS stage_name,"
-            f" CAST(COUNT(*) AS BIGINT) AS n_kept,"
-            f" CAST(SUM(doc_id) AS BIGINT) AS id_checksum FROM s{i}"
-        )
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        + "\nUNION ALL\n".join(rows)
-        + "\nORDER BY stage"
-    )
+    return _stage_report_sql(ctes, ["all_docs"] + [n for n, *_ in _FUNNEL_GATES])
 
 @query("corpus_prep_funnel_v3", _funnel_v3_oracle())
 def corpus_prep_funnel_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,29 +442,11 @@ def corpus_prep_funnel_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is fenced once per stage (lazy localCheckpoint) because
     every gate scans it several times.
     """
-    cur = load(spark, sf_dir, "documents").localCheckpoint(eager=False)
-
-    def stage_row(df: DataFrame, i: int, name: str) -> DataFrame:
-        return df.agg(
-            F.lit(i).cast("long").alias("stage"),
-            F.lit(name).alias("stage_name"),
-            F.count(F.lit(1)).cast("long").alias("n_kept"),
-            F.sum("doc_id").cast("long").alias("id_checksum"),
-        )
-
-    stages = [stage_row(cur, 0, "all_docs")]
-    for i, (name, _key, _cond, flt, core) in enumerate(
-        _FUNNEL_GATES, start=1
-    ):
-        keep = flt(core(cur)).select("doc_id")
-        cur = cur.join(keep, "doc_id", "left_semi").localCheckpoint(
-            eager=False
-        )
-        stages.append(stage_row(cur, i, name))
-    out = stages[0]
-    for s in stages[1:]:
-        out = out.unionByName(s)
-    return out.orderBy("stage")
+    docs = load(spark, sf_dir, "documents").localCheckpoint(eager=False)
+    return _stage_rows(
+        ["all_docs"] + [n for n, *_ in _FUNNEL_GATES],
+        _survivor_chain(docs, _FUNNEL_GATES),
+    )
 
 @query("quality_ensemble_rank", _ensemble_oracle())
 def quality_ensemble_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -452,6 +527,35 @@ def quality_ensemble_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("rank")
     )
 
+def _manifest_oracle() -> str:
+    """End-to-end pipeline oracle: the funnel-v2 survivor chain
+    (registered gate oracles embedded verbatim, _chain_sql), then the
+    dedup_exact keeper restricted to the final survivors, then the
+    content-addressed shard rollup."""
+    ctes, _names = _chain_sql()
+    ctes.append(
+        f"""keep AS MATERIALIZED (
+  SELECT MIN(d.doc_id) AS doc_id
+  FROM s{len(_FUNNEL_GATES)} s JOIN documents d ON d.doc_id = s.doc_id
+  GROUP BY md5(lower(regexp_replace(trim(d.text), '\\s+', ' ', 'g')))
+)"""
+    )
+    ctes.append(
+        """sh AS (
+  SELECT doc_id,
+         CAST(('0x' || substr(md5('shard|' || CAST(doc_id AS VARCHAR)), 1, 8))
+              AS BIGINT) % 16 AS shard_id
+  FROM keep
+)"""
+    )
+    return (
+        "WITH " + ",\n".join(ctes) + "\n"
+        + """SELECT shard_id,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(doc_id) AS BIGINT) AS id_checksum
+FROM sh GROUP BY shard_id ORDER BY shard_id"""
+    )
+
 @query("curated_shard_manifest", _manifest_oracle())
 def curated_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The END-TO-END training-data pipeline in one plan: the
@@ -465,7 +569,7 @@ def curated_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     which shard holds which curated, deduplicated documents.
 
     Oracle discipline: the funnel chain reuses the registered gate
-    oracles verbatim (the _funnel_v2_oracle assembly), the keeper is
+    oracles verbatim (the _chain_sql assembly), the keeper is
     dedup_exact's fingerprint+MIN restricted to the survivors, the
     shard hash is shard_assignment_stats' — end-to-end composition of
     independently-oracled parts, with id checksums proving shard
@@ -480,32 +584,16 @@ def curated_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles (fingerprint, doc_id) pairs for SURVIVORS only; the
     manifest agg is the writer's own 16-key shuffle.
     """
-    docs = load(spark, sf_dir, "documents")
-    flags = docs.select("doc_id")
-    n_gates = len(_FUNNEL_GATES)
-    keeps = _build_concurrently(
-        [
-            lambda i=i, key=key, flt=flt: flt(
-                _QUERIES[key](spark, sf_dir)
-            ).select("doc_id", F.lit(1).alias(f"__k{i}"))
-            for i, (_name, key, _cond, flt, _core) in enumerate(
-                _FUNNEL_GATES, start=1
-            )
-        ]
-    )
-    for keep in keeps:
-        flags = flags.join(keep, "doc_id", "left")
+    flags, names = _gate_flags(spark, sf_dir)
     # no fence on survivors (round 11): the left_semi below is its only
     # consumer, so the localCheckpoint bought no reuse — it just ran a
     # blocking job at construction and materialized a corpus-sized
     # relation nothing re-read
     survivors = flags.filter(
-        sum(
-            (F.coalesce(F.col(f"__k{i}"), F.lit(0)) for i in range(1, n_gates + 1)),
-            start=F.lit(0),
-        )
-        == n_gates
+        sum((F.col(f"k{i}") for i in range(1, len(names) + 1)), start=F.lit(0))
+        == len(names)
     ).select("doc_id")
+    docs = load(spark, sf_dir, "documents")
     keepers = (
         docs.select(
             "doc_id", doc_fingerprint(F.col("text")).alias("fingerprint")
@@ -542,26 +630,10 @@ def _gate_attribution_oracle() -> str:
     """Embed every funnel gate oracle verbatim, build one per-doc flag
     relation, and attribute failures: per gate, total fails and
     UNIQUE fails (docs that fail only that gate)."""
-    gates = [(n, _ORACLES[k], c) for n, k, c, _f, _core in _FUNNEL_GATES]
-    ctes = []
-    flag_cols = []
-    joins = []
-    for i, (_name, oracle, cond) in enumerate(gates, start=1):
-        ctes.append(f"g{i} AS (SELECT doc_id FROM ({oracle}\n) WHERE {cond})")
-        flag_cols.append(
-            f"CASE WHEN g{i}.doc_id IS NULL THEN 0 ELSE 1 END AS k{i}"
-        )
-        joins.append(f"LEFT JOIN g{i} ON g{i}.doc_id = d.doc_id")
-    ctes.append(
-        "flags AS MATERIALIZED (SELECT d.doc_id, "
-        + ", ".join(flag_cols)
-        + " FROM documents d "
-        + " ".join(joins)
-        + ")"
-    )
-    n = len(gates)
+    ctes, names = _flags_sql()
+    n = len(names)
     rows = []
-    for i, (name, _o, _c) in enumerate(gates, start=1):
+    for i, name in enumerate(names, start=1):
         others = " + ".join(f"k{j}" for j in range(1, n + 1) if j != i)
         rows.append(
             f"""SELECT {i} AS gate, '{name}' AS gate_name,
@@ -601,42 +673,20 @@ def gate_attribution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate's own documented bounded plan), then 7 aggregate rows over
     it; the flag relation is fenced once and reused by all 7 rows.
     """
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    flags = docs
-    n = len(_FUNNEL_GATES)
-    keeps = _build_concurrently(
-        [
-            lambda i=i, key=key, flt=flt: flt(
-                _QUERIES[key](spark, sf_dir)
-            ).select("doc_id", F.lit(1).alias(f"__k{i}"))
-            for i, (_name, key, _cond, flt, _core) in enumerate(
-                _FUNNEL_GATES, start=1
-            )
-        ]
-    )
-    for keep in keeps:
-        flags = flags.join(keep, "doc_id", "left")
-    # all 7 null→0 coalesces in ONE projection, and no fence: the round
-    # 10 single-agg collapse left the flags relation with exactly one
-    # consumer, so the localCheckpoint only cost a full-tree plan pass
-    # at construction (these queries are driver-bound at sf0.1) and a
-    # corpus-sized materialization nothing re-read at scale (round 11)
-    flags = flags.select(
-        "doc_id",
-        *[
-            F.coalesce(F.col(f"__k{i}"), F.lit(0)).alias(f"k{i}")
-            for i in range(1, n + 1)
-        ],
-    )
+    # no fence on the flags: the round 10 single-agg collapse left them
+    # with exactly one consumer, so a localCheckpoint only cost a
+    # full-tree plan pass at construction (these queries are
+    # driver-bound at sf0.1) and a corpus-sized materialization nothing
+    # re-read at scale (round 11)
+    flags, names = _gate_flags(spark, sf_dir)
+    n = len(names)
     # ONE aggregation pass computes every gate's failure counts
     # (optimization round 10 — the per-gate agg form re-scanned the
     # flags relation 7 times and union-chained 7 single-row jobs);
     # rates are derived per row AFTER the agg from the identical
     # count/sum doubles, so values are unchanged
     aggs = [F.count(F.lit(1)).alias("__cnt")]
-    for i, (name, _key, _cond, _flt, _core) in enumerate(
-        _FUNNEL_GATES, start=1
-    ):
+    for i in range(1, n + 1):
         others = sum(F.col(f"k{j}") for j in range(1, n + 1) if j != i)
         aggs.append(F.sum(F.lit(1) - F.col(f"k{i}")).alias(f"__fail{i}"))
         aggs.append(
@@ -655,9 +705,7 @@ def gate_attribution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col(f"__fail{i}").alias("fail"),
                 F.col(f"__uniq{i}").alias("uniq"),
             )
-            for i, (name, _key, _cond, _flt, _core) in enumerate(
-                _FUNNEL_GATES, start=1
-            )
+            for i, name in enumerate(names, start=1)
         ]
     )
     return (
@@ -679,25 +727,9 @@ def _gate_bias_oracle() -> str:
     """Per (gate, lang) keep rate vs the gate's corpus-wide keep rate —
     the registered gate oracles embedded verbatim, one flags relation,
     a (gate × lang) rollup."""
-    gates = [(n, _ORACLES[k], c) for n, k, c, _f, _core in _FUNNEL_GATES]
-    ctes = []
-    flag_cols = []
-    joins = []
-    for i, (_name, oracle, cond) in enumerate(gates, start=1):
-        ctes.append(f"g{i} AS (SELECT doc_id FROM ({oracle}\n) WHERE {cond})")
-        flag_cols.append(
-            f"CASE WHEN g{i}.doc_id IS NULL THEN 0 ELSE 1 END AS k{i}"
-        )
-        joins.append(f"LEFT JOIN g{i} ON g{i}.doc_id = d.doc_id")
-    ctes.append(
-        "flags AS MATERIALIZED (SELECT d.doc_id, d.lang, "
-        + ", ".join(flag_cols)
-        + " FROM documents d "
-        + " ".join(joins)
-        + ")"
-    )
+    ctes, names = _flags_sql("lang")
     rows = []
-    for i, (name, _o, _c) in enumerate(gates, start=1):
+    for i, name in enumerate(names, start=1):
         rows.append(
             f"""SELECT {i} AS gate, '{name}' AS gate_name, lang,
   CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -739,29 +771,8 @@ def gate_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     own documented bounded plan), then a (gate × lang)-sized rollup —
     dimensions, not rows.
     """
-    docs = load(spark, sf_dir, "documents").select("doc_id", "lang")
-    flags = docs
-    n = len(_FUNNEL_GATES)
-    keeps = _build_concurrently(
-        [
-            lambda i=i, key=key, flt=flt: flt(
-                _QUERIES[key](spark, sf_dir)
-            ).select("doc_id", F.lit(1).alias(f"__k{i}"))
-            for i, (_name, key, _cond, flt, _core) in enumerate(
-                _FUNNEL_GATES, start=1
-            )
-        ]
-    )
-    for keep in keeps:
-        flags = flags.join(keep, "doc_id", "left")
-    flags = flags.select(
-        "doc_id",
-        "lang",
-        *[
-            F.coalesce(F.col(f"__k{i}"), F.lit(0)).alias(f"k{i}")
-            for i in range(1, n + 1)
-        ],
-    )
+    flags, names = _gate_flags(spark, sf_dir, "lang")
+    n = len(names)
     # ONE per-lang aggregation covers all 7 gates (optimization round
     # 10 — the per-gate form ran 7 lang groupBys + 7 global aggs + 7
     # crossJoins over the same fenced flags). Round 11: the corpus-wide
@@ -803,9 +814,7 @@ def gate_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col(f"__kept{i}").alias("n_kept"),
                 F.col(f"__orate{i}").alias("overall_keep_rate6"),
             )
-            for i, (name, _key, _cond, _flt, _core) in enumerate(
-                _FUNNEL_GATES, start=1
-            )
+            for i, name in enumerate(names, start=1)
         ]
     )
     keep_rate6 = rnd(F.col("r.n_kept") * 1.0 / F.col("n_docs"), 6)
@@ -1002,6 +1011,13 @@ def _qct_train_sql(name: str = "train", where: str = "") -> str:
 _QCT_Z_SQL = (
     "FLOOR((w.wb + w.w1 * t.f_distinct + w.w2 * t.f_top"
     " + w.w3 * t.f_len + w.w4 * t.f_stop) * 1000000 + 0.5) / 1000000"
+)
+
+#: the trained gate's keep-set over the _qct_ctes chain (keep ⇔ z > 0
+#: under the final weights): the funnels' trained stage
+_QCT_KEEP_SQL = (
+    f"(SELECT t.doc_id FROM train t CROSS JOIN w{_QCT_ROUNDS} w"
+    f" WHERE ({_QCT_Z_SQL}) > 0)"
 )
 
 def _qct_ctes(rounds: int, where: str = "") -> list[str]:
@@ -2427,44 +2443,10 @@ def _funnel_v4_oracle() -> str:
     are prepended verbatim (the composition discipline), every other
     gate embeds its registered oracle unchanged, so the only semantic
     difference from v2 IS the trained gate."""
-    ctes = list(_qct_ctes(_QCT_ROUNDS))
-    trained_gate = (
-        f"(SELECT t.doc_id FROM train t CROSS JOIN w{_QCT_ROUNDS} w"
-        f" WHERE ({_QCT_Z_SQL}) > 0)"
+    ctes, names = _chain_sql(
+        swap=("quality_keep", "quality_trained_keep", _QCT_KEEP_SQL)
     )
-    gates = []
-    for name, key, cond, _flt, _core in _FUNNEL_GATES:
-        if name == "quality_keep":
-            gates.append(("quality_trained_keep", None, None))
-        else:
-            gates.append((name, _ORACLES[key], cond))
-    ctes.append("s0 AS (SELECT doc_id FROM documents)")
-    rows = [
-        "SELECT 0 AS stage, 'all_docs' AS stage_name,"
-        " CAST(COUNT(*) AS BIGINT) AS n_kept,"
-        " CAST(SUM(doc_id) AS BIGINT) AS id_checksum FROM s0"
-    ]
-    for i, (name, oracle, cond) in enumerate(gates, start=1):
-        if oracle is None:
-            ctes.append(f"g{i} AS {trained_gate}")
-        else:
-            ctes.append(
-                f"g{i} AS (SELECT doc_id FROM ({oracle}\n) WHERE {cond})"
-            )
-        ctes.append(
-            f"s{i} AS (SELECT s.doc_id FROM s{i-1} s"
-            f" JOIN g{i} g ON g.doc_id = s.doc_id)"
-        )
-        rows.append(
-            f"SELECT {i} AS stage, '{name}' AS stage_name,"
-            f" CAST(COUNT(*) AS BIGINT) AS n_kept,"
-            f" CAST(SUM(doc_id) AS BIGINT) AS id_checksum FROM s{i}"
-        )
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        + "\nUNION ALL\n".join(rows)
-        + "\nORDER BY stage"
-    )
+    return _stage_report_sql(_qct_ctes(_QCT_ROUNDS) + ctes, names)
 
 @query("corpus_prep_funnel_v4", _funnel_v4_oracle())
 def corpus_prep_funnel_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2494,30 +2476,13 @@ def corpus_prep_funnel_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(_qct_z() > 0)
         .select("doc_id")
     )
-    def builder(name, key, flt):
-        if name == "quality_keep":
-            return lambda: ("quality_trained_keep", trained_keep)
-        return lambda: (
-            name,
-            flt(_QUERIES[key](spark, sf_dir)).select("doc_id"),
+    return _funnel_stage_report(
+        *_gate_flags(
+            spark,
+            sf_dir,
+            swap=("quality_keep", "quality_trained_keep", trained_keep),
         )
-
-    gates = _build_concurrently(
-        [
-            builder(name, key, flt)
-            for name, key, _cond, flt, _core in _FUNNEL_GATES
-        ]
     )
-    return _funnel_stage_report(spark, sf_dir, gates)
-
-_INCR_STAGES = (
-    "raw",
-    "lang_confident",
-    "not_code",
-    "gopher_keep",
-    "trained_keep",
-    "new_unique",
-)
 
 def _funnel_incr_oracle() -> str:
     """The incremental chain is the STREAMING per-doc gate chain
@@ -2527,18 +2492,10 @@ def _funnel_incr_oracle() -> str:
     oracles verbatim, the trained gate prepends the GD chain CTEs
     unchanged, and new_unique is within-delta keep-min plus an anti
     join against the standing half's survivor fingerprints."""
-    ctes = list(_qct_ctes(_QCT_ROUNDS))
-    per_doc = [
-        (n, _ORACLES[k], c)
-        for n, k, c, _f, _core in _FUNNEL_GATES
-        if n in ("lang_confident", "not_code", "gopher_keep")
-    ]
-    for i, (_name, oracle, cond) in enumerate(per_doc, start=1):
-        ctes.append(f"g{i} AS (SELECT doc_id FROM ({oracle}\n) WHERE {cond})")
-    ctes.append(
-        f"g4 AS (SELECT t.doc_id FROM train t CROSS JOIN w{_QCT_ROUNDS} w"
-        f" WHERE ({_QCT_Z_SQL}) > 0)"
-    )
+    n = len(_PER_DOC_GATES) + 1  # the trained gate runs last
+    ctes = _qct_ctes(_QCT_ROUNDS)
+    ctes += [cte for _name, cte in _gate_sql(_PER_DOC_GATES)]
+    ctes.append(f"g{n} AS {_QCT_KEEP_SQL}")
     ctes.append(
         "fpr AS (SELECT doc_id,"
         " md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')))"
@@ -2546,33 +2503,23 @@ def _funnel_incr_oracle() -> str:
     )
     ctes.append("d0 AS (SELECT doc_id FROM documents WHERE doc_id % 2 = 1)")
     ctes.append("e0 AS (SELECT doc_id FROM documents WHERE doc_id % 2 = 0)")
-    for i in range(1, 5):
+    for i in range(1, n + 1):
         for side in ("d", "e"):
             ctes.append(
                 f"{side}{i} AS (SELECT s.doc_id FROM {side}{i-1} s"
                 f" JOIN g{i} g ON g.doc_id = s.doc_id)"
             )
     ctes.append(
-        "standing AS (SELECT DISTINCT f.fingerprint FROM e4 s"
+        f"standing AS (SELECT DISTINCT f.fingerprint FROM e{n} s"
         " JOIN fpr f ON f.doc_id = s.doc_id)"
     )
     ctes.append(
-        "d5 AS (SELECT k.doc_id FROM ("
-        "SELECT f.fingerprint, MIN(s.doc_id) AS doc_id FROM d4 s"
+        f"d{n + 1} AS (SELECT k.doc_id FROM ("
+        f"SELECT f.fingerprint, MIN(s.doc_id) AS doc_id FROM d{n} s"
         " JOIN fpr f ON f.doc_id = s.doc_id GROUP BY f.fingerprint) k"
         " WHERE k.fingerprint NOT IN (SELECT fingerprint FROM standing))"
     )
-    rows = [
-        f"SELECT {i} AS stage, '{nm}' AS stage_name,"
-        f" CAST(COUNT(*) AS BIGINT) AS n_kept,"
-        f" CAST(SUM(doc_id) AS BIGINT) AS id_checksum FROM d{i}"
-        for i, nm in enumerate(_INCR_STAGES)
-    ]
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        + "\nUNION ALL\n".join(rows)
-        + "\nORDER BY stage"
-    )
+    return _stage_report_sql(ctes, STAGES, rel="d")
 
 @query("corpus_prep_funnel_incremental", _funnel_incr_oracle())
 def corpus_prep_funnel_incremental(
@@ -2625,31 +2572,11 @@ def corpus_prep_funnel_incremental(
         .select("doc_id")
         .localCheckpoint(eager=False)
     )
-    per_doc = [
-        (flt, core)
-        for n, _k, _c, flt, core in _FUNNEL_GATES
-        if n in ("lang_confident", "not_code", "gopher_keep")
-    ]
 
     def chain(src: DataFrame) -> list[DataFrame]:
-        # each survivor level has THREE consumers (its stage row, the
-        # next gate's core fit, and the next semi-join) — without the
-        # lazy fences the per-stage subtree doubled per level (the plan
-        # grew to 245 KB / every gate re-ran the whole prior chain;
-        # the funnel-v2 localCheckpoint lesson)
-        out = [src]
-        s = src
-        for flt, core in per_doc:
-            s = s.join(
-                flt(core(s)).select("doc_id"), "doc_id"
-            ).localCheckpoint(eager=False)
-            out.append(s)
-        out.append(
-            s.join(trained_keep, "doc_id", "left_semi").localCheckpoint(
-                eager=False
-            )
+        return _survivor_chain(
+            src, _PER_DOC_GATES, trained=lambda _s: trained_keep
         )
-        return out
 
     # the delta and standing chains are independent (both hang off the
     # shared trained_keep fence) — build concurrently (round 11, see
@@ -2671,19 +2598,7 @@ def corpus_prep_funnel_incremental(
         .select("doc_id")
     )
     stages.append(new_unique)
-    rows = [
-        df.agg(
-            F.lit(i).cast("long").alias("stage"),
-            F.lit(nm).alias("stage_name"),
-            F.count(F.lit(1)).cast("long").alias("n_kept"),
-            F.sum("doc_id").cast("long").alias("id_checksum"),
-        )
-        for i, (nm, df) in enumerate(zip(_INCR_STAGES, stages, strict=True))
-    ]
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("stage")
+    return _stage_rows(STAGES, stages)
 
 def _budget_threshold_oracle(rounds: int) -> str:
     ctes = _qct_ctes(rounds)

@@ -65,40 +65,20 @@ STAGES = ("raw", "lang_confident", "not_code", "gopher_keep",
 
 def _gate_chain(batch: DataFrame, weights: dict[str, float]) -> list[DataFrame]:
     """Apply the per-doc gates in funnel order; returns the survivor
-    relation after each stage (raw first). Every gate is the batch
-    funnel's registered core."""
-    from etl_weather_spark.queries import (
-        _code_detect_core,
-        _gopher_tuned_core,
-        _lang_id_confidence_core,
+    relation after each stage (raw first): the batch funnel's gate
+    table and survivor chain, unfenced since a micro-batch is small."""
+    from etl_weather_spark.queries.training import (
+        _PER_DOC_GATES,
+        _survivor_chain,
     )
     from etl_weather_spark.streaming.classifier_scorer import score_docs_batch
 
-    out = [batch]
-    s = batch.join(
-        _lang_id_confidence_core(batch)
-        .filter(F.col("tier") == "high")
-        .select("doc_id"),
-        "doc_id",
+    return _survivor_chain(
+        batch,
+        _PER_DOC_GATES,
+        trained=lambda s: score_docs_batch(s, weights).filter(F.col("keep")),
+        fence=False,
     )
-    out.append(s)
-    s = s.join(
-        _code_detect_core(s)
-        .filter(~F.col("looks_like_code"))
-        .select("doc_id"),
-        "doc_id",
-    )
-    out.append(s)
-    s = s.join(
-        _gopher_tuned_core(s).filter(F.col("keep")).select("doc_id"), "doc_id"
-    )
-    out.append(s)
-    s = s.join(
-        score_docs_batch(s, weights).filter(F.col("keep")).select("doc_id"),
-        "doc_id",
-    )
-    out.append(s)
-    return out
 
 
 def process_trained_funnel_batch(
@@ -190,6 +170,7 @@ def funnel_delta_report(
     one fingerprint-column scan of the committed snapshot (never the
     accepted text), and the report itself is 6 aggregate rows."""
     from etl_weather_spark.functions.text import doc_fingerprint
+    from etl_weather_spark.queries.training import _stage_rows
 
     chain = _gate_chain(delta_docs, weights)
     fp = chain[-1].select(
@@ -201,19 +182,7 @@ def funnel_delta_report(
         standing = snapshot_read(spark, accepted_table).select("fingerprint")
         new_unique = new_unique.join(standing, "fingerprint", "left_anti")
     chain.append(new_unique)
-    rows = [
-        df.agg(
-            F.lit(i).cast("long").alias("stage"),
-            F.lit(name).alias("stage_name"),
-            F.count(F.lit(1)).cast("long").alias("n_kept"),
-            F.sum("doc_id").cast("long").alias("id_checksum"),
-        )
-        for i, (name, df) in enumerate(zip(STAGES, chain, strict=True))
-    ]
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out.orderBy("stage")
+    return _stage_rows(STAGES, chain)
 
 
 def stream_trained_funnel(

@@ -18,8 +18,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F
+
 from etl_weather_spark.queries._registry import load
-from etl_weather_spark.queries.text import _FUNNEL_GATES
+from etl_weather_spark.queries.training import _FUNNEL_GATES
 from etl_weather_spark.session import get_spark
 
 
@@ -33,12 +35,12 @@ def main() -> None:
 
     times: dict[str, list[float]] = {}
     for rnd_i in range(n_rounds):
-        for name, _key, _cond, flt, core in _FUNNEL_GATES:
+        for name, _key, cond, core in _FUNNEL_GATES:
             spark.sparkContext.setJobDescription(f"gate:{name} r{rnd_i}")
             t0 = time.perf_counter()
-            flt(core(docs)).select("doc_id").write.format("noop").mode(
-                "overwrite"
-            ).save()
+            core(docs).filter(F.expr(cond)).select("doc_id").write.format(
+                "noop"
+            ).mode("overwrite").save()
             dt = round(time.perf_counter() - t0, 3)
             times.setdefault(name, []).append(dt)
             print(f"round {rnd_i} {name}: {dt}s", flush=True)

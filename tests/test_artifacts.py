@@ -104,6 +104,42 @@ def test_if_absent_rebuilds_on_stale_as_new_version(spark, art_dir):
     assert old.collect()[0].w == 1.0
 
 
+def test_if_absent_concurrent_miss_builds_once(spark, art_dir):
+    """Two threads miss the same artifact together: the miss path's
+    per-artifact lock lets one build and publish while the other waits
+    and reads that commit — one build call, one committed version."""
+    import threading
+    import time
+
+    calls = []
+    start = threading.Barrier(2)
+    errors = []
+
+    def build():
+        calls.append(1)
+        time.sleep(0.5)
+        return _one_row(spark)
+
+    def run():
+        try:
+            start.wait(timeout=60)
+            artifact_if_absent(
+                spark, "model", "ds", fingerprint="fp1", build=build
+            )
+        except Exception as e:  # surfaced on the test thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(calls) == 1
+    assert current_version(artifact_table("model", "ds")) == 0
+
+
 def test_fingerprint_tracks_data_and_params(tmp_path):
     sf = tmp_path / "sf"
     sf.mkdir()

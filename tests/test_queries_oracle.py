@@ -134,19 +134,36 @@ def test_lsh_recall_core_zero_exact_pairs_yields_null_recall(spark):
 
 
 def test_funnel_gate_table_is_single_source(spark):
-    """Round-7 review: the gate chain lives in ONE table consumed by
-    all four funnel surfaces; the v2 and v3 oracles must list the same
-    stages in the same order."""
+    """Round-7 review: the gate chain lives in ONE table read by every
+    funnel-family oracle; each one must list the table's stages or
+    gates in table order — v2 and v3 verbatim, v4 with the trained
+    classifier in the quality_keep slot, the attribution and bias
+    audits as gate names — and the incremental funnel must report the
+    streaming trained funnel's stages over the table's per-doc gates."""
     import re
 
     from etl_weather_spark import queries as q
+    from etl_weather_spark.streaming.trained_funnel import STAGES
 
     names = [n for n, *_ in q._FUNNEL_GATES]
-    v2 = q._ORACLES["corpus_prep_funnel_v2"]
-    v3 = q._ORACLES["corpus_prep_funnel_v3"]
-    for oracle in (v2, v3):
-        stages = re.findall(r"'(\w+)' AS stage_name", oracle)
-        assert stages == ["all_docs"] + names
+
+    def stages(key: str) -> list[str]:
+        return re.findall(r"'(\w+)' AS stage_name", q._ORACLES[key])
+
+    def gates(key: str) -> list[str]:
+        return re.findall(r"'(\w+)' AS gate_name", q._ORACLES[key])
+
+    for key in ("corpus_prep_funnel_v2", "corpus_prep_funnel_v3"):
+        assert stages(key) == ["all_docs"] + names
+    trained = [
+        "quality_trained_keep" if n == "quality_keep" else n for n in names
+    ]
+    assert stages("corpus_prep_funnel_v4") == ["all_docs"] + trained
+    for key in ("gate_attribution_audit", "gate_bias_audit"):
+        assert gates(key) == names
+    assert stages("corpus_prep_funnel_incremental") == list(STAGES)
+    per_doc = [n for n, *_ in q._PER_DOC_GATES]
+    assert per_doc and per_doc == [s for s in STAGES if s in names]
 
 
 def test_funnel_gate_keep_sets_unique_per_doc(spark, sf_dir):
@@ -159,8 +176,10 @@ def test_funnel_gate_keep_sets_unique_per_doc(spark, sf_dir):
     from etl_weather_spark import queries as q
     from etl_weather_spark.queries._registry import _QUERIES
 
-    for name, key, _cond, flt, _core in q._FUNNEL_GATES:
-        keep = flt(_QUERIES[key](spark, sf_dir)).select("doc_id")
+    from pyspark.sql import functions as F
+
+    for name, key, cond, _core in q._FUNNEL_GATES:
+        keep = _QUERIES[key](spark, sf_dir).filter(F.expr(cond)).select("doc_id")
         n = keep.count()
         nd = keep.distinct().count()
         assert n == nd, f"gate {name} ({key}) emits duplicate doc_ids"
