@@ -1,10 +1,11 @@
-"""Pure Column-expression library (no IO, no UDFs unless unavoidable).
+"""Pure expression library (no IO, no UDFs unless unavoidable).
 
 Everything here compiles to Catalyst expressions that run inside
 whole-stage codegen — the fast path. The reference implements these as
 row-at-a-time Python/JS (transform.py:109 list comprehension,
-viz.py:136 Series.apply); here they are declarative ``when`` chains and
-built-in functions.
+viz.py:136 Series.apply); here they are declarative ``CASE`` chains and
+built-in functions. The threshold rules (``categorize``, ``recommend``)
+are SQL text for ``selectExpr``/``F.expr``; the text helpers are Columns.
 """
 
 from etl_weather_spark.functions.categorize import (

@@ -1,33 +1,38 @@
-"""Categorical/binning expressions (reference parity: C2, C8, C9).
+"""Categorical/binning rules (reference parity: C2, C8, C9), as SQL text.
 
-All are chained ``when()`` expressions — constant-folded and codegen'd by
-Catalyst, zero Python per row. At 100 TB a ``when`` chain over a scanned
-column costs nothing beyond the scan itself.
+Each function takes a SQL expression (usually a column name) and returns a
+``CASE`` chain or comparison built from ``config``, for ``selectExpr`` or
+``F.expr``: one definition per rule, constant-folded and codegen'd by
+Catalyst, zero Python per row, and no py4j round trip to build it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from etl_weather_spark import config
 
 
+def sql_lit(v: float | int | str) -> str:
+    """A constant as a SQL literal typed like ``F.lit(v)`` (bare ``12.0`` is DECIMAL)."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, float):
+        return f"{v!r}D"
+    return str(v)
+
+
 def _bin_chain(
-    col: Column,
+    expr: str,
     bins: list[tuple[float, str]],
     top: str,
     null_label: str | None,
-) -> Column:
+) -> str:
     """Upper-inclusive threshold binning: value <= edge → label."""
-    expr = F.when(col.isNull(), F.lit(null_label)) if null_label is not None else None
-    for edge, label in bins:
-        clause = col <= F.lit(edge)
-        expr = F.when(clause, F.lit(label)) if expr is None else expr.when(clause, F.lit(label))
-    return expr.otherwise(F.lit(top))
+    whens = [f"WHEN {expr} IS NULL THEN {sql_lit(null_label)}"] if null_label is not None else []
+    whens += [f"WHEN {expr} <= {sql_lit(edge)} THEN {sql_lit(label)}" for edge, label in bins]
+    return f"CASE {' '.join(whens)} ELSE {sql_lit(top)} END"
 
 
-def pm25_category(pm25: Column) -> Column:
+def pm25_category(pm25: str) -> str:
     """PM2.5 µg/m³ → 6 Indonesian AQI categories.
 
     Parity with reference transform.py:32-48 (null → "Tidak diketahui"
@@ -37,26 +42,25 @@ def pm25_category(pm25: Column) -> Column:
     return _bin_chain(pm25, config.PM25_BINS, config.PM25_TOP_CATEGORY, config.PM25_NULL_CATEGORY)
 
 
-def aqi_status(pm25: Column) -> Column:
+def aqi_status(pm25: str) -> str:
     """3-bin chart status (reference viz.py:126-134): Good/Moderate/Unhealthy."""
     return _bin_chain(pm25, config.AQI_BINS, config.AQI_TOP_CATEGORY, None)
 
 
-def weather_code_desc(code: Column) -> Column:
+def weather_code_desc(code: str) -> str:
     """WMO weather code → text description (reference app.js:169-185).
 
-    Range-cases as a when-chain; for a genuinely large decode table this
+    Range-cases as a CASE chain; for a genuinely large decode table this
     would be a broadcast-joined dimension instead.
     """
-    expr: Column | None = None
-    for lo, hi, desc in config.WMO_CODE_RANGES:
-        clause = code.between(F.lit(lo), F.lit(hi))
-        expr = F.when(clause, F.lit(desc)) if expr is None else expr.when(clause, F.lit(desc))
-    assert expr is not None
-    return expr.otherwise(F.lit(config.WMO_UNKNOWN))
+    whens = " ".join(
+        f"WHEN {code} >= {lo} AND {code} <= {hi} THEN {sql_lit(desc)}"
+        for lo, hi, desc in config.WMO_CODE_RANGES
+    )
+    return f"CASE {whens} ELSE {sql_lit(config.WMO_UNKNOWN)} END"
 
 
-def wind_compass(degrees: Column) -> Column:
+def wind_compass(degrees: str) -> str:
     """Wind direction degrees → 16-point compass label.
 
     Parity with reference app.js:187-194:
@@ -64,27 +68,21 @@ def wind_compass(degrees: Column) -> Column:
     Implemented with arithmetic + element_at over a literal array —
     fully JVM-side.
     """
-    norm = ((degrees % 360) + 360) % 360
-    idx = (F.round(norm / 22.5, 0).cast("int") % 16)
-    points = F.array(*[F.lit(p) for p in config.COMPASS_POINTS])
-    return F.element_at(points, idx + 1)
+    points = ", ".join(sql_lit(p) for p in config.COMPASS_POINTS)
+    idx = f"CAST(round(((({degrees} % 360) + 360) % 360) / 22.5D, 0) AS INT) % 16"
+    return f"element_at(array({points}), ({idx}) + 1)"
 
 
-def is_hot_day(temp_max: Column) -> Column:
+def is_hot_day(temp_max: str) -> str:
     """temp_max > 33°C (reference report.py:39, app.js:326)."""
-    return temp_max > F.lit(config.HOT_DAY_TEMP_C)
+    return f"{temp_max} > {sql_lit(config.HOT_DAY_TEMP_C)}"
 
 
-def is_heavy_rain(total_rain: Column) -> Column:
+def is_heavy_rain(total_rain: str) -> str:
     """total_rain > 20mm/day (flag expected by reference app.js:327)."""
-    return total_rain > F.lit(config.HEAVY_RAIN_MM)
+    return f"{total_rain} > {sql_lit(config.HEAVY_RAIN_MM)}"
 
 
-def is_unhealthy_pm25(pm25_avg: Column) -> Column:
+def is_unhealthy_pm25(pm25_avg: str) -> str:
     """pm25_avg > 35.4 (reference app.js:328,644; report.py:36)."""
-    return pm25_avg > F.lit(config.UNHEALTHY_PM25)
-
-
-def pct_diff(a: Column, b: Column, decimals: int = 1) -> Column:
-    """(a-b)/|b|*100 rounded (reference app.js:977-978)."""
-    return F.round((a - b) / F.abs(b) * 100.0, decimals)
+    return f"{pm25_avg} > {sql_lit(config.UNHEALTHY_PM25)}"

@@ -1,24 +1,19 @@
 """Rule-based recommendation text (reference parity: C3, report.py:28-49).
 
 The reference builds a list of advice strings from threshold triggers and
-joins with spaces, falling back to a default. Expressed here as
-``concat_ws`` over ``when`` clauses + ``coalesce(nullif(...))`` — a single
-JVM-side expression.
+joins with spaces, falling back to a default. Expressed here as SQL text
+(``concat_ws`` over ``CASE`` clauses + ``coalesce(nullif(...))``) built
+from ``config`` — a single JVM-side expression; Column callers wrap it in
+``F.expr``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from etl_weather_spark import config
+from etl_weather_spark.functions.categorize import sql_lit
 
 
-def recommendation(
-    pm25_avg: Column,
-    temp_max: Column,
-    rainy_days: Column,
-) -> Column:
+def recommendation(pm25_avg: str, temp_max: str, rainy_days: str) -> str:
     """Concatenate triggered advice strings; default text if none trigger.
 
     Trigger order matches reference report.py:28-49:
@@ -26,10 +21,13 @@ def recommendation(
     rainy_days>=3 → umbrella.
     """
     mask = (
-        F.when(pm25_avg > config.SENSITIVE_PM25, F.lit(config.ADVICE_MASK))
-        .when(pm25_avg > config.MODERATE_PM25, F.lit(config.ADVICE_MASK_SENSITIVE))
+        f"CASE WHEN {pm25_avg} > {sql_lit(config.SENSITIVE_PM25)} THEN {sql_lit(config.ADVICE_MASK)}"
+        f" WHEN {pm25_avg} > {sql_lit(config.MODERATE_PM25)} THEN {sql_lit(config.ADVICE_MASK_SENSITIVE)} END"
     )
-    heat = F.when(temp_max > config.HOT_DAY_TEMP_C, F.lit(config.ADVICE_HEAT))
-    rain = F.when(rainy_days >= config.RAINY_DAYS_ADVICE_MIN, F.lit(config.ADVICE_RAIN))
-    joined = F.concat_ws(" ", mask, heat, rain)
-    return F.coalesce(F.nullif(joined, F.lit("")), F.lit(config.ADVICE_DEFAULT))
+    heat = f"CASE WHEN {temp_max} > {sql_lit(config.HOT_DAY_TEMP_C)} THEN {sql_lit(config.ADVICE_HEAT)} END"
+    rain = (
+        f"CASE WHEN {rainy_days} >= {sql_lit(config.RAINY_DAYS_ADVICE_MIN)}"
+        f" THEN {sql_lit(config.ADVICE_RAIN)} END"
+    )
+    joined = f"concat_ws(' ', {mask}, {heat}, {rain})"
+    return f"coalesce(nullif({joined}, ''), {sql_lit(config.ADVICE_DEFAULT)})"

@@ -7,9 +7,17 @@ Reference parity, expressed as one lazy DataFrame chain per stage:
 - :func:`daily_from_hourly` — A1 group-by-day multi-agg + C4/C5
   round/fill + C2 categorize + derived boolean flags the reference
   frontend expects but its backend never computes (app.js:326-328)
-- :func:`summary_from_daily` — A3-A5 global aggregates incl. max_by
+- :func:`summary_from_daily` — A3-A5 per-city aggregates incl. max_by
   wettest day, A4 count_if rainy days, C3 recommendation
   (report.py:81-106)
+
+Every stage is SQL text (``selectExpr``/``F.expr``; the rules are SQL
+fragments from ``functions.categorize``/``functions.recommend``), which
+parses to the same plan as the Column API. Under PySpark 4.1 each Column
+call costs ~10 py4j round trips (attaching its call-site origin) plus one
+when its proxy is collected, an ``F.expr`` 3: built from Column calls the
+spine cost ~2,000 round trips, ~400 ms a pass before any job ran, on a
+4-vCPU VM; as SQL text it costs ~200.
 
 Scale notes:
 - The hourly⟗air join keys on (city, time). Both sides are written
@@ -18,8 +26,12 @@ Scale notes:
   skew (a megacity's sensors vs a village).
 - daily agg is a hash aggregate with map-side partial aggregation —
   shuffle carries one row per (city, date) per mapper, not raw rows.
-- summary is a single-group agg: partials reduce to one row; driver
-  collects O(1).
+- summary reads daily through ``DISTRIBUTE BY city``: it shuffles the
+  daily gold rows (one per city-day) by city instead of partial
+  aggregates, and the city aggregate needs no further exchange. A
+  repartition does not keep its input's order, so Catalyst drops daily's
+  global ``ORDER BY`` under it, with its range-sample job and range
+  shuffle.
 """
 
 from __future__ import annotations
@@ -33,30 +45,25 @@ from etl_weather_spark.functions.categorize import (
     is_hot_day,
     is_unhealthy_pm25,
     pm25_category,
+    sql_lit,
 )
 from etl_weather_spark.functions.recommend import recommendation
 
-#: canonical hourly metric columns (silver schema, FIXTURES.md §2.1)
-HOURLY_METRICS = ["temp", "rain", "rh", "wind", "feels_like", "wcode", "dew_point", "wind_dir"]
-AIR_METRICS = ["pm25", "pm10"]
-
-
-def merge_hourly(weather: DataFrame, air: DataFrame, keys: list[str] | None = None) -> DataFrame:
+def merge_hourly(weather: DataFrame, air: DataFrame) -> DataFrame:
     """Full-outer join weather and air hourly tables on (city, time).
 
     Preserves hours present in only one source (reference transform.py:77
     uses how='outer'); null time rows are dropped afterwards (F1,
     transform.py:86,189) and ``date`` is derived (P4).
     """
-    keys = keys or ["city", "time"]
-    merged = weather.join(air, on=keys, how="outer")
     return (
-        merged.filter(F.col("time").isNotNull())
-        .withColumn("date", F.to_date("time"))
+        weather.join(air, on=["city", "time"], how="outer")
+        .filter("time IS NOT NULL")
+        .selectExpr("*", "to_date(time) AS date")
     )
 
 
-def daily_from_hourly(hourly: DataFrame, group_keys: list[str] | None = None) -> DataFrame:
+def daily_from_hourly(hourly: DataFrame) -> DataFrame:
     """Per (city, date): min/max temp, total rain, mean pm25/pm10 + category + flags.
 
     Matches reference transform.py:89-109 exactly: named aggs, total_rain
@@ -64,49 +71,38 @@ def daily_from_hourly(hourly: DataFrame, group_keys: list[str] | None = None) ->
     is_hot_day / is_heavy_rain / is_unhealthy_pm25 flags (FIXTURES.md
     §2.2) promoted to real gold columns.
     """
-    group_keys = group_keys or ["city", "date"]
-    daily = hourly.groupBy(*group_keys).agg(
-        F.round(F.min("temp"), 2).alias("temp_min"),
-        F.round(F.max("temp"), 2).alias("temp_max"),
-        F.round(F.coalesce(F.sum("rain"), F.lit(0.0)), 2).alias("total_rain"),
-        F.round(F.avg("pm25"), 2).alias("pm25_avg"),
-        F.round(F.avg("pm10"), 2).alias("pm10_avg"),
+    daily = hourly.groupBy("city", "date").agg(
+        F.expr("round(min(temp), 2) AS temp_min"),
+        F.expr("round(max(temp), 2) AS temp_max"),
+        F.expr("round(coalesce(sum(rain), 0.0D), 2) AS total_rain"),
+        F.expr("round(avg(pm25), 2) AS pm25_avg"),
+        F.expr("round(avg(pm10), 2) AS pm10_avg"),
     )
-    return (
-        daily.withColumn("pm25_category", pm25_category(F.col("pm25_avg")))
-        .withColumn("is_hot_day", F.coalesce(is_hot_day(F.col("temp_max")), F.lit(False)))
-        .withColumn("is_heavy_rain", F.coalesce(is_heavy_rain(F.col("total_rain")), F.lit(False)))
-        .withColumn(
-            "is_unhealthy_pm25",
-            F.coalesce(is_unhealthy_pm25(F.col("pm25_avg")), F.lit(False)),
-        )
-        .orderBy(*group_keys)
-    )
+    return daily.selectExpr(
+        "*",
+        f"{pm25_category('pm25_avg')} AS pm25_category",
+        f"coalesce({is_hot_day('temp_max')}, false) AS is_hot_day",
+        f"coalesce({is_heavy_rain('total_rain')}, false) AS is_heavy_rain",
+        f"coalesce({is_unhealthy_pm25('pm25_avg')}, false) AS is_unhealthy_pm25",
+    ).orderBy(F.expr("city"), F.expr("date"))
 
 
-def summary_from_daily(daily: DataFrame, group_keys: list[str] | None = None) -> DataFrame:
-    """Period summary per city: global min/max/mean, wettest day (max_by), rainy-day count.
+def summary_from_daily(daily: DataFrame) -> DataFrame:
+    """Period summary per city: min/max/mean, wettest day (max_by), rainy-day count.
 
     Reference report.py:81-106; rainy day = total_rain > 0 (A4 count_if),
-    wettest day = argmax(total_rain) (A5 max_by). Adds the C3
-    recommendation text.
+    wettest day = argmax(total_rain) (A5 max_by), the earliest of tied
+    days like the reference's ``idxmax``: the ``max_by`` key is the total
+    order (total_rain, -day number). Adds the C3 recommendation text.
     """
-    group_keys = group_keys if group_keys is not None else ["city"]
-    grouped = daily.groupBy(*group_keys) if group_keys else daily.groupBy()
-    summary = grouped.agg(
-        F.round(F.min("temp_min"), 2).alias("period_temp_min"),
-        F.round(F.max("temp_max"), 2).alias("period_temp_max"),
-        F.round(F.avg("pm25_avg"), 2).alias("period_pm25_avg"),
-        F.max_by("date", "total_rain").alias("wettest_date"),
-        F.round(F.max("total_rain"), 2).alias("wettest_rain"),
-        F.sum(
-            F.when(F.col("total_rain") > config.RAINY_DAY_MM, 1).otherwise(0)
-        ).alias("rainy_days"),
-        F.count(F.lit(1)).alias("n_days"),
+    summary = daily.repartition(F.expr("city")).groupBy("city").agg(
+        F.expr("round(min(temp_min), 2) AS period_temp_min"),
+        F.expr("round(max(temp_max), 2) AS period_temp_max"),
+        F.expr("round(avg(pm25_avg), 2) AS period_pm25_avg"),
+        F.expr("max_by(date, struct(total_rain, -unix_date(date))) AS wettest_date"),
+        F.expr("round(max(total_rain), 2) AS wettest_rain"),
+        F.expr(f"sum(CASE WHEN total_rain > {sql_lit(config.RAINY_DAY_MM)} THEN 1 ELSE 0 END) AS rainy_days"),
+        F.expr("count(1) AS n_days"),
     )
-    return summary.withColumn(
-        "recommendation",
-        recommendation(
-            F.col("period_pm25_avg"), F.col("period_temp_max"), F.col("rainy_days")
-        ),
-    )
+    rec = recommendation("period_pm25_avg", "period_temp_max", "rainy_days")
+    return summary.selectExpr("*", f"{rec} AS recommendation")

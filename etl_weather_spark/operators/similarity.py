@@ -373,10 +373,7 @@ def embedding_near_dupes(
                     F.col("nv").alias("nc"),
                 )
             )
-            csim = rnd(
-                dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("nc")),
-                sim_decimals,
-            )
+            csim = _finite_csim(sim_decimals)
             wc = Window.partitionBy("vec_id").orderBy(
                 F.col("csim").desc(), F.col("cid")
             )
@@ -553,10 +550,7 @@ def ivf_cells_seeded(
             "v",
             "nv",
         )
-    csim = rnd(
-        dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("nc")),
-        sim_decimals,
-    )
+    csim = _finite_csim(sim_decimals)
     scored = e.crossJoin(F.broadcast(cent)).select(
         "vec_id", "v", "nv", "cid", csim.alias("csim")
     )
@@ -1194,6 +1188,17 @@ def _assert_finite(a: np.ndarray, what: str) -> None:
             f"non-finite {what} in exact-fold kernel: parity with the "
             "Catalyst NaN ordering is undefined; check input embeddings"
         )
+
+
+def _finite_csim(sim_decimals: int) -> Column:
+    """Rounded cosine of ``v`` to centroid ``cv`` for the Catalyst
+    fallbacks, failing the query on a non-finite value like
+    :func:`_assert_finite` fails the kernel: rounding alone would turn
+    NaN into 0.0 (``FLOOR`` of NaN casts to 0) and rank it silently."""
+    raw = dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("nc"))
+    bad = F.isnan(raw) | (F.abs(raw) == float("inf"))
+    msg = "non-finite centroid cosine in IVF cell assignment; check input embeddings"
+    return F.when(bad, F.raise_error(F.lit(msg))).otherwise(rnd(raw, sim_decimals))
 
 
 def fold_dots(V: np.ndarray, R: np.ndarray) -> np.ndarray:

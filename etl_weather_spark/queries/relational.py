@@ -9,6 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from etl_weather_spark.functions.categorize import (
+    is_heavy_rain,
+    is_hot_day,
+    is_unhealthy_pm25,
     pm25_category,
     weather_code_desc,
     wind_compass,
@@ -89,12 +92,12 @@ FROM daily
 def daily_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2 binning + derived boolean flags (transform.py:32-48, app.js:326-328)."""
     d = _daily(spark, sf_dir)
-    return d.select(
+    return d.selectExpr(
         "*",
-        pm25_category(F.col("vavg")).alias("category"),
-        (F.col("vmax") > 33.0).alias("is_hot_day"),
-        (F.col("vsum") > 20.0).alias("is_heavy_rain"),
-        (F.col("vavg") > 35.4).alias("is_unhealthy"),
+        f"{pm25_category('vavg')} AS category",
+        f"{is_hot_day('vmax')} AS is_hot_day",
+        f"{is_heavy_rain('vsum')} AS is_heavy_rain",
+        f"{is_unhealthy_pm25('vavg')} AS is_unhealthy",
     )
 
 @query(
@@ -198,12 +201,8 @@ def recommendation_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         rnd(F.max("vmax"), 2).alias("period_max"),
         F.sum(F.when(F.col("vsum") > 0, 1).otherwise(0)).alias("rainy_days"),
     )
-    return s.select(
-        "*",
-        recommendation(
-            F.col("period_avg"), F.col("period_max"), F.col("rainy_days")
-        ).alias("recommendation"),
-    )
+    rec = recommendation("period_avg", "period_max", "rainy_days")
+    return s.selectExpr("*", f"{rec} AS recommendation")
 
 @query(
     "rolling_avg_7d",
@@ -413,9 +412,9 @@ def weather_code_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C8+C13: tolerant JSON extraction (get_json_object) + WMO decode
     when-chain (app.js:169-185), aggregated to category counts."""
     ev = load(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("int")
+    k = "CAST(get_json_object(props, '$.k') AS INT)"
     return (
-        ev.select(weather_code_desc(k).alias("code"))
+        ev.selectExpr(f"{weather_code_desc(k)} AS code")
         .groupBy("code")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -435,7 +434,7 @@ def wind_compass_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C9: degrees → 16-point compass label (app.js:187-194), as counts."""
     ev = load(spark, sf_dir, "events")
     return (
-        ev.select(wind_compass(F.col("value")).alias("compass"))
+        ev.selectExpr(f"{wind_compass('value')} AS compass")
         .groupBy("compass")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -22,8 +22,9 @@ from etl_weather_spark.functions import (
 
 
 def _vals(spark, data, expr, in_type="double"):
+    """Apply a SQL-text rule to column ``v`` over ``data``."""
     df = spark.createDataFrame([(v,) for v in data], f"v {in_type}")
-    return [r[0] for r in df.select(expr(F.col("v")).alias("out")).collect()]
+    return [r[0] for r in df.select(F.expr(expr("v")).alias("out")).collect()]
 
 
 def test_pm25_category_boundaries(spark):
@@ -78,9 +79,7 @@ def test_recommendation_triggers(spark):
     )
     got = [
         r[0]
-        for r in df.select(
-            recommendation(F.col("pm25"), F.col("tmax"), F.col("rainy")).alias("r")
-        ).collect()
+        for r in df.select(F.expr(recommendation("pm25", "tmax", "rainy")).alias("r")).collect()
     ]
     assert "masker" in got[0] and "panas" in got[0] and "hujan" in got[0]
     assert "masker" in got[1] and "panas" not in got[1]

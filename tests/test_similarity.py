@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_weather_spark.operators.similarity import (
@@ -336,6 +337,20 @@ def test_ivf_kernel_honours_sim_decimals(spark, monkeypatch):
     catalyst = cells()
     assert catalyst[3] == 0  # the 3-dp tie breaks to the lower centroid id
     assert kernel == catalyst
+
+
+def test_ivf_catalyst_fallbacks_fail_loud_on_nan(spark, monkeypatch):
+    """Past the kernel's centroid cap, both Catalyst cell assignments
+    raise on a NaN cosine like the kernel does, instead of ranking it."""
+    from etl_weather_spark.operators import similarity
+
+    rows = [(0, [1.0, 0.0], "a"), (1, [0.0, 1.0], "a"), (2, [float("nan"), 1.0], "a")]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label string")
+    monkeypatch.setattr(similarity, "IVF_KERNEL_MAX_CENTROIDS", 0)
+    with pytest.raises(Exception, match="non-finite"):
+        similarity.ivf_cells_seeded(emb, cells_per_sqrt_n=1).collect()
+    with pytest.raises(Exception, match="non-finite"):
+        similarity.embedding_near_dupes(emb, block_cap=1, threshold=0.0).collect()
 
 
 def test_ivf_cells_seeded_sparse_offset_ids(spark):

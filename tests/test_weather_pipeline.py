@@ -8,16 +8,19 @@ rows from FIXTURES.md §2.3 exactly.
 from __future__ import annotations
 
 import datetime as dt
+import gc
 import json
+import threading
 
 import pytest
-from pyspark.sql import functions as F
+from py4j.clientserver import ClientServerConnection
 
 from etl_weather_spark.operators.pipeline import (
     daily_from_hourly,
     merge_hourly,
     summary_from_daily,
 )
+from etl_weather_spark.plans.explain import physical_plan
 from etl_weather_spark.sources.openmeteo import (
     HOURLY_AIR_FIELDS,
     HOURLY_WEATHER_FIELDS,
@@ -76,16 +79,21 @@ def test_normalize_nulls_length_mismatch(spark, tmp_path):
     assert len(rows) == 3 and all(r["temp"] is None for r in rows)
 
 
-def test_daily_golden_rows(spark, raw_paths):
-    weather_path, air_path = raw_paths
+def _spine(spark, weather_path, air_path):
+    """read ×2 → normalize ×2 → merge → daily → summary, lazily."""
     hw = normalize_hourly(
         read_raw_json(spark, weather_path, HOURLY_WEATHER_FIELDS), HOURLY_WEATHER_FIELDS
     )
     ha = normalize_hourly(
         read_raw_json(spark, air_path, HOURLY_AIR_FIELDS), HOURLY_AIR_FIELDS
     )
-    daily = daily_from_hourly(merge_hourly(hw, ha)).orderBy("date")
-    rows = [r.asDict() for r in daily.collect()]
+    daily = daily_from_hourly(merge_hourly(hw, ha))
+    return daily, summary_from_daily(daily)
+
+
+def test_daily_golden_rows(spark, raw_paths):
+    daily, _ = _spine(spark, *raw_paths)
+    rows = [r.asDict() for r in daily.orderBy("date").collect()]
     assert len(rows) == 2
     d1, d2 = rows
     assert d1["date"] == dt.date(2025, 1, 1)
@@ -101,16 +109,59 @@ def test_daily_golden_rows(spark, raw_paths):
 
 
 def test_summary(spark, raw_paths):
-    weather_path, air_path = raw_paths
-    hw = normalize_hourly(
-        read_raw_json(spark, weather_path, HOURLY_WEATHER_FIELDS), HOURLY_WEATHER_FIELDS
-    )
-    ha = normalize_hourly(
-        read_raw_json(spark, air_path, HOURLY_AIR_FIELDS), HOURLY_AIR_FIELDS
-    )
-    daily = daily_from_hourly(merge_hourly(hw, ha))
-    s = summary_from_daily(daily).collect()[0].asDict()
+    _, summary = _spine(spark, *raw_paths)
+    s = summary.collect()[0].asDict()
     assert s["period_temp_min"] == 24.0 and s["period_temp_max"] == 26.5
     assert s["wettest_date"] == dt.date(2025, 1, 2) and s["wettest_rain"] == 2.4
     assert s["rainy_days"] == 2  # both days have total_rain > 0
     assert s["recommendation"] == "Kondisi cuaca dan udara relatif nyaman."
+
+
+def test_wettest_day_ties_take_earliest(spark, tmp_path):
+    """A5 parity with the reference's ``idxmax``: of the days tied on the
+    most rain (01-02 and 01-04, 3.0 mm each), the earliest wins."""
+    times = [f"2025-01-0{d}T00:00" for d in range(1, 6)]
+    weather = {
+        "city": "x",
+        "ingest_ts": "2025-01-06T00:00:00",
+        "hourly": {"time": times, "precipitation": [0.0, 3.0, 1.0, 3.0, 0.5]},
+    }
+    air = {"city": "x", "ingest_ts": "2025-01-06T00:00:00", "hourly": {"time": times, "pm2_5": [10.0] * 5}}
+    (tmp_path / "w.json").write_text(json.dumps(weather))
+    (tmp_path / "a.json").write_text(json.dumps(air))
+    _, summary = _spine(spark, str(tmp_path / "w.json"), str(tmp_path / "a.json"))
+    s = summary.collect()[0]
+    assert (s["wettest_date"], s["wettest_rain"]) == (dt.date(2025, 1, 2), 3.0)
+
+
+def test_spine_construction_round_trips(spark, raw_paths):
+    """Building the spine stays a handful of py4j round trips per stage:
+    it is SQL text, not Column calls at ~10 round trips each (~2,000 in
+    all when built from Column calls). Counts the calls of this thread:
+    py4j's finalizer thread sends the deletes of collected proxies, from
+    earlier tests too, whenever it wakes."""
+    sent = [0]
+    send = ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counting(self, command):
+        sent[0] += threading.get_ident() == me
+        return send(self, command)
+
+    gc.collect()
+    ClientServerConnection.send_command = counting
+    try:
+        _spine(spark, *raw_paths)
+    finally:
+        ClientServerConnection.send_command = send
+    assert sent[0] <= 250, sent[0]
+
+
+def test_summary_plan_drops_daily_sort(spark, raw_paths):
+    """The summary reads daily through a repartition by city, so Catalyst
+    drops daily's global sort: no Sort node, no range partitioning."""
+    _, summary = _spine(spark, *raw_paths)
+    optimized = summary._jdf.queryExecution().optimizedPlan().toString()
+    assert not any(line.lstrip(" :+-").startswith("Sort ") for line in optimized.splitlines()), optimized
+    assert "RepartitionByExpression [city" in optimized, optimized
+    assert "rangepartitioning" not in physical_plan(summary).lower()
