@@ -33,10 +33,6 @@ def r2(col: Column) -> Column:
     return rnd(col, 2)
 
 
-def r4(col: Column) -> Column:
-    return rnd(col, 4)
-
-
 def sql_round(expr: str, decimals: int = 2) -> str:
     """The identical rounding as a SQL text fragment for oracle queries."""
     scale = 10 ** decimals

@@ -35,7 +35,6 @@ from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from etl_weather_spark.operators.similarity import (
     cosine_topk_pq,
@@ -43,8 +42,8 @@ from etl_weather_spark.operators.similarity import (
     pq_train_codebooks,
 )
 from etl_weather_spark.sources.snapshots import (
-    current_version,
-    snapshot_history,
+    marker_version,
+    snapshot_append,
     snapshot_read,
     snapshot_write,
 )
@@ -162,14 +161,13 @@ def append_pq_index(
     contract as streaming/incremental_dedup."""
     spark = new_vectors.sparkSession
     table = _codes_table(path)
-    if any(h.get("committed_at") == marker for h in snapshot_history(table)):
+    if marker_version(table, marker) is not None:
         return
     idx = load_pq_index(spark, path)
     codes = pq_encode(
         new_vectors, idx.books, vec_col=idx.meta["vec_col"], id_col=idx.meta["id_col"]
     )
-    mode = "append" if current_version(table) is not None else "overwrite"
-    snapshot_write(codes, table, mode=mode, ingest_ts=marker)
+    snapshot_append(codes, table, marker=marker)
 
 
 def compact_pq_index(spark: SparkSession, path: str) -> int:

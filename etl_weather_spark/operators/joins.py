@@ -4,19 +4,13 @@ Reference parity: J3 — the frontend's "current conditions" hero picks the
 hourly row minimizing |now - time| (app.js:755-761); J4 — today's-row
 lookup by date (app.js:764-765).
 
-Spark has no native as-of join; two strategies are provided:
-
-- :func:`asof_join_union` — the scalable default. Union both sides
-  tagged with a side marker, sort within (keys) by time, and carry the
-  last right-side values forward with ``last(..., ignorenulls=True)``
-  over an unbounded-preceding window. One shuffle on the join keys, no
-  pairwise explosion; this is how Flink/KDB-style as-of joins are
-  expressed relationally, and it survives 100 TB because the window is
-  partitioned by key.
-- :func:`asof_join_pandas` — ``applyInPandas`` + ``pd.merge_asof`` per
-  key group, supporting 'nearest' direction and tolerance. Arrow-batched;
-  use when exact pandas merge_asof semantics (nearest/tolerance) are
-  needed and per-key groups fit in memory.
+Spark has no native as-of join. :func:`asof_join_union` is the
+scalable form: union both sides tagged with a side marker, sort within
+(keys) by time, and carry the last right-side values forward with
+``last(..., ignorenulls=True)`` over an unbounded-preceding window. One
+shuffle on the join keys, no pairwise explosion; this is how
+Flink/KDB-style as-of joins are expressed relationally, and it survives
+100 TB because the window is partitioned by key.
 """
 
 from __future__ import annotations
@@ -76,75 +70,6 @@ def asof_join_union(
     return filled.filter(F.col("__side") == 1).drop(
         "__side", *[f"__r_{c}" for c in value_cols]
     )
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str,
-    by: list[str],
-    direction: str = "backward",
-    tolerance=None,
-    suffix: str = "_asof",
-) -> DataFrame:
-    """As-of join via per-group ``pd.merge_asof`` (supports 'nearest').
-
-    Cogroup both sides on ``by`` and merge each group Arrow-batched.
-    Requires per-key groups to fit in executor memory — at 100 TB that
-    means ``by`` must be a real entity key (city, instrument), never a
-    constant.
-    """
-    import pandas as pd
-
-    value_cols = [c for c in right.columns if c != on and c not in by]
-    out_schema_fields = left.schema.fields + [
-        next(f for f in right.schema.fields if f.name == c) for c in value_cols
-    ]
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        left.schema.fields
-        + [
-            T.StructField(f"{c}{suffix}", right.schema[c].dataType, True)
-            for c in value_cols
-        ]
-    )
-    del out_schema_fields
-
-    def merge(lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
-        if lg.empty:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        lg = lg.sort_values(on)
-        rg = rg.sort_values(on)[[on, *value_cols]].rename(
-            columns={c: f"{c}{suffix}" for c in value_cols}
-        )
-        merged = pd.merge_asof(
-            lg, rg, on=on, direction=direction, tolerance=tolerance
-        )
-        return merged
-
-    return (
-        left.groupBy(*by)
-        .cogroup(right.groupBy(*by))
-        .applyInPandas(merge, schema=out_schema)
-    )
-
-
-def nearest_row(df: DataFrame, ts_col: str, target, by: list[str] | None = None) -> DataFrame:
-    """Top-1 nearest-timestamp row per group (reference app.js:755-761).
-
-    ``orderBy(abs(ts - target)).limit(1)`` per group via row_number —
-    Spark plans TakeOrderedAndProject for the ungrouped case.
-    """
-    delta = F.abs(
-        F.col(ts_col).cast("timestamp").cast("double")
-        - F.lit(target).cast("timestamp").cast("double")
-    )
-    if not by:
-        return df.orderBy(delta.asc()).limit(1)
-    w = Window.partitionBy(*by).orderBy(delta.asc())
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def range_join_bucketed(

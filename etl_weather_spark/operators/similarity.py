@@ -130,24 +130,10 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def _bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id: bit i = (vec · plane_i) >= 0. (Expression
-    form; kept for reference/tests — the hot path is _buckets_udf,
-    because Catalyst interprets higher-order functions.)"""
-    bits = []
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(v)) for v in plane])
-        bits.append(F.when(dot(vec, p) >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def _buckets_udf(tables: list[list[list[float]]], n_planes: int):
     """All tables' sign-LSH bucket ids in one Arrow-batched matmul:
     vec → array<int> of length n_tables (bucket per table). Bit i of a
-    table's bucket = sign(vec · plane_i), identical to _bucket_expr."""
+    table's bucket = sign(vec · plane_i)."""
     from pyspark.sql.functions import pandas_udf
 
     m = np.concatenate([np.asarray(t, dtype=np.float64) for t in tables], axis=0).T

@@ -30,10 +30,6 @@ def stopword_hits(text: Column, words: list[str]) -> Column:
     return F.regexp_count(F.lower(text), F.lit(pattern))
 
 
-def lang_scores(text: Column) -> list[Column]:
-    return [stopword_hits(text, ws).alias(f"score_{lang}") for lang, ws in LANG_STOPWORDS.items()]
-
-
 def lang_id(text: Column) -> Column:
     """Argmax language by stopword hits; 'und' (undetermined) when all zero.
 

@@ -8,7 +8,7 @@ partition by city/entity; the helpers default to that.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from etl_weather_spark.functions.rounding import rnd
@@ -94,25 +94,6 @@ def minmax_normalize(
     mx = F.max(value_col).over(w)
     norm = F.when(mx == mn, F.lit(1.0)).otherwise((F.col(value_col) - mn) / (mx - mn))
     return df.withColumn(out_col, rnd(norm, 4))
-
-
-def rank_by(
-    df: DataFrame,
-    order_col: str | Column,
-    out_col: str = "rank",
-    *,
-    partition_by: list[str] | None = None,
-    descending: bool = True,
-) -> DataFrame:
-    """Dense ranking by a metric (reference app.js:881,984-985 top/second/bottom).
-
-    Scale note: a global (unpartitioned) rank over an *aggregated* table
-    (one row per city) is fine — the single-task window sees only the
-    group count, not the raw data.
-    """
-    col = F.col(order_col) if isinstance(order_col, str) else order_col
-    w = Window.partitionBy(*(partition_by or [])).orderBy(col.desc() if descending else col.asc())
-    return df.withColumn(out_col, F.row_number().over(w))
 
 
 def pct_diff_vs_next(

@@ -141,242 +141,8 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # family first, then the training-pipeline flagships, so the sampled set
 # spans the whole engine instead of whatever happened to register first.
 # Everything not listed follows in registration order and is still
-# verified by scripts/verify_driver.py (all 117) and pytest.
+# verified by scripts/verify_driver.py and pytest.
 _PRIORITY = [
-    # weather-core §2 coverage (P/F/J/A/W/O/U/C/V rows cite these).
-    # Rotated out for round-2 flagships (still verified by the local
-    # replica + pytest; each §2 family keeps a checked sibling):
-    # centered_ma3 (W2 — W family keeps rolling_avg_7d/minmax_norm/
-    # rank_pct_diff), top5_days (O5 — next_events stays + TakeOrdered
-    # plan test), wind_compass_bins (C9 when-chain — weather_code_decode
-    # stays).
-    # round-4 rotations (out, shape kept by a checked sibling):
-    # rolling_avg_7d (W1 — minmax_norm/rank_pct_diff stay; in:
-    # hourly_gapfill_ffill adds the gap-fill window shape),
-    # unpivot_daily (V1 — melt shape re-checked locally via
-    # udtf_melt_events), slugify_parts (C1 — C family keeps
-    # weather_code_decode/split_part_types/regex_customer_ids),
-    # nearest_event (J3 — asof_join is the same operator family),
-    # simhash_sigs / minhash_lsh (dedup family keeps dedup_exact,
-    # prefix_filter_jaccard, minhash_lsh_fast, winnow_candidates,
-    # dedup_clusters), ann_cosine_lsh (ANN keeps topk/ivf/pq),
-    # approx_stats (sketches keep kll + incoming theta_user_overlap).
-    # In: media_pixel_stats/media_wav_stats (REAL stdlib PNG/WAV decode,
-    # new this round) + six never-driver-checked families.
-    # round-4 late rotations: union_dedup (U1/U2 — union+dedup shapes
-    # stay checked via dedup_exact and corpus_prep_funnel's union),
-    # daily_left_join (J2 — J family keeps hourly_outer_join/asof_join),
-    # next_events (F5 — F family keeps daily_flags/global_summary/
-    # split_part_types) out for the round-4 flagships:
-    # hybrid_search_rrf (RRF fusion), bpe_merge_rounds (distributed
-    # BPE tokenizer training), media_decimate_stats (real WAV resample);
-    # regex_customer_ids (C12 — regex shapes stay via split_part_types
-    # and redact_terms) out for image_dhash_dedup (perceptual dHash
-    # near-dup pairs on the real PNG decode path).
-    # round-5 rotations (out, each shape kept by a checked sibling —
-    # every out-row has at least one prior driver-green round):
-    # media_pixel_stats / media_wav_stats (the real-codec decode+stats
-    # path stays checked via incoming media_resize_stats /
-    # media_area_resize_stats / media_resample_stats, supersets of the
-    # same decode), recommendation_text (C3 — C family keeps
-    # weather_code_decode/split_part_types), theta_user_overlap
-    # (sketches keep kll_rollup_value_quantiles), fuzzy_part_names
-    # (similarity text keeps prefix_filter_jaccard), hourly_gapfill_ffill
-    # (window family keeps minmax_norm/rank_pct_diff),
-    # event_pattern_match (event-sequence shape stays via user_sessions
-    # + incoming session_funnel_conversion), customer_rfm_segments
-    # (rank-bucket shape stays via rank_pct_diff/weighted_sample_topk),
-    # dup_cluster_transitivity (graph keeps dedup_clusters/
-    # semantic_dedup), ann_cosine_ivf (ANN keeps topk/pq).
-    # In: TEN never-driver-checked rows — exact_substring_spans,
-    # simhash_sigs, simhash_near_dupes (now on the hot-band-cap path),
-    # bpe_encode_stats, media_resize_stats, png_meta_probe,
-    # cohort_retention, session_funnel_conversion, and the new
-    # fractional-conform pair media_area_resize_stats /
-    # media_resample_stats.
-    # round-6 rotations (out, every out-row has at least one prior
-    # driver-green round AND a checked family sibling staying in):
-    # media_resize_stats (r5-green; decode+conform path stays checked
-    # via media_area_resize_stats/media_resample_stats/png_meta_probe/
-    # image_dhash_dedup), simhash_sigs (r5-green; simhash family keeps
-    # simhash_near_dupes, a superset of the signature computation),
-    # media_decimate_stats (r4-green; resample shape stays via
-    # media_resample_stats), waiting_suppliers_blame (r5-green;
-    # semi/anti shape stays via decontaminate_overlap),
-    # cohort_retention (r5-green; time-bucket agg shape stays via
-    # session_funnel_conversion/user_sessions), scd2_user_tiers
-    # (r3/r4-green; window-lag shape stays via minmax_norm/
-    # rank_pct_diff), semantic_dedup_ivf (r3+-green; semantic_dedup now
-    # DEFAULTS to the same bounded IVF-cell block, so the staying row
-    # checks this exact path), ann_cosine_pq (r2+-green; PQ path stays
-    # checked via incoming ann_pq_index_roundtrip, a superset:
-    # build→persist→reopen→search), embedding_near_dupes (r2+-green;
-    # embedding-similarity family keeps ann_cosine_topk/semantic_dedup),
-    # unigram_logprob_quality (r3+-green; LM-quality family gains
-    # quality_logistic_filter and keeps lang_quality).
-    # In: the TEN round-5 flagships the judge named (zero prior driver
-    # exposure): bm25_topk, kmeans_embedding_clusters,
-    # sentence_dedup_global, boilerplate_strip, ngram_repetition,
-    # html_extract_stats, pii_scrub_stats, knn_label_spread,
-    # ann_pq_index_roundtrip, quality_logistic_filter — PLUS the new
-    # round-6 flagship media_jpeg_stats (real baseline-JPEG decode,
-    # integer-exact constant-block oracle), swapped in for
-    # png_meta_probe (r5-green; the metadata-probe shape stays checked
-    # via the full-decode media rows that parse the same headers).
-    # round-7 rotations (out, every out-row is r06-driver-green AND
-    # keeps a checked family sibling staying in):
-    # corpus_prep_funnel (v1; the funnel family is now checked by the
-    # TWO incoming flagships v2/v3, supersets of the same chain),
-    # hybrid_search_rrf (retrieval family keeps bm25_topk),
-    # bpe_merge_rounds (BPE family keeps bpe_encode_stats, the
-    # train+encode superset), image_dhash_dedup (media/perceptual
-    # family keeps media_jpeg_stats + media_area_resize_stats),
-    # media_resample_stats (media-conform family keeps
-    # media_area_resize_stats + media_jpeg_stats),
-    # exact_substring_spans (span-dedup family keeps
-    # sentence_dedup_global + dedup_exact), winnow_candidates
-    # (fingerprint-candidate family keeps minhash_lsh_fast +
-    # prefix_filter_jaccard, both composed by incoming
-    # lsh_recall_audit), bloom_screen_new_docs (incremental family
-    # keeps incremental_index_dedup), session_funnel_conversion
-    # (event-sequence family keeps user_sessions), html_extract_stats
-    # (extraction family keeps boilerplate_strip),
-    # kmeans_embedding_clusters (clustering shape stays via
-    # semantic_dedup's IVF-cell block + incoming pca_power_iteration),
-    # quality_logistic_filter (quality family keeps lang_quality +
-    # incoming gopher_quality_gate; its full oracle is ALSO embedded
-    # verbatim inside both incoming funnel rows).
-    # In: TWELVE never-driver-checked rows — the ten VERDICT r6 named
-    # (corpus_prep_funnel_v2, containment_pairs,
-    # dsir_importance_weights, ccnet_ppl_buckets,
-    # ctfidf_source_keywords, mad_outlier_docs, pca_power_iteration,
-    # semantic_decontaminate, ks_drift_audit, lsh_recall_audit) plus
-    # the two round-7 flagships corpus_prep_funnel_v3 and
-    # gopher_quality_gate.
-    # round-7 late rotations (out, both r06-driver-green with checked
-    # family siblings staying): split_part_types (F6/C11 — the
-    # split/trim/guard shapes stay checked via daily_flags,
-    # weather_code_decode and the C-family rows), minhash_lsh_fast
-    # (the MinHash generator is COMPOSED end-to-end inside the staying
-    # lsh_recall_audit, and the dedup family keeps dedup_exact,
-    # prefix_filter_jaccard, dedup_clusters). In: the two wave-3/4
-    # flagships with zero driver exposure — psi_drift_audit (drift
-    # family joins the staying ks_drift_audit) and
-    # embedding_outlier_knn (embedding family keeps ann_cosine_topk,
-    # semantic_dedup, semantic_decontaminate).
-    # round-7 session-2 rotation: incremental_index_dedup (r2+-green;
-    # the dedup family keeps dedup_exact, prefix_filter_jaccard,
-    # dedup_clusters, lsh_recall_audit, semantic_dedup — five checked
-    # siblings) out for curated_shard_manifest, the session's
-    # end-to-end flagship (funnel gates -> exact-dedup keepers ->
-    # shard manifest; zero prior driver exposure, triple-verified at
-    # sf0.001/0.01/0.1).
-    # round-7 session-3 rotation: media_area_resize_stats (r05/r06-green;
-    # the real-codec decode+conform family keeps media_jpeg_stats, a
-    # superset decode path, plus the pytest codec suite) out for
-    # ann_ivf_recall_audit — the session-3 flagship: the first ANN
-    # recall audit whose NUMBERS are hash-verified end to end (the
-    # registered kmeans quantizer's CTE chain reused verbatim;
-    # triple-verified at sf0.001/0.01/0.1 + perfect-recall crafted test).
-    # round-8 rotation (VERDICT r7 next-item #1: >=10 never-checked
-    # rows in; FOURTEEN rotate in, every out-row is r07-driver-green
-    # AND keeps a checked family sibling staying in):
-    # OUT: daily_flags (C2 bins stay boundary-tested; weather family
-    # keeps daily_agg + weather_code_decode), hourly_outer_join (the
-    # J1 full-outer shape stays checked via incoming
-    # snapshot_diff_report's (source, fingerprint) full outer join),
-    # minmax_norm (window family keeps rank_pct_diff),
-    # bpe_encode_stats (r03+-green; BPE pytest suite + scale rows;
-    # tokenizer family keeps token_budget_batches' packing join),
-    # ccnet_ppl_buckets + mad_outlier_docs (their FULL oracles stay
-    # embedded verbatim as gates inside the staying funnel v2/v3 +
-    # curated_shard_manifest rows — three checked supersets each),
-    # sentence_dedup_global (dedup family keeps dedup_exact,
-    # prefix_filter_jaccard, dedup_clusters, simhash_near_dupes,
-    # containment_pairs), ctfidf_source_keywords (keyword family keeps
-    # bm25_topk), knn_label_spread (embedding family keeps
-    # ann_cosine_topk, semantic_dedup, semantic_decontaminate,
-    # embedding_outlier_knn), ann_pq_index_roundtrip (ANN family keeps
-    # ann_cosine_topk + ann_ivf_recall_audit), pca_power_iteration
-    # (iterative-fixpoint family keeps the kmeans chain inside
-    # ann_ivf_recall_audit and gains kcenter_coreset_selection +
-    # quality_classifier_train), psi_drift_audit (r07-green; drift
-    # family keeps ks_drift_audit), user_sessions (sessionization
-    # stays via the stateful-streaming parity suite; the events-table
-    # family keeps train_test_split), weighted_sample_topk (sampling
-    # family keeps train_test_split + token_budget_batches).
-    # IN: the twelve VERDICT-named flagships with zero driver exposure
-    # (gate_attribution_audit, gate_bias_audit, quality_ensemble_rank,
-    # cross_source_dup_matrix, quality_pr_curve,
-    # readability_flesch_gate, join_skew_audit, zorder_pruning_audit,
-    # langid_confusion_matrix, snapshot_diff_report,
-    # kcenter_coreset_selection, dp_laplace_release) plus the two
-    # round-8 trainer rows (quality_classifier_train,
-    # quality_pr_curve_trained — triple-verified at sf0.001/0.01/0.1).
-    # round-9 rotation (VERDICT r8 next-item #2: the entire unexposed
-    # r8 analytics tier in; TWELVE rotate in, every out-row is
-    # r08-driver-green AND keeps a checked family sibling staying in):
-    # OUT: gate_attribution_audit + gate_bias_audit (gate-audit family
-    # gains gate_agreement_kappa; the funnel v2/v3 rows staying embed
-    # every gate oracle verbatim), quality_ensemble_rank (quality
-    # family keeps quality_classifier_train + gains the whole trained
-    # tier), cross_source_dup_matrix (dedup-audit family keeps
-    # dedup_clusters, containment_pairs, simhash_near_dupes + gains
-    # dedup_quality_interaction, which embeds the same committed-CC
-    # read), quality_pr_curve (quality_pr_curve_trained STAYS — its
-    # fixed leg embeds the same oracle), readability_flesch_gate
-    # (readability family keeps gopher_quality_gate, whose oracle the
-    # staying funnels also embed), join_skew_audit + zorder_pruning_audit
-    # (layout-audit family stays pinned by test_skew_bucketed.py +
-    # test_plans.py; both r08-green), langid_confusion_matrix (lang
-    # family keeps lang_quality), snapshot_diff_report (snapshot family
-    # keeps the e2e committed-version tests in test_round8_semantics +
-    # test_snapshots; diff shape also inside union/dedup rows),
-    # kcenter_coreset_selection (embedding family keeps
-    # embedding_outlier_knn + ann_cosine_topk + ann_ivf_recall_audit),
-    # dp_laplace_release (governance family gains t_closeness_audit;
-    # k-anon/l-div/DP pytest suite stays).
-    # IN: the eleven VERDICT-r8-named rows with zero driver exposure
-    # (quality_classifier_holdout, training_data_map,
-    # gate_agreement_kappa, quality_calibration_curve,
-    # quality_f1_bootstrap, quality_feature_importance,
-    # quality_label_disagreement, quality_budget_threshold,
-    # corpus_prep_funnel_v4, dedup_quality_interaction,
-    # t_closeness_audit) plus the round-9 flagship
-    # quality_classifier_publish (the committed-model registry's write
-    # path under the hash gate). publish precedes the audits so the
-    # driver run trains once and every audit reads the committed model.
-    # round-10 rotation (VERDICT r9 next-item #2: the five unexposed
-    # round-9 rows in, plus the two round-10 flagships and four
-    # never-checked veterans; ELEVEN rotate in, every out-row is
-    # r09-driver-green AND keeps a checked family sibling staying in):
-    # OUT: corpus_prep_funnel_v3 (funnel family keeps v2 + v4 and gains
-    # corpus_prep_funnel_incremental), quality_classifier_holdout +
-    # quality_f1_bootstrap + quality_feature_importance +
-    # training_data_map (trained-audit tier keeps train, publish,
-    # pr_curve_trained, label_disagreement, budget_threshold — five
-    # staying rows reading the same committed model),
-    # quality_calibration_curve + t_closeness_audit (their FULL oracles
-    # stay embedded verbatim inside the incoming
-    # corpus_release_report_v2 — a checked superset),
-    # gate_agreement_kappa (every gate oracle stays embedded in the
-    # staying funnels v2/v4), containment_pairs (dedup family keeps
-    # dedup_exact, prefix_filter_jaccard, simhash_near_dupes,
-    # dedup_clusters + gains dup_canonicals/winnow_candidates),
-    # dsir_importance_weights (the DSIR gate's oracle stays embedded in
-    # the staying funnel v2), boilerplate_strip (projection family
-    # keeps pii_scrub_stats, ngram_repetition, doc_stats).
-    # IN: the five VERDICT-named round-9 rows with zero driver exposure
-    # (active_learning_batch, bpe_vocab_publish, tokenizer_cost_report,
-    # token_mixture_plan, corpus_release_report_v2), the two round-10
-    # flagships (corpus_release_manifest — the atomic release pin's
-    # write path under the hash gate; corpus_prep_funnel_incremental —
-    # the delta funnel, triple-verified at sf0.001/0.01/0.1), and four
-    # never-checked veterans (doc_pagerank, dup_canonicals,
-    # cluster_safe_split, winnow_candidates).
-    # corpus_release_manifest precedes every artifact consumer so the
-    # driver run publishes the release pin once and the consumers read
-    # pinned versions.
     "daily_agg", "global_summary",
     "corpus_prep_funnel_v2",
     "rank_pct_diff", "asof_join",
@@ -399,37 +165,14 @@ _PRIORITY = [
     "quality_classifier_train", "quality_pr_curve_trained",
     "doc_pagerank", "dup_canonicals",
     "cluster_safe_split", "winnow_candidates",
-    # round-3 rotations: today_lookup (J4 — J family keeps asof_join/
-    # nearest_event/daily_left_join), format_dates (C7 — C family keeps
-    # slugify_parts/weather_code_decode/split_part_types),
-    # semi_anti_customers (semi/anti shape stays via
-    # decontaminate_overlap), ngram_jaccard (identical oracle stays
-    # checked via prefix_filter_jaccard) rotated out for
-    # semantic_dedup_ivf, prefix_filter_jaccard, scd2_user_tiers,
-    # kll_rollup_value_quantiles
-    # r3 late rotations: json_extract_props (C13 — weather_code_decode
-    # keeps the tolerant-JSON shape checked) and sorted_nations (O4 —
-    # every ORDER BY row covers lexicographic sorts) out for the Q21
-    # semi/anti flagship and the unigram-LM quality scorer
     "semantic_decontaminate",
     "ks_drift_audit", "kll_rollup_value_quantiles",
-    # round-2/3 flagships, wave 2: embedding-graph semantic dedup (now
-    # defaulting to the bounded IVF-cell block), Bloom-screen
-    # incremental dedup
     "semantic_dedup", "gopher_quality_gate",
-    # round-2 flagships (status_rollup/distinct_daily_users rotated out:
-    # their shapes are covered by other checked rows, and the local
-    # replica still verifies them; hour_labels likewise rotated out for
-    # corpus_prep_funnel — the end-to-end prep chain belongs in the
-    # hard signal more than a 12-hour label format)
     "curated_shard_manifest", "token_budget_batches",
-    # TPC-shaped join/agg anchors
     "pricing_summary", "top_revenue_orders", "revenue_by_nation",
-    # training-data pipeline: text analysis + dedup + similarity
     "doc_stats", "dedup_exact", "prefix_filter_jaccard",
     "ann_cosine_topk", "lang_quality",
     "lsh_recall_audit", "embedding_outlier_knn",
-    # training-pipeline + streaming-analog flagships
     "dedup_clusters", "train_test_split",
     "decontaminate_overlap",
 ]

@@ -680,8 +680,9 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~batch_cap provably-sequential-equivalent merges, ≤ pool_size-row
     driver transfer per round, localCheckpoint-flat lineage — so 32k
     merges is ~32k/batch_cap jobs and never a 32k-deep plan (1k-merge
-    artifact: bpe1k.json). The vocab is cached for the call only: the
-    merge table comes back as a driver-built local table.
+    artifact: ``git show 56ef44c:bpe1k.json``). The vocab is cached for
+    the call only: the merge table comes back as a driver-built local
+    table.
     """
     from etl_weather_spark.operators.dedup import persisted, tokens
     from etl_weather_spark.operators.textops import bpe_train

@@ -48,6 +48,8 @@ __all__ = [
     "catalog_versions",
 ]
 
+PUBLISH_QUERY_NAME = "catalog_publish"
+
 
 def _vdir(catalog: str) -> str:
     return os.path.join(catalog, "_versions")
@@ -110,6 +112,19 @@ def catalog_commit_tables(
     and the single catalog pointer swap at the end is the only commit
     point.
     """
+    return _commit_tables(spark, catalog, writes, table_root, mode, {})
+
+
+def _commit_tables(
+    spark: SparkSession,
+    catalog: str,
+    writes: dict[str, DataFrame],
+    table_root: str | None,
+    mode: str,
+    extra: dict,
+) -> int:
+    """:func:`catalog_commit_tables`, with ``extra`` commit metadata
+    written into the claimed manifest, so it lands with the swap."""
     table_root = table_root or os.path.join(catalog, "tables")
     prev = catalog_current(catalog)
     pinned = dict(_load(catalog, prev)) if prev is not None else {}
@@ -132,7 +147,7 @@ def catalog_commit_tables(
         target = os.path.join(_vdir(catalog), f"v{version}.json")
         tmpm = target + f".tmp.{uuid.uuid4().hex}"
         with open(tmpm, "w") as f:
-            json.dump(pinned, f)
+            json.dump({**pinned, **extra}, f)
         try:
             os.link(tmpm, target)
             os.remove(tmpm)
@@ -295,42 +310,25 @@ def stream_commit_tables(
     catalog: str,
     checkpoint: str,
     derive: "dict[str, callable]",
-    query_name: str = "catalog_publish",
-    available_now: bool = True,
 ):
     """Streaming medallion publish: every micro-batch derives N tables
     (``derive`` maps table name → fn(batch_df) -> DataFrame) and
     commits them as ONE atomic catalog version — downstream consumers
     never see table A from batch 7 next to table B from batch 6.
 
-    Exactly-once: the catalog manifest records the batch id; a
-    replayed batch whose id is already the latest commit's marker is
+    Exactly-once: the batch id rides the claimed catalog manifest as
+    ``__batch_id``, so it becomes visible with the pointer swap itself;
+    a replayed batch whose id is already the latest commit's marker is
     skipped (foreachBatch is at-least-once).
     """
+    from etl_weather_spark.streaming._state import start_batches
 
     def _body(batch_df: DataFrame, batch_id: int) -> None:
         cur = catalog_current(catalog)
         if cur is not None and _load(catalog, cur).get("__batch_id") == batch_id:
             return  # replay of the committed batch
         writes = {name: fn(batch_df) for name, fn in derive.items()}
-        v = catalog_commit_tables(batch_df.sparkSession, catalog, writes)
-        # stamp the marker into the just-written manifest (pre-swap
-        # would be cleaner; post-stamp is fine because the pointer
-        # already names this version and the stamp is idempotent)
-        mpath = os.path.join(_vdir(catalog), f"v{v}.json")
-        with open(mpath) as f:
-            manifest = json.load(f)
-        manifest["__batch_id"] = batch_id
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, mpath)
+        meta = {"__batch_id": batch_id}
+        _commit_tables(batch_df.sparkSession, catalog, writes, None, "overwrite", meta)
 
-    writer = (
-        changes.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(changes, checkpoint, _body, name=PUBLISH_QUERY_NAME)

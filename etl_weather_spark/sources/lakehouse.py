@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+UPSERT_QUERY_NAME = "gold_upsert"
+
 
 def read_csv_tolerant(
     spark: SparkSession,
@@ -152,8 +154,7 @@ def stream_upsert_latest(
     *,
     key_cols: list[str],
     ts_col: str = "ingest_ts",
-    checkpoint: str | None = None,
-    query_name: str = "gold_upsert",
+    checkpoint: str,
 ):
     """Materialize a stream into a keyed gold table via foreachBatch:
     append each micro-batch, serve through :func:`latest_view`.
@@ -164,6 +165,7 @@ def stream_upsert_latest(
     row_number-over-ingest_ts prunes to the newest row per key at read
     time. Compact periodically by rewriting the view output.
     """
+    from etl_weather_spark.streaming._state import start_batches
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -172,10 +174,7 @@ def stream_upsert_latest(
             .parquet(path)
         )
 
-    writer = stream_df.writeStream.foreachBatch(upsert).queryName(query_name)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(availableNow=True).start()
+    return start_batches(stream_df, checkpoint, upsert, name=UPSERT_QUERY_NAME)
 
 
 def zorder_key(df: DataFrame, cols: list[str], *, bits: int = 8) -> "F.Column":

@@ -128,6 +128,28 @@ def snapshot_write(
     return version
 
 
+def batch_marker(batch_id: int) -> str:
+    """The ``committed_at`` marker a streaming micro-batch commits under:
+    foreachBatch is at-least-once, so a replayed batch finds its marker
+    in the history and skips the commit."""
+    return f"batch-{batch_id}"
+
+
+def marker_version(table: str, marker: str) -> int | None:
+    """The version committed under ``marker``, or None if none was."""
+    return next(
+        (h["version"] for h in snapshot_history(table) if h.get("committed_at") == marker),
+        None,
+    )
+
+
+def snapshot_append(df: DataFrame, table: str, *, marker: str) -> int:
+    """Append ``df`` under ``marker``; the table's first commit is an
+    overwrite that creates it."""
+    mode = "append" if current_version(table) is not None else "overwrite"
+    return snapshot_write(df, table, mode=mode, ingest_ts=marker)
+
+
 def snapshot_read(
     spark: SparkSession, table: str, *, version: int | None = None
 ) -> DataFrame:

@@ -1,7 +1,16 @@
-"""Shared state machinery for the foreachBatch maintenance loops
-(CMS in sketch_maintain, Misra-Gries in mg_maintain): checkpoint-
-lineage scoping, atomic tmp+rename persistence, and a COMPACT
-applied-batch-id set.
+"""Shared foreachBatch machinery of the streaming surfaces.
+
+- :func:`start_batches` is the one place a ``stream_*`` surface starts
+  its query: its bound batch body through ``foreachBatch``, the
+  checkpoint, an optional query name, and the ``availableNow`` trigger
+  (drain what is available, then stop).
+- :func:`write_batch` is the one per-batch output: ``root/batch_id=N``
+  overwritten, so an at-least-once replay rewrites the same partition
+  instead of adding one; readers of the root get ``batch_id`` back
+  through partition discovery.
+- The maintenance loops (CMS in sketch_maintain, Misra-Gries in
+  mg_maintain) keep their state with checkpoint-lineage scoping, atomic
+  tmp+rename persistence, and a COMPACT applied-batch-id set.
 
 Batch ids within one checkpoint lineage are a dense monotone sequence,
 so the applied set is stored as (floor, sparse tail): every id ≤ floor
@@ -15,8 +24,27 @@ from __future__ import annotations
 import os
 
 import numpy as np
+from pyspark.sql import DataFrame
 
-__all__ = ["AppliedIds", "check_lineage", "atomic_savez"]
+__all__ = ["AppliedIds", "atomic_savez", "check_lineage", "start_batches", "write_batch"]
+
+
+def start_batches(
+    stream: DataFrame, checkpoint: str, body, *, name: str | None = None, **bound
+):
+    """Start ``body(batch_df, batch_id, **bound)`` on every micro-batch
+    of ``stream`` (availableNow) and return the StreamingQuery."""
+    writer = stream.writeStream.foreachBatch(
+        lambda batch_df, batch_id: body(batch_df, batch_id, **bound)
+    ).option("checkpointLocation", checkpoint)
+    if name is not None:
+        writer = writer.queryName(name)
+    return writer.trigger(availableNow=True).start()
+
+
+def write_batch(df: DataFrame, root: str, batch_id: int) -> None:
+    """Overwrite ``root/batch_id=N`` with ``df``."""
+    df.write.mode("overwrite").parquet(os.path.join(root, f"batch_id={batch_id}"))
 
 
 class AppliedIds:

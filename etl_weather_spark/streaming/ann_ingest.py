@@ -16,26 +16,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from etl_weather_spark.operators.ann_index import append_pq_index
+from etl_weather_spark.sources.snapshots import batch_marker
+from etl_weather_spark.streaming._state import start_batches
 
 __all__ = ["stream_ann_ingest"]
 
+QUERY_NAME = "ann_ingest"
 
-def stream_ann_ingest(
-    vec_stream: DataFrame,
-    *,
-    index_path: str,
-    checkpoint: str,
-    query_name: str = "ann_ingest",
-):
-    """Wire append_pq_index into a streaming query (availableNow)."""
+
+def stream_ann_ingest(vec_stream: DataFrame, *, index_path: str, checkpoint: str):
+    """Wire append_pq_index into a streaming query."""
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
-        append_pq_index(batch_df, index_path, marker=f"batch-{batch_id}")
+        append_pq_index(batch_df, index_path, marker=batch_marker(batch_id))
 
-    return (
-        vec_stream.writeStream.foreachBatch(body)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(vec_stream, checkpoint, body, name=QUERY_NAME)

@@ -5,9 +5,9 @@ of ``sources/snapshots.snapshot_merge`` and the write side of
 on plain parquet.
 
 Exactly-once discipline (foreachBatch is at-least-once): every commit
-records ``batch-{id}`` as its manifest marker; a replayed batch whose
-marker is already in the history is skipped outright, so reprocessing
-never double-applies a change.
+records ``batch_marker(id)`` as its manifest marker; a replayed batch
+whose marker is already in the history is skipped outright, so
+reprocessing never double-applies a change.
 
 Within-batch ordering: a CDC feed can carry several changes for one key
 in one batch. With ``seq_col`` the LATEST change per key wins (row_number
@@ -30,16 +30,20 @@ from pyspark.sql import functions as F
 
 from etl_weather_spark.operators.merge import merge_frames
 from etl_weather_spark.sources.snapshots import (
+    batch_marker,
     current_version,
-    snapshot_history,
+    marker_version,
     snapshot_read,
     snapshot_write,
 )
+from etl_weather_spark.streaming._state import start_batches
 
 __all__ = ["apply_changes_batch", "stream_apply_changes"]
 
 #: value of ``op_col`` that marks a row as a delete; anything else upserts
 DELETE_OP = "delete"
+
+QUERY_NAME = "cdc_apply"
 
 
 def apply_changes_batch(
@@ -53,8 +57,8 @@ def apply_changes_batch(
 ) -> None:
     """The foreachBatch body — also callable directly; replaying a
     batch id is a no-op (idempotent via the snapshot commit marker)."""
-    marker = f"batch-{batch_id}"
-    if any(h.get("committed_at") == marker for h in snapshot_history(table)):
+    marker = batch_marker(batch_id)
+    if marker_version(table, marker) is not None:
         return
     src = batch_df
     if seq_col is not None:
@@ -90,24 +94,16 @@ def stream_apply_changes(
     on: list[str],
     seq_col: str | None = None,
     op_col: str | None = None,
-    query_name: str = "cdc_apply",
-    available_now: bool = True,
 ):
     """Wire a streaming change feed into the snapshot table. Returns the
-    started StreamingQuery (``availableNow`` drains-and-stops by
-    default — the backfill mode; pass False for a continuous trigger).
-    """
-
-    def _body(batch_df: DataFrame, batch_id: int) -> None:
-        apply_changes_batch(
-            batch_df, batch_id, table=table, on=on, seq_col=seq_col, op_col=op_col
-        )
-
-    writer = (
-        changes.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
+    started StreamingQuery (``availableNow``: drains, then stops)."""
+    return start_batches(
+        changes,
+        checkpoint,
+        apply_changes_batch,
+        name=QUERY_NAME,
+        table=table,
+        on=on,
+        seq_col=seq_col,
+        op_col=op_col,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -20,7 +20,7 @@ Degenerate-batch contract (the KS-monitor lesson, designed in):
   the rate, and a whole batch of them emits a keep_rate6=0 alarm row,
   never a crash;
 - at-least-once replays overwrite ``batch_id=N`` with identical bytes
-  (the corpus_ingest idempotence contract).
+  (``streaming/_state.write_batch``).
 
 Scale: per trigger, one token-pass partial agg over ONE micro-batch +
 a broadcast 5-constant projection; stateless — no state store.
@@ -28,12 +28,11 @@ a broadcast 5-constant projection; stateless — no state store.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_weather_spark.functions.rounding import rnd
+from etl_weather_spark.streaming._state import start_batches, write_batch
 
 __all__ = [
     "batch_classifier_stats",
@@ -156,9 +155,7 @@ def process_classifier_batch(
         "n_docs long, n_scored long, n_keep long, "
         "keep_rate6 double, rate_delta6 double, drifted boolean",
     )
-    out.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stats_dir, f"batch_id={batch_id}")
-    )
+    write_batch(out.coalesce(1), stats_dir, batch_id)
 
 
 def stream_classifier_scorer(
@@ -173,19 +170,12 @@ def stream_classifier_scorer(
     """Wire the scorer onto a document stream: one keep-rate row per
     micro-batch under ``stats_dir``."""
 
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        process_classifier_batch(
-            batch_df,
-            batch_id,
-            stats_dir=stats_dir,
-            weights=weights,
-            train_keep_rate=train_keep_rate,
-            tol=tol,
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        docs_stream,
+        checkpoint_dir,
+        process_classifier_batch,
+        stats_dir=stats_dir,
+        weights=weights,
+        train_keep_rate=train_keep_rate,
+        tol=tol,
     )

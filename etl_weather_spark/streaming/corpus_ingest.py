@@ -12,10 +12,11 @@ order reproduces the batch result exactly — asserted in
 tests/test_streaming_corpus_ingest.py).
 
 Exactly-once discipline (same contract as streaming/incremental_dedup):
-foreachBatch is at-least-once, so the snapshot append records
-``batch-N`` as its commit marker and a replayed batch that finds its
-marker SKIPS; the stats row lands under ``stats/batch_id=N`` with
-overwrite, so a replay rewrites the same bytes.
+foreachBatch is at-least-once, so the snapshot append records the
+batch's commit marker (``snapshots.batch_marker``) and a replayed batch
+that finds its marker SKIPS; the stats row lands under
+``stats/batch_id=N`` through ``_state.write_batch``, so a replay
+rewrites the same bytes.
 
 Scale: per trigger the work is one pass over the BATCH (profile +
 fingerprint are map-side), one keyed anti join against the index's
@@ -25,19 +26,21 @@ shingles — never a rescan of the accepted corpus text.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_weather_spark.sources.snapshots import (
+    batch_marker,
     current_version,
-    snapshot_history,
+    marker_version,
+    snapshot_append,
     snapshot_read,
-    snapshot_write,
 )
+from etl_weather_spark.streaming._state import start_batches, write_batch
 
 __all__ = ["process_corpus_batch", "stream_corpus_ingest"]
+
+QUERY_NAME = "corpus_ingest"
 
 
 def process_corpus_batch(
@@ -57,8 +60,8 @@ def process_corpus_batch(
     from etl_weather_spark.operators.dedup import exploded_shingles
     from etl_weather_spark.operators.textops import doc_profile
 
-    marker = f"batch-{batch_id}"
-    if any(h.get("committed_at") == marker for h in snapshot_history(accepted_table)):
+    marker = batch_marker(batch_id)
+    if marker_version(accepted_table, marker) is not None:
         return
     spark = batch_df.sparkSession
 
@@ -104,11 +107,8 @@ def process_corpus_batch(
         [(batch_id, n_raw, n_accepted)],
         "batch_id long, n_raw long, n_accepted long",
     )
-    stats.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stats_dir, f"batch_id={batch_id}")
-    )
-    mode = "append" if current_version(accepted_table) is not None else "overwrite"
-    snapshot_write(accepted, accepted_table, mode=mode, ingest_ts=marker)
+    write_batch(stats.coalesce(1), stats_dir, batch_id)
+    snapshot_append(accepted, accepted_table, marker=marker)
 
 
 def stream_corpus_ingest(
@@ -121,26 +121,17 @@ def stream_corpus_ingest(
     lang: str = "en",
     min_quality: float = 0.5,
     shingle_n: int = 5,
-    query_name: str = "corpus_ingest",
 ):
-    """Wire the batch body into a streaming query (availableNow)."""
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        process_corpus_batch(
-            batch_df,
-            batch_id,
-            accepted_table=accepted_table,
-            stats_dir=stats_dir,
-            bench_shingles=bench_shingles,
-            lang=lang,
-            min_quality=min_quality,
-            shingle_n=shingle_n,
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(body)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Wire the batch body into a streaming query."""
+    return start_batches(
+        docs_stream,
+        checkpoint,
+        process_corpus_batch,
+        name=QUERY_NAME,
+        accepted_table=accepted_table,
+        stats_dir=stats_dir,
+        bench_shingles=bench_shingles,
+        lang=lang,
+        min_quality=min_quality,
+        shingle_n=shingle_n,
     )

@@ -15,8 +15,8 @@ sides drop them — engines order NULLs differently in cumulative
 windows, so including them would break cross-engine parity). Each
 trigger overwrites one (batch_id, n_rows, ks_stat6, drifted) row under
 ``batch_id=N``, so foreachBatch's at-least-once replays rewrite
-content-identical stats (the idempotence contract of
-streaming/corpus_ingest).
+content-identical stats (``streaming/_state.write_batch``, the
+output every streaming surface shares).
 
 Scale: per trigger the work is one value-keyed partial agg over the
 BATCH plus a tiny histogram-union join against the reference; the
@@ -26,10 +26,10 @@ the stream — restarts need no state-store recovery.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from etl_weather_spark.streaming._state import start_batches, write_batch
 
 __all__ = [
     "reference_histogram",
@@ -90,25 +90,16 @@ def reference_histogram(
     return h
 
 
-def batch_ks_stat(
+def _paired_histograms(
     batch: DataFrame,
     ref_hist: DataFrame,
-    *,
-    value_col: str = "n_chars",
-    threshold: float = 0.2,
-    bucket_width: float | None = None,
-) -> DataFrame:
-    """One-row (n_rows, ks_stat6, drifted): the exact KS algebra of
-    queries.ks_drift_audit with the reference side precomputed.
-
-    The cumulative window runs over the union of DISTINCT values of
-    both histograms (never a row sort); missing values on either side
-    contribute zero mass at that point, which is exactly the step-CDF
-    semantics. An EMPTY batch yields n_rows=0, ks_stat6=NULL,
-    drifted=false — a visible degenerate case, never a false alarm.
+    value_col: str,
+    bucket_width: float | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(reference, batch) histograms bucketed at the same width. The
+    width bound into the reference wins, and a monitor configured with
+    a different one refuses loudly (shared by the KS and PSI monitors).
     """
-    from etl_weather_spark.operators.ks import ks_from_histograms
-
     if "bucket_width" in ref_hist.columns:
         widths = [
             r.bucket_width
@@ -130,12 +121,76 @@ def batch_ks_stat(
     bh = reference_histogram(
         batch, value_col=value_col, bucket_width=bucket_width
     ).drop("bucket_width")
+    return ref_hist, bh
+
+
+def batch_ks_stat(
+    batch: DataFrame,
+    ref_hist: DataFrame,
+    *,
+    value_col: str = "n_chars",
+    threshold: float = 0.2,
+    bucket_width: float | None = None,
+) -> DataFrame:
+    """One-row (n_rows, ks_stat6, drifted): the exact KS algebra of
+    queries.ks_drift_audit with the reference side precomputed.
+
+    The cumulative window runs over the union of DISTINCT values of
+    both histograms (never a row sort); missing values on either side
+    contribute zero mass at that point, which is exactly the step-CDF
+    semantics. An EMPTY batch yields n_rows=0, ks_stat6=NULL,
+    drifted=false — a visible degenerate case, never a false alarm.
+    """
+    from etl_weather_spark.operators.ks import ks_from_histograms
+
+    ref_hist, bh = _paired_histograms(batch, ref_hist, value_col, bucket_width)
     ks = ks_from_histograms(ref_hist, bh, threshold=threshold)
     return ks.select(
         F.col("n_b").alias("n_rows"),
         F.when(F.col("n_b") > 0, F.col("ks_stat6")).alias("ks_stat6"),
         (F.col("drifted") & (F.col("n_b") > 0)).alias("drifted"),
     )
+
+
+def _process_stat_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    stat,
+    stat_col: str,
+    flag_col: str,
+    *,
+    stats_dir: str,
+    **stat_kwargs,
+) -> None:
+    """foreachBatch body of the KS and PSI monitors: ``stat(batch,
+    **stat_kwargs)`` gives one (n_rows, <stat_col>, <flag_col>) row,
+    written under ``batch_id=N`` (a replay overwrites identical bytes).
+    """
+    if batch_df.isEmpty():
+        return
+    row = stat(batch_df, **stat_kwargs).collect()[0]
+    # A NON-empty batch whose value_col is entirely NULL has zero
+    # histogram mass (n_rows=0, statistic NULL) — exactly the
+    # upstream-schema-break drift these monitors exist to catch, so it
+    # must surface as an explicit all_null alarm row, never a
+    # float(None) crash that kills the streaming query. n_rows itself
+    # is NULL (not 0) when BOTH histograms are empty — an all-NULL
+    # reference corpus meeting an all-NULL batch gives the histogram
+    # join nothing, whose group-less agg max() returns one all-NULL
+    # row — so the guard must tolerate None too.
+    all_null = int(row.n_rows or 0) == 0
+    out = batch_df.sparkSession.createDataFrame(
+        [(
+            int(batch_id),
+            int(row.n_rows or 0),
+            None if all_null else float(row[stat_col]),
+            bool(row[flag_col]),
+            all_null,
+        )],
+        f"batch_id long, n_rows long, {stat_col} double, {flag_col} boolean, "
+        "all_null boolean",
+    )
+    write_batch(out.coalesce(1), stats_dir, batch_id)
 
 
 def process_drift_batch(
@@ -150,39 +205,17 @@ def process_drift_batch(
 ) -> None:
     """foreachBatch body — idempotent: ``batch_id=N`` overwrites with
     identical bytes on replay."""
-    if batch_df.isEmpty():
-        return
-    row = batch_ks_stat(
+    _process_stat_batch(
         batch_df,
-        ref_hist,
+        batch_id,
+        batch_ks_stat,
+        "ks_stat6",
+        "drifted",
+        stats_dir=stats_dir,
+        ref_hist=ref_hist,
         value_col=value_col,
         threshold=threshold,
         bucket_width=bucket_width,
-    ).collect()[0]
-    spark = batch_df.sparkSession
-    # A NON-empty batch whose value_col is entirely NULL has zero
-    # histogram mass (n_rows=0, ks_stat6=NULL) — exactly the
-    # upstream-schema-break drift this monitor exists to catch, so it
-    # must surface as an explicit all_null alarm row, never a
-    # float(None) crash that kills the streaming query. n_rows itself
-    # is NULL (not 0) when BOTH histograms are empty — an all-NULL
-    # reference corpus meeting an all-NULL batch gives ks_from_
-    # histograms an empty join, whose group-less agg max() returns one
-    # all-NULL row — so the guard must tolerate None too.
-    all_null = int(row.n_rows or 0) == 0
-    out = spark.createDataFrame(
-        [(
-            int(batch_id),
-            int(row.n_rows or 0),
-            None if all_null else float(row.ks_stat6),
-            bool(row.drifted),
-            all_null,
-        )],
-        "batch_id long, n_rows long, ks_stat6 double, drifted boolean, "
-        "all_null boolean",
-    )
-    out.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stats_dir, f"batch_id={batch_id}")
     )
 
 
@@ -198,22 +231,13 @@ def stream_drift_monitor(
 ):
     """Wire the monitor onto a document stream: one KS row per
     micro-batch under ``stats_dir``."""
-    ref = ref_hist.localCheckpoint(eager=False)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        process_drift_batch(
-            batch_df,
-            batch_id,
-            ref_hist=ref,
-            stats_dir=stats_dir,
-            value_col=value_col,
-            threshold=threshold,
-            bucket_width=bucket_width,
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        docs_stream,
+        checkpoint_dir,
+        process_drift_batch,
+        ref_hist=ref_hist.localCheckpoint(eager=False),
+        stats_dir=stats_dir,
+        value_col=value_col,
+        threshold=threshold,
+        bucket_width=bucket_width,
     )

@@ -8,10 +8,12 @@ Exactly-once discipline: Structured Streaming may REPLAY a micro-batch
 after a failure (foreachBatch is at-least-once), so both writes are
 idempotent per batch id:
 
-- flagged pairs land under ``flags/batch_id=N`` with ``mode=overwrite``
-  — a replay rewrites the same directory, never duplicates it;
-- the index append records ``batch-N`` as the snapshot's commit marker
-  and a replay that finds its marker in the history SKIPS the append.
+- flagged pairs land under ``flags/batch_id=N`` through
+  ``_state.write_batch`` — a replay rewrites the same directory, never
+  duplicates it;
+- the index append records ``snapshots.batch_marker(N)`` as the
+  snapshot's commit marker and a replay that finds its marker in the
+  history SKIPS the append.
 
 Scale: only the new batch is signed per trigger (signature = pure
 function of text, the index is append-only); the screen join keys on
@@ -23,17 +25,19 @@ trigger rates, compact the sig snapshots periodically
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from etl_weather_spark.operators.dedup import minhash_sig_table, screen_against_sig_index
 from etl_weather_spark.sources.snapshots import (
+    batch_marker,
     current_version,
-    snapshot_history,
+    marker_version,
+    snapshot_append,
     snapshot_read,
-    snapshot_write,
 )
+from etl_weather_spark.streaming._state import start_batches, write_batch
+
+QUERY_NAME = "incremental_dedup"
 
 
 def process_doc_batch(
@@ -48,8 +52,8 @@ def process_doc_batch(
     """The foreachBatch body — also callable directly (and re-callable:
     replaying a batch id is a no-op for the index and a same-bytes
     rewrite for the flags)."""
-    marker = f"batch-{batch_id}"
-    if any(h.get("committed_at") == marker for h in snapshot_history(index_table)):
+    marker = batch_marker(batch_id)
+    if marker_version(index_table, marker) is not None:
         return  # replay of an already-committed batch
     spark = batch_df.sparkSession
     new_sigs = minhash_sig_table(batch_df, num_hashes=num_hashes)
@@ -61,12 +65,8 @@ def process_doc_batch(
         pairs = new_sigs.sparkSession.createDataFrame(
             [], "index_id long, new_id long"
         )
-    (
-        pairs.write.mode("overwrite")
-        .parquet(os.path.join(flags_dir, f"batch_id={batch_id}"))
-    )
-    mode = "append" if current_version(index_table) is not None else "overwrite"
-    snapshot_write(new_sigs, index_table, mode=mode, ingest_ts=marker)
+    write_batch(pairs, flags_dir, batch_id)
+    snapshot_append(new_sigs, index_table, marker=marker)
 
 
 def stream_incremental_dedup(
@@ -77,24 +77,15 @@ def stream_incremental_dedup(
     checkpoint: str,
     num_hashes: int = 16,
     bands: int = 8,
-    query_name: str = "incremental_dedup",
 ):
-    """Wire the batch body into a streaming query (availableNow)."""
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        process_doc_batch(
-            batch_df,
-            batch_id,
-            index_table=index_table,
-            flags_dir=flags_dir,
-            num_hashes=num_hashes,
-            bands=bands,
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(body)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Wire the batch body into a streaming query."""
+    return start_batches(
+        docs_stream,
+        checkpoint,
+        process_doc_batch,
+        name=QUERY_NAME,
+        index_table=index_table,
+        flags_dir=flags_dir,
+        num_hashes=num_hashes,
+        bands=bands,
     )

@@ -19,9 +19,9 @@ pair set — each pair lands either inside one batch or across the index
 boundary, never twice, never dropped.
 
 Exactly-once discipline (same as incremental_dedup / corpus_ingest):
-foreachBatch is at-least-once, so flags land under ``batch_id=N`` with
-overwrite and the index append carries a ``batch-N`` commit marker that
-makes replays skip.
+foreachBatch is at-least-once, so flags land under ``batch_id=N``
+through ``_state.write_batch`` and the index append carries the batch's
+commit marker (``snapshots.batch_marker``) that makes replays skip.
 
 Scale: decode+dhash is per-row CPU (Arrow-batched, no pixels leave the
 task); the screen shuffles 16-bit band keys with the micro-batch as the
@@ -30,20 +30,22 @@ small side; the index scan reads 3-column signatures, never payloads.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from etl_weather_spark.operators.dedup import simhash_band_pairs, simhash_cross_pairs
 from etl_weather_spark.operators.multimodal import image_dhash
 from etl_weather_spark.sources.snapshots import (
+    batch_marker,
     current_version,
-    snapshot_history,
+    marker_version,
+    snapshot_append,
     snapshot_read,
-    snapshot_write,
 )
+from etl_weather_spark.streaming._state import start_batches, write_batch
 
 __all__ = ["process_media_batch", "stream_media_ingest"]
+
+QUERY_NAME = "media_ingest"
 
 
 def process_media_batch(
@@ -63,8 +65,8 @@ def process_media_batch(
     pairs, so first-arrival-wins policies can drop ``later_id`` rows
     directly.
     """
-    marker = f"batch-{batch_id}"
-    if any(h.get("committed_at") == marker for h in snapshot_history(index_table)):
+    marker = batch_marker(batch_id)
+    if marker_version(index_table, marker) is not None:
         return
     spark = batch_df.sparkSession
     from pyspark.sql import functions as F
@@ -91,15 +93,9 @@ def process_media_batch(
         flags = within.unionByName(cross)
     else:
         flags = within
-    flags.write.mode("overwrite").parquet(
-        os.path.join(flags_dir, f"batch_id={batch_id}")
-    )
-    mode = "append" if current_version(index_table) is not None else "overwrite"
-    snapshot_write(
-        sigs.select("media_id", "sig_hi", "sig_lo"),
-        index_table,
-        mode=mode,
-        ingest_ts=marker,
+    write_batch(flags, flags_dir, batch_id)
+    snapshot_append(
+        sigs.select("media_id", "sig_hi", "sig_lo"), index_table, marker=marker
     )
 
 
@@ -111,24 +107,15 @@ def stream_media_ingest(
     checkpoint: str,
     max_hamming: int = 3,
     hot_band_cap: int | None = 64,
-    query_name: str = "media_ingest",
 ):
-    """Wire the batch body into a streaming query (availableNow)."""
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        process_media_batch(
-            batch_df,
-            batch_id,
-            index_table=index_table,
-            flags_dir=flags_dir,
-            max_hamming=max_hamming,
-            hot_band_cap=hot_band_cap,
-        )
-
-    return (
-        media_stream.writeStream.foreachBatch(body)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Wire the batch body into a streaming query."""
+    return start_batches(
+        media_stream,
+        checkpoint,
+        process_media_batch,
+        name=QUERY_NAME,
+        index_table=index_table,
+        flags_dir=flags_dir,
+        max_hamming=max_hamming,
+        hot_band_cap=hot_band_cap,
     )

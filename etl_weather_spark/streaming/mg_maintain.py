@@ -37,7 +37,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_weather_spark.operators.frequent import _mg_kernel
-from etl_weather_spark.streaming._state import AppliedIds, atomic_savez, check_lineage
+from etl_weather_spark.streaming._state import (
+    AppliedIds,
+    atomic_savez,
+    check_lineage,
+    start_batches,
+)
 
 __all__ = [
     "mg_merge_counts",
@@ -147,19 +152,14 @@ def stream_maintain_mg(
     key_col: str,
     k: int = 64,
 ):
-    """Wire a stream to the maintenance loop (availableNow-friendly)."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: process_mg_batch(
-                df,
-                bid,
-                state_path=state_path,
-                key_col=key_col,
-                k=k,
-                lineage=checkpoint,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Wire a stream to the maintenance loop; the checkpoint path scopes
+    the applied ids."""
+    return start_batches(
+        stream,
+        checkpoint,
+        process_mg_batch,
+        state_path=state_path,
+        key_col=key_col,
+        k=k,
+        lineage=checkpoint,
     )

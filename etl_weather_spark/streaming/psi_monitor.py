@@ -23,12 +23,14 @@ never rescans; state lives in the reference artifact, not the stream.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_weather_spark.streaming.drift_monitor import reference_histogram
+from etl_weather_spark.streaming._state import start_batches
+from etl_weather_spark.streaming.drift_monitor import (
+    _paired_histograms,
+    _process_stat_batch,
+)
 
 __all__ = ["batch_psi_stat", "process_psi_batch", "stream_psi_monitor"]
 
@@ -51,27 +53,7 @@ def batch_psi_stat(
     """
     from etl_weather_spark.operators.ks import psi_from_histograms
 
-    if "bucket_width" in ref_hist.columns:
-        widths = [
-            r.bucket_width
-            for r in ref_hist.select("bucket_width").distinct().collect()
-        ]
-        ref_width = widths[0] if widths else None
-        if (
-            bucket_width is not None
-            and ref_width is not None
-            and float(bucket_width) != float(ref_width)
-        ):
-            raise ValueError(
-                f"reference histogram was built with bucket_width="
-                f"{ref_width}, monitor configured with {bucket_width} — "
-                "the comparison would silently match nothing"
-            )
-        bucket_width = ref_width if ref_width is not None else bucket_width
-        ref_hist = ref_hist.drop("bucket_width")
-    bh = reference_histogram(
-        batch, value_col=value_col, bucket_width=bucket_width
-    ).drop("bucket_width")
+    ref_hist, bh = _paired_histograms(batch, ref_hist, value_col, bucket_width)
     psi = psi_from_histograms(ref_hist, bh, threshold=threshold)
     return psi.select(
         F.col("n_b").alias("n_rows"),
@@ -92,35 +74,17 @@ def process_psi_batch(
 ) -> None:
     """foreachBatch body — idempotent: ``batch_id=N`` overwrites with
     identical bytes on replay."""
-    if batch_df.isEmpty():
-        return
-    row = batch_psi_stat(
+    _process_stat_batch(
         batch_df,
-        ref_hist,
+        batch_id,
+        batch_psi_stat,
+        "psi6",
+        "shifted",
+        stats_dir=stats_dir,
+        ref_hist=ref_hist,
         value_col=value_col,
         threshold=threshold,
         bucket_width=bucket_width,
-    ).collect()[0]
-    spark = batch_df.sparkSession
-    # A non-empty batch whose value_col is entirely NULL has zero
-    # histogram mass — the upstream-schema-break case — and must
-    # surface as an explicit all_null alarm row, never a float(None)
-    # crash (n_rows can itself be NULL when both histograms are empty;
-    # tolerate None like the drift monitor does).
-    all_null = int(row.n_rows or 0) == 0
-    out = spark.createDataFrame(
-        [(
-            int(batch_id),
-            int(row.n_rows or 0),
-            None if all_null else float(row.psi6),
-            bool(row.shifted),
-            all_null,
-        )],
-        "batch_id long, n_rows long, psi6 double, shifted boolean, "
-        "all_null boolean",
-    )
-    out.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stats_dir, f"batch_id={batch_id}")
     )
 
 
@@ -136,22 +100,13 @@ def stream_psi_monitor(
 ):
     """Wire the monitor onto a document stream: one PSI row per
     micro-batch under ``stats_dir``."""
-    ref = ref_hist.localCheckpoint(eager=False)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        process_psi_batch(
-            batch_df,
-            batch_id,
-            ref_hist=ref,
-            stats_dir=stats_dir,
-            value_col=value_col,
-            threshold=threshold,
-            bucket_width=bucket_width,
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        docs_stream,
+        checkpoint_dir,
+        process_psi_batch,
+        ref_hist=ref_hist.localCheckpoint(eager=False),
+        stats_dir=stats_dir,
+        value_col=value_col,
+        threshold=threshold,
+        bucket_width=bucket_width,
     )

@@ -14,8 +14,8 @@ NULL scores every doc as failing (NULL text has no words), never a
 crash (the all-NULL lesson of the KS drift monitor, designed in from
 the start here). Each trigger overwrites its ``batch_id=N`` partition,
 so foreachBatch's at-least-once replays rewrite content-identical
-stats (the idempotence contract shared by streaming/corpus_ingest and
-streaming/drift_monitor).
+stats (``streaming/_state.write_batch``, the output every streaming
+surface shares).
 
 Scale: per trigger the work is the gate's documented bounded plan over
 ONE micro-batch (two doc-keyed explode→partial-agg passes plus a
@@ -24,13 +24,12 @@ projection); no state store — the monitor is stateless by design.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_weather_spark.functions.rounding import rnd
 from etl_weather_spark.operators.textops import gopher_quality_profile
+from etl_weather_spark.streaming._state import start_batches, write_batch
 
 __all__ = [
     "batch_quality_stats",
@@ -84,17 +83,15 @@ def process_quality_batch(
     row = batch_quality_stats(
         batch_df, threshold=threshold, **gate_kwargs
     ).collect()[0]
-    spark = batch_df.sparkSession
     rate = None if row.keep_rate6 is None else float(row.keep_rate6)
+    spark = batch_df.sparkSession
     out = spark.createDataFrame(
         [(int(batch_id), int(row.n_docs), int(row.n_keep), rate,
           bool(row.low_quality))],
         "batch_id long, n_docs long, n_keep long, keep_rate6 double, "
         "low_quality boolean",
     )
-    out.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stats_dir, f"batch_id={batch_id}")
-    )
+    write_batch(out.coalesce(1), stats_dir, batch_id)
 
 
 def stream_quality_monitor(
@@ -107,19 +104,11 @@ def stream_quality_monitor(
 ):
     """Wire the monitor onto a document stream: one quality-rate row
     per micro-batch under ``stats_dir``."""
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        process_quality_batch(
-            batch_df,
-            batch_id,
-            stats_dir=stats_dir,
-            threshold=threshold,
-            **gate_kwargs,
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        docs_stream,
+        checkpoint_dir,
+        process_quality_batch,
+        stats_dir=stats_dir,
+        threshold=threshold,
+        **gate_kwargs,
     )

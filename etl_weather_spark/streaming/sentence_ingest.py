@@ -12,8 +12,9 @@ union of all batches (asserted by tests/test_streaming_sentence_ingest).
 Exactly-once discipline (same contract as incremental_dedup /
 media_ingest): foreachBatch is at-least-once, so both writes are
 idempotent per batch id — cleaned docs overwrite ``clean/batch_id=N``
-and the index append records a ``batch-N`` commit marker that a replay
-finds and skips.
+(``_state.write_batch``) and the index append records the batch's
+commit marker (``snapshots.batch_marker``) that a replay finds and
+skips.
 
 Scale: only the new batch is windowed per trigger; the screen is a
 left_anti join keyed on the 8-byte sentence hash with the micro-batch
@@ -24,8 +25,6 @@ seen (no strings, no positions). Compact index snapshots periodically
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,11 +34,15 @@ from etl_weather_spark.operators.dedup import (
     rebuild_sentence_docs,
 )
 from etl_weather_spark.sources.snapshots import (
+    batch_marker,
     current_version,
-    snapshot_history,
+    marker_version,
+    snapshot_append,
     snapshot_read,
-    snapshot_write,
 )
+from etl_weather_spark.streaming._state import start_batches, write_batch
+
+QUERY_NAME = "sentence_dedup"
 
 
 def process_sentence_batch(
@@ -53,8 +56,8 @@ def process_sentence_batch(
     """The foreachBatch body — also callable directly, and re-callable
     (replaying a batch id is a no-op for the index and a same-bytes
     rewrite for the cleaned docs)."""
-    marker = f"batch-{batch_id}"
-    if any(h.get("committed_at") == marker for h in snapshot_history(index_table)):
+    marker = batch_marker(batch_id)
+    if marker_version(index_table, marker) is not None:
         return  # replay of an already-committed batch
     spark = batch_df.sparkSession
     sents = _sentence_windows(batch_df, sent_tokens=sent_tokens).withColumn(
@@ -67,14 +70,10 @@ def process_sentence_batch(
         fresh = sents
     kept = keep_first_sentence_occurrence(fresh)
     cleaned = rebuild_sentence_docs(sents, kept)
-    cleaned.write.mode("overwrite").parquet(
-        os.path.join(clean_dir, f"batch_id={batch_id}")
-    )
+    write_batch(cleaned, clean_dir, batch_id)
     # the batch's surviving hashes ARE its distinct fresh hashes (one
     # keeper per hash), so the index grows by exactly what was accepted
-    new_hashes = kept.select("h")
-    mode = "append" if current_version(index_table) is not None else "overwrite"
-    snapshot_write(new_hashes, index_table, mode=mode, ingest_ts=marker)
+    snapshot_append(kept.select("h"), index_table, marker=marker)
 
 
 def stream_sentence_dedup(
@@ -84,23 +83,14 @@ def stream_sentence_dedup(
     clean_dir: str,
     checkpoint: str,
     sent_tokens: int = 8,
-    query_name: str = "sentence_dedup",
 ):
-    """Wire the batch body into a streaming query (availableNow)."""
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        process_sentence_batch(
-            batch_df,
-            batch_id,
-            index_table=index_table,
-            clean_dir=clean_dir,
-            sent_tokens=sent_tokens,
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(body)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Wire the batch body into a streaming query."""
+    return start_batches(
+        docs_stream,
+        checkpoint,
+        process_sentence_batch,
+        name=QUERY_NAME,
+        index_table=index_table,
+        clean_dir=clean_dir,
+        sent_tokens=sent_tokens,
     )

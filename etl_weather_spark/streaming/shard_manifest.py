@@ -20,10 +20,10 @@ the read-side fold is (batches × ≤64) rows — dashboard-sized.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from etl_weather_spark.streaming._state import start_batches, write_batch
 
 __all__ = [
     "shard_id_col",
@@ -71,9 +71,7 @@ def process_manifest_batch(
         )
         .orderBy("shard_id")
     )
-    part.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(manifest_dir, f"batch_id={batch_id}")
-    )
+    write_batch(part.coalesce(1), manifest_dir, batch_id)
 
 
 def read_shard_manifest(spark, manifest_dir: str) -> DataFrame:
@@ -95,13 +93,6 @@ def stream_shard_manifest(
 ):
     """Wire manifest maintenance onto a document stream: one additive
     partial per micro-batch under ``manifest_dir``."""
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        process_manifest_batch(batch_df, batch_id, manifest_dir=manifest_dir)
-
-    return (
-        docs_stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        docs_stream, checkpoint_dir, process_manifest_batch, manifest_dir=manifest_dir
     )

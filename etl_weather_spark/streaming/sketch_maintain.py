@@ -35,7 +35,12 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from etl_weather_spark.operators.sketches import cms_build
-from etl_weather_spark.streaming._state import AppliedIds, atomic_savez, check_lineage
+from etl_weather_spark.streaming._state import (
+    AppliedIds,
+    atomic_savez,
+    check_lineage,
+    start_batches,
+)
 
 __all__ = ["load_cms_state", "process_cms_batch", "stream_maintain_cms"]
 
@@ -100,23 +105,16 @@ def stream_maintain_cms(
     depth: int = 5,
     width: int = 2048,
 ):
-    """Wire a stream to the maintenance loop (availableNow-friendly).
-
-    Returns the started StreamingQuery; the caller awaits termination.
-    """
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: process_cms_batch(
-                df,
-                bid,
-                state_path=state_path,
-                key_col=key_col,
-                depth=depth,
-                width=width,
-                lineage=checkpoint,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Wire a stream to the maintenance loop; the checkpoint path scopes
+    the applied ids. Returns the started StreamingQuery; the caller
+    awaits termination."""
+    return start_batches(
+        stream,
+        checkpoint,
+        process_cms_batch,
+        state_path=state_path,
+        key_col=key_col,
+        depth=depth,
+        width=width,
+        lineage=checkpoint,
     )

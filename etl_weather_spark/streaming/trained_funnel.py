@@ -28,10 +28,10 @@ holds EXACTLY over the shared per-doc chain and is asserted in
 tests/test_streaming_trained_funnel.py.
 
 Exactly-once discipline (the corpus_ingest/incremental_dedup
-contract): survivors append to the accepted snapshot table under a
-``batch-N`` commit marker (replay = no-op); the per-batch stage-count
-stats row lands under ``stats/batch_id=N`` with overwrite (replay =
-identical bytes; batch_id only in the partition directory).
+contract): survivors append to the accepted snapshot table under the
+batch's commit marker (``snapshots.batch_marker``; replay = no-op); the
+per-batch stage-count stats row lands under ``stats/batch_id=N``
+through ``_state.write_batch`` (replay = identical bytes).
 
 Scale: per trigger, four codegen projections + one token-pass agg over
 ONE micro-batch, a 5-constant broadcast score, one keyed anti join
@@ -41,17 +41,17 @@ corpus text is never rescanned.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_weather_spark.sources.snapshots import (
+    batch_marker,
     current_version,
-    snapshot_history,
+    marker_version,
+    snapshot_append,
     snapshot_read,
-    snapshot_write,
 )
+from etl_weather_spark.streaming._state import start_batches, write_batch
 
 __all__ = [
     "funnel_delta_report",
@@ -101,20 +101,13 @@ def process_trained_funnel_batch(
     and therefore the stats bytes — are identical to the first run."""
     from etl_weather_spark.functions.text import doc_fingerprint
 
-    marker = f"batch-{batch_id}"
-    marker_version = next(
-        (
-            h["version"]
-            for h in snapshot_history(accepted_table)
-            if h.get("committed_at") == marker
-        ),
-        None,
-    )
-    if marker_version is None:
+    marker = batch_marker(batch_id)
+    committed = marker_version(accepted_table, marker)
+    if committed is None:
         standing_version = current_version(accepted_table)
     else:
         # replay: the append already committed; audit against pre-append state
-        standing_version = marker_version - 1 if marker_version > 0 else None
+        standing_version = committed - 1 if committed > 0 else None
     spark = batch_df.sparkSession
 
     chain = _gate_chain(batch_df, weights)
@@ -135,15 +128,12 @@ def process_trained_funnel_batch(
     survivors = batch_unique.localCheckpoint()  # one pass: count + append
     counts.append(survivors.count())
 
-    if marker_version is None and counts[-1] > 0:
-        mode = "append" if standing_version is not None else "overwrite"
-        snapshot_write(survivors, accepted_table, mode=mode, ingest_ts=marker)
+    if committed is None and counts[-1] > 0:
+        snapshot_append(survivors, accepted_table, marker=marker)
 
-    row = [tuple(counts)]
     schema = ", ".join(f"n_{s} long" for s in STAGES)
-    spark.createDataFrame(row, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stats_dir, f"batch_id={batch_id}"))
+    stats = spark.createDataFrame([tuple(counts)], schema)
+    write_batch(stats.coalesce(1), stats_dir, batch_id)
 
 
 def funnel_delta_report(
@@ -195,19 +185,11 @@ def stream_trained_funnel(
 ):
     """Wire the trained funnel onto a document stream: survivors append
     to the accepted snapshot table, one stage-count row per batch."""
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        process_trained_funnel_batch(
-            batch_df,
-            batch_id,
-            accepted_table=accepted_table,
-            stats_dir=stats_dir,
-            weights=weights,
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        docs_stream,
+        checkpoint_dir,
+        process_trained_funnel_batch,
+        accepted_table=accepted_table,
+        stats_dir=stats_dir,
+        weights=weights,
     )

@@ -6,6 +6,7 @@ lineage (VERDICT r4 item 1).
 
 Usage: python scripts/bpe_scale_probe.py [sf_dir] [n_merges]
 Writes one JSON line to stdout (redirect to bpe1k.json).
+The recorded run is at `git show 56ef44c:bpe1k.json`.
 """
 import json
 import os

@@ -176,6 +176,59 @@ def test_stream_commit_tables_atomic_per_batch_and_replay_safe(spark, tmp_path):
     assert stats2 == {2: 3}  # overwrite mode: per-batch derived tables
 
 
+def test_stream_publish_replay_after_crash_past_swap_is_noop(
+    spark, tmp_path, monkeypatch
+):
+    """A crash right after the catalog pointer swap fails the batch
+    before its offsets commit, so the restarted query replays it. The
+    batch marker must already sit in the swapped-in manifest: the replay
+    then finds it and commits no second version."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from etl_weather_spark.sources.catalog import (
+        catalog_history,
+        catalog_manifest,
+        stream_commit_tables,
+    )
+
+    src = str(tmp_path / "in")
+    cat = str(tmp_path / "cat")
+    ckpt = str(tmp_path / "ckpt")
+    spark.createDataFrame([(1, "alpha")], "doc_id long, text string").write.parquet(
+        f"{src}/b0"
+    )
+    pointer = os.path.join(cat, "_latest")
+    real_replace = os.replace
+
+    def replace_then_crash(src_path, dst_path):
+        real_replace(src_path, dst_path)
+        if dst_path == pointer:
+            raise OSError("crash after the catalog pointer swap")
+
+    def publish():
+        stream = spark.readStream.schema("doc_id long, text string").parquet(
+            src + "/*"
+        )
+        q = stream_commit_tables(
+            stream, catalog=cat, checkpoint=ckpt, derive={"docs": lambda b: b}
+        )
+        q.awaitTermination(120)
+
+    monkeypatch.setattr(os, "replace", replace_then_crash)
+    with pytest.raises(StreamingQueryException):
+        publish()
+    monkeypatch.undo()
+    assert catalog_history(cat) == [0]
+
+    publish()  # same checkpoint: batch 0 again
+    assert catalog_history(cat) == [0]
+    assert catalog_manifest(cat)["__batch_id"] == 0
+    docs = {r["doc_id"]: r["text"] for r in catalog_read(spark, cat, "docs").collect()}
+    assert docs == {1: "alpha"}
+
+
 def test_concurrent_commit_claim_rebases_not_overwrites(spark, tmp_path):
     """Optimistic concurrency: if another writer claimed v{N} between
     our read and our commit, our commit must NOT overwrite it — it

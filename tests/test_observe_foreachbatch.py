@@ -49,7 +49,6 @@ def test_foreachbatch_upsert_latest(spark, tmp_path):
         gold,
         key_cols=["event_id"],
         checkpoint=str(tmp_path / "ckpt"),
-        query_name="t_upsert",
     )
     q.awaitTermination()
 

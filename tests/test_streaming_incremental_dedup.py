@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import glob
+import pathlib
+import re
 
 from etl_weather_spark.sources.snapshots import snapshot_history, snapshot_read
 from etl_weather_spark.streaming.incremental_dedup import (
@@ -84,3 +86,26 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
         for r in spark.read.parquet(flags + "/batch_id=1").collect()
     }
     assert (1, 11) in flagged
+
+
+def test_micro_batch_protocol_is_spelled_once():
+    """Every streaming surface starts, recognises a replay and writes its
+    per-batch output the same way, so each spelling has one home: the
+    foreachBatch start and the ``batch_id=N`` output in
+    ``streaming/_state.py``, the replay marker and its ``committed_at``
+    lookup in ``sources/snapshots.py``."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "etl_weather_spark"
+    homes = {
+        r"\.foreachBatch\(": "streaming/_state.py",
+        r"[\"']committed_at[\"']": "sources/snapshots.py",
+        r"[\"']batch-\{": "sources/snapshots.py",
+        r"batch_id=\{": "streaming/_state.py",
+    }
+    strays = {pattern: [] for pattern in homes}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            for pattern, home in homes.items():
+                if rel != home and re.search(pattern, line):
+                    strays[pattern].append(f"{rel}:{n}")
+    assert strays == {pattern: [] for pattern in homes}
