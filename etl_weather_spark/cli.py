@@ -106,7 +106,7 @@ def cmd_all(args: argparse.Namespace) -> int:
         HOURLY_AIR_FIELDS,
     )
     daily = daily_from_hourly(merge_hourly(hw, ha))
-    rows = [r.asDict() for r in daily.orderBy("date").collect()]
+    rows = [r.asDict() for r in daily.collect()]  # one city, in date order
     if not rows:
         print("no daily rows produced")
         return 1

@@ -193,7 +193,7 @@ def publish_artifact(
     meta — :func:`artifact_meta` reports that as
     :class:`ArtifactMissingError` and :func:`artifact_if_absent`
     self-heals by republishing. Two publishers racing the same prev+1
-    get DISTINCT versions (snapshot_write's os.link version claim —
+    get DISTINCT versions (snapshots.commit_manifest's version claim —
     the loser retries at the next number), so no manifest is ever
     overwritten; both versions carry their own meta, and the
     forward-only pointer names one winner for every reader.

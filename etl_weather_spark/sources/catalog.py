@@ -33,11 +33,15 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_weather_spark.sources.snapshots import snapshot_read, snapshot_write
+from etl_weather_spark.sources.snapshots import (
+    commit_manifest,
+    read_pointer,
+    snapshot_read,
+    snapshot_write,
+)
 
 __all__ = [
     "catalog_commit_pins",
@@ -60,11 +64,7 @@ def _pointer(catalog: str) -> str:
 
 
 def catalog_current(catalog: str) -> int | None:
-    try:
-        with open(_pointer(catalog)) as f:
-            return int(f.read().strip())
-    except FileNotFoundError:
-        return None
+    return read_pointer(_pointer(catalog))
 
 
 def _load(catalog: str, version: int) -> dict:
@@ -135,40 +135,16 @@ def _commit_tables(
         v = snapshot_write(df, path, mode=mode)
         pinned[name] = {"path": path, "version": v}
 
-    # Optimistic concurrency: CLAIM the next manifest number by
-    # hard-linking a fully-written temp manifest into place — os.link
-    # fails if v{N}.json already exists, and the claim lands WITH its
-    # content (no torn-read window). The loser rebases: tables it
-    # didn't write follow the winner's pins, then it retries at N+1.
-    # On object stores this is a conditional PUT (if-none-match).
-    os.makedirs(_vdir(catalog), exist_ok=True)
-    version = 0 if prev is None else prev + 1
-    while True:
-        target = os.path.join(_vdir(catalog), f"v{version}.json")
-        tmpm = target + f".tmp.{uuid.uuid4().hex}"
-        with open(tmpm, "w") as f:
-            json.dump({**pinned, **extra}, f)
-        try:
-            os.link(tmpm, target)
-            os.remove(tmpm)
-            break
-        except FileExistsError:
-            os.remove(tmpm)
-            theirs = dict(_load(catalog, version))
+    def manifest_at(version: int) -> dict:
+        if version > (0 if prev is None else prev + 1):
+            # lost v{version-1}: the tables this commit didn't write
+            # follow the winner's pins
+            theirs = dict(_load(catalog, version - 1))
             theirs.pop("__batch_id", None)
-            for name, pin in theirs.items():
-                if name not in writes:
-                    pinned[name] = pin
-            version += 1
-    # forward-only pointer swap: a slow writer that claimed a lower
-    # number must not regress the pointer past a faster writer's commit
-    cur = catalog_current(catalog)
-    if cur is None or cur < version:
-        tmp = _pointer(catalog) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, _pointer(catalog))  # the commit point
-    return version
+            pinned.update({n: pin for n, pin in theirs.items() if n not in writes})
+        return {**pinned, **extra}
+
+    return commit_manifest(_vdir(catalog), _pointer(catalog), prev, manifest_at)
 
 
 def catalog_commit_pins(
@@ -188,7 +164,7 @@ def catalog_commit_pins(
     carry-over would be exactly the mixed-version state releases exist
     to prevent. ``extra`` entries must be ``__``-prefixed commit
     metadata; they ride the manifest and are invisible to
-    :func:`catalog_versions` readers. Concurrency: the same os.link
+    :func:`catalog_versions` readers. Concurrency: the same version
     claim as table commits — the loser simply retries at N+1 with its
     own complete pin set (no rebase needed).
     """
@@ -196,28 +172,7 @@ def catalog_commit_pins(
     if bad:
         raise ValueError(f"extra keys must be __-prefixed metadata: {bad}")
     manifest = {**pins, **(extra or {})}
-    os.makedirs(_vdir(catalog), exist_ok=True)
-    prev = catalog_current(catalog)
-    version = 0 if prev is None else prev + 1
-    while True:
-        target = os.path.join(_vdir(catalog), f"v{version}.json")
-        tmpm = target + f".tmp.{uuid.uuid4().hex}"
-        with open(tmpm, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(tmpm, target)
-            os.remove(tmpm)
-            break
-        except FileExistsError:
-            os.remove(tmpm)
-            version += 1
-    cur = catalog_current(catalog)
-    if cur is None or cur < version:
-        tmp = _pointer(catalog) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, _pointer(catalog))  # the commit point
-    return version
+    return commit_manifest(_vdir(catalog), _pointer(catalog), catalog_current(catalog), lambda _version: manifest)
 
 
 def catalog_read(

@@ -152,8 +152,6 @@ def stream_upsert_latest(
     stream_df: DataFrame,
     path: str,
     *,
-    key_cols: list[str],
-    ts_col: str = "ingest_ts",
     checkpoint: str,
 ):
     """Materialize a stream into a keyed gold table via foreachBatch:
@@ -163,7 +161,9 @@ def stream_upsert_latest(
     MERGE-capable table format: writes are blind appends (no read-
     modify-write contention across 1000 executors), and the view's
     row_number-over-ingest_ts prunes to the newest row per key at read
-    time. Compact periodically by rewriting the view output.
+    time. The keys and the timestamp column are the reader's, passed to
+    :func:`latest_view`; the write needs neither. Compact periodically
+    by rewriting the view output.
     """
     from etl_weather_spark.streaming._state import start_batches
 

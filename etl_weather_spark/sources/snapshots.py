@@ -11,9 +11,10 @@ files are immutable and a tiny pointer names the current version:
       _manifests/v{N}.json                (file-set of version N)
       _latest                             (text file: "N" — the pointer)
 
-- WRITE: land data under a fresh uuid dir, write manifest v{N+1}, then
-  atomically swap the pointer (os.replace). A crash before the swap
-  leaves garbage data files but a fully consistent table.
+- WRITE: land data under a fresh uuid dir, claim manifest v{N+1}, then
+  atomically swap the pointer (os.replace; both in
+  :func:`commit_manifest`). A crash before the swap leaves garbage data
+  files but a fully consistent table.
 - READ: resolve the pointer (or an explicit version — time travel),
   load exactly the manifest's directories. Readers never see a partial
   commit.
@@ -37,6 +38,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,17 +51,74 @@ def _pointer_path(table: str) -> str:
     return os.path.join(table, "_latest")
 
 
-def current_version(table: str) -> int | None:
+def read_pointer(pointer: str) -> int | None:
+    """The version a pointer file names, or None before the first commit."""
     try:
-        with open(_pointer_path(table)) as f:
+        with open(pointer) as f:
             return int(f.read().strip())
     except FileNotFoundError:
         return None
 
 
+def current_version(table: str) -> int | None:
+    return read_pointer(_pointer_path(table))
+
+
 def _load_manifest(table: str, version: int) -> dict:
     with open(os.path.join(_manifest_dir(table), f"v{version}.json")) as f:
         return json.load(f)
+
+
+def commit_manifest(
+    manifest_dir: str,
+    pointer: str,
+    prev: int | None,
+    manifest_at: Callable[[int], dict],
+) -> int:
+    """Commit a manifest as ``v{prev+1}.json`` in ``manifest_dir`` (``v0``
+    when ``prev`` is None), or as the next number no other writer holds,
+    then swap ``pointer`` forward to it; returns the committed version.
+    ``prev`` is the version the caller read before building its commit.
+    Snapshot, rollback, catalog and release commits all go through here.
+
+    The version CLAIM is ``os.link`` of a fully-written temp manifest (a
+    conditional PUT, if-none-match, on object stores): the link fails if
+    the number is taken, so two writers racing the same number never
+    overwrite one manifest, and a claim lands with its content, so no
+    reader sees a torn one. ``manifest_at(n)`` builds the manifest to
+    claim as number ``n``; after a lost claim it is called again with the
+    next number, which is where a caller rebases onto the winner. The
+    pointer swap is forward-only: a slow writer that claimed a lower
+    number never regresses the pointer past a faster writer's commit.
+    Known residual anomaly, stated: a commit that serializes before a
+    concurrent one becomes visible does not include it in its own lineage
+    (optimistic concurrency without a commit log).
+    """
+    os.makedirs(manifest_dir, exist_ok=True)
+    version = 0 if prev is None else prev + 1
+    while True:
+        target = os.path.join(manifest_dir, f"v{version}.json")
+        tmp = f"{target}.tmp.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump(manifest_at(version), f)
+        try:
+            os.link(tmp, target)
+            break
+        except FileExistsError:
+            version += 1
+        finally:
+            os.remove(tmp)
+    cur = read_pointer(pointer)
+    if cur is None or cur < version:
+        tmp = f"{pointer}.tmp.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            f.write(str(version))
+        os.replace(tmp, pointer)  # the commit point
+    return version
+
+
+def _now() -> str:
+    return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
 
 
 def snapshot_write(
@@ -80,52 +139,16 @@ def snapshot_write(
     commit_id = uuid.uuid4().hex
     data_dir = os.path.join(table, "data", commit_id)
     df.write.parquet(data_dir)
-
-    # Version CLAIM by os.link (conditional PUT on object stores): two
-    # writers racing the same prev+1 can no longer overwrite one
-    # manifest file — the loser's link fails, it re-resolves the table
-    # state (appends rebase onto the winner's dirs) and retries at the
-    # next number. Known residual anomaly, stated: an append that
-    # serializes BEFORE a concurrent commit becomes visible does not
-    # include that commit's rows in its own lineage (optimistic
-    # concurrency without a commit log); the pointer is forward-only so
-    # no committed version ever regresses.
-    os.makedirs(_manifest_dir(table), exist_ok=True)
     prev = current_version(table)
-    version = 0 if prev is None else prev + 1
-    while True:
-        dirs = [os.path.join("data", commit_id)]
-        if mode == "append" and prev is not None:
-            dirs = _load_manifest(table, prev)["data_dirs"] + dirs
-        manifest = {
-            "version": version,
-            "data_dirs": dirs,
-            "committed_at": ingest_ts
-            or time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "mode": mode,
-        }
-        target = os.path.join(_manifest_dir(table), f"v{version}.json")
-        tmpm = target + f".tmp.{uuid.uuid4().hex}"
-        with open(tmpm, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(tmpm, target)
-            os.remove(tmpm)
-            break
-        except FileExistsError:
-            os.remove(tmpm)
-            cur = current_version(table)
-            if cur is not None and (prev is None or cur > prev):
-                prev = cur  # rebase appends onto the now-visible winner
-            version += 1
 
-    cur = current_version(table)
-    if cur is None or cur < version:
-        tmp = _pointer_path(table) + f".tmp.{commit_id}"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, _pointer_path(table))  # the commit point
-    return version
+    def manifest_at(version: int) -> dict:
+        dirs = [os.path.join("data", commit_id)]
+        base = current_version(table)  # after a lost claim: the now-visible winner
+        if mode == "append" and base is not None:
+            dirs = _load_manifest(table, base)["data_dirs"] + dirs
+        return {"version": version, "data_dirs": dirs, "committed_at": ingest_ts or _now(), "mode": mode}
+
+    return commit_manifest(_manifest_dir(table), _pointer_path(table), prev, manifest_at)
 
 
 def batch_marker(batch_id: int) -> str:
@@ -242,24 +265,17 @@ def snapshot_rollback(table: str, *, to_version: int) -> int:
     version whose manifest references the old version's data dirs —
     no data moves, history stays intact (the bad version remains
     time-travelable for forensics until expiry), and concurrent
-    readers just see the pointer advance.
+    readers just see the pointer advance. The new version is claimed
+    like any commit (:func:`commit_manifest`), so a racer's manifest
+    is never overwritten.
     """
-    manifest = _load_manifest(table, to_version)
+    dirs = _load_manifest(table, to_version)["data_dirs"]
     prev = current_version(table)
-    version = (prev or 0) + 1
-    rolled = {
-        "version": version,
-        "data_dirs": manifest["data_dirs"],
-        "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "mode": f"rollback(to=v{to_version})",
-    }
-    with open(os.path.join(_manifest_dir(table), f"v{version}.json"), "w") as f:
-        json.dump(rolled, f)
-    tmp = _pointer_path(table) + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, _pointer_path(table))
-    return version
+
+    def manifest_at(version: int) -> dict:
+        return {"version": version, "data_dirs": dirs, "committed_at": _now(), "mode": f"rollback(to=v{to_version})"}
+
+    return commit_manifest(_manifest_dir(table), _pointer_path(table), prev, manifest_at)
 
 
 def snapshot_merge(

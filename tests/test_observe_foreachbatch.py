@@ -47,7 +47,6 @@ def test_foreachbatch_upsert_latest(spark, tmp_path):
     q = stream_upsert_latest(
         stream.withColumn("ingest_ts", F.col("ts")),
         gold,
-        key_cols=["event_id"],
         checkpoint=str(tmp_path / "ckpt"),
     )
     q.awaitTermination()

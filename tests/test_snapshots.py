@@ -206,3 +206,28 @@ def test_append_rebases_onto_visible_winner_on_collision(spark, tmp_path):
     assert v == 3
     got = sorted(r.x for r in snapshot_read(spark, table).collect())
     assert got == [1, 2, 3]  # rebased onto v1, the visible winner
+
+
+def test_rollback_claims_its_version_never_overwrites(spark, tmp_path):
+    """A rollback commits like any writer: a racer that claimed v1 but
+    has not swapped the pointer keeps its manifest byte for byte, and the
+    rollback lands at the next free number."""
+    import json
+
+    from etl_weather_spark.sources.snapshots import snapshot_rollback
+
+    table = str(tmp_path / "t")
+    snapshot_write(spark.createDataFrame([(1,)], "x long"), table)  # v0
+    racer = os.path.join(table, "_manifests", "v1.json")
+    with open(racer, "w") as f:
+        json.dump({"version": 1, "data_dirs": ["data/racer"], "mode": "overwrite",
+                   "committed_at": "racer"}, f)
+    with open(racer, "rb") as f:
+        racer_bytes = f.read()
+
+    assert snapshot_rollback(table, to_version=0) == 2
+    with open(racer, "rb") as f:
+        assert f.read() == racer_bytes
+    assert current_version(table) == 2
+    assert snapshot_history(table)[-1]["mode"] == "rollback(to=v0)"
+    assert [r.x for r in snapshot_read(spark, table).collect()] == [1]

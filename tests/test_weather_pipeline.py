@@ -11,6 +11,7 @@ import datetime as dt
 import gc
 import json
 import threading
+import uuid
 
 import pytest
 from py4j.clientserver import ClientServerConnection
@@ -158,10 +159,66 @@ def test_spine_construction_round_trips(spark, raw_paths):
 
 
 def test_summary_plan_drops_daily_sort(spark, raw_paths):
-    """The summary reads daily through a repartition by city, so Catalyst
-    drops daily's global sort: no Sort node, no range partitioning."""
+    """The summary reads daily's fence through a repartition by city, so
+    it never sees daily's global sort: no Sort node, no range
+    partitioning."""
     _, summary = _spine(spark, *raw_paths)
     optimized = summary._jdf.queryExecution().optimizedPlan().toString()
     assert not any(line.lstrip(" :+-").startswith("Sort ") for line in optimized.splitlines()), optimized
     assert "RepartitionByExpression [city" in optimized, optimized
     assert "rangepartitioning" not in physical_plan(summary).lower()
+
+
+def _jobs_of_pass(spark, weather_path, air_path):
+    """Spark jobs of one pass: build, daily collect, summary collect."""
+    sc = spark.sparkContext
+    group = f"weather-pass-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        daily, summary = _spine(spark, weather_path, air_path)
+        daily.collect()
+        summary.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pass_makes_daily_once(spark, raw_paths):
+    """Daily gold is made once per pass, by the fence that ends
+    daily_from_hourly, and both collects read it. Without the fence the
+    summary re-runs scan → join → aggregate: 11 jobs at the benchmark's
+    scale instead of 9."""
+    assert _jobs_of_pass(spark, *raw_paths) == 9
+
+
+def test_summary_plan_scans_no_json(spark, raw_paths):
+    """The summary reads the daily fence, not the raw JSON files."""
+    _, summary = _spine(spark, *raw_paths)
+    summary.collect()
+    assert "FileScan json" not in physical_plan(summary), physical_plan(summary)
+
+
+def test_rewritten_raw_files_are_reread(spark, tmp_path):
+    """The fence belongs to one built DataFrame, not to a plan: a pass
+    over re-landed files at the same paths sees the new values."""
+    weather, air = str(tmp_path / "weather.json"), str(tmp_path / "air.json")
+
+    def land(temp_shift, pm_shift):
+        w = dict(WEATHER_DOC, hourly=dict(WEATHER_DOC["hourly"]))
+        w["hourly"]["temperature_2m"] = [t + temp_shift for t in w["hourly"]["temperature_2m"]]
+        a = dict(AIR_DOC, hourly=dict(AIR_DOC["hourly"]))
+        a["hourly"]["pm2_5"] = [p + pm_shift for p in a["hourly"]["pm2_5"]]
+        (tmp_path / "weather.json").write_text(json.dumps(w))
+        (tmp_path / "air.json").write_text(json.dumps(a))
+
+    land(0.0, 0.0)
+    daily, summary = _spine(spark, weather, air)
+    assert [r["temp_max"] for r in daily.collect()] == [26.5, 24.0]
+    assert summary.collect()[0]["period_pm25_avg"] == 27.5
+
+    land(10.0, 100.0)
+    daily, summary = _spine(spark, weather, air)
+    assert [r["temp_max"] for r in daily.collect()] == [36.5, 34.0]
+    s = summary.collect()[0]
+    assert (s["period_temp_max"], s["period_pm25_avg"]) == (36.5, 127.5)
