@@ -20,8 +20,7 @@ DuckDB can reproduce signatures exactly.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -30,29 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_weather_spark.functions.text import doc_fingerprint
-
-
-@contextmanager
-def persisted(df: DataFrame) -> Iterator[DataFrame]:
-    """Cache ``df`` for the duration of one operator call — the
-    engine's only persist.
-
-    On entry the frame is persisted and eagerly counted: the count is a
-    materialization barrier, so consumer stages that AQE schedules
-    concurrently read the cache instead of each re-running the frame's
-    plan (without it the candidate generator ran once per consumer:
-    3× the minhash pipeline, +8 s on winnow at sf0.1). On exit — normal or by exception — the cache is released, so
-    no CacheManager entry outlives the call and none can silently serve
-    another query whose plan canonicalizes identically. Whatever the
-    block returns must therefore not read the cache lazily: end it with
-    an eager ``localCheckpoint`` or a driver collect.
-    """
-    cached = df.persist()
-    try:
-        cached.count()
-        yield cached
-    finally:
-        cached.unpersist()
+from etl_weather_spark.operators.fence import fence, persisted
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -956,7 +933,7 @@ def _verify_candidates(
                 sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")),
                 "id_b",
             )
-            return score(sized).localCheckpoint(eager=True)
+            return fence(score(sized), eager=True)
 
 
 def verify_pairs_jaccard_inline(
@@ -1154,9 +1131,9 @@ def prefix_filter_candidates(
     """
     with persisted(_shingle_sets(docs, text_col, id_col, shingle_n)) as shsets:
         sh = shsets.select(id_col, "n_sh", F.explode("__sh_arr").alias("sh"))
-        return _candidates_from_sized_shingles(
+        return fence(_candidates_from_sized_shingles(
             sh, id_col=id_col, t=min_jaccard
-        ).localCheckpoint(eager=True)
+        ), eager=True)
 
 
 def _shingle_sets(
@@ -1300,10 +1277,10 @@ def pruned_jaccard_pairs(
             F.max("n_b").alias("n_b"),
         )
         jaccard = F.col("__ni") / (F.col("n_a") + F.col("n_b") - F.col("__ni"))
-        return (
+        return fence(
             fenced.select("id_a", "id_b", jaccard.alias("jaccard"))
-            .filter(F.col("jaccard") >= min_jaccard)
-            .localCheckpoint(eager=True)
+            .filter(F.col("jaccard") >= min_jaccard),
+            eager=True,
         )
 
 
@@ -1570,14 +1547,14 @@ def cc_large_small_star(
         .distinct()
     )
     # canonical orientation src > dst; drop self loops
-    edges = (
+    edges = fence(
         pairs.select(
             F.greatest(F.col(id_a), F.col(id_b)).alias("src"),
             F.least(F.col(id_a), F.col(id_b)).alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     sig_prev = None
     rounds = 0
@@ -1608,10 +1585,10 @@ def cc_large_small_star(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
-        # localCheckpoint: materialize AND truncate lineage so the plan
-        # stays flat across rounds (persist alone doubles the logical
-        # plan per round)
-        new_edges = small.localCheckpoint(eager=True)
+        # materialize AND truncate lineage so the plan stays flat
+        # across rounds (persist alone doubles the logical plan per
+        # round)
+        new_edges = fence(small, eager=True)
         sig = tuple(
             new_edges.agg(
                 F.count("*").alias("n"),
@@ -1907,7 +1884,7 @@ def containment_candidates(
         index = sized.select(
             F.col(id_col).alias("id_f"), "sh", F.col("n_sh").alias("n_f")
         )
-        return (
+        return fence(
             prefix.join(index, "sh")
             .filter(
                 (F.col("n_p") < F.col("n_f"))
@@ -1917,8 +1894,8 @@ def containment_candidates(
                 F.least("id_p", "id_f").alias("id_a"),
                 F.greatest("id_p", "id_f").alias("id_b"),
             )
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            eager=True,
         )
 
 

@@ -18,9 +18,9 @@ Design notes (100 TB):
   convergence unbounded.
 - Edges carry their out-degree from a single pre-pass, so the per-round
   join is binary (ranks ⋈ edges_with_deg), not ternary.
-- Lineage is truncated by materializing ranks per round via
-  ``localCheckpoint`` only when iterations > ``checkpoint_after`` —
-  for the default 3 rounds the plan stays lazy end-to-end.
+- Lineage is truncated by fencing the ranks every ``FENCE_EVERY``
+  rounds (:mod:`~etl_weather_spark.operators.fence`) — for the default
+  3 rounds the plan stays lazy end-to-end.
 
 Integer-exact arithmetic: ranks are scaled BIGINTs (default scale 1e9)
 and every operation is integer multiply / integer (truncating) division
@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_weather_spark.operators.fence import FENCE_EVERY, fence
+
 __all__ = ["pagerank_scaled"]
 
 
@@ -47,7 +49,6 @@ def pagerank_scaled(
     scale: int = 1_000_000_000,
     damping_pct: int = 85,
     symmetric: bool = True,
-    checkpoint_after: int = 6,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a pair graph: (node, rank_scaled).
 
@@ -75,11 +76,8 @@ def pagerank_scaled(
         )
     # the edge relation is consumed by deg + every round: without a
     # fence the final plan re-derives the (possibly expensive) pair
-    # subtree once per consumer. A lazy local checkpoint materializes
-    # it exactly once per action — and unlike persist() it is bound to
-    # THIS DataFrame object, so repeated calls never share state
-    # (re-entrant benchmarks measure the full computation).
-    edges = edges.localCheckpoint(eager=False)
+    # subtree once per consumer
+    edges = fence(edges)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # one binary relation reused every round: (src, dst, outdeg)
     edges_deg = edges.join(deg, "src")
@@ -103,7 +101,6 @@ def pagerank_scaled(
                 + F.expr(f"({damping_pct} * contrib) div 100")
             ).cast("long").alias("r"),
         )
-        if i + 1 >= checkpoint_after and i + 1 < iterations:
-            # long iterative lineages double the plan per round; fence it
-            ranks = ranks.localCheckpoint(eager=False)
+        if (i + 1) % FENCE_EVERY == 0 and i + 1 < iterations:
+            ranks = fence(ranks)
     return ranks.select("node", F.col("r").alias("rank_scaled"))

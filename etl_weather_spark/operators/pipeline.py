@@ -32,7 +32,7 @@ Scale notes:
   the fence below, so daily's global sort, its range-sample job and its
   range shuffle stay out of the summary's plan.
 - daily gold is made once per pass, where it is made: ``daily_from_hourly``
-  ends with an eager ``localCheckpoint`` after its global sort, like the
+  ends with an eager fence after its global sort, like the
   reference's written daily CSV that its report reads back. Lazy, the
   summary re-ran scan → explode → join → aggregate over the raw JSON:
   11 jobs per pass (daily collect, summary collect) instead of 9 on the
@@ -59,6 +59,7 @@ from etl_weather_spark.functions.categorize import (
     sql_lit,
 )
 from etl_weather_spark.functions.recommend import recommendation
+from etl_weather_spark.operators.fence import fence
 
 def merge_hourly(weather: DataFrame, air: DataFrame) -> DataFrame:
     """Full-outer join weather and air hourly tables on (city, time).
@@ -90,13 +91,13 @@ def daily_from_hourly(hourly: DataFrame) -> DataFrame:
         F.expr("round(avg(pm25), 2) AS pm25_avg"),
         F.expr("round(avg(pm10), 2) AS pm10_avg"),
     )
-    return daily.selectExpr(
+    return fence(daily.selectExpr(
         "*",
         f"{pm25_category('pm25_avg')} AS pm25_category",
         f"coalesce({is_hot_day('temp_max')}, false) AS is_hot_day",
         f"coalesce({is_heavy_rain('total_rain')}, false) AS is_heavy_rain",
         f"coalesce({is_unhealthy_pm25('pm25_avg')}, false) AS is_unhealthy_pm25",
-    ).orderBy(F.expr("city"), F.expr("date")).localCheckpoint(eager=True)
+    ).orderBy(F.expr("city"), F.expr("date")), eager=True)
 
 
 def summary_from_daily(daily: DataFrame) -> DataFrame:

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_weather_spark.functions.rounding import rnd
+from etl_weather_spark.operators.fence import FENCE_EVERY, fence, persisted
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -376,7 +377,7 @@ def embedding_near_dupes(
         # fenced: the a and b sides below would otherwise each
         # recompute the scoring pipeline (the multi-consumer
         # recompute trap verify_candidates_jaccard documents)
-        big = assigned.localCheckpoint(eager=False)
+        big = fence(assigned)
         pairs_big = (
             big.select("__blk", "cell", F.col("vec_id").alias("id_a"),
                        F.col("v").alias("va"), F.col("nv").alias("na"))
@@ -773,13 +774,11 @@ def cosine_topk_pq(
         # several narrow scans of the code table: cache it for the call
         # and materialize the unioned shortlist (≤ Q × shortlist narrow
         # rows), which also truncates the ceil(Q/chunk)-branch union plan
-        from etl_weather_spark.operators.dedup import persisted
-
         with persisted(codes) as cached:
             short = shortlist_for(cached, chunks[0])
             for chunk_rows in chunks[1:]:
                 short = short.unionByName(shortlist_for(cached, chunk_rows))
-            short = short.localCheckpoint(eager=True)
+            short = fence(short, eager=True)
 
     # exact re-rank: full vectors only for shortlist ids × queries
     c_full = corpus.select(
@@ -875,27 +874,6 @@ def cosine_topk_ivf(
 # ---------------------------------------------------------------------------
 
 
-def kmeans_lloyd(
-    emb: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 4,
-    iters: int = 3,
-    checkpoint_every: int = 4,
-) -> DataFrame:
-    """Assignment-only wrapper over kmeans_lloyd_full (see its doc)."""
-    assign, _cent = kmeans_lloyd_full(
-        emb,
-        vec_col=vec_col,
-        id_col=id_col,
-        k=k,
-        iters=iters,
-        checkpoint_every=checkpoint_every,
-    )
-    return assign
-
-
 def kmeans_lloyd_full(
     emb: DataFrame,
     *,
@@ -903,7 +881,6 @@ def kmeans_lloyd_full(
     id_col: str = "vec_id",
     k: int = 4,
     iters: int = 3,
-    checkpoint_every: int = 4,
 ) -> tuple[DataFrame, DataFrame]:
     """Distributed Lloyd k-means: returns (assignments, centroids) where
     assignments is (vec_id, cluster, qdist) after ``iters``
@@ -928,10 +905,10 @@ def kmeans_lloyd_full(
     Scale: per round, the k·D centroid table broadcasts against the
     exploded (vec_id, pos, x) components — the N·D·k fanout collapses
     map-side into (vec_id, cluster) partial sums before the shuffle;
-    the mean recompute is one more (cluster, pos)-keyed agg. Lineage is
-    truncated with ``localCheckpoint`` every ``checkpoint_every``
-    rounds (the CC/BPE lesson) so production iteration counts do not
-    build an iters-deep plan; demo-sized runs stay lazy.
+    the mean recompute is one more (cluster, pos)-keyed agg. The
+    centroids are fenced every ``FENCE_EVERY`` rounds so production
+    iteration counts do not build an iters-deep plan; demo-sized runs
+    stay lazy.
     """
     if k < 1 or iters < 1:
         raise ValueError("k and iters must be >= 1")
@@ -959,7 +936,7 @@ def kmeans_lloyd_full(
             # ann_ivf_recall_audit) — so fence it lazily: k·D rows
             # materialize once instead of replaying the whole Lloyd
             # lineage per consumer.
-            cent = cent.localCheckpoint(eager=False)
+            cent = fence(cent)
         d = F.col("x") - F.col("c")
         dist = (
             comp.join(F.broadcast(cent), "pos")
@@ -1009,8 +986,8 @@ def kmeans_lloyd_full(
                 "cluster", "pos", F.coalesce(F.col("m.c"), F.col("p.c")).alias("c")
             )
         )
-        if rounds_done % checkpoint_every == 0:
-            cent = cent.localCheckpoint()
+        if rounds_done % FENCE_EVERY == 0:
+            cent = fence(cent)
     return assign, cent
 
 
@@ -1021,7 +998,6 @@ def power_iteration_top_component(
     id_col: str = "vec_id",
     dim: int = 64,
     iters: int = 3,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Distributed power iteration for the TOP PRINCIPAL DIRECTION of
     the (uncentered) mean Gram matrix Σ = (1/N)·Σᵢ vᵢvᵢᵀ — the
@@ -1035,7 +1011,7 @@ def power_iteration_top_component(
     Rayleigh-style eigenvalue estimate ‖Σx‖ (x unit) from the last
     round.
 
-    Exactness discipline (the kmeans_lloyd pattern — an iterative
+    Exactness discipline (the kmeans_lloyd_full pattern — an iterative
     float fixpoint another engine can replay bit-for-bit):
 
     - every dot accumulates 1e12-quantized per-component products as
@@ -1051,9 +1027,8 @@ def power_iteration_top_component(
     Scale: per round, the x iterate is a dim-row broadcast; s = vᵀx is
     one (vec_id-keyed) partial agg over the exploded components, and
     y = Σ vᵢsᵢ one (pos-keyed) partial agg — both map-side combinable.
-    Production iteration counts truncate lineage every
-    ``checkpoint_every`` rounds (the CC/BPE lesson); the default demo
-    depth stays lazy.
+    Production iteration counts fence the iterate every ``FENCE_EVERY``
+    rounds; the default demo depth stays lazy.
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
@@ -1111,8 +1086,8 @@ def power_iteration_top_component(
         x = y.crossJoin(F.broadcast(nr)).select(
             "pos", rnd(F.col("y6") / F.col("norm6"), 6).alias("xv")
         )
-        if rounds_done % checkpoint_every == 0:
-            x = x.localCheckpoint()
+        if rounds_done % FENCE_EVERY == 0 and rounds_done < iters:
+            x = fence(x)
     return (
         x.crossJoin(F.broadcast(nr))
         .select(

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from etl_weather_spark.functions.rounding import rnd
 from etl_weather_spark.functions.text import bpe_ish_token_count, token_count
+from etl_weather_spark.operators.fence import FENCE_EVERY, fence
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deliberately small and deterministic; in production these
@@ -242,7 +243,7 @@ def ngram_repetition_profile(docs: DataFrame, *, text_col: str = "text") -> Data
     toks = docs.select(
         F.col("doc_id"), F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok")
     ).filter(F.col("tok") != "")
-    g = toks.select(
+    g = fence(toks.select(
         "doc_id",
         "pos",
         "tok",
@@ -258,7 +259,7 @@ def ngram_repetition_profile(docs: DataFrame, *, text_col: str = "text") -> Data
         F.when(
             F.col("nxt2").isNotNull(), F.concat_ws(" ", "tok", "nxt1", "nxt2")
         ).alias("trigram"),
-    ).localCheckpoint(eager=False)
+    ))
     # ^ two consumers (the coverage chain and the top-bigram branch)
     # would otherwise each re-run the explode + two lead() windows
     gc = g.select(
@@ -600,7 +601,6 @@ def _bpe_rounds(
     *,
     batch_cap: int = 16,
     pool_size: int = 96,
-    checkpoint_every: int = 4,
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
     """Shared batched BPE round loop: (merge table rows, final vocab).
 
@@ -612,12 +612,9 @@ def _bpe_rounds(
       merges via :func:`_bpe_safe_batch` (exactly equivalent to that
       many sequential rounds), and applies them as chained literal folds
       in a single projection;
-    - **flat lineage** — every ``checkpoint_every`` rounds the vocab is
-      ``localCheckpoint``-ed (the CC operator's pattern,
-      dedup.py cc_large_small_star), so plan depth is bounded by
-      checkpoint_every × batch_cap regardless of total merges and no
-      persist chain accumulates (checkpointed RDDs are dropped by the
-      ContextCleaner once unreferenced).
+    - **flat lineage** — the vocab is fenced every ``FENCE_EVERY``
+      rounds (:mod:`~etl_weather_spark.operators.fence`), so plan depth
+      is bounded by FENCE_EVERY × batch_cap regardless of total merges.
     """
     v = vocab
     # conservative superset of the live symbol alphabet, maintained
@@ -651,11 +648,8 @@ def _bpe_rounds(
         carry = [c for c in v.columns if c != "syms"]
         v = v.select(syms.alias("syms"), *carry)
         rounds += 1
-        if rounds % checkpoint_every == 0:
-            # lazy: the NEXT round's pair-count job materializes the
-            # checkpoint as a side effect — one Spark job per round
-            # total, while still truncating lineage.
-            v = v.localCheckpoint(eager=False)
+        if rounds % FENCE_EVERY == 0 and len(merges) < n_merges:
+            v = fence(v)
     return merges, v
 
 
@@ -667,7 +661,7 @@ def bpe_train(vocab: DataFrame, n_merges: int, **round_opts) -> DataFrame:
 
     Runs the batched eager engine (:func:`_bpe_rounds`, proven
     against the pure-Python sequential reference in tests): one job
-    per ~batch_cap merges, bounded driver transfer, checkpoint-flat
+    per ~batch_cap merges, bounded driver transfer, fence-flat
     lineage — the shape that survives 32k merges. The merge table is
     driver-built and returned via an Arrow local table (never a
     Python-RDD scan), so it does not read ``vocab`` once returned.
@@ -757,10 +751,10 @@ def bpe_segment(vocab: DataFrame, n_merges: int, **round_opts) -> DataFrame:
     Same engine as :func:`bpe_train` (:func:`_bpe_rounds`), keeping the
     segmented vocab (all non-``syms`` columns pass through) instead of
     the merge table — the tokenizer-apply step. The result is eagerly
-    ``localCheckpoint``-ed (flat plan), so it no longer reads ``vocab``.
+    fenced (flat plan), so it no longer reads ``vocab``.
     """
     _, v = _bpe_rounds(vocab, n_merges, **round_opts)
-    return v.localCheckpoint(eager=True)
+    return fence(v, eager=True)
 
 
 #: Rae et al. 2021 ("Scaling Language Models: ... Gopher"), Table A1 —

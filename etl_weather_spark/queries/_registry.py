@@ -23,11 +23,12 @@ _IVF_CENTROIDS: dict[tuple, object] = {}
 
 def _build_concurrently(builders):
     """Construct INDEPENDENT query legs in a thread pool, preserving
-    order. Measured round 11: under AQE, a ``localCheckpoint(eager=
-    False)`` fence runs a real Spark job at construction time
-    (AdaptiveSparkPlanExec materializes its stages inside ``toRdd``),
-    so composing N independent gate/rank/report legs serially executes
-    N blocking jobs one after another while the executor idles — the
+    order. Measured round 11: under AQE, a lazy
+    :func:`~etl_weather_spark.operators.fence.fence` runs a real Spark
+    job at construction time (AdaptiveSparkPlanExec materializes its
+    stages inside ``toRdd``), so composing N independent
+    gate/rank/report legs serially executes N blocking jobs one after
+    another while the executor idles — the
     8→32-core scaling plateau the r10 verdict flagged. Submitting the
     leg constructions from threads lets the scheduler overlap those
     jobs (standard concurrent-jobs-within-one-application scheduling);

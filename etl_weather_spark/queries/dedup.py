@@ -15,6 +15,7 @@ from etl_weather_spark.operators.artifacts import (
     dataset_fingerprint,
     dataset_key,
 )
+from etl_weather_spark.operators.fence import fence
 from etl_weather_spark.queries._registry import _ORACLES, _QUERIES, load, query
 from etl_weather_spark.queries.relational import (
     _DOC_SAMPLE_SQL,
@@ -474,7 +475,7 @@ def simhash_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    sigs = simhash64_portable_kernel(docs).localCheckpoint(eager=False)
+    sigs = fence(simhash64_portable_kernel(docs))
     return simhash_band_pairs(sigs, hot_band_cap=64).orderBy("id_a", "id_b")
 
 @query("winnow_candidates", _JACCARD05_SQL)
@@ -737,9 +738,9 @@ def dup_cluster_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    pairs = pruned_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5).select(
+    pairs = fence(pruned_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5).select(
         "id_a", "id_b"
-    ).localCheckpoint(eager=False)
+    ))
     cc = connected_components(pairs)
 
     p1 = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
@@ -869,9 +870,9 @@ def dup_canonicals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_weather_spark.operators.graph import pagerank_scaled
 
     docs = load(spark, sf_dir, "documents")
-    pairs = pruned_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5).select(
+    pairs = fence(pruned_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5).select(
         "id_a", "id_b"
-    ).localCheckpoint(eager=False)
+    ))
     cc = connected_components(pairs)
     pr = pagerank_scaled(pairs, iterations=3)
     joined = cc.join(pr, "node")
@@ -916,13 +917,13 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_weather_spark.operators.graph import pagerank_scaled
 
     docs = load(spark, sf_dir, "documents")
-    # lazy localCheckpoint fences the pair-generator lineage so the 3
-    # Pregel rounds re-read a materialized edge relation instead of
+    # the fence cuts the pair-generator lineage so the 3 Pregel
+    # rounds re-read a materialized edge relation instead of
     # re-running the prefix-filter join per round (same fence as
     # dup_canonicals)
-    pairs = pruned_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5).select(
+    pairs = fence(pruned_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5).select(
         "id_a", "id_b"
-    ).localCheckpoint(eager=False)
+    ))
     pr = pagerank_scaled(pairs, iterations=3)
     return pr.select(F.col("node").alias("doc_id"), "rank_scaled").orderBy("doc_id")
 
@@ -1573,11 +1574,10 @@ def _lsh_recall_core(docs: DataFrame) -> DataFrame:
     # otherwise re-run the whole prefix-filter + verify generator and
     # the banding generator a second time — the un-fenced plan carried
     # 496 parquet scans / 1644 Exchanges at sf0.1 (the funnel-v2
-    # localCheckpoint lesson applied here)
-    exact = (
+    # lesson applied here)
+    exact = fence(
         verify_candidates_jaccard(docs, cand0, shingle_n=3, min_jaccard=0.5)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
     approx = minhash_lsh_pairs(
         docs, num_hashes=8, bands=4, shingle_n=3, hash_family="md5"
@@ -1587,10 +1587,10 @@ def _lsh_recall_core(docs: DataFrame) -> DataFrame:
     ).select(
         "est_jaccard", F.coalesce(F.col("is_true"), F.lit(0)).alias("is_true")
     )
-    bands = flagged.groupBy("est_jaccard").agg(
+    bands = fence(flagged.groupBy("est_jaccard").agg(
         F.count(F.lit(1)).cast("long").alias("n_candidates"),
         F.sum("is_true").cast("long").alias("n_true"),
-    ).localCheckpoint(eager=False)
+    ))
     tot = bands.agg(F.sum("n_true").cast("long").alias("n_hits_total")).crossJoin(
         exact.agg(F.count(F.lit(1)).cast("long").alias("n_exact_total"))
     )
@@ -2122,11 +2122,10 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "cluster_id"
     )
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    cs = (
+    cs = fence(
         cc.join(docs, "doc_id")
         .groupBy("cluster_id", "source")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=False)
     )
     a = cs.select(
         F.col("cluster_id"),
@@ -2274,7 +2273,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = pruned_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5).select(
         "id_a", "id_b", rnd(F.col("jaccard"), 6).alias("j6")
     )
-    pairs = pairs.localCheckpoint(eager=False)
+    pairs = fence(pairs)
     tot = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     thr = spark.createDataFrame(
         [(float(t),) for t in _SWEEP_THRESHOLDS], "threshold double"

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from etl_weather_spark.functions.rounding import dsum, rnd, sql_dsum
+from etl_weather_spark.operators.fence import fence
 from etl_weather_spark.queries._registry import (
     _ORACLES,
     _build_concurrently,
@@ -616,7 +617,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = cls.groupBy("source", "len_band", "lang").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    cl = cl.localCheckpoint(eager=False)
+    cl = fence(cl)
     classes = cl.groupBy("source", "len_band").agg(
         F.sum("n").cast("long").alias("n_docs")
     )
@@ -640,7 +641,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_docs").alias("n_docs"),
         rnd(dsum(F.abs(F.col("p6") - F.col("q6")), 7) * 0.5, 6).alias("tvd6"),
     )
-    tv = tv.localCheckpoint(eager=False)
+    tv = fence(tv)
     mx = tv.agg(
         F.max("tvd6").alias("max_tvd6"),
         F.sum(F.when(F.col("tvd6") > 0.2, F.col("n_docs")).otherwise(0))

@@ -8,6 +8,7 @@ imports changed.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from etl_weather_spark.operators.fence import fence
 from etl_weather_spark.queries._registry import load, query
 
 
@@ -782,10 +783,10 @@ def image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
     media = docs.mapInPandas(synth, schema="media_id long, payload binary")
-    # checkpoint the 3-long-per-row signature table so the decode+dhash
+    # fence the 3-long-per-row signature table so the decode+dhash
     # Arrow stage runs ONCE — the banding plan consumes it several
     # times (bucket-size agg + both self-join sides)
-    sigs = image_dhash(media).localCheckpoint(eager=False)
+    sigs = fence(image_dhash(media))
     return (
         simhash_band_pairs(sigs, id_col="media_id", max_hamming=3, hot_band_cap=64)
         .orderBy("id_a", "id_b")
@@ -927,9 +928,7 @@ def audio_envelope_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
     media = docs.mapInPandas(synth, schema="media_id long, payload binary")
-    fps = audio_envelope_fingerprint(media, n_bands=64).localCheckpoint(
-        eager=False
-    )
+    fps = fence(audio_envelope_fingerprint(media, n_bands=64))
     pairs = audio_envelope_pairs(fps, hot_bucket_cap=8)
     ra = fps.select(
         F.col("media_id").alias("id_a"), F.col("sample_rate").alias("rate_a")

@@ -26,6 +26,7 @@ from etl_weather_spark.functions.rounding import (
     sql_round,
 )
 from etl_weather_spark.functions.text import slugify_ascii
+from etl_weather_spark.operators.fence import fence
 from etl_weather_spark.operators.joins import asof_join_union
 from etl_weather_spark.operators.windows import (
     centered_mean,
@@ -2085,7 +2086,10 @@ def waiting_suppliers_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, no correlated subquery re-execution. Supplier dim
     broadcasts; final top-20 is TakeOrdered.
     """
-    li = (
+    # the narrow (orderkey, suppkey, is_late) relation has THREE
+    # consumers (l1, exists side, not-exists side) — fence its
+    # lineage so the lineitem⋈orders join runs once, not 3×
+    li = fence(
         load(spark, sf_dir, "lineitem")
         .join(
             load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate"),
@@ -2098,10 +2102,6 @@ def waiting_suppliers_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > 60
             ).alias("is_late"),
         )
-        # the narrow (orderkey, suppkey, is_late) relation has THREE
-        # consumers (l1, exists side, not-exists side) — fence its
-        # lineage so the lineitem⋈orders join runs once, not 3×
-        .localCheckpoint(eager=False)
     )
     l1 = li.filter("is_late").select("l_orderkey", "l_suppkey").distinct()
     others = li.select(
@@ -2925,16 +2925,14 @@ def weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: DAU distinct-ize is the dominant shuffle (keyed on
     user_id+date); the self-join is DAU-sized (users x days, tiny vs
     raw events) and co-partitions on user_id. The DAU relation has
-    THREE consumers (base counts + both join sides) — the lazy local
-    checkpoint makes the plan distinct-ize once per action instead of
-    re-scanning events per consumer (same fence as pagerank_scaled;
-    object-bound, so repeat benchmark runs still measure full work).
+    THREE consumers (base counts + both join sides) — the lazy fence
+    makes the plan distinct-ize once per action instead of re-scanning
+    events per consumer (same fence as pagerank_scaled).
     """
     ev = load(spark, sf_dir, "events")
-    dau = (
+    dau = fence(
         ev.select("user_id", F.to_date("ts").alias("d"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     base = dau.groupBy("d").agg(F.count(F.lit(1)).alias("n_users"))
     fut = dau.select("user_id", F.date_sub(F.col("d"), 7).alias("d"))
@@ -4943,7 +4941,7 @@ def _scalable_rank(
     # multi-shuffle signal chain — fence once (measured 2x on the 30x
     # ensemble; unlike the cheap-explode case in containment_candidates
     # where recompute beat materialization)
-    sv = sv.localCheckpoint(eager=False)
+    sv = fence(sv)
     h = sv.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("c"))
     w = Window.orderBy(F.col("s").desc() if desc else F.col("s").asc())
     cb = h.select("s", (F.sum("c").over(w) - F.col("c")).alias("cum_before"))
@@ -5505,7 +5503,7 @@ def zorder_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("ymin + (ymax - ymin) * 2 div 5").alias("qy_lo"),
         F.expr("ymin + (ymax - ymin) * 3 div 5").alias("qy_hi"),
     )
-    stats = stats.localCheckpoint(eager=False)
+    stats = fence(stats)
     bx = F.expr("(x - xmin) * 1023 div greatest(xmax - xmin, 1)")
     by = F.expr("(y - ymin) * 1023 div greatest(ymax - ymin, 1)")
     grid = pts.crossJoin(F.broadcast(stats)).select(

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from etl_weather_spark.functions.rounding import davg, dsum, rnd, sql_dsum
+from etl_weather_spark.operators.fence import fence
 from etl_weather_spark.queries._registry import _IVF_CENTROIDS, _ORACLES, load, query
 from etl_weather_spark.queries.dedup import decontaminate_overlap
 
@@ -835,7 +836,7 @@ def _kmeans_ctes(k: int, iters: int) -> list[str]:
     return ctes
 
 def _kmeans_oracle(k: int, iters: int) -> str:
-    """Unrolled-iteration SQL twin of operators/similarity.kmeans_lloyd
+    """Unrolled-iteration SQL twin of operators/similarity.kmeans_lloyd_full
     (CTE construction shared with the IVF recall audit's oracle)."""
     return (
         "WITH "
@@ -849,7 +850,7 @@ ORDER BY a.vec_id"""
 @query("kmeans_embedding_clusters", _kmeans_oracle(k=4, iters=3))
 def kmeans_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fully-DISTRIBUTED Lloyd k-means over the embedding corpus
-    (operators/similarity.kmeans_lloyd): 3 assignment/update rounds,
+    (operators/similarity.kmeans_lloyd_full): 3 assignment/update rounds,
     k=4, from deterministic lowest-id seeds — the clustering step of a
     semantic-dedup / data-curation pipeline, run entirely as relational
     algebra (no driver-held centroids, unlike the pyspark.ml quantizer
@@ -864,14 +865,14 @@ def kmeans_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round, the k·D centroid table broadcasts against the
     exploded components and the N·D·k fanout collapses map-side into
-    (vec_id, cluster) partial sums; lineage truncates via
-    localCheckpoint every checkpoint_every rounds for production
-    iteration counts (lazy at this demo depth).
+    (vec_id, cluster) partial sums; the operator fences its centroids
+    every FENCE_EVERY rounds for production iteration counts (lazy at
+    this demo depth).
     """
-    from etl_weather_spark.operators.similarity import kmeans_lloyd
+    from etl_weather_spark.operators.similarity import kmeans_lloyd_full
 
     emb = load(spark, sf_dir, "embeddings")
-    asg = kmeans_lloyd(emb, k=4, iters=3)
+    asg = kmeans_lloyd_full(emb, k=4, iters=3)[0]
     return (
         asg.join(emb.select("vec_id", "label"), "vec_id")
         .select(
@@ -1058,7 +1059,7 @@ def label_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism composes the proven pieces: centroid means via the
     1e7-quantized decimal path (label_centroid_norms), distances as
-    1e12-quantized integer sums (kmeans_lloyd), per-vector s rounded at
+    1e12-quantized integer sums (kmeans_lloyd_full), per-vector s rounded at
     6 dp then quantize-summed for the label mean. Scale: one
     (label,pos)-keyed centroid agg, then the L·D centroid table
     broadcasts against exploded components with map-side partial sums —
@@ -1588,7 +1589,7 @@ def matryoshka_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "neighbor_id")
             .withColumn("dim", F.lit(d).cast("long"))
         )
-    legs[0] = legs[0].localCheckpoint(eager=False)
+    legs[0] = fence(legs[0])
     alltk = legs[0]
     for leg in legs[1:]:
         alltk = alltk.unionByName(leg)
@@ -1853,9 +1854,9 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     The chosen set rides as ONE array row (the embedding_outlier_knn
     broadcast-array shape): each round is a shuffle-free min-distance
     projection over the corpus + a TakeOrdered-1 argmax + an
-    array_append — no driver collect anywhere; lazy localCheckpoint
-    fences keep the 8-round lineage flat. The oracle unrolls the
-    rounds as chained CTEs computing the bit-identical greedy
+    array_append — no driver collect anywhere; lazy fences keep the
+    8-round lineage flat. The oracle unrolls the rounds as chained
+    CTEs computing the bit-identical greedy
     recurrence (the kmeans/pca proof pattern).
 
     Scale: 8 passes over the corpus with ≤8 fold-dots per row each —
@@ -1865,13 +1866,13 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = 8
     emb = load(spark, sf_dir, "embeddings")
-    e = emb.select(
+    e = fence(emb.select(
         "vec_id", "label", as_double_array(F.col("embedding")).alias("v")
     ).withColumn(
         "nv", F.greatest(F.sqrt(dot(F.col("v"), F.col("v"))), F.lit(1e-12))
-    ).localCheckpoint(eager=False)
+    ))
     seed = e.orderBy("vec_id").limit(1)
-    centers = seed.select(
+    centers = fence(seed.select(
         F.array(
             F.struct(
                 F.col("vec_id").alias("cid"),
@@ -1879,7 +1880,7 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("nv").alias("cn"),
             )
         ).alias("cs")
-    ).localCheckpoint(eager=False)
+    ))
     rows = [
         seed.select(
             F.lit(1).cast("long").alias("round"),
@@ -1916,7 +1917,7 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         top1 = scored.orderBy(F.desc("md"), F.asc("vec_id")).limit(1)
-        top1 = top1.localCheckpoint(eager=False)
+        top1 = fence(top1)
         rows.append(
             top1.select(
                 F.lit(i).cast("long").alias("round"),
@@ -1925,7 +1926,7 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("md").alias("sel_dist6"),
             )
         )
-        centers = (
+        centers = fence(
             centers.crossJoin(F.broadcast(top1))
             .select(
                 F.array_append(
@@ -1937,7 +1938,6 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ),
                 ).alias("cs")
             )
-            .localCheckpoint(eager=False)
         )
     out = rows[0]
     for r in rows[1:]:
@@ -2082,15 +2082,14 @@ def ann_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and the per-pair cosine runs in the exact-fold numpy kernel
         # (same values, same salted top-k — cosine_topk_vs_pinned_queries)
         q_ids, q_mat = collect_ref_vectors(queries_df)
-        return (
+        return fence(
             cosine_topk_vs_pinned_queries(emb, q_ids, q_mat, k=topk)
             .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=False)
         )
 
     def build_assign():
         assign, cent = kmeans_lloyd_full(emb, k=4, iters=3)
-        return assign.localCheckpoint(eager=False), cent
+        return fence(assign), cent
 
     # the IVF chain and the brute-force leg are independent until the
     # hits join — build concurrently (round 11, _build_concurrently:
@@ -2121,11 +2120,10 @@ def ann_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two consumers (the scored ranking + the n_candidates row) would
     # each replay the probe window and the quantizer chain behind it —
     # fence the narrow (query_id, neighbor_id) relation once
-    cand = (
+    cand = fence(
         probe.join(assign.select("vec_id", "cluster"), "cluster")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .localCheckpoint(eager=False)
     )
     ev = emb.select(
         "vec_id", as_double_array(F.col("embedding")).alias("v")
@@ -2160,7 +2158,7 @@ def ann_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = topk_per_group(scored, group_col="query_id", k=topk).select(
         "query_id", "neighbor_id"
     )
-    approx = approx.localCheckpoint(eager=False)
+    approx = fence(approx)
     hits = approx.join(exact, ["query_id", "neighbor_id"]).groupBy(
         "query_id"
     ).agg(F.count(F.lit(1)).cast("long").alias("n_hit"))

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from etl_weather_spark.functions.rounding import dsum, rnd, sql_dsum, sql_round
 from etl_weather_spark.functions.text import doc_fingerprint, token_count
+from etl_weather_spark.operators.fence import fence, persisted
 from etl_weather_spark.queries._registry import _ORACLES, _QUERIES, load, query
 from etl_weather_spark.queries.relational import (
     _MD5_BUCKET_SQL,
@@ -678,13 +679,13 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy. Training runs the batched eager trainer
     (operators/textops._bpe_rounds) at every budget: one job per
     ~batch_cap provably-sequential-equivalent merges, ≤ pool_size-row
-    driver transfer per round, localCheckpoint-flat lineage — so 32k
+    driver transfer per round, fence-flat lineage — so 32k
     merges is ~32k/batch_cap jobs and never a 32k-deep plan (1k-merge
     artifact: ``git show 56ef44c:bpe1k.json``). The vocab is cached for
     the call only: the merge table comes back as a driver-built local
     table.
     """
-    from etl_weather_spark.operators.dedup import persisted, tokens
+    from etl_weather_spark.operators.dedup import tokens
     from etl_weather_spark.operators.textops import bpe_train
 
     docs = load(spark, sf_dir, "documents")
@@ -758,9 +759,8 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_segment_pieces(tok: DataFrame) -> DataFrame:
     """(word, n_pieces) under the 3-round fold-replay segmentation of
-    ``tok``'s vocab — checkpointed by bpe_segment, so the vocab cache
+    ``tok``'s vocab — fenced by bpe_segment, so the vocab cache
     (read by every training round) ends with this call."""
-    from etl_weather_spark.operators.dedup import persisted
     from etl_weather_spark.operators.textops import bpe_segment
 
     vocab = (
@@ -791,7 +791,7 @@ def bpe_ranked_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookups, independent of table size, and is the encode every
     deployed BPE tokenizer runs.
     """
-    from etl_weather_spark.operators.dedup import persisted, tokens
+    from etl_weather_spark.operators.dedup import tokens
     from etl_weather_spark.operators.textops import _bpe_rounds, bpe_encode_ranked
 
     docs = load(spark, sf_dir, "documents")
@@ -1505,7 +1505,7 @@ def _bigram_logprob_core(docs: DataFrame) -> DataFrame:
     were both measured — standalone the variants tie (~1.2 s at sf0.1),
     but inside composed consumers (ccnet_ppl_buckets fences the scored
     relation; the funnels fence survivors) the window form pipelines
-    better under the outer localCheckpoint and won every A/B (1.76 s vs
+    better under the outer fence and won every A/B (1.76 s vs
     2.05 s on ccnet), so it stays."""
     toks = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
@@ -1941,9 +1941,9 @@ def _dsir_core(docs: DataFrame) -> DataFrame:
     # the un-fenced form re-ran the tokenize→bigram→md5 chain three
     # times (dbc + the lang='en' count + the n_t total); lang is
     # constant per doc, so the extra group key changes nothing
-    dbc = b.groupBy("doc_id", "lang", "bucket").agg(
+    dbc = fence(b.groupBy("doc_id", "lang", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("c_d")
-    ).localCheckpoint(eager=False)
+    ))
     qb = dbc.groupBy("bucket").agg(F.sum("c_d").cast("long").alias("c_all"))
     tb = (
         dbc.filter(F.col("lang") == "en")
@@ -2175,24 +2175,23 @@ def _ccnet_ppl_core(docs: DataFrame) -> DataFrame:
     tercile boundaries both re-fit on whatever corpus is passed in."""
     from etl_weather_spark.operators.similarity import topk_per_group
 
-    scores = (
+    # two consumers (boundary sample + final bucket join) would
+    # otherwise each recompute the whole bigram-LM chain — fence the
+    # scored relation once
+    scores = fence(
         _bigram_logprob_core(docs)
         .select("doc_id", "avg_nll2")
         .join(docs.select("doc_id", "lang"), "doc_id")
-        # two consumers (boundary sample + final bucket join) would
-        # otherwise each recompute the whole bigram-LM chain — fence
-        # the scored relation once (lazy: materializes on first use)
-        .localCheckpoint(eager=False)
     )
     # two consumers (per-lang counts + the rank window) would each
     # replay the salted top-k sample — fence the ≤200·L-row relation
-    samp = topk_per_group(
+    samp = fence(topk_per_group(
         scores.withColumn("negid", (-F.col("doc_id")).cast("long")),
         group_col="lang",
         k=200,
         sim_col="negid",
         tie_col="doc_id",
-    ).select("doc_id", "lang", "avg_nll2").localCheckpoint(eager=False)
+    ).select("doc_id", "lang", "avg_nll2"))
     cnt = samp.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("ns"))
     w = Window.partitionBy("lang").orderBy("avg_nll2", "doc_id")
     rk = (
@@ -2594,7 +2593,7 @@ def proximity_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos0", "tok")
     ).select("doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "tok")
-    hits = toks.filter(F.col("tok").isin(terms)).localCheckpoint(eager=False)
+    hits = fence(toks.filter(F.col("tok").isin(terms)))
     b = hits.select(
         F.col("doc_id").alias("b_doc_id"),
         F.col("pos").alias("b_pos"),
@@ -3293,9 +3292,9 @@ def quality_score_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "z"
     )
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    d = ql.join(docs, "doc_id").select(
+    d = fence(ql.join(docs, "doc_id").select(
         "doc_id", "source", rnd(F.col("z"), 3).alias("z3")
-    ).localCheckpoint(eager=False)
+    ))
     sh = d.groupBy("source", "z3").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
@@ -3526,12 +3525,12 @@ def retrieval_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "rank")
     )
     docs = load(spark, sf_dir, "documents")
-    rel = (
+    rel = fence(
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok").isin(terms))
         .groupBy("doc_id")
         .agg(F.count_distinct("tok").cast("long").alias("rel"))
-    ).localCheckpoint(eager=False)
+    )
     nrel = rel.agg(
         F.count(F.when(F.col("rel") >= 2, 1)).cast("long").alias("n_relevant")
     )
@@ -3650,7 +3649,7 @@ def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = scored.groupBy("lang", "lang_pred").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    cells = cells.localCheckpoint(eager=False)
+    cells = fence(cells)
     rows_tot = cells.groupBy("lang").agg(
         F.sum("n").cast("long").alias("lang_total")
     )
@@ -3806,7 +3805,7 @@ def tokenizer_cost_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     VOCAB and fans back over a word-keyed join; the rollup is
     |sources| rows.
     """
-    from etl_weather_spark.operators.dedup import persisted, tokens
+    from etl_weather_spark.operators.dedup import tokens
     from etl_weather_spark.operators.textops import bpe_encode_ranked
 
     merges = _bpe_merges_committed(spark, sf_dir)
@@ -3819,7 +3818,7 @@ def tokenizer_cost_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", F.explode(tokens(F.col("text"))).alias("word")
     ).filter(F.col("word").rlike(_BPE_TOKEN_FILTER))
     # the token stream feeds three consumers (vocab, sw, nd): cached for
-    # the call, released once the per-source rollup is checkpointed
+    # the call, released once the per-source rollup is fenced
     with persisted(words) as tok:
         vocab = (
             tok.groupBy("word")
@@ -3842,7 +3841,7 @@ def tokenizer_cost_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         nd = tok.groupBy("source").agg(
             F.countDistinct("doc_id").cast("long").alias("n_docs")
         )
-        per = (
+        per = fence(
             sw.join(seg, "word")
             .groupBy("source")
             .agg(
@@ -3852,8 +3851,8 @@ def tokenizer_cost_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
             .join(nd, "source")
-            .select("source", "n_docs", "n_words", "n_pieces")
-            .localCheckpoint(eager=True)
+            .select("source", "n_docs", "n_words", "n_pieces"),
+            eager=True,
         )
     tot = per.agg(F.sum("n_pieces").cast("long").alias("total_pieces"))
     return (
@@ -3931,9 +3930,9 @@ def token_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the cost report's own plan + |sources|-row dimension math.
     """
-    rep = _QUERIES["tokenizer_cost_report"](spark, sf_dir).select(
+    rep = fence(_QUERIES["tokenizer_cost_report"](spark, sf_dir).select(
         "source", "n_pieces", "piece_share6"
-    ).localCheckpoint(eager=False)
+    ))
     tot = rep.agg(F.sum("n_pieces").cast("long").alias("total_pieces"))
     s = rep.select(
         "source",

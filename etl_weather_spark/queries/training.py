@@ -16,6 +16,7 @@ from etl_weather_spark.operators.artifacts import (
     dataset_fingerprint,
     dataset_key,
 )
+from etl_weather_spark.operators.fence import fence
 from etl_weather_spark.queries._registry import (
     _ORACLES,
     _QUERIES,
@@ -201,12 +202,12 @@ def _gate_flags(
     return flags.select("doc_id", *cols, *ks), names
 
 def _survivor_chain(
-    src: DataFrame, gates, trained=None, fence: bool = True
+    src: DataFrame, gates, trained=None, fenced: bool = True
 ) -> list[DataFrame]:
     """The sequential survivor chain, ``src`` first: gate i's core is
     fit on stage i-1's survivors and its keep-set semi-joined onto them;
     ``trained`` (survivors -> keep-set), when given, is the last gate.
-    ``fence`` puts a lazy localCheckpoint on every level: in a batch
+    ``fenced`` puts a lazy fence on every level: in a batch
     query each level has three consumers (its stage row, the next gate's
     fit and the next semi-join), and unfenced the plan re-expands the
     whole prior chain per level."""
@@ -219,7 +220,7 @@ def _survivor_chain(
     out = [src]
     for keep in keeps:
         s = out[-1].join(keep(out[-1]).select("doc_id"), "doc_id", "left_semi")
-        out.append(s.localCheckpoint(eager=False) if fence else s)
+        out.append(fence(s) if fenced else s)
     return out
 
 def _stage_rows(names: list[str], stages: list[DataFrame]) -> DataFrame:
@@ -332,7 +333,7 @@ def corpus_prep_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (optimization round 10): because every gate is GLOBALLY fit,
     stage i's survivor set is exactly {doc | gates 1..i all keep} — so
     instead of a sequential semi-join chain with a blocking
-    localCheckpoint per stage (8 serialized materialization jobs), the
+    fence per stage (8 serialized materialization jobs), the
     seven keep-sets LEFT-join once into ONE flags relation (the
     gate_attribution_audit shape — the gates then compute CONCURRENTLY
     inside one job), each doc's survival depth = its first failing
@@ -354,7 +355,7 @@ def _funnel_stage_report(flags: DataFrame, names: list[str]) -> DataFrame:
     survivor relation."""
     # survival depth: number of LEADING gates passed (first fail stops).
     # No fence on the flags: this aggregation pass is their only
-    # consumer, so a localCheckpoint would materialize a corpus-sized
+    # consumer, so a fence would materialize a corpus-sized
     # relation nothing re-reads (round 11)
     ks = [F.col(f"k{i}") for i in range(1, len(names) + 1)]
     depth = ks[0]
@@ -408,7 +409,7 @@ def _funnel_v3_oracle() -> str:
         # restricted corpus several times, and each survivor set feeds
         # both its stage row and the next restriction — inlined CTEs
         # would re-expand the whole prior chain multiplicatively
-        # (the SQL twin of the Spark side's localCheckpoint fences)
+        # (the SQL twin of the Spark side's fences)
         ctes.append(
             f"docs_s{i - 1} AS MATERIALIZED (SELECT d.* FROM documents d"
             f" JOIN s{i - 1} ON s{i - 1}.doc_id = d.doc_id)"
@@ -439,10 +440,10 @@ def corpus_prep_funnel_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: inherently sequential (stage i's fit needs stage i-1's
     survivors — the price of refitting), but each stage is the gate's
     own documented bounded plan over a shrinking corpus; the restricted
-    corpus is fenced once per stage (lazy localCheckpoint) because
+    corpus is fenced once per stage because
     every gate scans it several times.
     """
-    docs = load(spark, sf_dir, "documents").localCheckpoint(eager=False)
+    docs = fence(load(spark, sf_dir, "documents"))
     return _stage_rows(
         ["all_docs"] + [n for n, *_ in _FUNNEL_GATES],
         _survivor_chain(docs, _FUNNEL_GATES),
@@ -586,7 +587,7 @@ def curated_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     flags, names = _gate_flags(spark, sf_dir)
     # no fence on survivors (round 11): the left_semi below is its only
-    # consumer, so the localCheckpoint bought no reuse — it just ran a
+    # consumer, so the fence bought no reuse — it just ran a
     # blocking job at construction and materialized a corpus-sized
     # relation nothing re-read
     survivors = flags.filter(
@@ -674,7 +675,7 @@ def gate_attribution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     it; the flag relation is fenced once and reused by all 7 rows.
     """
     # no fence on the flags: the round 10 single-agg collapse left them
-    # with exactly one consumer, so a localCheckpoint only cost a
+    # with exactly one consumer, so a fence only cost a
     # full-tree plan pass at construction (these queries are
     # driver-bound at sf0.1) and a corpus-sized materialization nothing
     # re-read at scale (round 11)
@@ -781,7 +782,7 @@ def gate_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # COUNT(*) over langs are the identical longs the second flags agg
     # summed, so the rates are unchanged, the second corpus pass and
     # the crossJoin are gone, and with exactly one flags consumer left
-    # the localCheckpoint fence is vestigial (it cost a blocking
+    # the fence is vestigial (it cost a blocking
     # construction-time job and a corpus-sized materialization nothing
     # re-read).
     per_lang = flags.groupBy("lang").agg(
@@ -913,7 +914,7 @@ def quality_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = _QUERIES["gopher_quality_gate"](spark, sf_dir).select(
         "doc_id", F.col("keep").alias("label")
     )
-    joined = scores.join(labels, "doc_id").localCheckpoint(eager=False)
+    joined = fence(scores.join(labels, "doc_id"))
     thr = F.explode(
         F.array(*[F.lit(float(t)) for t in _PR_THRESHOLDS])
     ).alias("threshold")
@@ -1109,7 +1110,7 @@ def _qct_train_relation(
         "doc_id",
         F.when(F.col("keep"), F.lit(1.0)).otherwise(F.lit(0.0)).alias("y"),
     )
-    return feats.join(labels, "doc_id").localCheckpoint(eager=False)
+    return fence(feats.join(labels, "doc_id"))
 
 def _qct_z(prefix: str = "") -> F.Column:
     """The 6-dp logit — identical left-associated shape as _QCT_Z_SQL."""
@@ -1135,7 +1136,7 @@ def _qct_pass(train: DataFrame, w: DataFrame) -> DataFrame:
         6,
     )
     scored = scored.select("*", (p - F.col("y")).alias("err"))
-    return scored.agg(
+    return fence(scored.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.when(F.col("z") > 0, 1).otherwise(0))
         .cast("long")
@@ -1150,7 +1151,7 @@ def _qct_pass(train: DataFrame, w: DataFrame) -> DataFrame:
         dsum(F.col("err") * F.col("f_top"), 7).alias("s2"),
         dsum(F.col("err") * F.col("f_len"), 7).alias("s3"),
         dsum(F.col("err") * F.col("f_stop"), 7).alias("s4"),
-    ).localCheckpoint(eager=False)
+    ))
 
 def _qct_chain(
     spark: SparkSession,
@@ -1165,7 +1166,7 @@ def _qct_chain(
     label relation comes from the COMMITTED feature table (one token
     pass per corpus version, not one per training run)."""
     train = _qct_train_committed(spark, sf_dir, parity)
-    w = (
+    w = fence(
         spark.range(1)
         .select(
             F.lit(0.0).alias("wb"),
@@ -1174,7 +1175,6 @@ def _qct_chain(
             F.lit(0.0).alias("w3"),
             F.lit(0.0).alias("w4"),
         )
-        .localCheckpoint(eager=False)
     )
     lr = float(_QCT_LR)
     out = []
@@ -1189,7 +1189,7 @@ def _qct_chain(
                 ("w3", "s3"),
                 ("w4", "s4"),
             ]
-            w = (
+            w = fence(
                 w.crossJoin(F.broadcast(agg))
                 .select(
                     *[
@@ -1201,7 +1201,6 @@ def _qct_chain(
                         for wc, sc in grads
                     ]
                 )
-                .localCheckpoint(eager=False)
             )
     return out, w
 
@@ -1311,11 +1310,10 @@ def _qct_weights(
     (final by default) — what every trained-model audit broadcasts.
     Reading this replaces re-running the 8-round chain per audit: at
     100 TB, one training pass instead of eleven."""
-    return (
+    return fence(
         _qct_trajectory(spark, sf_dir, parity)
         .filter(F.col("round") == at_round)
         .select("wb", "w1", "w2", "w3", "w4")
-        .localCheckpoint(eager=False)
     )
 
 @query("quality_classifier_train", _qct_oracle(_QCT_ROUNDS))
@@ -1495,7 +1493,7 @@ def quality_pr_curve_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_trained = train.crossJoin(F.broadcast(w_final)).select(
         "doc_id", F.lit("trained").alias("model"), _qct_z().alias("z"), "y"
     )
-    scores = s_fixed.unionByName(s_trained).localCheckpoint(eager=False)
+    scores = fence(s_fixed.unionByName(s_trained))
     thr = F.explode(
         F.array(*[F.lit(float(t)) for t in _PR_THRESHOLDS])
     ).alias("threshold")
@@ -1836,7 +1834,7 @@ def quality_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     for feat, _w in _QCT_FEATS:
         aggs.append(dsum(F.col(feat), 7).alias(f"sx_{feat}"))
         aggs.append(dsum(F.col(feat) * F.col(feat), 7).alias(f"sxx_{feat}"))
-    stats = train.agg(*aggs).localCheckpoint(eager=False)
+    stats = fence(train.agg(*aggs))
     legs = None
     for feat, w in _QCT_FEATS:
         leg = stats.crossJoin(F.broadcast(w_final)).select(
@@ -1955,11 +1953,10 @@ def training_data_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     work, one shuffle on doc_id; decimal-quantized moments, IEEE sqrt.
     """
     # w0 is all-zero: p = 0.5 for every doc, no signal — rounds 1..R
-    traj = (
+    traj = fence(
         _qct_trajectory(spark, sf_dir)
         .filter(F.col("round") >= 1)
         .select("round", "wb", "w1", "w2", "w3", "w4")
-        .localCheckpoint(eager=False)
     )
     train = _qct_train_committed(spark, sf_dir)
     p = rnd(
@@ -2096,11 +2093,10 @@ def gate_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = _qct_train_committed(spark, sf_dir)
     docs = load(spark, sf_dir, "documents")
     fixed = _quality_logistic_core(docs).select("doc_id", F.col("keep").alias("l"))
-    sigs = (
+    sigs = fence(
         train.crossJoin(F.broadcast(w_final))
         .select("doc_id", (F.col("y") > 0.5).alias("g"), (_qct_z() > 0).alias("tr"))
         .join(fixed, "doc_id")
-        .localCheckpoint(eager=False)
     )
     pair_structs = [
         F.struct(F.lit(p).alias("pair"), F.col(a).alias("a"), F.col(b).alias("b"))
@@ -2242,10 +2238,10 @@ def quality_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         rnd(F.col("sp") / F.col("n"), 6).alias("mean_p6"),
         rnd(F.col("nk") * 1.0 / F.col("n"), 6).alias("keep_rate6"),
     )
-    gaps = curve.select(
+    gaps = fence(curve.select(
         "*",
         rnd(F.abs(F.col("mean_p6") - F.col("keep_rate6")), 6).alias("gap6"),
-    ).localCheckpoint(eager=False)
+    ))
     # decimal dsum, not a bare double SUM: n·gap6 terms are 6-dp
     # decimals, and partial-agg accumulation order must not be able to
     # flip the 6-dp half-boundary (the rounding.py hazard)
@@ -2397,7 +2393,7 @@ def quality_f1_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("tp") * 1.0 / F.greatest(F.col("tp") + F.col("fn"), F.lit(1)), 6
         ).alias("recall6"),
     )
-    f1v = f1s.select(
+    f1v = fence(f1s.select(
         "*",
         F.when(
             F.col("precision6") + F.col("recall6") > 0,
@@ -2411,7 +2407,7 @@ def quality_f1_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.lit(0.0))
         .alias("f1_6"),
-    ).localCheckpoint(eager=False)
+    ))
     stats = f1v.agg(
         rnd(dsum(F.col("f1_6"), 7) / F.lit(_BOOT_B), 6).alias("mean_f1_6"),
         F.element_at(F.sort_array(F.collect_list("f1_6")), 2).alias("f1_lo6"),
@@ -2566,11 +2562,10 @@ def corpus_prep_funnel_incremental(
     # consumed by BOTH the delta and the standing chain — fence once so
     # the committed-registry read + scoring projection is not replayed
     # per chain (the funnel-v2 discipline)
-    trained_keep = (
+    trained_keep = fence(
         train.crossJoin(F.broadcast(w_final))
         .filter(_qct_z() > 0)
         .select("doc_id")
-        .localCheckpoint(eager=False)
     )
 
     def chain(src: DataFrame) -> list[DataFrame]:
@@ -2680,14 +2675,14 @@ def quality_budget_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", _qct_z().alias("z")
     )
     hist = scored.groupBy("z").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    hist = hist.localCheckpoint(eager=False)
+    hist = fence(hist)
     w = (
         Window.orderBy(F.desc("z"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = hist.select(
+    cum = fence(hist.select(
         "z", F.sum("c").over(w).cast("long").alias("n_at_or_above")
-    ).localCheckpoint(eager=False)
+    ))
     tot = hist.agg(F.sum("c").cast("long").alias("n"))
     fracs = None
     for num, den in _BUDGET_FRACS:
@@ -2942,12 +2937,12 @@ def active_learning_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         sim_col="__negaz",
         tie_col="doc_id",
     )
-    sl = top.select(
+    sl = fence(top.select(
         "doc_id",
         "z",
         *_AL_FEATS,
         F.col("rank").cast("long").alias("unc_rank"),
-    ).localCheckpoint(eager=False)
+    ))
 
     def sqdist(c) -> F.Column:
         terms = None
@@ -2965,10 +2960,10 @@ def active_learning_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             prefix["doc_id"].alias("cid"),
         )
 
-    seed = sl.filter(F.col("unc_rank") == 1).localCheckpoint(eager=False)
-    centers = seed.select(
+    seed = fence(sl.filter(F.col("unc_rank") == 1))
+    centers = fence(seed.select(
         F.array(center_struct(F.struct(*[F.col(c) for c in sl.columns]))).alias("cs")
-    ).localCheckpoint(eager=False)
+    ))
     rows = [
         seed.select(
             F.lit(1).cast("long").alias("pick"),
@@ -2998,7 +2993,7 @@ def active_learning_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         top1 = cand.orderBy(F.desc("md"), F.asc("doc_id")).limit(1)
-        top1 = top1.localCheckpoint(eager=False)
+        top1 = fence(top1)
         rows.append(
             top1.select(
                 F.lit(i).cast("long").alias("pick"),
@@ -3008,7 +3003,7 @@ def active_learning_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("md").alias("sel_dist6"),
             )
         )
-        centers = (
+        centers = fence(
             centers.crossJoin(F.broadcast(top1))
             .select(
                 F.array_append(
@@ -3018,7 +3013,6 @@ def active_learning_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ),
                 ).alias("cs")
             )
-            .localCheckpoint(eager=False)
         )
     out = rows[0]
     for r in rows[1:]:

@@ -312,7 +312,8 @@ class EngineAPI:
         if path == "/compare":
             # reference /compare?cities=a,b (web.py:521-529): long-format
             # daily series per entity; here entities are event types
-            kinds = params.get("kinds", ["view,click"])[0].split(",")
+            raw = params.get("kinds", ["view,click"])[0].split(",")
+            kinds = list(dict.fromkeys(k for k in raw if k))
             if len(kinds) < 2:
                 return 400, {"error": "compare needs >=2 kinds"}
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_weather_spark.operators.fence import fence
 from etl_weather_spark.streaming._state import start_batches, write_batch
 
 __all__ = [
@@ -235,7 +236,7 @@ def stream_drift_monitor(
         docs_stream,
         checkpoint_dir,
         process_drift_batch,
-        ref_hist=ref_hist.localCheckpoint(eager=False),
+        ref_hist=fence(ref_hist),
         stats_dir=stats_dir,
         value_col=value_col,
         threshold=threshold,

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from etl_weather_spark.operators.dedup import simhash_band_pairs, simhash_cross_pairs
+from etl_weather_spark.operators.fence import fence
 from etl_weather_spark.operators.multimodal import image_dhash
 from etl_weather_spark.sources.snapshots import (
     batch_marker,
@@ -71,7 +72,7 @@ def process_media_batch(
     spark = batch_df.sparkSession
     from pyspark.sql import functions as F
 
-    sigs = image_dhash(batch_df).localCheckpoint(eager=True)
+    sigs = fence(image_dhash(batch_df), eager=True)
     within = simhash_band_pairs(
         sigs, id_col="media_id", max_hamming=max_hamming, hot_band_cap=hot_band_cap
     ).select(

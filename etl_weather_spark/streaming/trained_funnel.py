@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_weather_spark.operators.fence import fence
 from etl_weather_spark.sources.snapshots import (
     batch_marker,
     current_version,
@@ -77,7 +78,7 @@ def _gate_chain(batch: DataFrame, weights: dict[str, float]) -> list[DataFrame]:
         batch,
         _PER_DOC_GATES,
         trained=lambda s: score_docs_batch(s, weights).filter(F.col("keep")),
-        fence=False,
+        fenced=False,
     )
 
 
@@ -125,7 +126,7 @@ def process_trained_funnel_batch(
         batch_unique = batch_unique.join(
             standing, "fingerprint", "left_anti"
         )
-    survivors = batch_unique.localCheckpoint()  # one pass: count + append
+    survivors = fence(batch_unique, eager=True)  # one pass: count + append
     counts.append(survivors.count())
 
     if committed is None and counts[-1] > 0:

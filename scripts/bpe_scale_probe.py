@@ -68,9 +68,7 @@ def main() -> None:
 
     T._bpe_safe_batch = wrapped
     t0 = time.perf_counter()
-    merges, v = T._bpe_rounds(
-        vocab, n_merges, batch_cap=64, pool_size=512, checkpoint_every=4
-    )
+    merges, v = T._bpe_rounds(vocab, n_merges, batch_cap=64, pool_size=512)
     elapsed = round(time.perf_counter() - t0, 1)
     T._bpe_safe_batch = orig
     plan_lines = len(

@@ -11,11 +11,13 @@ Tag is 'before' or 'after'. Data dir from $SPARK_GRAFT_SF_DIR
 CAVEAT: building a query's plan is NOT free of Spark jobs, so SF
 affects capture time and, through AQE statistics, plan shape:
 
-- under AQE a lazy ``localCheckpoint(eager=False)`` fence runs a real
-  job while the plan is built (AdaptiveSparkPlanExec materializes its
-  stages inside ``toRdd``; see ``_registry._build_concurrently``);
-- five dedup operators checkpoint eagerly inside a call-scoped
-  persist — prefix_filter_candidates, containment_candidates,
+- every fence and cache goes through ``operators.fence``: under AQE a
+  lazy ``fence`` runs a real job while the plan is built
+  (AdaptiveSparkPlanExec materializes its stages inside ``toRdd``; see
+  ``_registry._build_concurrently``), and an eager one runs the whole
+  frame;
+- five dedup operators fence eagerly inside a ``persisted`` block —
+  prefix_filter_candidates, containment_candidates,
   pruned_jaccard_pairs, verify_candidates_jaccard and
   verify_candidates_containment — as does ``textops.bpe_segment``;
 - ``textops._bpe_rounds`` (bpe_train, bpe_segment and the BPE queries)
@@ -24,7 +26,7 @@ affects capture time and, through AQE statistics, plan shape:
   in operators/similarity) run small driver-side collects, hard-capped
   at REF_PIN_MAX_ROWS.
 
-The captured plan of such a query therefore starts at the checkpointed
+The captured plan of such a query therefore starts at the fenced
 leaves, not at the source scans.
 """
 

@@ -24,3 +24,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def count_fences(monkeypatch):
+    """Route one module's ``fence`` through a counter: ``count_fences(mod)``
+    returns the list that gets each call's ``eager`` flag appended."""
+
+    def install(module):
+        calls: list[bool] = []
+        real = module.fence
+
+        def counting(df, *, eager=False):
+            calls.append(eager)
+            return real(df, eager=eager)
+
+        monkeypatch.setattr(module, "fence", counting)
+        return calls
+
+    return install

@@ -31,13 +31,35 @@ def test_persisted_unpersists_when_block_raises(spark):
     failing operator cannot leave a CacheManager entry behind."""
     import pytest
 
-    from etl_weather_spark.operators.dedup import persisted
+    from etl_weather_spark.operators.fence import persisted
 
     with pytest.raises(RuntimeError, match="inside the block"):
         with persisted(spark.range(10).withColumn("x", F.col("id") * 3)) as cached:
             assert cached.storageLevel.useMemory or cached.storageLevel.useDisk
             raise RuntimeError("inside the block")
     assert not (cached.storageLevel.useMemory or cached.storageLevel.useDisk)
+
+
+def test_materialization_is_spelled_once():
+    """Every fence and every cache goes through ``operators/fence.py``:
+    no other package file calls ``localCheckpoint``, ``persist``,
+    ``unpersist``, ``cache`` or ``checkpoint`` itself."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "etl_weather_spark"
+    home = "operators/fence.py"
+    call = re.compile(
+        r"localCheckpoint\(|\.persist\(|\.unpersist\(|\.cache\(\)|\.checkpoint\("
+    )
+    strays = [
+        f"{path.relative_to(pkg).as_posix()}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() != home
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if call.search(line)
+    ]
+    assert strays == []
 
 
 def test_exact_dedup(spark):

@@ -95,7 +95,7 @@ def test_empty_and_tiny_inputs_round5_wave2_ops(spark):
         global_sentence_dedup,
         strip_boilerplate_sentences,
     )
-    from etl_weather_spark.operators.similarity import kmeans_lloyd
+    from etl_weather_spark.operators.similarity import kmeans_lloyd_full
     from etl_weather_spark.operators.textops import ngram_repetition_profile
 
     empty = spark.createDataFrame([], "doc_id long, text string")
@@ -105,13 +105,13 @@ def test_empty_and_tiny_inputs_round5_wave2_ops(spark):
     assert strip_boilerplate_sentences(esrc).count() == 0
 
     evecs = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assert kmeans_lloyd(evecs, k=3, iters=2).count() == 0
+    assert kmeans_lloyd_full(evecs, k=3, iters=2)[0].count() == 0
 
     # N < k: only N seeds exist; every vector still gets a cluster
     tiny = spark.createDataFrame(
         [(0, [0.0, 1.0]), (1, [1.0, 0.0])], "vec_id long, embedding array<float>"
     )
-    out = kmeans_lloyd(tiny, k=5, iters=2).collect()
+    out = kmeans_lloyd_full(tiny, k=5, iters=2)[0].collect()
     assert sorted(r.vec_id for r in out) == [0, 1]
     assert {r.cluster for r in out} <= {0, 1}
 

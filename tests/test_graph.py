@@ -40,11 +40,16 @@ def test_deterministic_across_runs_and_partitioning(spark):
     assert a == b  # integer arithmetic: partitioning/order cannot flip a bit
 
 
-def test_more_iterations_spread_chain_ranks(spark):
+def test_more_iterations_spread_chain_ranks(spark, count_fences):
+    from etl_weather_spark.operators import graph
+
+    fences = count_fences(graph)
     # on a path graph the center accumulates rank over rounds
     chain = [(i, i + 1) for i in range(1, 8)]
     r1 = _ranks(spark, chain, iterations=1)
-    r5 = _ranks(spark, chain, iterations=5, checkpoint_after=3)
+    assert len(fences) == 1  # the edge fence only
+    r5 = _ranks(spark, chain, iterations=5)
+    assert len(fences) == 3  # the edge fence + the round-4 rank fence
     center, leaf = 4, 1
     assert r5[center] > r5[leaf]
     assert r5[center] >= r1[center]  # center keeps gaining from both sides

@@ -13,6 +13,7 @@ import duckdb
 import pytest
 
 from etl_weather_spark import queries as q
+from etl_weather_spark.plans.explain import formatted_plan
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -46,15 +47,75 @@ def _multiset(rows, columns):
     return sorted("|".join(_norm(r[i]) for i in idx) for r in rows)
 
 
+#: queries whose plans may hold ArrowEvalPython / MapInPandas stages;
+#: every other registered query must plan without them
+ARROW_OK = {
+    # pandas/Arrow kernels by design
+    "slugify_parts", "geo_mean_values", "winnow_candidates",
+    "heavy_hitter_users", "media_payload_stats", "doc_pagerank",
+    "dup_canonicals", "udtf_melt_events", "word_freq",
+    "recommendation_text", "ann_cosine_lsh", "ann_cosine_ivf",
+    # round-2 wave 2/3: Bloom probe, PQ encode/ADC, CMS probe are
+    # Arrow kernels
+    "bloom_screen_new_docs", "ann_cosine_pq", "cms_user_freq",
+    # round-4: real stdlib PNG/WAV codec runs inside mapInPandas by
+    # design (decode is per-row CPU, Arrow-batched); png_meta_probe
+    # SYNTHESIZES payloads in pandas but the probe itself is pure
+    # Catalyst (asserted in test_binary_files.py's plan check)
+    "media_pixel_stats", "media_wav_stats", "png_meta_probe",
+    "media_resize_stats", "media_decimate_stats", "image_dhash_dedup",
+    # round-5: fractional-ratio conform stages (same codec path);
+    # rank-based BPE encode (vocab-bound Arrow pass by design)
+    "media_area_resize_stats", "media_resample_stats",
+    "bpe_ranked_encode_stats",
+    # persisted-PQ serving (ADC scan is an Arrow kernel by design)
+    "ann_pq_index_roundtrip",
+    # round-6: real baseline-JPEG decode runs inside mapInPandas by
+    # design (same per-row-CPU codec path as the PNG/WAV rows)
+    "media_jpeg_stats",
+    # round-7: WAV decode + envelope fingerprint is the same
+    # Arrow-batched codec path
+    "audio_envelope_dedup",
+    # round-10 (optimization): exact-fold numpy cosine kernels over
+    # a driver-pinned bounded reference set (bit-identical to the
+    # interpreted Catalyst array folds they replace); the release
+    # reports and the method-agreement cross-tab embed the
+    # semantic_decontaminate leg
+    "embedding_outlier_knn", "knn_label_spread",
+    "semantic_decontaminate", "decontamination_method_agreement",
+    "corpus_release_report", "corpus_release_report_v2",
+    "ann_ivf_recall_audit", "matryoshka_truncation_audit",
+    "ann_cosine_topk", "hybrid_search_rrf",
+    "embedding_near_dupes", "semantic_dedup", "semantic_dedup_ivf",
+    # round-11 (optimization): portable-SimHash votes kernel — one
+    # ArrowEvalPython projection over the Catalyst token array,
+    # bit-parity with the 64-sum aggregate form pinned in
+    # tests/test_kernel_parity.py
+    "simhash_sigs", "simhash_near_dupes",
+}
+
 ORACLES = q.oracle_sql()
 NAMES = sorted(q.queries())
 
 
 @pytest.mark.parametrize("name", NAMES)
 def test_query_matches_oracle(spark, sf_dir, duck, name):
+    """Rows equal the DuckDB oracle's, no cache entry is left behind,
+    and the plan holds the registry-wide invariants:
+
+    - no BatchEvalPython anywhere (row-at-a-time Python UDFs are the
+      canonical 100 TB anti-pattern; all Python here must be
+      Arrow-batched);
+    - no CartesianProduct (a true cartesian of two multi-row relations
+      is always a bug at scale; 1-row scalar joins plan as broadcast
+      nested loop, which is allowed);
+    - ArrowEvalPython / mapInPandas stages only in the known
+      kernel-backed pipelines (``ARROW_OK``).
+    """
     fn = q.queries()[name]
     try:
         sdf = fn(spark, sf_dir)
+        plan = formatted_plan(sdf)
         spark_cols = sdf.columns
         spark_rows = [tuple(r) for r in sdf.collect()]
     finally:
@@ -63,6 +124,10 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
         pinned = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
         spark.catalog.clearCache()
     assert not pinned, f"{name}: left a CacheManager entry after the query"
+    assert "BatchEvalPython" not in plan, f"{name}: BatchEvalPython"
+    assert "CartesianProduct" not in plan, f"{name}: CartesianProduct"
+    if "ArrowEvalPython" in plan or "MapInPandas" in plan:
+        assert name in ARROW_OK, f"{name}: unexpected Arrow/pandas stage"
 
     if name not in ORACLES:
         # weaker rows-only check for non-SQL-expressible ops

@@ -74,6 +74,10 @@ def test_compare_route(server):
     assert len(rows) == 60  # 30 days x 2 kinds, long format
     status, err = _get(server, "/compare?kinds=view")
     assert status == 400
+    # an empty or repeated kind does not count towards the two
+    for kinds in ("view,", "view,view"):
+        status, err = _get(server, f"/compare?kinds={kinds}")
+        assert status == 400, kinds
 
 
 def test_search_route(server):

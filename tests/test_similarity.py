@@ -368,7 +368,7 @@ def test_ivf_cells_seeded_sparse_offset_ids(spark):
 
 
 def _py_lloyd(vecs: dict[int, list[float]], k: int, iters: int):
-    """Independent pure-Python replay of kmeans_lloyd's quantized
+    """Independent pure-Python replay of kmeans_lloyd_full's quantized
     algebra: float64 components, 6-dp-rounded centroids, integer
     1e12-quantized squared distances, 1e7-quantized decimal means,
     ties to the lower cluster, empty clusters carried forward."""
@@ -423,7 +423,7 @@ def test_kmeans_lloyd_matches_pure_python_replay(spark):
     distance after 3 rounds on adversarially unstructured data."""
     import random
 
-    from etl_weather_spark.operators.similarity import kmeans_lloyd
+    from etl_weather_spark.operators.similarity import kmeans_lloyd_full
 
     rng = random.Random(7)
     vecs = {i: [rng.uniform(-1, 1) for _ in range(8)] for i in range(60)}
@@ -438,7 +438,7 @@ def test_kmeans_lloyd_matches_pure_python_replay(spark):
     }
     got = {
         r.vec_id: (r.qdist, r.cluster)
-        for r in kmeans_lloyd(df, k=3, iters=3).collect()
+        for r in kmeans_lloyd_full(df, k=3, iters=3)[0].collect()
     }
     want = _py_lloyd(stored, k=3, iters=3)
     assert got == want
@@ -448,13 +448,14 @@ def test_kmeans_lloyd_separates_blobs_and_carries_empty(spark):
     """Two well-separated blobs with k=2 split perfectly in 2 rounds;
     duplicate seeds leave one cluster empty without crashing (its
     centroid carries forward)."""
-    from etl_weather_spark.operators.similarity import kmeans_lloyd
+    from etl_weather_spark.operators.similarity import kmeans_lloyd_full
 
     blob = [(i, [10.0 + 0.01 * i, 10.0]) for i in range(5)] + [
         (i, [-10.0 - 0.01 * i, -10.0]) for i in range(5, 10)
     ]
     df = spark.createDataFrame(blob, "vec_id long, embedding array<float>")
-    out = {r.vec_id: r.cluster for r in kmeans_lloyd(df, k=2, iters=2).collect()}
+    assign = kmeans_lloyd_full(df, k=2, iters=2)[0]
+    out = {r.vec_id: r.cluster for r in assign.collect()}
     pos, neg = {out[i] for i in range(5)}, {out[i] for i in range(5, 10)}
     assert len(pos) == 1 and len(neg) == 1 and pos != neg
 
@@ -466,7 +467,8 @@ def test_kmeans_lloyd_separates_blobs_and_carries_empty(spark):
     # 0 and cluster 1 goes EMPTY; its carried-forward centroid [1,1]
     # then wins the [1,1] vectors back once cluster 0's mean drifts
     # toward [5,5] — no NaN, no lost rows, correct Lloyd dynamics
-    res = {r.vec_id: r.cluster for r in kmeans_lloyd(dup, k=2, iters=3).collect()}
+    assign = kmeans_lloyd_full(dup, k=2, iters=3)[0]
+    res = {r.vec_id: r.cluster for r in assign.collect()}
     assert len(res) == 3 and res[0] == res[1] == 1 and res[2] == 0
 
 

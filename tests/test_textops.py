@@ -321,7 +321,7 @@ def test_bpe_fold_greedy_overlap(spark):
     assert got == sorted(["aa|aa", "aa|a", "b|aa|a|b"])
 
 
-def test_bpe_batched_matches_sequential_reference_deep(spark):
+def test_bpe_batched_matches_sequential_reference_deep(spark, count_fences):
     """The batched trainer (_bpe_safe_batch: disjoint ranked prefix +
     fresh-merged-string guard + boundary/tie dominance) is merge-for-
     merge identical to sequential classic BPE, stressed DEEP: 40-merge
@@ -331,8 +331,10 @@ def test_bpe_batched_matches_sequential_reference_deep(spark):
 
     from pyspark.sql import functions as F
 
+    from etl_weather_spark.operators import textops
     from etl_weather_spark.operators.textops import bpe_train
 
+    fences = count_fences(textops)
     for seed, chars, n in [(0, "abc", 40), (1, "abcde", 40), (5, "abc", 25)]:
         rng = random.Random(seed)
         vocab: dict[str, int] = {}
@@ -344,12 +346,12 @@ def test_bpe_batched_matches_sequential_reference_deep(spark):
         ).select(F.split("word", "").alias("syms"), "freq")
         got = [
             (r.merge_round, r.left_sym, r.right_sym, r.merged, r.pair_count)
-            for r in bpe_train(
-                vdf, n, batch_cap=8, pool_size=12, checkpoint_every=3
-            ).collect()
+            for r in bpe_train(vdf, n, batch_cap=8, pool_size=12).collect()
         ]
         exp = [(i + 1, l, r, m, c) for i, (l, r, m, c) in enumerate(_py_bpe(vocab, n))]
         assert got == exp, f"seed={seed}"
+    # the 40-merge runs cross the round cadence: lazy fences were taken
+    assert fences and not any(fences)
 
 
 def test_bpe_encode_ranked_equals_fold_replay(spark):
@@ -394,7 +396,7 @@ def test_bpe_encode_ranked_equals_fold_replay(spark):
     assert any(len(s) < len(w) for w, s in ranked.items())
 
 
-def test_bpe_production_rounds_flat_lineage(spark):
+def test_bpe_production_rounds_flat_lineage(spark, count_fences):
     """150 merges complete with CHECKPOINT-BOUNDED lineage: the final
     vocab's optimized plan must be a handful of lines (a LogicalRDD
     scan + the post-checkpoint projections), never merges-deep — the
@@ -404,6 +406,8 @@ def test_bpe_production_rounds_flat_lineage(spark):
 
     from pyspark.sql import functions as F
 
+    from etl_weather_spark.operators import textops
+    from etl_weather_spark.operators.fence import FENCE_EVERY
     from etl_weather_spark.operators.textops import _bpe_rounds
 
     rng = random.Random(42)
@@ -419,14 +423,14 @@ def test_bpe_production_rounds_flat_lineage(spark):
         .persist()
     )
     vdf.count()
-    merges, v = _bpe_rounds(
-        vdf, 150, batch_cap=32, pool_size=256, checkpoint_every=4
-    )
+    fences = count_fences(textops)
+    merges, v = _bpe_rounds(vdf, 150, batch_cap=32, pool_size=256)
+    assert fences and not any(fences)
     assert len(merges) == 150
     assert [m[0] for m in merges] == list(range(1, 151))
     plan = v._jdf.queryExecution().optimizedPlan().numberedTreeString()
     depth = len(plan.splitlines())
-    assert depth <= 2 + 4, f"lineage not truncated: {depth} plan lines"
+    assert depth <= 2 + FENCE_EVERY, f"lineage not truncated: {depth} plan lines"
     vdf.unpersist()
 
 
