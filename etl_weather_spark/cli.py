@@ -312,7 +312,7 @@ def cmd_model(args: argparse.Namespace) -> int:
         return 0
     # show — strict read, refuses stale/missing
     fp = dataset_fingerprint(
-        args.sf_dir, ("documents",), {**q._QCT_PARAMS, "parity": None}
+        args.sf_dir, {**q._QCT_PARAMS, "parity": None}
     )
     try:
         df = read_artifact(
@@ -517,7 +517,7 @@ def cmd_datasheet(args: argparse.Namespace) -> int:
             ngram_jaccard_pairs,
         )
 
-        pairs = ngram_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5)
+        pairs = ngram_jaccard_pairs(docs, min_jaccard=0.5)
         cc = connected_components(pairs.select("id_a", "id_b"))
         n_pairs = pairs.count()
         n_clustered = cc.count()

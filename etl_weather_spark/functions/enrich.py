@@ -49,20 +49,16 @@ def enrich_batched(
     *,
     key_col: str,
     out_col: str = "enrichment",
-    prompt: str = "One fun fact about {key}.",
     model: Callable[[str], str] = deterministic_fake_model,
-    retries: int = 3,
-    backoff: float = 1.6,
     initial_delay: float = 0.1,
-    min_batch_interval_s: float = 0.0,
     sleep: Callable[[float], None] = time.sleep,
 ) -> DataFrame:
-    """Add ``out_col`` = model(prompt.format(key=...)) per distinct key.
+    """Add ``out_col`` = model("One fun fact about <key>.") per distinct key.
 
     Executes as one ``mapInPandas`` over the DISTINCT keys (call count
     = unique keys, not rows); callers join the result back to the full
     table (broadcast — the enrichment table is keys-sized). Each key
-    retries ``retries`` times with exponential backoff; a key that still
+    gets 3 attempts with exponential backoff (x1.6); a key that still
     fails yields a null enrichment plus an ``enrich_error`` string —
     per-key isolation, one bad key never kills the stage.
     """
@@ -70,27 +66,21 @@ def enrich_batched(
     out_schema = f"{key_col} string, {out_col} string, enrich_error string"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        last_call = 0.0
         for pdf in batches:
-            if min_batch_interval_s > 0:
-                wait = last_call + min_batch_interval_s - time.monotonic()
-                if wait > 0:
-                    sleep(wait)
-                last_call = time.monotonic()
             out, errs = [], []
             for key in pdf[key_col].astype(str):
                 delay = initial_delay
                 result, err = None, None
-                for attempt in range(1, retries + 1):
+                for attempt in range(1, 4):
                     try:
-                        result = model(prompt.format(key=key))
+                        result = model(f"One fun fact about {key}.")
                         err = None
                         break
                     except Exception as exc:  # noqa: BLE001 — per-key isolation
                         err = f"{type(exc).__name__}: {exc}"[:200]
-                        if attempt < retries:
+                        if attempt < 3:
                             sleep(delay)
-                            delay *= backoff
+                            delay *= 1.6
                 out.append(result)
                 errs.append(err)
             yield pd.DataFrame(

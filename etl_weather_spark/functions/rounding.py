@@ -103,5 +103,5 @@ def sql_dsum(expr: str, scale: int = 2) -> str:
     return f"(CAST(SUM(CAST(FLOOR(({expr}) * {s} + 0.5) AS BIGINT)) AS DOUBLE) / {s})"
 
 
-def sql_davg(expr: str, scale: int = 2) -> str:
-    return f"({sql_dsum(expr, scale)} / COUNT({expr}))"
+def sql_davg(expr: str) -> str:
+    return f"({sql_dsum(expr)} / COUNT({expr}))"

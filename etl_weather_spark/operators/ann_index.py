@@ -96,27 +96,11 @@ class PQIndex:
         )
 
 
-def build_pq_index(
-    corpus: DataFrame,
-    path: str,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    seed: int = 42,
-) -> PQIndex:
+def build_pq_index(corpus: DataFrame, path: str) -> PQIndex:
     """Train + encode + commit. Overwrites any index at ``path``."""
     spark = corpus.sparkSession
-    books = pq_train_codebooks(
-        corpus,
-        vec_col=vec_col,
-        id_col=id_col,
-        n_subspaces=n_subspaces,
-        n_codes=n_codes,
-        seed=seed,
-    )
-    codes = pq_encode(corpus, books, vec_col=vec_col, id_col=id_col)
+    books = pq_train_codebooks(corpus)
+    codes = pq_encode(corpus, books)
     snapshot_write(codes, _codes_table(path), mode="overwrite", ingest_ts="build")
     n_sub, n_cd, sub = books.shape
     flat = [
@@ -131,12 +115,12 @@ def build_pq_index(
         pd.DataFrame(flat, columns=["s", "c", "d", "value"])
     ).coalesce(1).write.mode("overwrite").parquet(_books_path(path))
     meta = {
-        "vec_col": vec_col,
-        "id_col": id_col,
+        "vec_col": "embedding",
+        "id_col": "vec_id",
         "n_subspaces": n_sub,
         "n_codes": n_cd,
         "sub_dim": sub,
-        "seed": seed,
+        "seed": 42,
     }
     with open(_meta_path(path), "w") as f:
         json.dump(meta, f)

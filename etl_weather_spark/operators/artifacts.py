@@ -123,22 +123,16 @@ def _stat_walk(path: str) -> Iterable[str]:
             yield f"{rel}:{st.st_size}:{st.st_mtime_ns}"
 
 
-def dataset_fingerprint(
-    sf_dir: str,
-    tables: Iterable[str] = ("documents",),
-    params: dict | None = None,
-) -> str:
-    """Fingerprint of (source tables, producer parameters): stat-level
-    content identity of every parquet the producer read, plus the
-    algorithm version/hyperparameters, so EITHER data or recipe
-    changing makes the committed artifact stale."""
+def dataset_fingerprint(sf_dir: str, params: dict | None = None) -> str:
+    """Fingerprint of (source table, producer parameters): stat-level
+    content identity of the ``documents`` parquet the producers read,
+    plus the algorithm version/hyperparameters, so EITHER data or
+    recipe changing makes the committed artifact stale."""
     h = hashlib.sha256()
     h.update(os.path.realpath(sf_dir).encode())
-    for t in sorted(tables):
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        h.update(f"\x00{t}\x00".encode())
-        for line in _stat_walk(p):
-            h.update(line.encode())
+    h.update(b"\x00documents\x00")
+    for line in _stat_walk(os.path.join(sf_dir, "documents.parquet")):
+        h.update(line.encode())
     if params:
         h.update(json.dumps(params, sort_keys=True, default=str).encode())
     return h.hexdigest()
@@ -402,7 +396,6 @@ def read_release_artifact(
     *,
     expect_fingerprint: str,
     expect_data_fingerprint: str,
-    version: int | None = None,
 ) -> DataFrame:
     """STRICT pinned read of one artifact through the release catalog.
 
@@ -414,7 +407,7 @@ def read_release_artifact(
     since the pin) → :class:`MixedReleaseError`. Only a fully
     consistent pin is ever served, and the read is at the pinned
     snapshot version — immune to later republishes."""
-    rel = release_meta(key, version=version)
+    rel = release_meta(key)
     if rel["data_fingerprint"] != expect_data_fingerprint:
         raise ArtifactStaleError(
             f"release v{rel['version']} for {key} was cut from corpus "

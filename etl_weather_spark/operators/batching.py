@@ -41,28 +41,27 @@ def pack_token_batches(
     token_col: Column,
     *,
     budget: int,
-    order_col: str = "doc_id",
     group_size: int = 4096,
 ) -> DataFrame:
-    """(order_col, n_tok, batch_id) with batch_id = floor(prefix/budget)
+    """(doc_id, n_tok, batch_id) with batch_id = floor(prefix/budget)
     — fixed boundaries in prefix space, NOT at-most-budget greedy fill
     (see module docstring for the exact boundary rule).
 
     ``token_col``: expression producing the per-row token count (kept an
     expression so callers choose the tokenizer — arithmetic whitespace
     count, BPE-ish regex, a real tokenizer's stored count column).
-    ``order_col`` must be numeric and roughly dense (ids) so contiguous
+    ``doc_id`` must be numeric and roughly dense so contiguous
     ``div group_size`` buckets are balanced; the packing order is
-    ascending ``order_col``.
+    ascending ``doc_id``.
     """
     base = df.select(
-        F.col(order_col),
+        F.col("doc_id"),
         token_col.cast("long").alias("n_tok"),
-        F.expr(f"CAST({order_col} AS BIGINT) div {group_size}").alias("__bkt"),
+        F.expr(f"CAST(doc_id AS BIGINT) div {group_size}").alias("__bkt"),
     )
     w_in = (
         Window.partitionBy("__bkt")
-        .orderBy(order_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     within = F.coalesce(F.sum("n_tok").over(w_in), F.lit(0))
@@ -74,7 +73,7 @@ def pack_token_batches(
     return (
         base.join(F.broadcast(offsets), "__bkt")
         .select(
-            order_col,
+            "doc_id",
             "n_tok",
             F.floor((F.col("__off") + within) / F.lit(float(budget))).cast("long").alias("batch_id"),
         )

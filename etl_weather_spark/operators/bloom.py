@@ -51,15 +51,15 @@ __all__ = [
 ]
 
 
-def optimal_params(n_items: int, fp_rate: float = 0.01) -> tuple[int, int]:
-    """(m_bits, k_hashes) for ``n_items`` keys at target ``fp_rate``.
+def optimal_params(n_items: int) -> tuple[int, int]:
+    """(m_bits, k_hashes) for ``n_items`` keys at a 1% false-positive rate.
 
     m is rounded up to a multiple of 64 so the bitmap packs into u64
     words with no ragged tail.
     """
     if n_items <= 0:
         return 64, 1
-    m = int(math.ceil(-n_items * math.log(fp_rate) / (math.log(2) ** 2)))
+    m = int(math.ceil(-n_items * math.log(0.01) / (math.log(2) ** 2)))
     m = ((m + 63) // 64) * 64
     k = max(1, round(m / n_items * math.log(2)))
     return m, k
@@ -147,27 +147,17 @@ def bloom_might_contain(
     return probe(key.cast("string"))
 
 
-def bloom_screen(
-    index: DataFrame,
-    batch: DataFrame,
-    *,
-    key_col: str,
-    fp_rate: float = 0.01,
-    n_index_hint: int | None = None,
-) -> DataFrame:
+def bloom_screen(index: DataFrame, batch: DataFrame, *, key_col: str) -> DataFrame:
     """EXACT novelty screen of ``batch`` against ``index``:
     ``batch`` columns + ``is_new`` boolean.
 
     Bloom answers most rows locally (might_contain=False ⇒ new, no
     shuffle); only the maybe-duplicates are confirmed with a semi join
     against the index — so false positives never surface and the
-    result equals a plain anti-join, at a fraction of the shuffle.
-
-    ``n_index_hint`` sizes the filter without a counting job (pass the
-    known/approximate index cardinality at scale; default counts).
+    result equals a plain anti-join, at a fraction of the shuffle. The
+    filter is sized by ``index.count()``.
     """
-    n = n_index_hint if n_index_hint is not None else index.count()
-    m_bits, k = optimal_params(max(n, 1), fp_rate)
+    m_bits, k = optimal_params(max(index.count(), 1))
     bitmap = bloom_build(index, key_col, m_bits=m_bits, k=k)
 
     maybe = bloom_might_contain(

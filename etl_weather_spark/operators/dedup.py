@@ -32,14 +32,14 @@ from etl_weather_spark.functions.text import doc_fingerprint
 from etl_weather_spark.operators.fence import fence, persisted
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Keep one doc per exact (normalized) content; returns survivors.
 
     Shuffle carries (fingerprint, id) — 40 bytes/doc regardless of size.
     """
-    fp = docs.select(F.col(id_col), doc_fingerprint(F.col(text_col)).alias("fingerprint"))
-    keep = fp.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    return docs.join(keep, on=id_col, how="leftsemi")
+    fp = docs.select(F.col("doc_id"), doc_fingerprint(F.col("text")).alias("fingerprint"))
+    keep = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("doc_id"))
+    return docs.join(keep, on="doc_id", how="leftsemi")
 
 
 def tokens(text: Column) -> Column:
@@ -115,8 +115,6 @@ def _hash_expr(shingle: Column, seed: int, family: str) -> Column:
 def minhash_signatures(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     shingle_n: int = 2,
     hash_family: str = "xxhash64",
@@ -128,29 +126,25 @@ def minhash_signatures(
     map-side-partially. At 100 TB, H mins per doc ≈ H*8 bytes/doc state.
     """
     sh = exploded_shingles(
-        docs, text_col=text_col, keep_cols=[id_col], n=shingle_n
+        docs, text_col="text", keep_cols=["doc_id"], n=shingle_n
     )
     aggs = [
         F.min(_hash_expr(F.col("sh"), i, hash_family)).alias(f"s{i}")
         for i in range(num_hashes)
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_lsh_pairs(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 8,
-    bands: int = 4,
     shingle_n: int = 2,
     hash_family: str = "xxhash64",
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH candidate pairs (id_a < id_b) with estimated Jaccard similarity.
 
-    Signature → ``bands`` bands of ``num_hashes/bands`` rows each; docs
+    Signature → 4 bands of ``num_hashes/4`` rows each; docs
     sharing any band bucket become candidates. The self-join keys on
     (band_index, band_value), so comparisons happen only inside buckets —
     the scalable alternative to an O(n²) cross join. Estimated similarity
@@ -166,13 +160,8 @@ def minhash_lsh_pairs(
     (branched subtrees only share identical exchanges, and each join
     side projects differently — measured ~2x the query). The estimate
     is computed per pair inside the posting-list expansion, so the
-    final dedup is a distinct over three narrow columns.
-
-    ``max_bucket_size`` drops buckets with more members than that
-    before pair expansion: a bucket of f docs emits f²/2 pairs, so at
-    corpus scale a degenerate bucket (empty-ish docs sharing a trivial
-    band) would otherwise dominate the shuffle. None (default) keeps
-    exact LSH semantics — every bucket expands.
+    final dedup is a distinct over three narrow columns. Every bucket
+    expands (exact LSH semantics).
 
     Operating point (recall is probabilistic per pair): with b bands of
     r rows, P(candidate | sig-Jaccard s) = 1-(1-s^r)^b. The default
@@ -182,30 +171,28 @@ def minhash_lsh_pairs(
     cost of a looser band layout is candidate volume, and the only loss
     of a tighter one is recall (measured: 100% of true trigram-J>=0.5
     pairs at sf0.001-0.1; 2557/2560 on a 10x salted corpus,
-    scripts/bench_scale.py). Raise bands (e.g. 8x2) only with a verify
-    stage attached.
+    scripts/bench_scale.py).
     """
-    rows_per_band = num_hashes // bands
-    assert rows_per_band * bands == num_hashes
+    rows_per_band = num_hashes // 4
+    assert rows_per_band * 4 == num_hashes
     sig = minhash_signatures(
-        docs, text_col=text_col, id_col=id_col,
-        num_hashes=num_hashes, shingle_n=shingle_n, hash_family=hash_family,
+        docs, num_hashes=num_hashes, shingle_n=shingle_n, hash_family=hash_family
     )
     band_cols = [
         F.concat_ws("#", *[F.col(f"s{b * rows_per_band + r}").cast("string") for r in range(rows_per_band)]).alias(f"b{b}")
-        for b in range(bands)
+        for b in range(4)
     ]
     buckets = sig.select(
-        id_col,
+        "doc_id",
         F.array(*[F.col(f"s{i}") for i in range(num_hashes)]).alias("sig"),
         F.explode(
             F.arrays_zip(
-                F.array(*[F.lit(b) for b in range(bands)]).alias("band"),
+                F.array(*[F.lit(b) for b in range(4)]).alias("band"),
                 F.array(*band_cols).alias("bucket"),
             )
         ).alias("bb"),
     ).select(
-        id_col,
+        "doc_id",
         "sig",
         F.col("bb.band").alias("band"),
         F.col("bb.bucket").alias("bucket"),
@@ -213,11 +200,9 @@ def minhash_lsh_pairs(
 
     posting = (
         buckets.groupBy("band", "bucket")
-        .agg(F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("sig").alias("sig"))).alias("members"))
+        .agg(F.collect_list(F.struct(F.col("doc_id").alias("id"), F.col("sig").alias("sig"))).alias("members"))
         .filter(F.size("members") >= 2)
     )
-    if max_bucket_size is not None:
-        posting = posting.filter(F.size("members") <= max_bucket_size)
     # ids are unique, so sorting the structs orders by id (first field);
     # expansion emits each in-bucket pair once with id_a < id_b
     members = F.array_sort("members")
@@ -253,13 +238,7 @@ def minhash_lsh_cross_pairs(
     index_docs: DataFrame,
     new_docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
     bands: int = 4,
-    shingle_n: int = 2,
-    hash_family: str = "xxhash64",
-    max_bucket_freq: int | None = None,
 ) -> DataFrame:
     """Incremental-dedup candidates: (index_id, new_id) pairs where a
     NEW document shares an LSH band bucket with an already-INDEXED
@@ -277,24 +256,24 @@ def minhash_lsh_cross_pairs(
     consumer, same rationale as :func:`minhash_lsh_pairs`): each
     bucket's index-side and new-side member arrays cross, so only
     cross-side pairs ever materialize; intra-corpus and intra-batch
-    pairs (other queries' jobs) cost nothing here. ``max_bucket_freq``
-    caps degenerate buckets before expansion (f_idx·f_new blowup).
+    pairs (other queries' jobs) cost nothing here. Signatures are 16
+    xxhash64 minhashes over word-2-shingles.
     """
-    rows_per_band = num_hashes // bands
-    assert rows_per_band * bands == num_hashes
+    rows_per_band = 16 // bands
+    assert rows_per_band * bands == 16
     tagged = (
-        index_docs.select(F.col(id_col), F.col(text_col))
+        index_docs.select(F.col("doc_id"), F.col("text"))
         .withColumn("__side", F.lit(0))
         .unionByName(
-            new_docs.select(F.col(id_col), F.col(text_col)).withColumn("__side", F.lit(1))
+            new_docs.select(F.col("doc_id"), F.col("text")).withColumn("__side", F.lit(1))
         )
     )
-    sh = exploded_shingles(tagged, text_col=text_col, keep_cols=[id_col, "__side"], n=shingle_n)
+    sh = exploded_shingles(tagged, text_col="text", keep_cols=["doc_id", "__side"], n=2)
     aggs = [
-        F.min(_hash_expr(F.col("sh"), i, hash_family)).alias(f"s{i}")
-        for i in range(num_hashes)
+        F.min(_hash_expr(F.col("sh"), i, "xxhash64")).alias(f"s{i}")
+        for i in range(16)
     ]
-    sig = sh.groupBy(id_col, "__side").agg(*aggs)
+    sig = sh.groupBy("doc_id", "__side").agg(*aggs)
     band_cols = [
         F.concat_ws(
             "#", *[F.col(f"s{b * rows_per_band + r}").cast("string") for r in range(rows_per_band)]
@@ -302,7 +281,7 @@ def minhash_lsh_cross_pairs(
         for b in range(bands)
     ]
     buckets = sig.select(
-        id_col,
+        "doc_id",
         "__side",
         F.explode(
             F.arrays_zip(
@@ -310,15 +289,13 @@ def minhash_lsh_cross_pairs(
                 F.array(*band_cols).alias("bucket"),
             )
         ).alias("bb"),
-    ).select(id_col, "__side", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    ).select("doc_id", "__side", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
     posting = buckets.groupBy("band", "bucket").agg(
-        F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("__side").alias("side"))).alias(
+        F.collect_list(F.struct(F.col("doc_id").alias("id"), F.col("__side").alias("side"))).alias(
             "members"
         )
     )
-    if max_bucket_freq is not None:
-        posting = posting.filter(F.size("members") <= max_bucket_freq)
     idx_ids = F.transform(
         F.filter(F.col("members"), lambda m: m["side"] == 0), lambda m: m["id"]
     )
@@ -338,53 +315,36 @@ def minhash_lsh_cross_pairs(
     )
 
 
-def minhash_sig_table(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    shingle_n: int = 2,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
+def minhash_sig_table(docs: DataFrame, *, num_hashes: int = 16) -> DataFrame:
     """(id, sig) rows for a PERSISTED signature index — ``sig`` is one
-    array column (long for xxhash64, string for md5), the storable form
+    array column of xxhash64 minhashes (longs), the storable form
     of the MinHash index an incremental dedup pipeline appends to: the
     signature is a pure function of the text, so the index table is
     append-only and never recomputed for already-ingested documents.
     """
-    sig = minhash_signatures(
-        docs, text_col=text_col, id_col=id_col,
-        num_hashes=num_hashes, shingle_n=shingle_n, hash_family=hash_family,
-    )
+    sig = minhash_signatures(docs, num_hashes=num_hashes)
     return sig.select(
-        F.col(id_col), F.array(*[F.col(f"s{i}") for i in range(num_hashes)]).alias("sig")
+        F.col("doc_id"), F.array(*[F.col(f"s{i}") for i in range(num_hashes)]).alias("sig")
     )
 
 
-def lsh_band_buckets_from_sigs(
-    sigs: DataFrame,
-    *,
-    bands: int,
-    id_col: str = "doc_id",
-    sig_col: str = "sig",
-) -> DataFrame:
+def lsh_band_buckets_from_sigs(sigs: DataFrame, *, bands: int) -> DataFrame:
     """(id, band, bucket) from a stored signature-array table."""
     # rows-per-band derives from the array length per row (constant by
     # construction), so no driver action is needed to read the width
     band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1)))
-    rows_per_band = (F.size(sig_col) / bands).cast("int")
-    exploded = sigs.select(F.col(id_col), F.col(sig_col), band_idx.alias("band"))
+    rows_per_band = (F.size("sig") / bands).cast("int")
+    exploded = sigs.select(F.col("doc_id"), F.col("sig"), band_idx.alias("band"))
     bucket = F.concat_ws(
         "#",
         F.transform(
             F.slice(
-                F.col(sig_col), F.col("band") * rows_per_band + 1, rows_per_band
+                F.col("sig"), F.col("band") * rows_per_band + 1, rows_per_band
             ),
             lambda v: v.cast("string"),
         ),
     )
-    return exploded.select(id_col, "band", bucket.alias("bucket"))
+    return exploded.select("doc_id", "band", bucket.alias("bucket"))
 
 
 def screen_against_sig_index(
@@ -392,8 +352,6 @@ def screen_against_sig_index(
     new_sigs: DataFrame,
     *,
     bands: int,
-    id_col: str = "doc_id",
-    sig_col: str = "sig",
 ) -> DataFrame:
     """(index_id, new_id) LSH candidates of a new batch against a STORED
     signature index — the steady-state loop of incremental dedup: the
@@ -406,12 +364,12 @@ def screen_against_sig_index(
     shuffled. Each side is consumed exactly once (two independent
     subtrees, not branches of a shared plan), so no double-evaluation.
     """
-    ib = lsh_band_buckets_from_sigs(index_sigs, bands=bands, id_col=id_col, sig_col=sig_col)
-    nb = lsh_band_buckets_from_sigs(new_sigs, bands=bands, id_col=id_col, sig_col=sig_col)
+    ib = lsh_band_buckets_from_sigs(index_sigs, bands=bands)
+    nb = lsh_band_buckets_from_sigs(new_sigs, bands=bands)
     return (
-        ib.select("band", "bucket", F.col(id_col).alias("index_id"))
+        ib.select("band", "bucket", F.col("doc_id").alias("index_id"))
         .join(
-            nb.select("band", "bucket", F.col(id_col).alias("new_id")),
+            nb.select("band", "bucket", F.col("doc_id").alias("new_id")),
             ["band", "bucket"],
         )
         .select("index_id", "new_id")
@@ -419,7 +377,7 @@ def screen_against_sig_index(
     )
 
 
-def simhash64(docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per document (near-dup fingerprint).
 
     Each token votes its xxhash64 bits; the signature's bit i is the
@@ -430,20 +388,20 @@ def simhash64(docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
         # bit 63 as two's-complement: 1<<63 overflows a signed long literal
         return F.lit(1 << i if i < 63 else -(1 << 63))
 
-    tok = widen_narrow_input(docs, id_col).select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
+    tok = widen_narrow_input(docs, "doc_id").select(
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok")
     )
     h = F.xxhash64("tok")
     bit_votes = [
         F.sum(F.when(h.bitwiseAND(bit_mask(i)) != 0, 1).otherwise(-1)).alias(f"v{i}")
         for i in range(64)
     ]
-    votes = tok.groupBy(id_col).agg(*bit_votes)
+    votes = tok.groupBy("doc_id").agg(*bit_votes)
     sig = None
     for i in range(64):
         bit = F.when(F.col(f"v{i}") > 0, bit_mask(i)).otherwise(F.lit(0))
         sig = bit if sig is None else sig.bitwiseOR(bit)
-    return votes.select(F.col(id_col), sig.alias("simhash"))
+    return votes.select(F.col("doc_id"), sig.alias("simhash"))
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -455,20 +413,18 @@ def hamming64(a: Column, b: Column) -> Column:
 _HEX = "0123456789abcdef"
 
 
-def _md5_bit_sql(b: int, hash_col: str = "h") -> str:
+def _md5_bit_sql(b: int) -> str:
     """Portable SQL for bit ``b`` (0..63) of an md5 hex digest: nibble
     ``b//4`` decoded via an instr lookup, masked with ``1 << (b % 4)``.
     Only uses substr/instr/& — identical semantics in Spark SQL and
     DuckDB, so the SAME text runs on both engines."""
     return (
-        f"((instr('{_HEX}', substr({hash_col}, {b // 4 + 1}, 1)) - 1)"
+        f"((instr('{_HEX}', substr(h, {b // 4 + 1}, 1)) - 1)"
         f" & {1 << (b % 4)}) != 0"
     )
 
 
-def simhash64_portable(
-    docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash64_portable(docs: DataFrame) -> DataFrame:
     """Engine-portable SimHash: identical bits in Spark and DuckDB.
 
     Same algorithm as :func:`simhash64` (per-token bit votes, sign of
@@ -483,10 +439,10 @@ def simhash64_portable(
     materialization); this twin exists for verification, the same
     md5/xxhash64 split as minhash_lsh vs minhash_lsh_fast.
     """
-    tok = widen_narrow_input(docs, id_col).select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
+    tok = widen_narrow_input(docs, "doc_id").select(
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok")
     )
-    hashed = tok.select(id_col, F.md5("tok").alias("h"))
+    hashed = tok.select("doc_id", F.md5("tok").alias("h"))
     # NOTE (optimization round 10): pre-decoding the 16 digest nibbles
     # into int columns before the aggregate was measured SLOWER than
     # evaluating _md5_bit_sql inline in the vote conditions (1.32 s vs
@@ -499,7 +455,7 @@ def simhash64_portable(
         ).alias(f"v{b}")
         for b in range(64)
     ]
-    per_doc = hashed.groupBy(id_col).agg(*votes)
+    per_doc = hashed.groupBy("doc_id").agg(*votes)
     hi = None
     lo = None
     for b in range(64):
@@ -510,7 +466,7 @@ def simhash64_portable(
             lo = bit if lo is None else lo + bit
         else:
             hi = bit if hi is None else hi + bit
-    return per_doc.select(F.col(id_col), hi.alias("sig_hi"), lo.alias("sig_lo"))
+    return per_doc.select(F.col("doc_id"), hi.alias("sig_hi"), lo.alias("sig_lo"))
 
 
 def _simhash_votes_kernel():
@@ -570,9 +526,7 @@ def _simhash_votes_kernel():
     return kernel
 
 
-def simhash64_portable_kernel(
-    docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash64_portable_kernel(docs: DataFrame) -> DataFrame:
     """:func:`simhash64_portable` computed by the Arrow votes kernel:
     identical (id, sig_hi, sig_lo) longs, but as ONE ArrowEvalPython
     projection over the Catalyst-tokenized array — no token explode, no
@@ -585,13 +539,13 @@ def simhash64_portable_kernel(
     form (explode of a NULL array emits no rows, so groupBy never sees
     the doc)."""
     base = (
-        widen_narrow_input(docs, id_col)
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
+        widen_narrow_input(docs, "doc_id")
+        .select(F.col("doc_id"), tokens(F.col("text")).alias("__toks"))
         .filter(F.col("__toks").isNotNull())
     )
     kernel = _simhash_votes_kernel()
-    return base.select(F.col(id_col), kernel("__toks").alias("__s")).select(
-        F.col(id_col),
+    return base.select(F.col("doc_id"), kernel("__toks").alias("__s")).select(
+        F.col("doc_id"),
         F.col("__s.sig_hi").alias("sig_hi"),
         F.col("__s.sig_lo").alias("sig_lo"),
     )
@@ -866,9 +820,6 @@ def verify_candidates_jaccard(
     docs: DataFrame,
     cand: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     min_jaccard: float = 0.5,
 ) -> DataFrame:
     """Exact-verify candidate pairs: n-gram Jaccard computed ONLY for
@@ -888,7 +839,7 @@ def verify_candidates_jaccard(
     """
     jaccard = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return _verify_candidates(
-        docs, cand, text_col=text_col, id_col=id_col, shingle_n=shingle_n,
+        docs, cand, text_col="text", id_col="doc_id", shingle_n=3,
         score=lambda sized: sized.select("id_a", "id_b", jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= min_jaccard),
     )
@@ -936,16 +887,7 @@ def _verify_candidates(
             return fence(score(sized), eager=True)
 
 
-def verify_pairs_jaccard_inline(
-    docs: DataFrame,
-    cand: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    min_jaccard: float = 0.5,
-    broadcast_pairs: bool = True,
-) -> DataFrame:
+def verify_pairs_jaccard_inline(docs: DataFrame, cand: DataFrame) -> DataFrame:
     """Exact-verify candidate pairs by joining each pair's two document
     TEXTS and computing trigram Jaccard per pair row in pure Catalyst
     array ops (``array_distinct``/``array_intersect``/``size``) — the
@@ -963,17 +905,17 @@ def verify_pairs_jaccard_inline(
 
     Tradeoffs, by candidate multiplicity per doc:
 
-    - LOW (the normal post-LSH/winnow regime — ``max_doc_freq`` caps
-      posting lists, so a doc lands in a bounded number of pairs):
+    - LOW (the normal post-LSH/winnow regime — winnowing caps posting
+      lists at 100 docs, so a doc lands in a bounded number of pairs):
       each doc's shingle set is recomputed once per pair it appears
       in; with multiplicity ~1-3 that beats the set-join variant's
       extra shuffles + two aggregations + persists by a wide margin.
     - HIGH (one doc in thousands of pairs): use the set-join variant —
       it shingles each doc once.
 
-    ``broadcast_pairs=True`` broadcasts the pair list into the FIRST
-    join only. The second join shuffles on id_b — deliberately: a
-    broadcast hint on the pair+text_a intermediate would embed the
+    The pair list is broadcast into the FIRST join only. The second
+    join shuffles on id_b — deliberately: a broadcast hint on the
+    pair+text_a intermediate would embed the
     candidate-generator subplan in a SECOND broadcast-exchange job, and
     broadcast exchanges are built per-job, so the generator (the
     expensive part — an LSH banding pass or a rolling-hash UDF over the
@@ -982,13 +924,12 @@ def verify_pairs_jaccard_inline(
     generator runs exactly once; the id_b shuffle moves only
     |pairs|+|corpus| slim rows and AQE downgrades it to a runtime
     broadcast from the already-materialized stage output, not a
-    recompute. At extreme candidate counts (pairs × avg doc size beyond
-    executor memory) set it False for shuffle joins on both sides.
+    recompute. Pairs reach Jaccard >= 0.5 on word-3-shingles.
     """
     pairs = cand.select("id_a", "id_b")
-    ta = docs.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("__text_a"))
-    tb = docs.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("__text_b"))
-    with_a = (F.broadcast(pairs) if broadcast_pairs else pairs).join(ta, "id_a")
+    ta = docs.select(F.col("doc_id").alias("id_a"), F.col("text").alias("__text_a"))
+    tb = docs.select(F.col("doc_id").alias("id_b"), F.col("text").alias("__text_b"))
+    with_a = F.broadcast(pairs).join(ta, "id_a")
     with_ab = with_a.join(tb, "id_b")
     # bind tokens, then shingle sets, in SEPARATE projections: each alias
     # is multi-referenced downstream so CollapseProject keeps the
@@ -1002,8 +943,8 @@ def verify_pairs_jaccard_inline(
     )
     shingled = toked.select(
         "id_a", "id_b",
-        F.array_distinct(shingles_of_tokens(F.col("__tk_a"), shingle_n)).alias("__sh_a"),
-        F.array_distinct(shingles_of_tokens(F.col("__tk_b"), shingle_n)).alias("__sh_b"),
+        F.array_distinct(shingles_of_tokens(F.col("__tk_a"), 3)).alias("__sh_a"),
+        F.array_distinct(shingles_of_tokens(F.col("__tk_b"), 3)).alias("__sh_b"),
     )
     counted = shingled.select(
         "id_a", "id_b",
@@ -1039,41 +980,30 @@ def verify_pairs_jaccard_inline(
             "id_a", "id_b",
             (F.col("__ni") / (F.col("__na") + F.col("__nb") - F.col("__ni"))).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= min_jaccard)
+        .filter(F.col("jaccard") >= 0.5)
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    min_jaccard: float = 0.0,
-    block_col: str | None = None,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, *, min_jaccard: float = 0.0) -> DataFrame:
     """Exact n-gram Jaccard for all pairs sharing ≥1 shingle.
 
     shingle-explode → self-join on shingle → per-pair intersection count;
     union size from per-doc distinct counts (|A|+|B|−|A∩B|). Pairs with
-    zero shared shingles never materialize. ``block_col`` (e.g. source or
-    an LSH bucket) further restricts the join at scale.
+    zero shared shingles never materialize. Shingles are word 3-grams.
     """
-    keys = [id_col] + ([block_col] if block_col else [])
-    sh = exploded_shingles(docs, text_col=text_col, keep_cols=keys, n=shingle_n)
-    sizes = sh.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_sh"))
+    sh = exploded_shingles(docs, text_col="text", keep_cols=["doc_id"], n=3)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
-    join_keys = ["sh"] + ([block_col] if block_col else [])
-    a = sh.select(F.col(id_col).alias("id_a"), *([F.col(block_col)] if block_col else []), "sh")
-    b = sh.select(F.col(id_col).alias("id_b"), *([F.col(block_col)] if block_col else []), "sh")
+    a = sh.select(F.col("doc_id").alias("id_a"), "sh")
+    b = sh.select(F.col("doc_id").alias("id_b"), "sh")
     inter = (
-        a.join(b, on=join_keys)
+        a.join(b, on=["sh"])
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
     out = (
         inter.join(sa, "id_a").join(sb, "id_b")
         .select(
@@ -1086,14 +1016,7 @@ def ngram_jaccard_pairs(
     return out
 
 
-def prefix_filter_candidates(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    min_jaccard: float = 0.5,
-) -> DataFrame:
+def prefix_filter_candidates(docs: DataFrame, *, min_jaccard: float = 0.5) -> DataFrame:
     """PPJoin-family candidate pairs for Jaccard ≥ t — complete, and far
     fewer candidates than "shares any shingle".
 
@@ -1129,10 +1052,10 @@ def prefix_filter_candidates(
     consumers see. The ``size()``-on-array improvement from r10 (vs the
     old explode→groupBy(sizes)→join size shuffle) is kept.
     """
-    with persisted(_shingle_sets(docs, text_col, id_col, shingle_n)) as shsets:
-        sh = shsets.select(id_col, "n_sh", F.explode("__sh_arr").alias("sh"))
+    with persisted(_shingle_sets(docs, "text", "doc_id", 3)) as shsets:
+        sh = shsets.select("doc_id", "n_sh", F.explode("__sh_arr").alias("sh"))
         return fence(_candidates_from_sized_shingles(
-            sh, id_col=id_col, t=min_jaccard
+            sh, id_col="doc_id", t=min_jaccard
         ), eager=True)
 
 
@@ -1216,8 +1139,6 @@ def _candidates_from_sized_shingles(
 def pruned_jaccard_pairs(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 3,
     min_jaccard: float = 0.5,
 ) -> DataFrame:
@@ -1244,9 +1165,9 @@ def pruned_jaccard_pairs(
     # once and the eager count is the single materialization barrier
     # (same AQE-race rationale as verify_candidates_jaccard, one
     # barrier instead of two).
-    with persisted(_shingle_sets(docs, text_col, id_col, shingle_n)) as shsets:
-        sh = shsets.select(id_col, "n_sh", F.explode("__sh_arr").alias("sh"))
-        cand = _candidates_from_sized_shingles(sh, id_col=id_col, t=min_jaccard)
+    with persisted(_shingle_sets(docs, "text", "doc_id", shingle_n)) as shsets:
+        sh = shsets.select("doc_id", "n_sh", F.explode("__sh_arr").alias("sh"))
+        cand = _candidates_from_sized_shingles(sh, id_col="doc_id", t=min_jaccard)
         # verify: per-pair exact intersection over the cached shingle
         # ARRAYS (JVM array_intersect), not a re-exploded shingle join —
         # the join moves |cand| rows with two array payloads instead of
@@ -1255,12 +1176,12 @@ def pruned_jaccard_pairs(
         # it is corpus-sized — exactly the scale behaviour wanted, so no
         # hint.
         sa = shsets.select(
-            F.col(id_col).alias("id_a"),
+            F.col("doc_id").alias("id_a"),
             F.col("__sh_arr").alias("__a"),
             F.col("n_sh").alias("n_a"),
         )
         sb = shsets.select(
-            F.col(id_col).alias("id_b"),
+            F.col("doc_id").alias("id_b"),
             F.col("__sh_arr").alias("__b"),
             F.col("n_sh").alias("n_b"),
         )
@@ -1319,19 +1240,12 @@ def _winnow_docwise(texts: list, k: int, window: int) -> list:
     return out
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 12,
-    window: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, *, k: int = 12) -> DataFrame:
     """Winnowing document fingerprints (rolling-hash selection, the
     MOSS algorithm): Karp-Rabin-hash every character ``k``-gram, slide
-    a window of ``window`` hashes, keep each window's minimum —
-    guaranteeing any match of length ≥ k+window-1 shares a fingerprint,
-    while storing only ~2/(window+1) of the hashes.
+    a window of 4 hashes, keep each window's minimum — guaranteeing any
+    match of length ≥ k+3 shares a fingerprint, while storing only ~2/5
+    of the hashes.
 
     Output: one (doc_id, fp) row per distinct selected hash.
     Implementation: normalization stays Catalyst; the rolling hash +
@@ -1353,41 +1267,37 @@ def winnow_fingerprints(
 
     @pandas_udf("array<long>")
     def winnow(texts: pd.Series) -> pd.Series:
-        return pd.Series(_winnow_docwise(list(texts), k, window))
+        return pd.Series(_winnow_docwise(list(texts), k, 4))
 
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
+    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
     # Widened: with the fingerprint table consumed exactly once (see
     # winnow_candidates), fanning the Arrow-UDF stage out beats one
     # worker streaming all batches — measured 1.8s vs 7.1s cold, 1.5s
     # vs 2.3s warm at sf0.1. (An earlier single-worker measurement
     # predated single-consumption: the UDF ran once per join branch,
     # so 32 workers × 2 evals paid double cold-start.)
-    return widen_narrow_input(docs, id_col).select(
-        F.col(id_col), F.explode(winnow(norm)).alias("fp")
+    return widen_narrow_input(docs, "doc_id").select(
+        F.col("doc_id"), F.explode(winnow(norm)).alias("fp")
     )
 
 
 def winnow_candidates(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 12,
-    window: int = 4,
     min_shared: int = 5,
-    max_doc_freq: int | None = 100,
 ) -> DataFrame:
     """Near-dup candidate pairs: docs sharing ≥ ``min_shared`` winnowed
     fingerprints, with the shared count.
 
-    Scale: the fingerprint table — ~2/(window+1) the size of a full
+    Scale: the fingerprint table — ~2/5 the size of a full
     shingle table — is shuffled ONCE, keyed by fingerprint, into a
     collect_list per hash; pairs are generated from each posting list
     with array ops (a fp shared by docs [a,b,c] emits (a,b),(a,c),
     (b,c)). An fp-keyed self-join would consume the table twice, and
     Spark re-runs the rolling-hash UDF per consumer (branched subtrees
-    don't share exchanges keyed differently). ``max_doc_freq`` drops
-    posting lists longer than that many documents (boilerplate/stopword
+    don't share exchanges keyed differently). Posting lists longer than
+    100 documents are dropped (boilerplate/stopword
     k-grams) BEFORE pair expansion: a fingerprint in f docs contributes
     f²/2 pair rows, so capping f bounds the expansion quadratically —
     without it one viral footer string pairs the whole corpus with
@@ -1395,13 +1305,10 @@ def winnow_candidates(
     adversarial skew (one hash in millions of docs) pre-filter with a
     frequency sketch so the list never materializes.
     """
-    fps = winnow_fingerprints(
-        docs, text_col=text_col, id_col=id_col, k=k, window=window
-    )
-    posting = fps.groupBy("fp").agg(F.collect_list(id_col).alias("ids"))
+    fps = winnow_fingerprints(docs, k=k)
+    posting = fps.groupBy("fp").agg(F.collect_list("doc_id").alias("ids"))
     posting = posting.filter(F.size("ids") >= 2)
-    if max_doc_freq is not None:
-        posting = posting.filter(F.size("ids") <= max_doc_freq)
+    posting = posting.filter(F.size("ids") <= 100)
     ids = F.array_sort("ids")
     pair_structs = F.flatten(
         F.transform(
@@ -1424,9 +1331,6 @@ def winnow_candidates(
 def connected_components(
     pairs: DataFrame,
     *,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
     local_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Connected components over an undirected pair graph:
@@ -1462,15 +1366,13 @@ def connected_components(
     # edge set: the union+distinct shuffle only pays off for the
     # distributed iteration; the local path union-finds the pairs as-is
     # (0 forces the distributed path).
-    with persisted(pairs.select(id_a, id_b)) as cached:
+    with persisted(pairs.select("id_a", "id_b")) as cached:
         if local_threshold > 0 and cached.count() * 2 <= local_threshold:
             collected = [(r[0], r[1]) for r in cached.collect()]
         else:
             # the cache serves the eager edge checkpoint; the returned
             # node list re-reads ``pairs`` lazily once it is released
-            return cc_large_small_star(
-                cached, id_a=id_a, id_b=id_b, max_iter=max_iter
-            )
+            return cc_large_small_star(cached, max_iter=20)
     parent: dict = {}
 
     def find(x):
@@ -1491,8 +1393,8 @@ def connected_components(
     spark = pairs.sparkSession
     schema = T.StructType(
         [
-            T.StructField("node", pairs.schema[id_a].dataType, False),
-            T.StructField("cluster_id", pairs.schema[id_a].dataType, False),
+            T.StructField("node", pairs.schema["id_a"].dataType, False),
+            T.StructField("cluster_id", pairs.schema["id_a"].dataType, False),
         ]
     )
     return spark.createDataFrame(rows, schema)
@@ -1501,8 +1403,6 @@ def connected_components(
 def cc_large_small_star(
     pairs: DataFrame,
     *,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     max_iter: int = 50,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -1542,15 +1442,15 @@ def cc_large_small_star(
     # would either be dropped before the caller materializes the result
     # or leak past it.
     nodes = (
-        pairs.select(F.col(id_a).alias("node"))
-        .unionByName(pairs.select(F.col(id_b).alias("node")))
+        pairs.select(F.col("id_a").alias("node"))
+        .unionByName(pairs.select(F.col("id_b").alias("node")))
         .distinct()
     )
     # canonical orientation src > dst; drop self loops
     edges = fence(
         pairs.select(
-            F.greatest(F.col(id_a), F.col(id_b)).alias("src"),
-            F.least(F.col(id_a), F.col(id_b)).alias("dst"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("src"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct(),
@@ -1634,8 +1534,6 @@ def cc_large_small_star(
 def _sentence_windows(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     sent_tokens: int = 8,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -1643,10 +1541,10 @@ def _sentence_windows(
     ``sent_tokens``-token pseudo-sentence windows per document (the last
     window keeps its short tail). Shared grain for the sentence-level
     corpus ops below."""
-    t = F.split(F.col(text_col), " ")
+    t = F.split(F.col("text"), " ")
     n_windows = F.ceil(F.size(t) / F.lit(float(sent_tokens))).cast("int")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         F.posexplode(
             F.transform(
@@ -1659,13 +1557,7 @@ def _sentence_windows(
     )
 
 
-def global_sentence_dedup(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sent_tokens: int = 8,
-) -> DataFrame:
+def global_sentence_dedup(docs: DataFrame, *, sent_tokens: int = 8) -> DataFrame:
     """C4-style GLOBAL sentence dedup: split every document into fixed
     ``sent_tokens``-token pseudo-sentences, keep only the corpus-FIRST
     occurrence of each distinct sentence (lowest doc id, then lowest
@@ -1686,9 +1578,7 @@ def global_sentence_dedup(
     rebuild sorts only within one document (array_sort of bounded
     per-doc lists).
     """
-    sents = _sentence_windows(
-        docs, text_col=text_col, id_col=id_col, sent_tokens=sent_tokens
-    ).withColumn("h", F.xxhash64("sent"))
+    sents = _sentence_windows(docs, sent_tokens=sent_tokens).withColumn("h", F.xxhash64("sent"))
     kept = keep_first_sentence_occurrence(sents)
     return rebuild_sentence_docs(sents, kept)
 
@@ -1752,28 +1642,19 @@ def rebuild_sentence_docs(all_sents: DataFrame, kept: DataFrame) -> DataFrame:
     )
 
 
-def strip_boilerplate_sentences(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str = "source",
-    sent_tokens: int = 8,
-    frac_num: int = 2,
-    frac_den: int = 5,
-) -> DataFrame:
-    """CCNet-style BOILERPLATE removal: inside each ``group_col``
-    (source/domain), any pseudo-sentence present in at least
-    ``frac_num/frac_den`` of the group's documents is boilerplate
+def strip_boilerplate_sentences(docs: DataFrame, *, sent_tokens: int = 8) -> DataFrame:
+    """CCNet-style BOILERPLATE removal: inside each ``source`` group
+    (source/domain), any pseudo-sentence present in at least 2/5 of
+    the group's documents is boilerplate
     (headers, footers, subscribe banners) and is stripped from EVERY
     document — the frequency-based companion to global_sentence_dedup's
     first-occurrence rule (CCNet does this at paragraph grain;
     Wenzek et al. 2020 §3.1).
 
-    Returns (doc_id, group, n_sents, boiler_removed, clean_text,
+    Returns (doc_id, source, n_sents, boiler_removed, clean_text,
     n_chars_clean) per document.
 
-    The threshold compares integers (nd·den >= num·n_docs) so no float
+    The threshold compares integers (nd·5 >= 2·n_docs) so no float
     boundary exists. Scale: document frequency per (group, sentence)
     shuffles 8-byte xxhash64 keys with map-side partial distinct; the
     boilerplate set per group is tiny (it must appear in >=40% of docs
@@ -1781,24 +1662,20 @@ def strip_boilerplate_sentences(
     rebuild sorts only within documents.
     """
     sents = _sentence_windows(
-        docs,
-        text_col=text_col,
-        id_col=id_col,
-        sent_tokens=sent_tokens,
-        keep_cols=(group_col,),
+        docs, sent_tokens=sent_tokens, keep_cols=("source",)
     ).withColumn("h", F.xxhash64("sent"))
-    n_docs = docs.groupBy(group_col).agg(
+    n_docs = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
-    freq = sents.groupBy(group_col, "h").agg(
+    freq = sents.groupBy("source", "h").agg(
         F.count_distinct("doc_id").alias("nd")
     )
     boiler = (
-        freq.join(F.broadcast(n_docs), group_col)
-        .filter(F.col("nd") * F.lit(frac_den) >= F.lit(frac_num) * F.col("n_docs"))
-        .select(group_col, "h")
+        freq.join(F.broadcast(n_docs), "source")
+        .filter(F.col("nd") * F.lit(5) >= F.lit(2) * F.col("n_docs"))
+        .select("source", "h")
     )
-    kept = sents.join(boiler, [group_col, "h"], "left_anti")
+    kept = sents.join(boiler, ["source", "h"], "left_anti")
     rebuilt = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("kept_sents"),
         F.array_join(
@@ -1809,14 +1686,14 @@ def strip_boilerplate_sentences(
             " ",
         ).alias("clean_text"),
     )
-    totals = sents.groupBy("doc_id", group_col).agg(
+    totals = sents.groupBy("doc_id", "source").agg(
         F.count(F.lit(1)).cast("long").alias("n_sents")
     )
     return (
         totals.join(rebuilt, "doc_id", "left")
         .select(
             "doc_id",
-            group_col,
+            "source",
             "n_sents",
             (F.col("n_sents") - F.coalesce("kept_sents", F.lit(0).cast("long")))
             .cast("long")
@@ -1830,16 +1707,10 @@ def strip_boilerplate_sentences(
     )
 
 
-def containment_candidates(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    min_containment: float = 0.8,
-) -> DataFrame:
-    """Candidate pairs (id_a < id_b) for min-side set CONTAINMENT ≥ t —
-    complete, and pruned far below "shares any shingle".
+def containment_candidates(docs: DataFrame) -> DataFrame:
+    """Candidate pairs (id_a < id_b) for min-side set CONTAINMENT ≥ t
+    (t = 0.8 over word 3-grams) — complete, and pruned far below
+    "shares any shingle".
 
     Containment bounds overlap by the SMALLER side only:
     α ≥ ⌈t·min(|A|,|B|)⌉, so any qualifying pair must share one of the
@@ -1868,10 +1739,10 @@ def containment_candidates(
     # accidental cross-query caches were closed)
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy("df", "sh")
-    t = float(min_containment)
-    with persisted(_shingle_sets(docs, text_col, id_col, shingle_n)) as shsets:
-        sized = shsets.select(id_col, "n_sh", F.explode("__sh_arr").alias("sh"))
+    w = Window.partitionBy("doc_id").orderBy("df", "sh")
+    t = 0.8
+    with persisted(_shingle_sets(docs, "text", "doc_id", 3)) as shsets:
+        sized = shsets.select("doc_id", "n_sh", F.explode("__sh_arr").alias("sh"))
         dfreq = sized.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
         prefix = (
             sized.join(dfreq, "sh")
@@ -1879,10 +1750,10 @@ def containment_candidates(
             .filter(
                 F.col("rnk") <= F.col("n_sh") - F.ceil(F.lit(t) * F.col("n_sh")) + 1
             )
-            .select(F.col(id_col).alias("id_p"), "sh", F.col("n_sh").alias("n_p"))
+            .select(F.col("doc_id").alias("id_p"), "sh", F.col("n_sh").alias("n_p"))
         )
         index = sized.select(
-            F.col(id_col).alias("id_f"), "sh", F.col("n_sh").alias("n_f")
+            F.col("doc_id").alias("id_f"), "sh", F.col("n_sh").alias("n_f")
         )
         return fence(
             prefix.join(index, "sh")
@@ -1899,22 +1770,14 @@ def containment_candidates(
         )
 
 
-def verify_candidates_containment(
-    docs: DataFrame,
-    cand: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    min_containment: float = 0.8,
-) -> DataFrame:
+def verify_candidates_containment(docs: DataFrame, cand: DataFrame) -> DataFrame:
     """Exact min-side containment for the candidate pairs only:
     (id_a, id_b, n_inter, n_a, n_b, containment) with containment =
     |A∩B| / min(|A|,|B|) ≥ t. Same semi-join pruning and call-scoped
     caches as :func:`verify_candidates_jaccard`."""
     containment = F.col("n_inter") / F.least(F.col("n_a"), F.col("n_b"))
     return _verify_candidates(
-        docs, cand, text_col=text_col, id_col=id_col, shingle_n=shingle_n,
+        docs, cand, text_col="text", id_col="doc_id", shingle_n=3,
         score=lambda sized: sized.withColumn("containment", containment)
-        .filter(F.col("containment") >= min_containment),
+        .filter(F.col("containment") >= 0.8),
     )

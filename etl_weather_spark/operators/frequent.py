@@ -68,18 +68,17 @@ def _mg_kernel(k: int):
 def heavy_hitters(
     items: DataFrame,
     *,
-    item_col: str = "item",
     phi: float = 0.001,
     slack: float = 2.0,
 ) -> DataFrame:
-    """Exact φ-heavy hitters of ``items[item_col]``: (item,
+    """Exact φ-heavy hitters of ``items["item"]``: (item,
     n_occurrences, total_n) for every item with count ≥ ceil(φ·N),
     descending count. ``slack`` ≥ 1 widens the pass-1 summary (k =
     ceil(slack/φ)) — more candidate headroom, same exact output. NULL
     items are ignored.
     """
     k = max(8, math.ceil(slack / phi))
-    src = items.select(F.col(item_col).cast("string").alias("item")).filter(
+    src = items.select(F.col("item").cast("string").alias("item")).filter(
         F.col("item").isNotNull()
     )
     p1 = src.mapInPandas(_mg_kernel(k), "item string, n long")
@@ -105,6 +104,6 @@ def heavy_hitters(
         exact.filter(
             F.col("n_occurrences") >= F.ceil(F.lit(phi) * F.col("total_n"))
         )
-        .select(F.col("item").alias(item_col), "n_occurrences", "total_n")
-        .orderBy(F.desc("n_occurrences"), item_col)
+        .select("item", "n_occurrences", "total_n")
+        .orderBy(F.desc("n_occurrences"), "item")
     )

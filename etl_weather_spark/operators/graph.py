@@ -22,7 +22,7 @@ Design notes (100 TB):
   rounds (:mod:`~etl_weather_spark.operators.fence`) — for the default
   3 rounds the plan stays lazy end-to-end.
 
-Integer-exact arithmetic: ranks are scaled BIGINTs (default scale 1e9)
+Integer-exact arithmetic: ranks are scaled BIGINTs (scale 1e9)
 and every operation is integer multiply / integer (truncating) division
 / integer sum. Two engines executing the same integer ops on the same
 edges produce bit-identical ranks — this is what lets the DuckDB oracle
@@ -40,40 +40,27 @@ from etl_weather_spark.operators.fence import FENCE_EVERY, fence
 __all__ = ["pagerank_scaled"]
 
 
-def pagerank_scaled(
-    pairs: DataFrame,
-    *,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    iterations: int = 3,
-    scale: int = 1_000_000_000,
-    damping_pct: int = 85,
-    symmetric: bool = True,
-) -> DataFrame:
-    """Fixed-iteration PageRank over a pair graph: (node, rank_scaled).
+def pagerank_scaled(pairs: DataFrame, *, iterations: int = 3) -> DataFrame:
+    """Fixed-iteration PageRank over the undirected (id_a, id_b) pair
+    graph: (node, rank_scaled).
 
-    Uses the unnormalized per-node form (uniform init ``scale``, i.e.
-    rank 1.0 per node):
+    Uses the unnormalized per-node form (uniform init scale = 1e9, i.e.
+    rank 1.0 per node, damping d = 85%):
 
         contrib(v) = Σ_{u→v}  r(u) div outdeg(u)          -- integer div
         r'(v)      = (scale·(100−d)) div 100  +  (d·contrib(v)) div 100
 
-    With ``symmetric=True`` (undirected pair graphs, e.g. near-dup
-    pairs) every node has in-degree ≥ 1, so no rank mass is lost to
-    sources; directed graphs must ensure every node appears as a dst or
-    accept that pure-source nodes drop out after round 1 (documented,
-    matches the oracle which computes the identical relation).
+    Every pair contributes both directions, so every node has in-degree
+    ≥ 1 and no rank mass is lost to sources.
 
-    All arithmetic is 64-bit-integer exact for ``scale·damping_pct·N``
-    within int64 (N ≤ ~1e8 nodes at the default scale; beyond that,
-    lower ``scale`` or switch the sum to decimal(38,0) — the contrib
-    sum is the only place that grows with N).
+    All arithmetic is 64-bit-integer exact for ``scale·d·N`` within
+    int64 (N ≤ ~1e8 nodes; beyond that, switch the sum to decimal(38,0)
+    — the contrib sum is the only place that grows with N).
     """
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    if symmetric:
-        edges = edges.union(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-        )
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    edges = edges.union(
+        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+    )
     # the edge relation is consumed by deg + every round: without a
     # fence the final plan re-derives the (possibly expensive) pair
     # subtree once per consumer
@@ -82,7 +69,8 @@ def pagerank_scaled(
     # one binary relation reused every round: (src, dst, outdeg)
     edges_deg = edges.join(deg, "src")
 
-    base = (scale * (100 - damping_pct)) // 100
+    scale = 1_000_000_000
+    base = (scale * (100 - 85)) // 100
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(scale).cast("long").alias("r")
     )
@@ -98,7 +86,7 @@ def pagerank_scaled(
             F.col("dst").alias("node"),
             (
                 F.lit(base)
-                + F.expr(f"({damping_pct} * contrib) div 100")
+                + F.expr("(85 * contrib) div 100")
             ).cast("long").alias("r"),
         )
         if (i + 1) % FENCE_EVERY == 0 and i + 1 < iterations:

@@ -26,14 +26,13 @@ def asof_join_union(
     on: str,
     by: list[str] | None = None,
     value_cols: list[str] | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Backward as-of join: each left row gets the latest right row with
     ``right.on <= left.on`` within the same ``by`` group.
 
     Implementation: tag sides, unionByName, per-key window ordered by
     (on, side) carrying right values forward via last(ignorenulls), then
-    keep left rows. Right values arrive as ``<col><suffix>`` columns.
+    keep left rows. Right values arrive as ``<col>_asof`` columns.
     Ties (equal timestamps) resolve to the right row (side ordering puts
     right first), matching merge_asof's inclusive backward semantics.
     """
@@ -63,7 +62,7 @@ def asof_join_union(
     filled = unioned.select(
         "*",
         *[
-            F.last(f"__r_{c}", ignorenulls=True).over(w).alias(f"{c}{suffix}")
+            F.last(f"__r_{c}", ignorenulls=True).over(w).alias(f"{c}_asof")
             for c in value_cols
         ],
     )
@@ -78,33 +77,30 @@ def range_join_bucketed(
     *,
     left_ts: str,
     right_ts: str,
-    by: list[str] | None = None,
-    lower_sec: int = 0,
     upper_sec: int = 600,
 ) -> DataFrame:
-    """Time-band (interval) join: pair rows where
-    ``right_ts - left_ts ∈ [lower_sec, upper_sec]``, optionally within
-    ``by`` groups.
+    """Time-band (interval) join: pair rows of the same ``user_id`` where
+    ``right_ts - left_ts ∈ [0, upper_sec]``.
 
     A naive inequality join degenerates to a per-key cross product
     (Spark plans theta joins as BroadcastNestedLoop without an equi
-    key). This bucketizes both sides to ``width = upper - lower``
-    seconds and equi-joins on (by, bucket) for each of the two buckets a
+    key). This bucketizes both sides to ``width = upper_sec`` seconds
+    and equi-joins on (user_id, bucket) for each of the two buckets a
     band can span — the candidate set is bounded by bucket occupancy,
     never |L|×|R|, and the equi key keeps it a hash/sort-merge join that
     shuffles and scales. The exact band predicate filters candidates.
     """
-    width = max(upper_sec - lower_sec, 1)
-    by = by or []
+    width = max(upper_sec, 1)
 
     # double cast via TIMESTAMP: TIMESTAMP_NTZ has no direct numeric cast
     lsec = F.col(left_ts).cast("timestamp").cast("double")
     rsec = F.col(right_ts).cast("timestamp").cast("double")
     lt = left.withColumn("__lsec", lsec)
     rt = right.withColumn("__rsec", rsec).withColumn(
-        "__bkt", F.floor((F.col("__rsec") - F.lit(lower_sec)) / width).cast("long")
+        # bucket origin: the band's lower edge, 0 s
+        "__bkt", F.floor((F.col("__rsec") - F.lit(0)) / width).cast("long")
     )
-    # each left row's band [l+lower, l+upper] spans ≤2 buckets of size width
+    # each left row's band [l, l+upper_sec] spans ≤2 buckets of size width
     lt = lt.withColumn(
         "__bkt",
         F.explode(
@@ -116,7 +112,7 @@ def range_join_bucketed(
     )
     delta = F.col("__rsec") - F.col("__lsec")
     return (
-        lt.join(rt, on=[*by, "__bkt"])
-        .filter((delta >= lower_sec) & (delta <= upper_sec))
+        lt.join(rt, on=["user_id", "__bkt"])
+        .filter((delta >= 0) & (delta <= upper_sec))
         .drop("__bkt", "__lsec", "__rsec")
     )

@@ -22,17 +22,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def char_ngrams(col: Column, q: int = 3, pad: str = "#") -> Column:
-    """Padded character q-grams of a (lowercased) string as an array.
+def char_ngrams(col: Column) -> Column:
+    """Padded character 3-grams of a (lowercased) string as an array.
 
-    Padding with q-1 sentinels preserves boundary information (an edit
-    at position 0 still leaves interior grams shared) and guarantees
-    >= q grams even for short strings.
+    Padding with two ``#`` sentinels preserves boundary information (an
+    edit at position 0 still leaves interior grams shared) and
+    guarantees >= 3 grams even for short strings.
     """
-    padded = F.concat(F.lit(pad * (q - 1)), F.lower(col), F.lit(pad * (q - 1)))
+    padded = F.concat(F.lit("##"), F.lower(col), F.lit("##"))
     return F.transform(
-        F.sequence(F.lit(1), F.length(padded) - (q - 1)),
-        lambda i: F.substring(padded, i, q),
+        F.sequence(F.lit(1), F.length(padded) - 2),
+        lambda i: F.substring(padded, i, 3),
     )
 
 
@@ -42,12 +42,10 @@ def fuzzy_join_blocked(
     *,
     left_col: str,
     right_col: str,
-    max_dist: int = 2,
-    q: int = 3,
     max_gram_freq: int | None = None,
 ) -> DataFrame:
-    """Candidate pairs of string keys within Levenshtein ``max_dist``:
-    (name_a, name_b, edit_dist), via q-gram blocking + bounded verify.
+    """Candidate pairs of string keys within Levenshtein distance 2:
+    (name_a, name_b, edit_dist), via 3-gram blocking + bounded verify.
 
     Scale design:
 
@@ -63,16 +61,15 @@ def fuzzy_join_blocked(
       output is oracle-comparable against an exact all-pairs join.
     - ``max_gram_freq`` drops grams appearing in more than that many
       keys before the join (stopword-gram posting lists expand
-      quadratically, the minhash ``max_bucket_size`` argument applies
-      verbatim). None keeps the completeness guarantee exact.
+      quadratically). None keeps the completeness guarantee exact.
     """
     ln = left.select(F.col(left_col).alias("name_a")).distinct()
     rn = right.select(F.col(right_col).alias("name_b")).distinct()
     la = ln.select(
-        "name_a", F.explode(F.array_distinct(char_ngrams(F.col("name_a"), q))).alias("g")
+        "name_a", F.explode(F.array_distinct(char_ngrams(F.col("name_a")))).alias("g")
     )
     rb = rn.select(
-        "name_b", F.explode(F.array_distinct(char_ngrams(F.col("name_b"), q))).alias("g")
+        "name_b", F.explode(F.array_distinct(char_ngrams(F.col("name_b")))).alias("g")
     )
     if max_gram_freq is not None:
         keep = (
@@ -83,8 +80,6 @@ def fuzzy_join_blocked(
         la = la.join(keep, "g", "left_semi")
     cand = la.join(rb, "g").select("name_a", "name_b").distinct()
     return (
-        cand.withColumn(
-            "edit_dist", F.levenshtein("name_a", "name_b", max_dist)
-        )
-        .filter((F.col("edit_dist") >= 0) & (F.col("edit_dist") <= max_dist))
+        cand.withColumn("edit_dist", F.levenshtein("name_a", "name_b", 2))
+        .filter((F.col("edit_dist") >= 0) & (F.col("edit_dist") <= 2))
     )

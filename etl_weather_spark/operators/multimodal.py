@@ -345,9 +345,7 @@ def _content_feature(decoded: dict) -> list[float]:
     return (hist / max(int(hist.sum()), 1)).astype(float).tolist()
 
 
-def extract_features(
-    media: DataFrame, batch_hint: int = 64, decode: bool = False
-) -> DataFrame:
+def extract_features(media: DataFrame, decode: bool = False) -> DataFrame:
     """Arrow-batched feature extraction over the payload column.
 
     Real plumbing, fake decode: byte length + content hash are genuine;
@@ -399,8 +397,9 @@ def extract_features(
     return media.mapInPandas(run, schema=schema)
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: one row per planned frame timestamp.
+def frame_sample_plan(media: DataFrame) -> DataFrame:
+    """Video frame-sampling plan: one row per planned frame timestamp,
+    one frame per second.
 
     Pure Spark (sequence + explode) — produces the work-list a decode
     stage would consume; the decode itself is the stub above.
@@ -408,7 +407,7 @@ def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     frames = F.sequence(
         F.lit(0),
         F.greatest(F.coalesce(F.col("meta.duration_ms"), F.lit(0)) - 1, F.lit(0)),
-        F.lit(every_ms),
+        F.lit(1000),
     )
     return (
         media.filter(F.col("modality") == "video")
@@ -715,8 +714,8 @@ RESIZE_STATS_SCHEMA = T.StructType(
 )
 
 
-def resized_pixel_stats(media: DataFrame, factor: int = 2) -> DataFrame:
-    """Decode → :func:`resize_box` → exact-integer stats, Arrow-batched:
+def resized_pixel_stats(media: DataFrame) -> DataFrame:
+    """Decode → :func:`resize_box` (2×2 blocks) → exact-integer stats, Arrow-batched:
     the resize stage of a multimodal training-data pipeline (thumbnail /
     fixed-resolution conform before feature extraction), end-to-end on
     the REAL PNG codec. Same oracle-stability contract as
@@ -739,7 +738,7 @@ def resized_pixel_stats(media: DataFrame, factor: int = 2) -> DataFrame:
                     px = decode_png(bytes(payload))
                 except Exception:  # noqa: BLE001 — per-row isolation
                     continue
-                out = resize_box(px, factor)
+                out = resize_box(px, 2)
                 flat = out.reshape(-1).astype("int64")
                 if flat.size == 0:
                     continue
@@ -890,13 +889,13 @@ DECIMATE_STATS_SCHEMA = T.StructType(
 )
 
 
-def decimated_audio_stats(media: DataFrame, factor: int = 2) -> DataFrame:
+def decimated_audio_stats(media: DataFrame) -> DataFrame:
     """Decode → :func:`decimate_frames` → exact-integer stats: the
     resample-to-target-rate stage of an audio training-data pipeline
     (e.g. 16 kHz → 8 kHz conform before featurization), end-to-end on
     the REAL WAV codec. Arrow-batched ``mapInPandas``, per-row CPU, no
     shuffle — fans out by input split at 100 TB like the other media
-    stages, and emits ``factor×`` fewer frames than it reads.
+    stages, and emits 2× fewer frames than it reads.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -909,7 +908,7 @@ def decimated_audio_stats(media: DataFrame, factor: int = 2) -> DataFrame:
                     samples, rate = decode_wav(bytes(payload))
                 except Exception:  # noqa: BLE001 — per-row isolation
                     continue
-                out = decimate_frames(samples, factor)
+                out = decimate_frames(samples, 2)
                 flat = out.reshape(-1)
                 if flat.size == 0:
                     continue
@@ -918,7 +917,7 @@ def decimated_audio_stats(media: DataFrame, factor: int = 2) -> DataFrame:
                         "media_id": mid,
                         "out_frames": int(out.shape[0]),
                         "n_channels": int(out.shape[1]),
-                        "out_rate": int(rate) // factor,
+                        "out_rate": int(rate) // 2,
                         "s_sum": int(flat.sum()),
                         "s_sqsum": int((flat * flat).sum()),
                         "s_min": int(flat.min()),
@@ -975,13 +974,13 @@ def resampled_audio_stats(media: DataFrame, out_rate: int) -> DataFrame:
     return media.mapInPandas(run, schema=DECIMATE_STATS_SCHEMA)
 
 
-def probe_media_meta(media: DataFrame, payload_col: str = "payload") -> DataFrame:
+def probe_media_meta(media: DataFrame) -> DataFrame:
     """media + ``png_meta``/``wav_meta`` struct columns — the real
     (codec-free) slice of metadata extraction: format headers parse as
     plain Catalyst byte arithmetic, so this runs JVM-side at full scan
     speed; only pixel/sample DECODE needs the stubbed codec path.
     """
-    p = F.col(payload_col)
+    p = F.col("payload")
     return media.withColumns(
         {"png_meta": png_header_meta(p), "wav_meta": wav_header_meta(p)}
     )
@@ -996,10 +995,10 @@ DHASH_SCHEMA = T.StructType(
 )
 
 
-def dhash_bits(pixels, grid_w: int = 9, grid_h: int = 8):
+def dhash_bits(pixels):
     """64-bit difference hash (dHash) of a decoded image, exact-integer:
     channel-floor-mean to grayscale, block-floor-mean down to an
-    ``grid_h x grid_w`` grid (width/height must divide evenly — run
+    8 x 9 grid (width/height must divide evenly — run
     :func:`resize_box` first otherwise), then bit k = r*8+c set iff
     grid[r][c] > grid[r][c+1]. Returns ``(sig_hi, sig_lo)`` as the two
     unsigned 32-bit halves (band-join-ready for
@@ -1009,11 +1008,11 @@ def dhash_bits(pixels, grid_w: int = 9, grid_h: int = 8):
     import numpy as np
 
     h, w, c = pixels.shape
-    if h % grid_h or w % grid_w:
-        raise ValueError(f"dims {h}x{w} not divisible by grid {grid_h}x{grid_w}")
+    if h % 8 or w % 9:
+        raise ValueError(f"dims {h}x{w} not divisible by grid 8x9")
     gray = pixels.astype(np.int64).sum(axis=2) // c
-    bh, bw = h // grid_h, w // grid_w
-    m = gray.reshape(grid_h, bh, grid_w, bw).sum(axis=(1, 3)) // (bh * bw)
+    bh, bw = h // 8, w // 9
+    m = gray.reshape(8, bh, 9, bw).sum(axis=(1, 3)) // (bh * bw)
     bits = (m[:, :-1] > m[:, 1:]).astype(np.int64).reshape(-1)  # k = r*8 + c
     ks = np.arange(bits.size, dtype=np.int64)
     sig_lo = int((bits[ks < 32] << ks[ks < 32]).sum())
@@ -1147,7 +1146,6 @@ def audio_envelope_fingerprint(media: DataFrame, n_bands: int = 64) -> DataFrame
 def audio_envelope_pairs(
     fps: DataFrame,
     *,
-    id_col: str = "media_id",
     hot_bucket_cap: int | None = None,
 ) -> DataFrame:
     """Candidate dup pairs (id_a, id_b, fp) from envelope fingerprints,
@@ -1168,14 +1166,14 @@ def audio_envelope_pairs(
     262k band table).
     """
     clean = fps.filter(F.col("fp").isNotNull())
-    a = clean.select(F.col(id_col).alias("id_a"), "fp")
-    b = clean.select(F.col(id_col).alias("id_b"), "fp")
+    a = clean.select(F.col("media_id").alias("id_a"), "fp")
+    b = clean.select(F.col("media_id").alias("id_b"), "fp")
     if hot_bucket_cap is None:
         return a.join(b, "fp").filter(F.col("id_a") < F.col("id_b")).select(
             "id_a", "id_b", "fp"
         )
     freq = clean.groupBy("fp").agg(
-        F.count(F.lit(1)).alias("f"), F.min(id_col).alias("bmin")
+        F.count(F.lit(1)).alias("f"), F.min("media_id").alias("bmin")
     )
     cold = (
         a.join(freq.filter(F.col("f") <= hot_bucket_cap).select("fp"), "fp")
@@ -1187,10 +1185,10 @@ def audio_envelope_pairs(
         clean.join(
             freq.filter(F.col("f") > hot_bucket_cap).select("fp", "bmin"), "fp"
         )
-        .filter(F.col(id_col) != F.col("bmin"))
+        .filter(F.col("media_id") != F.col("bmin"))
         .select(
             F.col("bmin").alias("id_a"),
-            F.col(id_col).alias("id_b"),
+            F.col("media_id").alias("id_b"),
             "fp",
         )
     )

@@ -64,7 +64,6 @@ def topk_per_group(
     sim_col: str = "sim",
     tie_col: str = "neighbor_id",
     rank_col: str = "rank",
-    n_salt: int = 32,
 ) -> DataFrame:
     """Two-level deterministic per-group top-k (salted pre-rank).
 
@@ -72,10 +71,10 @@ def topk_per_group(
     relation plans ONE reducer per group, each sorting |corpus| rows —
     fine with 5 queries at sf0.1, a straggler wall at 100 TB (VERDICT
     r2 "What's wrong" #4). Level 1 pre-ranks within (group, salt)
-    buckets — salt = ``hash(tie_col) % n_salt``, deterministic — so the
-    exchange spreads each group across ``n_salt`` reducers and every
-    sort handles |corpus|/n_salt rows; level 2 ranks only the
-    ≤ n_salt·k survivors per group. Both levels use the same total
+    buckets — salt = ``hash(tie_col) % 32``, deterministic — so the
+    exchange spreads each group across 32 reducers and every sort
+    handles |corpus|/32 rows; level 2 ranks only the ≤ 32·k survivors
+    per group. Both levels use the same total
     order (sim desc, tie asc; tie_col unique per group), so a bucket's
     local top-k is a superset of its contribution to the global top-k
     and the result is bit-identical to the single-window plan —
@@ -84,7 +83,7 @@ def topk_per_group(
     order = [F.col(sim_col).desc(), F.col(tie_col).asc()]
     pre_w = Window.partitionBy(group_col, "__salt").orderBy(*order)
     pruned = (
-        scored.withColumn("__salt", F.pmod(F.hash(F.col(tie_col)), F.lit(n_salt)))
+        scored.withColumn("__salt", F.pmod(F.hash(F.col(tie_col)), F.lit(32)))
         .withColumn("__pr", F.row_number().over(pre_w))
         .filter(F.col("__pr") <= k)
         .drop("__salt", "__pr")
@@ -99,10 +98,7 @@ def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 10,
-    sim_decimals: int = 6,
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, sim, rank).
 
@@ -110,13 +106,13 @@ def cosine_topk_bruteforce(
     desc, then neighbor id.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(F.col(vec_col)).alias("qv")
+        F.col("vec_id").alias("query_id"), as_double_array(F.col("embedding")).alias("qv")
     ).withColumn("qn", norm_safe(F.col("qv")))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(F.col(vec_col)).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), as_double_array(F.col("embedding")).alias("cv")
     ).withColumn("cn", norm_safe(F.col("cv")))
 
-    sim = rnd(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), sim_decimals)
+    sim = rnd(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -155,36 +151,29 @@ def cosine_topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    n_planes: int = 6,
     n_tables: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    sim_decimals: int = 6,
 ) -> DataFrame:
-    """Approximate cosine top-k via multi-table random-hyperplane LSH.
+    """Approximate cosine top-10 via multi-table random-hyperplane LSH.
 
-    Each of ``n_tables`` independent plane sets hashes every vector to a
-    2^n_planes bucket; candidates = pairs agreeing in ≥1 table. Exact
-    cosine re-rank inside the candidate set. Recall grows with
+    Each of ``n_tables`` independent sets of 6 planes (64-dim, seeded
+    42 + table) hashes every vector to a 2^6 bucket; candidates = pairs
+    agreeing in ≥1 table. Exact cosine re-rank inside the candidate set. Recall grows with
     ``n_tables``; cost per table is one narrow (id, table, bucket)
     shuffle — this is the 100 TB path because nothing is ever all-pairs.
 
     Bucket assignment is one Arrow-batched numpy matmul against the
-    (n_tables·n_planes, dim) plane matrix — the same dense-linear-
+    (n_tables·6, 64) plane matrix — the same dense-linear-
     algebra path as IVF's ``_probe_udf``. The previous per-plane
     ``zip_with``+``aggregate`` expressions were interpreted (higher-
     order functions don't codegen), costing 17 s at 5k vectors × 24
     tables; the matmul does the identical signs in milliseconds.
     """
-    tables = [random_hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
-    buckets = _buckets_udf(tables, n_planes)
+    tables = [random_hyperplanes(64, 6, 42 + t) for t in range(n_tables)]
+    buckets = _buckets_udf(tables, 6)
 
     def bucketed(df: DataFrame, out_id: str) -> DataFrame:
-        v = as_double_array(F.col(vec_col))
-        rows = df.select(F.col(id_col).alias(out_id), v.alias("v")).select(
+        v = as_double_array(F.col("embedding"))
+        rows = df.select(F.col("vec_id").alias(out_id), v.alias("v")).select(
             out_id, "v", F.posexplode(buckets(F.col("v"))).alias("t", "bkt")
         )
         return rows
@@ -200,10 +189,10 @@ def cosine_topk_lsh(
     )
     sim = rnd(
         dot(F.col("qv"), F.col("cv")) / (norm_safe(F.col("qv")) * norm_safe(F.col("cv"))),
-        sim_decimals,
+        6,
     )
     scored = cand.select("query_id", "neighbor_id", sim.alias("sim"))
-    return topk_per_group(scored, group_col="query_id", k=k)
+    return topk_per_group(scored, group_col="query_id", k=10)
 
 
 def recall_gate(
@@ -247,14 +236,10 @@ def recall_gate(
 def embedding_near_dupes(
     emb: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     block_col: str | None = "label",
     threshold: float = 0.95,
-    sim_decimals: int = 6,
     allow_full_cross: bool = False,
     block_cap: int | None = 1000,
-    cells_per_sqrt_n: int = 1,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b) with cosine ≥ threshold.
 
@@ -291,12 +276,12 @@ def embedding_near_dupes(
     # candidate row across the Python boundary, and the extra
     # serialization was a wash-to-loss vs this interpreted fold (A/B
     # 2.82/2.94 s on semantic_dedup). Kept as the Catalyst expression.
-    sim = rnd(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), sim_decimals)
+    sim = rnd(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
     if block_col is not None and block_cap is not None:
         base = emb.select(
-            F.col(id_col).alias("vec_id"),
+            F.col("vec_id"),
             F.col(block_col).alias("__blk"),
-            as_double_array(F.col(vec_col)).alias("v"),
+            as_double_array(F.col("embedding")).alias("v"),
         ).withColumn("nv", norm_safe(F.col("v")))
         # block-size gate: computed from the CHEAP projection (key
         # space is the bounded block dimension, so it broadcasts) —
@@ -327,7 +312,7 @@ def embedding_near_dupes(
         # broadcast-small and the Catalyst form takes over
         # (bit-identical fold by construction).
         n = emb.count()
-        k = max(1, int(cells_per_sqrt_n) * math.ceil(math.sqrt(max(n, 1))))
+        k = max(1, math.ceil(math.sqrt(max(n, 1))))
         if k <= IVF_KERNEL_MAX_CENTROIDS:
             cent_rows = (
                 base.orderBy("vec_id").limit(k).select("vec_id", "v").collect()
@@ -339,7 +324,7 @@ def embedding_near_dupes(
                 else np.zeros((0, 0), dtype=np.float64)
             )
             top1 = topk_vs_ref_udf(
-                c_ids, c_mat, k=1, sim_decimals=sim_decimals, exclude_self=False
+                c_ids, c_mat, k=1, sim_decimals=6, exclude_self=False
             )
             assigned = sized.filter(F.col("__bs") > block_cap).select(
                 "__blk",
@@ -360,7 +345,7 @@ def embedding_near_dupes(
                     F.col("nv").alias("nc"),
                 )
             )
-            csim = _finite_csim(sim_decimals)
+            csim = _finite_csim(6)
             wc = Window.partitionBy("vec_id").orderBy(
                 F.col("csim").desc(), F.col("cid")
             )
@@ -395,14 +380,14 @@ def embedding_near_dupes(
             pairs.select("id_a", "id_b", sim.alias("sim"))
             .filter(F.col("sim") >= threshold)
         )
-    v = as_double_array(F.col(vec_col))
-    base = emb.select(F.col(id_col), *( [F.col(block_col)] if block_col else [] ), v.alias("v")).withColumn("n", norm_safe(F.col("v")))
+    v = as_double_array(F.col("embedding"))
+    base = emb.select(F.col("vec_id"), *( [F.col(block_col)] if block_col else [] ), v.alias("v")).withColumn("n", norm_safe(F.col("v")))
     a = base.select(
-        F.col(id_col).alias("id_a"), *([F.col(block_col)] if block_col else []),
+        F.col("vec_id").alias("id_a"), *([F.col(block_col)] if block_col else []),
         F.col("v").alias("va"), F.col("n").alias("na"),
     )
     b = base.select(
-        F.col(id_col).alias("id_b"), *([F.col(block_col)] if block_col else []),
+        F.col("vec_id").alias("id_b"), *([F.col(block_col)] if block_col else []),
         F.col("v").alias("vb"), F.col("n").alias("nb"),
     )
     on = [block_col] if block_col else None
@@ -418,32 +403,19 @@ def embedding_near_dupes(
 # ---------------------------------------------------------------------------
 
 
-def train_ivf_centroids(
-    corpus: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    seed: int = 42,
-    max_iter: int = 10,
-    sample_fraction: float | None = None,
-) -> np.ndarray:
+def train_ivf_centroids(corpus: DataFrame, *, n_clusters: int = 16) -> np.ndarray:
     """Spherical k-means centroids (unit-normalized in and out).
 
-    Distributed KMeans (pyspark.ml) over unit vectors, so Euclidean
-    assignment == cosine assignment. At 100 TB train on a bounded
-    ``sample_fraction`` — centroid quality needs ~1e3 points per
-    cluster, not the full corpus; the full pass is only the (cheap,
-    single-shuffle) assignment step.
+    Distributed KMeans (pyspark.ml, seed 42, 10 iterations) over the
+    unit ``embedding`` vectors, so Euclidean assignment == cosine
+    assignment.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    df = corpus
-    if sample_fraction is not None:
-        df = df.sample(fraction=sample_fraction, seed=seed)
-    v = as_double_array(F.col(vec_col))
+    v = as_double_array(F.col("embedding"))
     unit = (
-        df.select(v.alias("v"))
+        corpus.select(v.alias("v"))
         .withColumn("n", norm_safe(F.col("v")))
         .select(
             array_to_vector(
@@ -451,7 +423,7 @@ def train_ivf_centroids(
             ).alias("features")
         )
     )
-    model = KMeans(k=n_clusters, seed=seed, maxIter=max_iter).fit(unit)
+    model = KMeans(k=n_clusters, seed=42, maxIter=10).fit(unit)
     centers = np.stack([np.asarray(c) for c in model.clusterCenters()])
     norms = np.linalg.norm(centers, axis=1, keepdims=True)
     norms[norms == 0.0] = 1.0
@@ -461,8 +433,6 @@ def train_ivf_centroids(
 def ivf_cells_seeded(
     emb: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     cells_per_sqrt_n: int = 4,
     sim_decimals: int = 6,
 ) -> DataFrame:
@@ -494,7 +464,7 @@ def ivf_cells_seeded(
     # drops the 2×dim per-pair norm work (higher-order functions are
     # interpreted — this is the stage's hot loop)
     e = emb.select(
-        F.col(id_col).alias("vec_id"), as_double_array(F.col(vec_col)).alias("v")
+        F.col("vec_id"), as_double_array(F.col("embedding")).alias("v")
     ).withColumn("nv", norm_safe(F.col("v")))
     # K lowest ids BY RANK, not by `id < K`: offset/sparse id spaces
     # would otherwise yield fewer (or zero) centroids and silently
@@ -586,16 +556,12 @@ def pq_train_codebooks(
     *,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    seed: int = 42,
-    max_iter: int = 10,
-    train_limit: int = 2048,
 ) -> np.ndarray:
-    """(n_subspaces, n_codes, dim/n_subspaces) codebooks via per-subspace
-    Lloyd's k-means on a DETERMINISTIC sample (ordered by id, capped at
-    ``train_limit`` — codebook quality needs thousands of points, not
-    the corpus; the distributed work is encode/scan, not training).
+    """(8, 16, dim/8) codebooks: 8 subspaces of 16 codes each, via
+    per-subspace Lloyd's k-means (10 iterations, seed 42) on a
+    DETERMINISTIC sample (ordered by id, capped at 2048 rows — codebook
+    quality needs thousands of points, not the corpus; the distributed
+    work is encode/scan, not training).
 
     Vectors are unit-normalized before splitting so ADC inner products
     sum to cosine similarity.
@@ -603,7 +569,7 @@ def pq_train_codebooks(
     rows = (
         corpus.select(F.col(id_col).alias("i"), as_double_array(F.col(vec_col)).alias("v"))
         .orderBy("i")
-        .limit(train_limit)
+        .limit(2048)
         .collect()
     )
     x = np.stack([np.asarray(r.v, dtype=np.float64) for r in rows])
@@ -611,15 +577,15 @@ def pq_train_codebooks(
     # NaNs (they'd silently corrupt every downstream ADC score)
     x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     dim = x.shape[1]
-    assert dim % n_subspaces == 0, (dim, n_subspaces)
-    sub = dim // n_subspaces
-    rng = np.random.default_rng(seed)
-    n_codes = min(n_codes, len(x))  # can't have more centroids than points
-    books = np.empty((n_subspaces, n_codes, sub))
-    for s in range(n_subspaces):
+    assert dim % 8 == 0, dim
+    sub = dim // 8
+    rng = np.random.default_rng(42)
+    n_codes = min(16, len(x))  # can't have more centroids than points
+    books = np.empty((8, n_codes, sub))
+    for s in range(8):
         xs = x[:, s * sub : (s + 1) * sub]
         centers = xs[rng.choice(len(xs), size=n_codes, replace=False)].copy()
-        for _ in range(max_iter):
+        for _ in range(10):
             d = ((xs[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
             assign = d.argmin(axis=1)
             for c in range(n_codes):
@@ -677,10 +643,6 @@ def cosine_topk_pq(
     id_col: str = "vec_id",
     k: int = 10,
     shortlist: int = 50,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    seed: int = 42,
-    sim_decimals: int = 6,
     books: np.ndarray | None = None,
     query_chunk: int = 256,
     codes: DataFrame | None = None,
@@ -692,8 +654,8 @@ def cosine_topk_pq(
     persisted PQ index — operators/ann_index) skips the encode pass;
     it must have been encoded with the SAME ``books``.
 
-    Scale shape: the scan reads n_subspaces bytes per corpus row (the
-    codes), scores them with per-query lookup tables riding in the UDF
+    Scale shape: the scan reads 8 bytes per corpus row (the codes, one
+    per subspace), scores them with per-query lookup tables riding in the UDF
     closure, and only ``shortlist`` rows per query ever touch the
     full-precision vectors again (a narrow semi join) — the corpus
     itself is never broadcast, shuffled, or re-read at full width.
@@ -701,14 +663,14 @@ def cosine_topk_pq(
     QUERY-SIDE BOUND: the query set is collected to the driver and its
     ADC lookup tables ship in the UDF closure — correct for bounded
     query BATCHES, not an unbounded query stream. Memory is
-    Q × n_subspaces × n_codes doubles of LUT per executor plus a
+    Q × 8 × 16 doubles of LUT per executor plus a
     Q × arrow_batch score matrix per task, and the scored relation is
     Q rows per corpus row before the two-level top-k. ``query_chunk``
     keeps both bounded regardless of Q: query sets larger than the
     chunk are processed as independent ≤chunk-sized ADC scans over the
     same trained codebooks/code table and unioned before the re-rank —
     closure and score-matrix memory stay O(chunk), at the cost of one
-    extra corpus-code scan per chunk (the codes are n_subspaces bytes
+    extra corpus-code scan per chunk (the codes are 8 bytes
     per row, so each scan is narrow). For a truly unbounded/streaming
     query side, flip the asymmetry: persist the code table (done here)
     and drive chunks from the stream via foreachBatch.
@@ -716,14 +678,7 @@ def cosine_topk_pq(
     from pyspark.sql.functions import pandas_udf
 
     if books is None:
-        books = pq_train_codebooks(
-            corpus,
-            vec_col=vec_col,
-            id_col=id_col,
-            n_subspaces=n_subspaces,
-            n_codes=n_codes,
-            seed=seed,
-        )
+        books = pq_train_codebooks(corpus, vec_col=vec_col, id_col=id_col)
     if codes is None:
         codes = pq_encode(corpus, books, vec_col=vec_col, id_col=id_col)
     else:
@@ -787,7 +742,7 @@ def cosine_topk_pq(
     q_full = queries.select(
         F.col(id_col).alias("query_id"), as_double_array(F.col(vec_col)).alias("qv")
     ).withColumn("qn", norm_safe(F.col("qv")))
-    sim = rnd(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), sim_decimals)
+    sim = rnd(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
     reranked = (
         short.join(c_full, "neighbor_id")
         .join(F.broadcast(q_full), "query_id")
@@ -801,33 +756,25 @@ def cosine_topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    sim_decimals: int = 6,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
-    """Approximate cosine top-k via IVF: (query_id, neighbor_id, sim, rank).
+    """Approximate cosine top-10 via IVF: (query_id, neighbor_id, sim, rank).
 
     Corpus vectors are assigned to their nearest centroid (1 probe);
-    each query probes its ``n_probe`` nearest clusters and re-ranks
-    exactly inside them. Scale shape: the corpus is touched once for
-    assignment (narrow shuffle on cluster id), queries broadcast, and
-    the exact dot products run on |corpus| × n_probe / n_clusters
-    candidates instead of all pairs. Self-matches excluded.
+    each query probes its 8 nearest clusters (of 16 trained when no
+    ``centroids`` are given) and re-ranks exactly inside them. Scale
+    shape: the corpus is touched once for assignment (narrow shuffle on
+    cluster id), queries broadcast, and the exact dot products run on
+    |corpus| × 8 / 16 candidates instead of all pairs. Self-matches
+    excluded.
     """
     if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, vec_col=vec_col, n_clusters=n_clusters, seed=seed
-        )
+        centroids = train_ivf_centroids(corpus)
 
     def prep(df: DataFrame, out_id: str, n_probe_: int) -> DataFrame:
-        v = as_double_array(F.col(vec_col))
+        v = as_double_array(F.col("embedding"))
         base = (
-            df.select(F.col(id_col).alias(out_id), v.alias("v"))
+            df.select(F.col("vec_id").alias(out_id), v.alias("v"))
             .withColumn("n", norm_safe(F.col("v")))
             .withColumn(
                 "uv", F.transform(F.col("v"), lambda x: x / F.col("n"))
@@ -846,7 +793,7 @@ def cosine_topk_ivf(
         )
     )
     q = (
-        prep(queries, "query_id", n_probe)
+        prep(queries, "query_id", 8)
         .select(
             "query_id",
             F.col("v").alias("qv"),
@@ -855,13 +802,13 @@ def cosine_topk_ivf(
         )
     )
 
-    sim = rnd(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), sim_decimals)
+    sim = rnd(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
     scored = (
         c.join(F.broadcast(q), on="cid")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", sim.alias("sim"))
     )
-    return topk_per_group(scored, group_col="query_id", k=k)
+    return topk_per_group(scored, group_col="query_id", k=10)
 
 
 # ---------------------------------------------------------------------------
@@ -877,8 +824,6 @@ def cosine_topk_ivf(
 def kmeans_lloyd_full(
     emb: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 4,
     iters: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
@@ -913,11 +858,11 @@ def kmeans_lloyd_full(
     if k < 1 or iters < 1:
         raise ValueError("k and iters must be >= 1")
     comp = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.posexplode(as_double_array(F.col(vec_col))).alias("pos", "x"),
+        "vec_id",
+        F.posexplode(as_double_array(F.col("embedding"))).alias("pos", "x"),
     )
     seeds = (
-        emb.select(F.col(id_col).alias("vec_id"))
+        emb.select("vec_id")
         .orderBy("vec_id")
         .limit(k)
         .withColumn(
@@ -991,14 +936,7 @@ def kmeans_lloyd_full(
     return assign, cent
 
 
-def power_iteration_top_component(
-    emb: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    iters: int = 3,
-) -> DataFrame:
+def power_iteration_top_component(emb: DataFrame, *, dim: int = 64) -> DataFrame:
     """Distributed power iteration for the TOP PRINCIPAL DIRECTION of
     the (uncentered) mean Gram matrix Σ = (1/N)·Σᵢ vᵢvᵢᵀ — the
     dominant axis an embedding-compression / whitening / drift-audit
@@ -1007,7 +945,7 @@ def power_iteration_top_component(
     shuffle, never a driver-side matrix).
 
     Returns the ``dim``-row relation (pos, component6, eig_mean_gram6)
-    — the unit eigenvector estimate after ``iters`` rounds plus the
+    — the unit eigenvector estimate after 3 rounds plus the
     Rayleigh-style eigenvalue estimate ‖Σx‖ (x unit) from the last
     round.
 
@@ -1027,14 +965,11 @@ def power_iteration_top_component(
     Scale: per round, the x iterate is a dim-row broadcast; s = vᵀx is
     one (vec_id-keyed) partial agg over the exploded components, and
     y = Σ vᵢsᵢ one (pos-keyed) partial agg — both map-side combinable.
-    Production iteration counts fence the iterate every ``FENCE_EVERY``
-    rounds; the default demo depth stays lazy.
+    Three rounds stay below ``FENCE_EVERY``, so the plan stays lazy.
     """
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
     comp = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.posexplode(as_double_array(F.col(vec_col))).alias("pos", "x"),
+        "vec_id",
+        F.posexplode(as_double_array(F.col("embedding"))).alias("pos", "x"),
     )
     n_df = emb.agg(F.count(F.lit(1)).cast("long").alias("n"))
     spark = emb.sparkSession
@@ -1044,7 +979,7 @@ def power_iteration_top_component(
     )
     q12 = F.lit(10**12)
     nr = None
-    for rounds_done in range(1, iters + 1):
+    for _ in range(3):
         s = (
             comp.join(F.broadcast(x), "pos")
             .groupBy("vec_id")
@@ -1086,8 +1021,6 @@ def power_iteration_top_component(
         x = y.crossJoin(F.broadcast(nr)).select(
             "pos", rnd(F.col("y6") / F.col("norm6"), 6).alias("xv")
         )
-        if rounds_done % FENCE_EVERY == 0 and rounds_done < iters:
-            x = fence(x)
     return (
         x.crossJoin(F.broadcast(nr))
         .select(
@@ -1184,36 +1117,32 @@ def fold_norms(M: np.ndarray) -> np.ndarray:
 def collect_ref_vectors(
     df: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     limit: int | None = None,
-    max_rows: int = REF_PIN_MAX_ROWS,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic driver-side pin of a BOUNDED reference vector set
     (ordered by id, optionally capped): (ids int64 (m,), mat float64
     (m, D)). float→double casts are exact, so the matrix holds the
     identical doubles the JVM sees.
 
-    The pin is HARD-capped at ``max_rows`` (default
-    :data:`REF_PIN_MAX_ROWS`): the bounded-reference convention is
+    The pin is HARD-capped at :data:`REF_PIN_MAX_ROWS`: the bounded-reference convention is
     enforced here, not by call-site discipline — an unbounded caller
     raises instead of collecting a corpus to the driver."""
-    if limit is not None and limit > max_rows:
+    if limit is not None and limit > REF_PIN_MAX_ROWS:
         raise ValueError(
             f"collect_ref_vectors limit={limit} exceeds the reference-pin "
-            f"cap ({max_rows}); reference sets must be bounded"
+            f"cap ({REF_PIN_MAX_ROWS}); reference sets must be bounded"
         )
     sel = df.select(
-        F.col(id_col).cast("long").alias("i"),
-        as_double_array(F.col(vec_col)).alias("v"),
+        F.col("vec_id").cast("long").alias("i"),
+        as_double_array(F.col("embedding")).alias("v"),
     ).orderBy("i")
-    # limit(max_rows + 1) keeps the collect bounded even for an
+    # limit(REF_PIN_MAX_ROWS + 1) keeps the collect bounded even for an
     # unbounded caller; the +1 row is the overflow detector
-    sel = sel.limit(limit if limit is not None else max_rows + 1)
+    sel = sel.limit(limit if limit is not None else REF_PIN_MAX_ROWS + 1)
     rows = sel.collect()
-    if len(rows) > max_rows:
+    if len(rows) > REF_PIN_MAX_ROWS:
         raise ValueError(
-            f"collect_ref_vectors got >{max_rows} rows with no explicit "
+            f"collect_ref_vectors got >{REF_PIN_MAX_ROWS} rows with no explicit "
             "limit; reference sets must be bounded by construction"
         )
     ids = np.array([r.i for r in rows], dtype=np.int64)
@@ -1223,12 +1152,12 @@ def collect_ref_vectors(
     return ids, mat
 
 
-def knn_mean_dist_udf(ref_ids: np.ndarray, ref_mat: np.ndarray, *, k: int = 5):
-    """vec_id, v(double[]) → mean 6-dp cosine distance to the k nearest
+def knn_mean_dist_udf(ref_ids: np.ndarray, ref_mat: np.ndarray):
+    """vec_id, v(double[]) → mean 6-dp cosine distance to the 5 nearest
     references (self excluded) — the embedding_outlier_knn score, bit-
     identical to the broadcast-array Catalyst form: distances quantize
-    to 1e-6 integers before selection, so the k-smallest multiset (and
-    its integer sum) is exact; the final mean replays rnd((Σ/1e6)/k, 6).
+    to 1e-6 integers before selection, so the 5-smallest multiset (and
+    its integer sum) is exact; the final mean replays rnd((Σ/1e6)/5, 6).
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -1245,9 +1174,9 @@ def knn_mean_dist_udf(ref_ids: np.ndarray, ref_mat: np.ndarray, *, k: int = 5):
         out = np.empty(len(V), dtype=np.float64)
         for j in range(len(V)):
             m = ki[j][ref_ids != idv[j]]
-            sel = np.partition(m, k - 1)[:k] if m.size > k else m
+            sel = np.partition(m, 4)[:5] if m.size > 5 else m
             s = float(sel.sum())
-            out[j] = np.floor(((s / 1000000) / k) * 1000000 + 0.5) / 1000000
+            out[j] = np.floor(((s / 1000000) / 5) * 1000000 + 0.5) / 1000000
         return pd.Series(out)
 
     return score
@@ -1302,12 +1231,7 @@ def topk_vs_ref_udf(
     return topk
 
 
-def sims_vs_ref_udf(
-    ref_ids: np.ndarray,
-    ref_mat: np.ndarray,
-    *,
-    sim_decimals: int = 6,
-):
+def sims_vs_ref_udf(ref_ids: np.ndarray, ref_mat: np.ndarray):
     """vec_id, v(double[]) → ALL (ref_id, sim) pairs for the row (self
     excluded), 6-dp-quantized — the scored relation of
     cosine_topk_bruteforce when the QUERY side is the pinned bounded
@@ -1316,7 +1240,7 @@ def sims_vs_ref_udf(
     from pyspark.sql.functions import pandas_udf
 
     rnorm = fold_norms(ref_mat)
-    scale = float(10**sim_decimals)
+    scale = 1e6
 
     @pandas_udf("array<struct<query_id:bigint,sim:double>>")
     def sims(ids: pd.Series, vs: pd.Series) -> pd.Series:
@@ -1347,10 +1271,7 @@ def cosine_topk_vs_pinned_queries(
     ref_ids: np.ndarray,
     ref_mat: np.ndarray,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 10,
-    sim_decimals: int = 6,
 ) -> DataFrame:
     """Drop-in replacement for cosine_topk_bruteforce when the query
     set is already pinned driver-side (bounded by construction):
@@ -1360,15 +1281,13 @@ def cosine_topk_vs_pinned_queries(
     per-query global top-k stays the salted two-level window."""
     scored = (
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double_array(F.col(vec_col)).alias("__v"),
+            F.col("vec_id").alias("neighbor_id"),
+            as_double_array(F.col("embedding")).alias("__v"),
         )
         .select(
             "neighbor_id",
             F.explode(
-                sims_vs_ref_udf(ref_ids, ref_mat, sim_decimals=sim_decimals)(
-                    "neighbor_id", "__v"
-                )
+                sims_vs_ref_udf(ref_ids, ref_mat)("neighbor_id", "__v")
             ).alias("__s"),
         )
         .select("__s.query_id", "neighbor_id", "__s.sim")

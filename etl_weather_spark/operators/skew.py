@@ -29,21 +29,20 @@ def salted_join(
     *,
     n_salts: int = 8,
     how: str = "inner",
-    entropy_cols: list[str] | None = None,
 ) -> DataFrame:
     """Equi-join with the left (skewed/fact) side salted.
 
-    The salt must be DETERMINISTIC per row (a hash of payload columns,
-    ``entropy_cols``), never ``rand()`` — task retries and speculative
-    execution re-evaluate the expression, and a retried task that
-    re-rolls its salt would route rows to a different partition than
-    the shuffle files already written. Defaults to all non-key columns.
+    The salt must be DETERMINISTIC per row (a hash of all the left
+    side's non-key columns), never ``rand()`` — task retries and
+    speculative execution re-evaluate the expression, and a retried task
+    that re-rolls its salt would route rows to a different partition
+    than the shuffle files already written.
 
     Row-multiplicity semantics match a plain join for 'inner' and
     'left': each left row joins the single replicated copy of the right
     side that carries its salt.
     """
-    entropy_cols = entropy_cols or [c for c in left.columns if c != on]
+    entropy_cols = [c for c in left.columns if c != on]
     salt: Column = F.pmod(F.xxhash64(*[F.col(c) for c in entropy_cols]), F.lit(n_salts))
     lt = left.withColumn("__salt", salt)
     rt = right.withColumn(

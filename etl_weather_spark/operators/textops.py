@@ -67,9 +67,9 @@ def quality_score(text: Column) -> Column:
     return rnd(score, 4)
 
 
-def doc_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_profile(docs: DataFrame) -> DataFrame:
     """Full per-document text profile: tokens, BPE-ish tokens, lang, quality."""
-    t = F.col(text_col)
+    t = F.col("text")
     return docs.select(
         "*",
         token_count(t).alias("n_tokens"),
@@ -79,19 +79,12 @@ def doc_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def chunk_documents(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    size: int = 50,
-    stride: int = 40,
-) -> DataFrame:
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """Split each document into overlapping token-window chunks — the
-    context-window prep step of a training-data pipeline (chunk size
-    ``size`` tokens, step ``stride``, so consecutive chunks overlap by
-    ``size - stride`` tokens).
+    context-window prep step of a training-data pipeline (chunks of 50
+    tokens, step 40, so consecutive chunks overlap by 10 tokens).
 
-    Chunk starts are 0, stride, 2*stride, ... while start < n_tokens, so
+    Chunk starts are 0, 40, 80, ... while start < n_tokens, so
     every token is covered and a short document still yields one chunk.
 
     PERF: tokenization happens in the projection FEEDING the explode —
@@ -99,31 +92,29 @@ def chunk_documents(
     inlining the regex into per-chunk expressions (the [[spark-hof-
     lambda-inlining]] trap); after the explode, ``F.slice`` is a plain
     array op, not a per-element lambda. Scale: explode amplifies rows
-    by ~n_tokens/stride (the inherent cost of overlap-chunking); the
+    by ~n_tokens/40 (the inherent cost of overlap-chunking); the
     op is shuffle-free — chunks stay on their document's partition.
     """
     from etl_weather_spark.operators.dedup import tokens
 
-    if stride <= 0 or size <= 0 or stride > size:
-        raise ValueError("need 0 < stride <= size")
     toks = docs.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
+        F.col("doc_id"), tokens(F.col("text")).alias("_toks")
     ).withColumn("_n", F.size("_toks"))
-    n_chunks = F.floor((F.col("_n") + stride - 1) / F.lit(stride)).cast("int")
+    n_chunks = F.floor((F.col("_n") + 40 - 1) / F.lit(40)).cast("int")
     return (
         toks.select(
-            id_col,
+            "doc_id",
             "_toks",
             F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_id",
-            (F.col("chunk_id") * stride).alias("chunk_start"),
-            F.slice(F.col("_toks"), F.col("chunk_id") * stride + 1, size).alias("_c"),
+            (F.col("chunk_id") * 40).alias("chunk_start"),
+            F.slice(F.col("_toks"), F.col("chunk_id") * 40 + 1, 50).alias("_c"),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_id",
             "chunk_start",
             F.size("_c").alias("n_tokens"),
@@ -215,7 +206,7 @@ def pii_scrub(text: Column) -> Column:
     return out
 
 
-def ngram_repetition_profile(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
+def ngram_repetition_profile(docs: DataFrame) -> DataFrame:
     """Gopher-rule n-gram repetition signals per document (Rae et al.
     2021, "Scaling Language Models", Table A1): the fraction of a
     document's CHARACTERS covered by duplicated word n-grams (n=2,3)
@@ -241,7 +232,7 @@ def ngram_repetition_profile(docs: DataFrame, *, text_col: str = "text") -> Data
     """
     w_pos = Window.partitionBy("doc_id").orderBy("pos")
     toks = docs.select(
-        F.col("doc_id"), F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok")
+        F.col("doc_id"), F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok")
     ).filter(F.col("tok") != "")
     g = fence(toks.select(
         "doc_id",
@@ -341,7 +332,7 @@ def ngram_repetition_profile(docs: DataFrame, *, text_col: str = "text") -> Data
     )
 
 
-def token_entropy_profile(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
+def token_entropy_profile(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, token_entropy) — per-doc token-level Shannon
     entropy in bits, the cheap perplexity proxy quality filters use
     (low entropy = repetitive keyword soup, near-log2(n) = no reuse).
@@ -358,7 +349,7 @@ def token_entropy_profile(docs: DataFrame, *, text_col: str = "text") -> DataFra
     from etl_weather_spark.functions.rounding import dsum
     from etl_weather_spark.operators.dedup import tokens
 
-    tok = docs.select("doc_id", F.explode(tokens(F.col(text_col))).alias("t"))
+    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
     cnt = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("c"))
     agg = cnt.groupBy("doc_id").agg(
         dsum(F.col("c").cast("double") * F.log2("c"), 6).alias("__s"),
@@ -368,9 +359,7 @@ def token_entropy_profile(docs: DataFrame, *, text_col: str = "text") -> DataFra
     return agg.select("doc_id", "n_tokens", ent.alias("token_entropy"))
 
 
-def vocab_coverage(
-    docs: DataFrame, *, text_col: str = "text", vocab_k: int = 100
-) -> DataFrame:
+def vocab_coverage(docs: DataFrame, *, vocab_k: int = 100 ) -> DataFrame:
     """(doc_id, n_tokens, n_oov, oov_rate) — per-doc out-of-vocabulary
     token share against the corpus's own top-``vocab_k`` token
     vocabulary (frequency desc, token asc tie-break). The tokenizer-fit
@@ -384,7 +373,7 @@ def vocab_coverage(
     """
     from etl_weather_spark.operators.dedup import tokens
 
-    tok = docs.select("doc_id", F.explode(tokens(F.col(text_col))).alias("t"))
+    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
     freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("__f"))
     vocab = (
         freq.orderBy(F.col("__f").desc(), F.col("t"))
@@ -404,11 +393,9 @@ def vocab_coverage(
     )
 
 
-def shared_shingle_fraction(
-    docs: DataFrame, *, text_col: str = "text", min_df: int = 2, shingle_n: int = 3
-) -> DataFrame:
+def shared_shingle_fraction(docs: DataFrame) -> DataFrame:
     """(doc_id, n_shingles, n_shared, shared_fraction) — the share of a
-    doc's DISTINCT word n-grams that also appear in ≥ ``min_df`` docs:
+    doc's DISTINCT word 3-grams that also appear in ≥ 2 docs:
     the boilerplate/near-dup saturation signal C4-style cleaners
     threshold on (a doc made of corpus-common phrasing carries little
     novel text).
@@ -419,14 +406,12 @@ def shared_shingle_fraction(
     """
     from etl_weather_spark.operators.dedup import exploded_shingles
 
-    sh = exploded_shingles(
-        docs, text_col=text_col, keep_cols=["doc_id"], n=shingle_n
-    )
+    sh = exploded_shingles(docs, text_col="text", keep_cols=["doc_id"], n=3)
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
     joined = sh.join(dfreq, "sh")
     out = joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_shingles"),
-        F.sum(F.when(F.col("__df") >= min_df, 1).otherwise(0))
+        F.sum(F.when(F.col("__df") >= 2, 1).otherwise(0))
         .cast("long")
         .alias("n_shared"),
     )
@@ -436,7 +421,7 @@ def shared_shingle_fraction(
     )
 
 
-def unigram_logprob_profile(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
+def unigram_logprob_profile(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, avg_nll) — average per-token negative
     log2-probability under the corpus's OWN unigram LM, the CCNet-style
     perplexity filter: low avg_nll = built from corpus-common tokens,
@@ -453,7 +438,7 @@ def unigram_logprob_profile(docs: DataFrame, *, text_col: str = "text") -> DataF
     from etl_weather_spark.functions.rounding import dsum
     from etl_weather_spark.operators.dedup import tokens
 
-    tok = docs.select("doc_id", F.explode(tokens(F.col(text_col))).alias("t"))
+    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
     cnt_doc = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("c_d"))
     freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
     total = freq.agg(F.sum("c").cast("long").alias("__total"))

@@ -1,9 +1,10 @@
 """Window/analytic operators (reference parity: W1-W4, A6, A8).
 
-Scale notes: every function takes explicit partition keys. An
-unpartitioned ``Window.orderBy`` collapses to a single task — fine for
-one city's 16-day series, catastrophic at 100 TB — so callers must
-partition by city/entity; the helpers default to that.
+Scale notes: an unpartitioned ``Window.orderBy`` collapses to a single
+task — fine for one city's 16-day series, catastrophic at 100 TB.
+``trailing_mean`` and ``pct_diff_vs_next`` order one such series (by
+``date`` / ``rank``) in a single window; ``centered_mean`` partitions by
+``event_type``.
 """
 
 from __future__ import annotations
@@ -38,43 +39,30 @@ def trailing_mean(
     value_col: str,
     out_col: str,
     *,
-    order_by: str = "date",
-    partition_by: list[str] | None = None,
-    window: int = 7,
-    min_periods: int | None = None,
     exact_scale: int | None = None,
 ) -> DataFrame:
-    """Trailing moving average with pandas ``rolling(window).mean()`` parity.
+    """7-row trailing moving average over ``date`` with pandas
+    ``rolling(7).mean()`` parity.
 
     Reference viz.py:77 uses pandas' default ``min_periods=window`` —
-    the first ``window-1`` rows yield null. Spark's ``rowsBetween``
-    averages partial frames, so we gate on the frame row count
-    (SURVEY.md §7.3).
+    the first 6 rows yield null. Spark's ``rowsBetween`` averages
+    partial frames, so we gate on the frame row count (SURVEY.md §7.3).
     """
-    min_periods = window if min_periods is None else min_periods
-    frame = _spec(partition_by or [], order_by).rowsBetween(-(window - 1), 0)
+    frame = _spec([], "date").rowsBetween(-6, 0)
     avg = _frame_avg(value_col, frame, exact_scale)
     cnt = F.count(value_col).over(frame)
-    return df.withColumn(out_col, F.when(cnt >= min_periods, rnd(avg, 2)))
+    return df.withColumn(out_col, F.when(cnt >= 7, rnd(avg, 2)))
 
 
-def centered_mean(
-    df: DataFrame,
-    value_col: str,
-    out_col: str,
-    *,
-    order_by: str = "date",
-    partition_by: list[str] | None = None,
-    half_width: int = 1,
-    exact_scale: int | None = None,
-) -> DataFrame:
-    """Centered moving average (reference app.js:859-872, window=3 centered).
+def centered_mean(df: DataFrame, value_col: str, out_col: str) -> DataFrame:
+    """Centered moving average (reference app.js:859-872, window=3 centered)
+    over ``date`` per ``event_type``, decimal-accumulated at scale 2.
 
     The JS version averages whatever neighbors exist (edges use partial
     windows), so no min_periods gate here.
     """
-    frame = _spec(partition_by or [], order_by).rowsBetween(-half_width, half_width)
-    return df.withColumn(out_col, rnd(_frame_avg(value_col, frame, exact_scale), 2))
+    frame = _spec(["event_type"], "date").rowsBetween(-1, 1)
+    return df.withColumn(out_col, rnd(_frame_avg(value_col, frame, 2), 2))
 
 
 def minmax_normalize(
@@ -96,18 +84,12 @@ def minmax_normalize(
     return df.withColumn(out_col, rnd(norm, 4))
 
 
-def pct_diff_vs_next(
-    df: DataFrame,
-    value_col: str,
-    out_col: str = "pct_diff_vs_next",
-    *,
-    rank_col: str = "rank",
-    partition_by: list[str] | None = None,
-) -> DataFrame:
-    """% difference of each row vs the next-ranked row (reference app.js:975-979)."""
-    w = Window.partitionBy(*(partition_by or [])).orderBy(rank_col)
+def pct_diff_vs_next(df: DataFrame, value_col: str) -> DataFrame:
+    """``pct_diff_vs_next``: % difference of each row vs the next row by
+    ``rank`` (reference app.js:975-979)."""
+    w = Window.partitionBy().orderBy("rank")
     nxt = F.lead(value_col).over(w)
     return df.withColumn(
-        out_col,
+        "pct_diff_vs_next",
         rnd((F.col(value_col) - nxt) / F.abs(nxt) * 100.0, 1),
     )

@@ -123,7 +123,7 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_weather_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = load(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5)
+    pairs = ngram_jaccard_pairs(docs, min_jaccard=0.5)
     return pairs.select("id_a", "id_b", rnd(F.col("jaccard"), 4).alias("jaccard"))
 
 @query("prefix_filter_jaccard", _JACCARD05_SQL)
@@ -148,8 +148,8 @@ def prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    cand = prefix_filter_candidates(docs, shingle_n=3, min_jaccard=0.5)
-    pairs = verify_candidates_jaccard(docs, cand, shingle_n=3, min_jaccard=0.5)
+    cand = prefix_filter_candidates(docs, min_jaccard=0.5)
+    pairs = verify_candidates_jaccard(docs, cand, min_jaccard=0.5)
     return pairs.select("id_a", "id_b", rnd(F.col("jaccard"), 4).alias("jaccard"))
 
 _MINHASH_SIG_SQL = ",\n".join(
@@ -204,7 +204,7 @@ def minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
-        docs, num_hashes=8, bands=4, shingle_n=3, hash_family="md5"
+        docs, num_hashes=8, shingle_n=3, hash_family="md5"
     )
 
 def _simhash_oracle_sql() -> str:
@@ -509,10 +509,11 @@ def winnow_candidates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # inline per-pair verify: the candidate table has ONE consumer, so
     # the rolling-hash UDF runs exactly once with no persist barrier
-    # (max_doc_freq=100 bounds per-doc pair multiplicity, the regime
+    # (winnow_candidates' 100-doc posting cap bounds per-doc pair
+    # multiplicity, the regime
     # where per-pair text verify beats the shingle-set join)
-    cand = winnow_candidates(docs, k=20, min_shared=10, max_doc_freq=100)
-    verified = verify_pairs_jaccard_inline(docs, cand, shingle_n=3, min_jaccard=0.5)
+    cand = winnow_candidates(docs, k=20, min_shared=10)
+    verified = verify_pairs_jaccard_inline(docs, cand)
     return verified.select("id_a", "id_b", rnd(F.col("jaccard"), 4).alias("jaccard"))
 
 @query("minhash_lsh_fast", _JACCARD05_SQL)
@@ -536,8 +537,8 @@ def minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    cand = minhash_lsh_pairs(docs, num_hashes=16, bands=4, hash_family="xxhash64")
-    verified = verify_pairs_jaccard_inline(docs, cand, shingle_n=3, min_jaccard=0.5)
+    cand = minhash_lsh_pairs(docs, num_hashes=16, hash_family="xxhash64")
+    verified = verify_pairs_jaccard_inline(docs, cand)
     return verified.select("id_a", "id_b", rnd(F.col("jaccard"), 4).alias("jaccard"))
 
 @query(
@@ -593,9 +594,7 @@ def fuzzy_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_weather_spark.operators.linkage import fuzzy_join_blocked
 
     p = load(spark, sf_dir, "part")
-    pairs = fuzzy_join_blocked(
-        p, p, left_col="p_name", right_col="p_name", max_dist=2, q=3
-    )
+    pairs = fuzzy_join_blocked(p, p, left_col="p_name", right_col="p_name")
     return (
         pairs.filter(F.col("name_a") < F.col("name_b"))
         .orderBy("edit_dist", "name_a", "name_b")
@@ -1054,7 +1053,7 @@ def shared_shingle_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    return ssf(docs, min_df=2, shingle_n=3).orderBy("doc_id")
+    return ssf(docs).orderBy("doc_id")
 
 _CROSS_DEDUP_SQL = f"""
 WITH pairs AS ({_JACCARD05_SQL}),
@@ -1093,9 +1092,9 @@ def incremental_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = docs.filter(F.col("source") == "src0")
     batch = docs.filter(F.col("source") != "src0")
     cand = minhash_lsh_cross_pairs(
-        index, batch, num_hashes=16, bands=4, hash_family="xxhash64"
+        index, batch, bands=4
     ).select(F.col("index_id").alias("id_a"), F.col("new_id").alias("id_b"))
-    verified = verify_pairs_jaccard_inline(docs, cand, shingle_n=3, min_jaccard=0.5)
+    verified = verify_pairs_jaccard_inline(docs, cand)
     return verified.select(
         F.col("id_a").alias("index_id"),
         F.col("id_b").alias("new_id"),
@@ -1139,7 +1138,7 @@ def bloom_screen_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = docs.filter(F.col("source") == "src0")
     batch = docs.filter(F.col("source") != "src0")
     return (
-        bloom_screen(index, batch, key_col="fp", fp_rate=0.01)
+        bloom_screen(index, batch, key_col="fp")
         .select("doc_id", "is_new")
         .orderBy("doc_id")
     )
@@ -1569,18 +1568,18 @@ def _lsh_recall_core(docs: DataFrame) -> DataFrame:
         verify_candidates_jaccard,
     )
 
-    cand0 = prefix_filter_candidates(docs, shingle_n=3, min_jaccard=0.5)
+    cand0 = prefix_filter_candidates(docs, min_jaccard=0.5)
     # two consumers each (the audit join + the totals row) would
     # otherwise re-run the whole prefix-filter + verify generator and
     # the banding generator a second time — the un-fenced plan carried
     # 496 parquet scans / 1644 Exchanges at sf0.1 (the funnel-v2
     # lesson applied here)
     exact = fence(
-        verify_candidates_jaccard(docs, cand0, shingle_n=3, min_jaccard=0.5)
+        verify_candidates_jaccard(docs, cand0, min_jaccard=0.5)
         .select("id_a", "id_b")
     )
     approx = minhash_lsh_pairs(
-        docs, num_hashes=8, bands=4, shingle_n=3, hash_family="md5"
+        docs, num_hashes=8, shingle_n=3, hash_family="md5"
     )
     flagged = approx.join(
         exact.withColumn("is_true", F.lit(1)), ["id_a", "id_b"], "left"
@@ -1692,10 +1691,8 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    cand = containment_candidates(docs, shingle_n=3, min_containment=0.8)
-    out = verify_candidates_containment(
-        docs, cand, shingle_n=3, min_containment=0.8
-    )
+    cand = containment_candidates(docs)
+    out = verify_candidates_containment(docs, cand)
     return out.select(
         "id_a",
         "id_b",
@@ -1792,12 +1789,12 @@ def lsh_scurve_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents").filter(F.expr(_DOC_SAMPLE_SQL))
-    cand0 = prefix_filter_candidates(docs, shingle_n=3, min_jaccard=0.3)
+    cand0 = prefix_filter_candidates(docs, min_jaccard=0.3)
     exact = verify_candidates_jaccard(
-        docs, cand0, shingle_n=3, min_jaccard=0.3
+        docs, cand0, min_jaccard=0.3
     ).select("id_a", "id_b", rnd("jaccard", 4).alias("s4"))
     appr = minhash_lsh_pairs(
-        docs, num_hashes=8, bands=4, shingle_n=3, hash_family="md5"
+        docs, num_hashes=8, shingle_n=3, hash_family="md5"
     ).select("id_a", "id_b", F.lit(1).alias("cap"))
     flag = exact.join(appr, ["id_a", "id_b"], "left").select(
         "s4", F.coalesce(F.col("cap"), F.lit(0)).alias("cap")
@@ -2437,7 +2434,6 @@ def _cc_fingerprint(sf_dir: str) -> str:
     leave the committed fingerprint current (ADVICE r9)."""
     return dataset_fingerprint(
         sf_dir,
-        ("documents",),
         {
             "algo": "dedup_clusters",
             "shingle_n": _CC_SHINGLE_N,
@@ -2462,7 +2458,7 @@ def _cc_membership_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
         dataset_key(sf_dir),
         "dedup_cc_membership",
         fingerprint=_cc_fingerprint(sf_dir),
-        data_fingerprint=dataset_fingerprint(sf_dir, ("documents",)),
+        data_fingerprint=dataset_fingerprint(sf_dir),
         build=lambda: _QUERIES["dedup_clusters"](spark, sf_dir),
         meta={"producer": "pruned_jaccard_pairs + connected_components"},
     )

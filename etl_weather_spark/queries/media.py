@@ -422,7 +422,7 @@ def media_decimate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
     media = docs.mapInPandas(synth, schema="media_id long, payload binary")
-    return decimated_audio_stats(media, factor=2).orderBy("media_id")
+    return decimated_audio_stats(media).orderBy("media_id")
 
 @query(
     "media_resize_stats",
@@ -514,7 +514,7 @@ def media_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
     media = docs.mapInPandas(synth, schema="media_id long, payload binary")
-    return resized_pixel_stats(media, factor=2).orderBy("media_id")
+    return resized_pixel_stats(media).orderBy("media_id")
 
 @query(
     "media_area_resize_stats",

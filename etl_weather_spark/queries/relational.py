@@ -225,7 +225,7 @@ def rolling_avg_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-city table this window is partitioned by city.
     """
     d = _daily(spark, sf_dir).select("date", "vsum")
-    return trailing_mean(d, "vsum", "ma7", order_by="date", window=7, exact_scale=2)
+    return trailing_mean(d, "vsum", "ma7", exact_scale=2)
 
 @query(
     "centered_ma3",
@@ -247,7 +247,7 @@ def centered_ma3(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ev.groupBy(
         "event_type", F.to_date("ts").alias("date")
     ).agg(rnd(davg("value"), 2).alias("vavg"))
-    return centered_mean(d, "vavg", "ma3", order_by="date", partition_by=["event_type"], exact_scale=2)
+    return centered_mean(d, "vavg", "ma3")
 
 @query(
     "minmax_norm",
@@ -302,7 +302,7 @@ def rank_pct_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic tie-break on event_type to match the oracle exactly
     w = Window.orderBy(F.col("avg_value").desc(), F.col("event_type"))
     ranked = s.withColumn("rank", F.row_number().over(w))
-    return pct_diff_vs_next(ranked, "avg_value", rank_col="rank")
+    return pct_diff_vs_next(ranked, "avg_value")
 
 @query(
     "top5_days",
@@ -1221,7 +1221,7 @@ def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dormant_customers",
     f"""
 WITH cutoff AS (
-  SELECT {sql_davg('c_acctbal', 2)} AS avg_bal
+  SELECT {sql_davg('c_acctbal')} AS avg_bal
   FROM customer WHERE c_acctbal > 0.0
 )
 SELECT n.n_name, COUNT(*) AS n_cust,
@@ -1873,8 +1873,6 @@ def error_after_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         errors.withColumnRenamed("e_user_id", "user_id"),
         left_ts="click_ts",
         right_ts="error_ts",
-        by=["user_id"],
-        lower_sec=0,
         upper_sec=3600,
     )
     return joined.select(
@@ -4920,9 +4918,7 @@ r{tag} AS (
   FROM sv{tag} sv JOIN cb{tag} cb ON cb.s = sv.s
 )"""
 
-def _scalable_rank(
-    sv: DataFrame, *, desc: bool, tie_bucket: int = 4096
-) -> DataFrame:
+def _scalable_rank(sv: DataFrame, *, desc: bool) -> DataFrame:
     """(doc_id, s) -> (doc_id, rnk): exact global rank with every
     window bounded BY CONSTRUCTION — the histogram cumulative trick
     for the value level, plus a bucketed two-level order WITHIN tied
@@ -4931,9 +4927,9 @@ def _scalable_rank(
 
     rank = (# docs with better value)                 [value histogram]
          + (# same-value docs in earlier id-buckets)  [bucket histogram]
-         + row_number within (value, id-bucket)       [≤ tie_bucket rows]
+         + row_number within (value, id-bucket)       [≤ 4096 rows]
 
-    The id bucket is ``doc_id div tie_bucket`` — contiguous, so the
+    The id bucket is ``doc_id div 4096`` — contiguous, so the
     bucket order IS the doc_id order and the three-part sum equals the
     single-window rank exactly (same total order; the oracle keeps the
     plain ROW_NUMBER form, like topk_per_group's)."""
@@ -4946,7 +4942,7 @@ def _scalable_rank(
     w = Window.orderBy(F.col("s").desc() if desc else F.col("s").asc())
     cb = h.select("s", (F.sum("c").over(w) - F.col("c")).alias("cum_before"))
     svb = sv.withColumn(
-        "b", F.floor(F.col("doc_id") / F.lit(tie_bucket)).cast("long")
+        "b", F.floor(F.col("doc_id") / F.lit(4096)).cast("long")
     )
     bh = svb.groupBy("s", "b").agg(
         F.count(F.lit(1)).cast("long").alias("bc")
@@ -5358,18 +5354,18 @@ def join_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = row if out is None else out.unionByName(row)
     return out.orderBy("rel_key")
 
-def _morton_sql(bx: str, by: str, bits: int = 10) -> str:
+def _morton_sql(bx: str, by: str) -> str:
     """20-bit Morton interleave as a sum of disjoint-bit terms —
     identical integer algebra Spark-side (_morton_col)."""
     terms = []
-    for i in range(bits):
+    for i in range(10):
         terms.append(f"((({bx} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({by} >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"
 
-def _morton_col(bx, by, bits: int = 10):
+def _morton_col(bx, by):
     out = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(10):
         out = out + F.shiftleft(F.shiftright(bx, i).bitwiseAND(F.lit(1)), 2 * i)
         out = out + F.shiftleft(
             F.shiftright(by, i).bitwiseAND(F.lit(1)), 2 * i + 1

@@ -384,7 +384,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_weather_spark.operators.textops import chunk_documents
 
     docs = load(spark, sf_dir, "documents")
-    return chunk_documents(docs, size=50, stride=40).orderBy("doc_id", "chunk_id")
+    return chunk_documents(docs).orderBy("doc_id", "chunk_id")
 
 @query(
     "per_source_quota",
@@ -514,7 +514,7 @@ def token_budget_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     return pack_token_batches(
-        docs, token_count(F.col("text")), budget=512, order_col="doc_id"
+        docs, token_count(F.col("text")), budget=512
     ).orderBy("doc_id")
 
 @query(
@@ -1090,7 +1090,7 @@ def packing_efficiency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     packed = pack_token_batches(
-        docs, token_count(F.col("text")), budget=512, order_col="doc_id"
+        docs, token_count(F.col("text")), budget=512
     )
     return (
         packed.groupBy("batch_id")

@@ -89,7 +89,7 @@ def ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.filter(F.col("vec_id") < 5)
     q_ids, q_mat = collect_ref_vectors(qs)
     exact = cosine_topk_vs_pinned_queries(emb, q_ids, q_mat, k=10)
-    approx = cosine_topk_lsh(emb, qs, k=10, n_planes=6, n_tables=24)
+    approx = cosine_topk_lsh(emb, qs, n_tables=24)
     return recall_gate(exact, approx, threshold=0.3)
 
 @query(
@@ -162,11 +162,9 @@ def ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = _IVF_CENTROIDS.get(key)
     if centroids is None:
         centroids = _IVF_CENTROIDS[key] = train_ivf_centroids(
-            emb, n_clusters=16, seed=42
+            emb, n_clusters=16
         )
-    approx = cosine_topk_ivf(
-        emb, qs, k=10, n_clusters=16, n_probe=8, centroids=centroids
-    )
+    approx = cosine_topk_ivf(emb, qs, centroids=centroids)
     return recall_gate(exact, approx, threshold=0.4)
 
 @query(
@@ -209,9 +207,7 @@ def ann_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (sf_dir, "pq", 8, 16, 42)
     books = _IVF_CENTROIDS.get(key)
     if books is None:
-        books = _IVF_CENTROIDS[key] = pq_train_codebooks(
-            emb, n_subspaces=8, n_codes=16, seed=42
-        )
+        books = _IVF_CENTROIDS[key] = pq_train_codebooks(emb)
     approx = cosine_topk_pq(emb, qs, k=10, shortlist=100, books=books)
     return recall_gate(exact, approx, threshold=0.3)
 
@@ -1427,7 +1423,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load(spark, sf_dir, "embeddings")
-    return power_iteration_top_component(emb, dim=64, iters=3)
+    return power_iteration_top_component(emb, dim=64)
 
 @query(
     "semantic_decontaminate",
@@ -1507,9 +1503,10 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
     )
 
-def _matryoshka_oracle(dims=(64, 32, 16, 8), k: int = 10) -> str:
-    """Per truncation dim: brute-force cosine top-k on the PREFIX of
+def _matryoshka_oracle() -> str:
+    """Per truncation dim: brute-force cosine top-10 on the PREFIX of
     each embedding, then overlap vs the full-dim (64) ground truth."""
+    dims = (64, 32, 16, 8)
     parts = []
     for d in dims:
         parts.append(
@@ -1523,7 +1520,7 @@ def _matryoshka_oracle(dims=(64, 32, 16, 8), k: int = 10) -> str:
     FROM q CROSS JOIN c
     WHERE q.query_id <> c.neighbor_id
   ) s
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= {k}
+  QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 10
 )"""
         )
     union = "\nUNION ALL\n".join(f"SELECT * FROM t{d}" for d in dims)
@@ -1542,7 +1539,7 @@ full64 AS (SELECT query_id, neighbor_id FROM t64)
 SELECT a.query_id, a.dim,
        CAST(SUM(CASE WHEN f.neighbor_id IS NULL THEN 0 ELSE 1 END) AS BIGINT)
          AS n_overlap,
-       FLOOR((SUM(CASE WHEN f.neighbor_id IS NULL THEN 0 ELSE 1 END) * 1.0 / {k})
+       FLOOR((SUM(CASE WHEN f.neighbor_id IS NULL THEN 0 ELSE 1 END) * 1.0 / 10)
              * 10000 + 0.5) / 10000 AS recall4
 FROM alltk a
 LEFT JOIN full64 f
@@ -1770,7 +1767,7 @@ def embedding_outlier_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", as_double_array(F.col("embedding")).alias("v")
     )
     ref_ids, ref_mat = collect_ref_vectors(emb, limit=256)
-    score = knn_mean_dist_udf(ref_ids, ref_mat, k=5)
+    score = knn_mean_dist_udf(ref_ids, ref_mat)
     sc = e.select("vec_id", "label", score("vec_id", "v").alias("knn_dist6"))
     return (
         topk_per_group(
@@ -1789,8 +1786,8 @@ def embedding_outlier_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("rank")
     )
 
-def _kcenter_oracle(k: int = 8) -> str:
-    """k unrolled greedy farthest-point rounds (the kmeans/pca
+def _kcenter_oracle() -> str:
+    """8 unrolled greedy farthest-point rounds (the kmeans/pca
     chained-CTE proof pattern): round i picks the vector maximizing
     the 6-dp-quantized min cosine distance to the chosen set, ties to
     the lowest id; chosen ids are excluded from later rounds."""
@@ -1813,7 +1810,7 @@ def _kcenter_oracle(k: int = 8) -> str:
         "c1 AS MATERIALIZED"
         " (SELECT vec_id, label, v FROM e ORDER BY vec_id LIMIT 1)",
     ]
-    for i in range(2, k + 1):
+    for i in range(2, 9):
         prev = ", ".join(
             dist(f"c{j}") for j in range(1, i)
         )
@@ -1830,7 +1827,7 @@ def _kcenter_oracle(k: int = 8) -> str:
     ] + [
         f"SELECT CAST({i} AS BIGINT) AS round, vec_id, label,"
         f" md AS sel_dist6 FROM c{i}"
-        for i in range(2, k + 1)
+        for i in range(2, 9)
     ]
     return (
         "WITH " + ",\n".join(ctes) + "\n"
@@ -1838,7 +1835,7 @@ def _kcenter_oracle(k: int = 8) -> str:
         + "\nORDER BY round"
     )
 
-@query("kcenter_coreset_selection", _kcenter_oracle(8))
+@query("kcenter_coreset_selection", _kcenter_oracle())
 def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GREEDY k-CENTER coreset selection (farthest-point traversal —
     Gonzalez 1985; the Sener & Savarese active-learning / coreset

@@ -1083,7 +1083,7 @@ def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    return strip_boilerplate_sentences(corpus, frac_num=2, frac_den=5)
+    return strip_boilerplate_sentences(corpus)
 
 _BM25_ORACLE = f"""
 WITH toks AS (
@@ -3695,7 +3695,7 @@ _BPE_ARTIFACT_PARAMS = {
 def _bpe_fingerprint(sf_dir: str) -> str:
     from etl_weather_spark.operators.artifacts import dataset_fingerprint
 
-    return dataset_fingerprint(sf_dir, ("documents",), _BPE_ARTIFACT_PARAMS)
+    return dataset_fingerprint(sf_dir, _BPE_ARTIFACT_PARAMS)
 
 
 def _bpe_merges_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3717,7 +3717,7 @@ def _bpe_merges_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
         dataset_key(sf_dir),
         "bpe_merges",
         fingerprint=_bpe_fingerprint(sf_dir),
-        data_fingerprint=dataset_fingerprint(sf_dir, ("documents",)),
+        data_fingerprint=dataset_fingerprint(sf_dir),
         build=lambda: _QUERIES["bpe_merge_rounds"](spark, sf_dir),
         meta={"producer": f"bpe_merge_rounds ({_BPE_MERGE_ROUNDS} greedy merges)"},
     )

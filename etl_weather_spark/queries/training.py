@@ -1094,15 +1094,8 @@ def _qct_oracle(rounds: int) -> str:
         + "\nORDER BY round"
     )
 
-def _qct_train_relation(
-    spark: SparkSession, sf_dir: str, parity: int | None = None
-) -> DataFrame:
+def _qct_train_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    if parity is not None:
-        # features and labels are pure per-doc functions, so filtering
-        # the doc set first is set-identical to the oracle's post-join
-        # WHERE — and skips computing them for the other half
-        docs = docs.filter(F.col("doc_id") % 2 == parity)
     feats = _quality_logistic_core(docs).select(
         "doc_id", "f_distinct", "f_top", "f_len", "f_stop"
     )
@@ -1112,14 +1105,14 @@ def _qct_train_relation(
     )
     return fence(feats.join(labels, "doc_id"))
 
-def _qct_z(prefix: str = "") -> F.Column:
+def _qct_z() -> F.Column:
     """The 6-dp logit — identical left-associated shape as _QCT_Z_SQL."""
     return rnd(
         F.col("wb")
-        + F.col("w1") * F.col(f"{prefix}f_distinct")
-        + F.col("w2") * F.col(f"{prefix}f_top")
-        + F.col("w3") * F.col(f"{prefix}f_len")
-        + F.col("w4") * F.col(f"{prefix}f_stop"),
+        + F.col("w1") * F.col("f_distinct")
+        + F.col("w2") * F.col("f_top")
+        + F.col("w3") * F.col("f_len")
+        + F.col("w4") * F.col("f_stop"),
         6,
     )
 
@@ -1156,10 +1149,9 @@ def _qct_pass(train: DataFrame, w: DataFrame) -> DataFrame:
 def _qct_chain(
     spark: SparkSession,
     sf_dir: str,
-    rounds: int = _QCT_ROUNDS,
     parity: int | None = None,
 ) -> tuple[list[tuple[DataFrame, DataFrame]], DataFrame]:
-    """Run the GD chain; returns ([(w_r, a_r)] for r=0..rounds, w_final).
+    """Run the GD chain; returns ([(w_r, a_r)] for r=0.._QCT_ROUNDS, w_final).
     Weights stay a broadcast 1-row DataFrame end to end — no driver
     collect (the kmeans/k-center discipline); every 1-row stage is
     lazily fenced so the unrolled lineage never replays. The feature/
@@ -1178,10 +1170,10 @@ def _qct_chain(
     )
     lr = float(_QCT_LR)
     out = []
-    for r in range(rounds + 1):
+    for r in range(_QCT_ROUNDS + 1):
         agg = _qct_pass(train, w)
         out.append((w, agg))
-        if r < rounds:
+        if r < _QCT_ROUNDS:
             grads = [
                 ("wb", "sb"),
                 ("w1", "s1"),
@@ -1226,7 +1218,7 @@ def _qct_train_committed(
     the committed parquet instead of re-tokenizing the corpus. The
     parity filter applies on read (pure doc_id predicate — commutes
     with the per-doc feature computation, the holdout discipline)."""
-    fp = dataset_fingerprint(sf_dir, ("documents",), _QCT_FEAT_PARAMS)
+    fp = dataset_fingerprint(sf_dir, _QCT_FEAT_PARAMS)
     df = artifact_if_absent(
         spark,
         "quality_train_features",
@@ -1265,9 +1257,7 @@ def _qct_trajectory_df(
     return rows.orderBy("round")
 
 def _qct_fingerprint(sf_dir: str, parity: int | None = None) -> str:
-    return dataset_fingerprint(
-        sf_dir, ("documents",), {**_QCT_PARAMS, "parity": parity}
-    )
+    return dataset_fingerprint(sf_dir, {**_QCT_PARAMS, "parity": parity})
 
 
 def _qct_trajectory(
@@ -1295,7 +1285,7 @@ def _qct_trajectory(
         dataset_key(sf_dir),
         name,
         fingerprint=fp,
-        data_fingerprint=dataset_fingerprint(sf_dir, ("documents",)),
+        data_fingerprint=dataset_fingerprint(sf_dir),
         build=build,
         meta=meta,
     )
@@ -1304,15 +1294,14 @@ def _qct_weights(
     spark: SparkSession,
     sf_dir: str,
     parity: int | None = None,
-    at_round: int = _QCT_ROUNDS,
 ) -> DataFrame:
-    """The committed 1-row weight table (wb..w4) at a given round
-    (final by default) — what every trained-model audit broadcasts.
+    """The committed 1-row weight table (wb..w4) at the final round —
+    what every trained-model audit broadcasts.
     Reading this replaces re-running the 8-round chain per audit: at
     100 TB, one training pass instead of eleven."""
     return fence(
         _qct_trajectory(spark, sf_dir, parity)
-        .filter(F.col("round") == at_round)
+        .filter(F.col("round") == _QCT_ROUNDS)
         .select("wb", "w1", "w2", "w3", "w4")
     )
 
@@ -3058,7 +3047,7 @@ def _ensure_release(spark: SparkSession, sf_dir: str) -> int:
         spark,
         dataset_key(sf_dir),
         _release_specs(spark, sf_dir),
-        data_fingerprint=dataset_fingerprint(sf_dir, ("documents",)),
+        data_fingerprint=dataset_fingerprint(sf_dir),
         meta={"sf_dir": _os.path.realpath(sf_dir)},
     )
 
@@ -3111,7 +3100,7 @@ def corpus_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ensure_release(spark, sf_dir)
     key = dataset_key(sf_dir)
-    data_fp = dataset_fingerprint(sf_dir, ("documents",))
+    data_fp = dataset_fingerprint(sf_dir)
     legs = []
     for name, (fp, _build) in sorted(_release_specs(spark, sf_dir).items()):
         pinned = read_release_artifact(

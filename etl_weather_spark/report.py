@@ -47,6 +47,8 @@ def _scale(values: list[float], lo_px: float, hi_px: float) -> list[float]:
     return [lo_px + (v - vmin) / span * (hi_px - lo_px) for v in values]
 
 
+_CHART_W, _CHART_H = 640, 220  # SVG chart size in px
+
 _SVG_STYLE = (
     '<style>.viz{color-scheme:light dark}'
     ".viz .mark{stroke:%s;fill:%s}.viz .fillmark{fill:%s;stroke:none}"
@@ -60,9 +62,7 @@ _SVG_STYLE = (
      _SERIES_DARK, _SERIES_DARK, _SERIES_DARK)
 
 
-def svg_line_chart(
-    points: list[tuple[str, float]], *, title: str, width: int = 640, height: int = 220
-) -> str:
+def svg_line_chart(points: list[tuple[str, float]], *, title: str ) -> str:
     """Single-series line chart as standalone inline SVG.
 
     Mark spec: 2px line, 3px radius point markers with native <title>
@@ -72,9 +72,9 @@ def svg_line_chart(
     if not points:
         return f'<svg class="viz" role="img" aria-label="{html.escape(title)}"></svg>'
     pad, top, bottom = 40, 24, 20
-    xs = _scale(list(range(len(points))), pad, width - 12)
+    xs = _scale(list(range(len(points))), pad, _CHART_W - 12)
     vals = [v for _, v in points]
-    ys = _scale(vals, height - bottom, top)  # inverted: bigger = higher
+    ys = _scale(vals, _CHART_H - bottom, top)  # inverted: bigger = higher
     path = " ".join(f"{'M' if i == 0 else 'L'}{x:.1f},{y:.1f}" for i, (x, y) in enumerate(zip(xs, ys)))
     imin, imax = vals.index(min(vals)), vals.index(max(vals))
     marks = []
@@ -89,21 +89,19 @@ def svg_line_chart(
                 f'<text x="{x:.1f}" y="{y + dy:.1f}" text-anchor="middle">{fmt1(v)}</text>'
             )
     grid = "".join(
-        f'<line class="grid" x1="{pad}" x2="{width - 12}" y1="{gy:.1f}" y2="{gy:.1f}"/>'
-        for gy in _scale([0, 0.5, 1], height - bottom, top)
+        f'<line class="grid" x1="{pad}" x2="{_CHART_W - 12}" y1="{gy:.1f}" y2="{gy:.1f}"/>'
+        for gy in _scale([0, 0.5, 1], _CHART_H - bottom, top)
     )
     return (
         f'<svg class="viz" role="img" aria-label="{html.escape(title)}" '
-        f'viewBox="0 0 {width} {height}" width="{width}" height="{height}">{_SVG_STYLE}'
+        f'viewBox="0 0 {_CHART_W} {_CHART_H}" width="{_CHART_W}" height="{_CHART_H}">{_SVG_STYLE}'
         f'<text x="{pad}" y="14">{html.escape(title)}</text>{grid}'
         f'<path class="mark" d="{path}" fill="none" stroke-width="2"/>'
         f"{''.join(marks)}</svg>"
     )
 
 
-def svg_bar_chart(
-    points: list[tuple[str, float]], *, title: str, width: int = 640, height: int = 220
-) -> str:
+def svg_bar_chart(points: list[tuple[str, float]], *, title: str ) -> str:
     """Single-series bar chart: 4px-rounded data ends anchored to the
     baseline (square bottoms via an overlap rect), 2px gaps, native
     <title> tooltips."""
@@ -112,9 +110,9 @@ def svg_bar_chart(
     pad, top, bottom = 40, 24, 20
     vals = [max(v, 0.0) for _, v in points]
     vmax = max(vals) or 1.0
-    plot_w = width - 12 - pad
+    plot_w = _CHART_W - 12 - pad
     bw = max(plot_w / len(points) - 2, 1)  # 2px surface gap between bars
-    base = height - bottom
+    base = _CHART_H - bottom
     bars = []
     for i, (label, v) in enumerate(points):
         h = (vals[i] / vmax) * (base - top)
@@ -128,11 +126,11 @@ def svg_bar_chart(
             f"<title>{html.escape(label)}: {fmt1(v)}</title></path>"
         )
     grid = (
-        f'<line class="grid" x1="{pad}" x2="{width - 12}" y1="{base}" y2="{base}"/>'
+        f'<line class="grid" x1="{pad}" x2="{_CHART_W - 12}" y1="{base}" y2="{base}"/>'
     )
     return (
         f'<svg class="viz" role="img" aria-label="{html.escape(title)}" '
-        f'viewBox="0 0 {width} {height}" width="{width}" height="{height}">{_SVG_STYLE}'
+        f'viewBox="0 0 {_CHART_W} {_CHART_H}" width="{_CHART_W}" height="{_CHART_H}">{_SVG_STYLE}'
         f'<text x="{pad}" y="14">{html.escape(title)}</text>{grid}{"".join(bars)}</svg>'
     )
 

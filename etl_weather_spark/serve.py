@@ -271,7 +271,7 @@ class EngineAPI:
         limit = None
         if "limit" in params:
             limit_raw = params["limit"][0]
-            if not limit_raw.isdigit() or int(limit_raw) < 1:
+            if not limit_raw.isdecimal() or int(limit_raw) < 1:
                 return 400, {"error": f"bad limit: {limit_raw}"}
             limit = int(limit_raw)
         if path == "/":
@@ -340,7 +340,7 @@ class EngineAPI:
             if not qstr.strip():
                 return 400, {"error": "empty q parameter"}
             count_raw = params.get("count", ["5"])[0]
-            if not count_raw.isdigit() or int(count_raw) < 1:
+            if not count_raw.isdecimal() or int(count_raw) < 1:
                 return 400, {"error": f"bad count: {count_raw}"}
             count = int(count_raw)
             results = self._cached(
@@ -364,7 +364,7 @@ class EngineAPI:
             return 200, {"results": self._cached("provinces", compute, refresh)}
         if path.startswith("/regencies/"):
             code = path.removeprefix("/regencies/")
-            if not code.isdigit():
+            if not code.isdecimal():
                 return 400, {"error": f"bad province code: {code}"}
 
             def compute():

@@ -39,15 +39,13 @@ def read_binary_dir(
     path: str,
     *,
     glob: str | None = None,
-    recursive: bool = True,
 ) -> DataFrame:
-    """Raw binaryFile read: (path, modificationTime, length, content)."""
+    """Raw recursive binaryFile read: (path, modificationTime, length,
+    content)."""
     reader = spark.read.format("binaryFile")
     if glob:
         reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    return reader.load(path)
+    return reader.option("recursiveFileLookup", "true").load(path)
 
 
 def to_media_table(files: DataFrame) -> DataFrame:

@@ -102,7 +102,6 @@ def catalog_commit_tables(
     writes: dict[str, DataFrame],
     *,
     table_root: str | None = None,
-    mode: str = "overwrite",
 ) -> int:
     """Commit a set of table updates as ONE atomic catalog version.
 
@@ -112,7 +111,7 @@ def catalog_commit_tables(
     and the single catalog pointer swap at the end is the only commit
     point.
     """
-    return _commit_tables(spark, catalog, writes, table_root, mode, {})
+    return _commit_tables(spark, catalog, writes, table_root, "overwrite", {})
 
 
 def _commit_tables(
@@ -201,7 +200,7 @@ def catalog_history(catalog: str) -> list[int]:
     )
 
 
-def catalog_expire(catalog: str, *, keep_last: int = 2) -> dict[str, list[int]]:
+def catalog_expire(catalog: str) -> dict[str, list[int]]:
     """Catalog-AWARE garbage collection. The naive per-table
     ``expire_snapshots(keep_last=k)`` is UNSAFE under a catalog: a
     table that hasn't changed in many catalog commits may be pinned at
@@ -209,7 +208,7 @@ def catalog_expire(catalog: str, *, keep_last: int = 2) -> dict[str, list[int]]:
     breaking cross-table time travel (or even the CURRENT catalog
     read).
 
-    This drops catalog versions beyond the newest ``keep_last``, then
+    This drops catalog versions beyond the newest 2, then
     expires, per table, exactly the per-table versions no SURVIVING
     catalog version pins (data dirs referenced by a surviving version's
     manifest are kept). Returns {table_name: [expired versions]}.
@@ -223,8 +222,8 @@ def catalog_expire(catalog: str, *, keep_last: int = 2) -> dict[str, list[int]]:
     )
 
     history = catalog_history(catalog)
-    surviving_cat = history[-keep_last:]
-    for v in history[:-keep_last]:
+    surviving_cat = history[-2:]
+    for v in history[:-2]:
         os.remove(os.path.join(_vdir(catalog), f"v{v}.json"))
 
     pinned: dict[str, set[int]] = {}

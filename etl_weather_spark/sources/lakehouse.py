@@ -27,25 +27,17 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 UPSERT_QUERY_NAME = "gold_upsert"
 
 
-def read_csv_tolerant(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    timestamp_cols: list[str] | None = None,
-) -> DataFrame:
-    """CSV read with header + PERMISSIVE mode; requested timestamp columns
-    parse null-on-error (the reference's read_csv(parse_dates=...) with
+def read_csv_tolerant(spark: SparkSession, path: str) -> DataFrame:
+    """CSV read with header + PERMISSIVE mode; a ``ts`` column parses
+    null-on-error (the reference's read_csv(parse_dates=...) with
     fallback, web.py:25-34)."""
-    reader = spark.read.option("header", "true").option("mode", "PERMISSIVE")
-    df = reader.schema(schema).csv(path) if schema is not None else reader.csv(path)
-    for c in timestamp_cols or []:
-        if c in df.columns:
-            df = df.withColumn(c, F.to_timestamp(c))
+    df = spark.read.option("header", "true").option("mode", "PERMISSIVE").csv(path)
+    if "ts" in df.columns:
+        df = df.withColumn("ts", F.to_timestamp("ts"))
     return df
 
 
@@ -66,29 +58,24 @@ def write_table(
     writer.format(fmt).save(path)
 
 
-def append_bronze(
-    df: DataFrame,
-    path: str,
-    *,
-    ingest_ts: str | None = None,
-    partition_by: list[str] = ("city",),
-) -> None:
-    """Bronze append with an ingest timestamp column (K1 without file
-    renames: every fetch is an append; 'latest' is a view, not a file)."""
+def append_bronze(df: DataFrame, path: str, *, ingest_ts: str | None = None) -> None:
+    """Bronze append, partitioned by ``city``, with an ingest timestamp
+    column (K1 without file renames: every fetch is an append; 'latest'
+    is a view, not a file)."""
     stamped = df.withColumn(
         "ingest_ts",
         F.lit(ingest_ts).cast("timestamp") if ingest_ts else F.current_timestamp(),
     )
-    write_table(stamped, path, partition_by=list(partition_by), mode="append")
+    write_table(stamped, path, partition_by=["city"], mode="append")
 
 
-def latest_view(df: DataFrame, key_cols: list[str], ts_col: str = "ingest_ts") -> DataFrame:
+def latest_view(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """M2: one row per key — the one with the greatest ingest_ts.
 
     row_number over (key, ts desc); at scale the window shuffles only
     (key, ts) plus payload of the surviving partitions after pruning.
     """
-    w = Window.partitionBy(*key_cols).orderBy(F.col(ts_col).desc())
+    w = Window.partitionBy(*key_cols).orderBy(F.col("ingest_ts").desc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -102,7 +89,6 @@ def materialize_if_absent(
     build: Callable[[], DataFrame],
     *,
     refresh: bool = False,
-    partition_by: list[str] | None = None,
 ) -> DataFrame:
     """M1: reuse the materialized table unless missing or refresh=True
     (reference _ensure_daily/_ensure_hourly, web.py:344-363)."""
@@ -111,7 +97,7 @@ def materialize_if_absent(
         for root, _, files in os.walk(path) for name in files
     )
     if refresh or not exists:
-        write_table(build(), path, partition_by=partition_by, mode="overwrite")
+        write_table(build(), path)
     return spark.read.parquet(path)
 
 
@@ -121,14 +107,13 @@ def write_bucketed(
     path: str,
     *,
     bucket_cols: list[str],
-    n_buckets: int = 8,
     sort_cols: list[str] | None = None,
-    fmt: str = "parquet",
 ) -> None:
-    """Write a bucketed (and bucket-sorted) table for co-located joins.
+    """Write a bucketed (and bucket-sorted) parquet table, 4 buckets, for
+    co-located joins.
 
     Both sides of a recurring large join written with the SAME
-    (bucket_cols, n_buckets) sort-merge join with ZERO exchanges — the
+    (bucket_cols, 4 buckets) sort-merge join with ZERO exchanges — the
     shuffle is paid once at write time instead of on every query. This
     is the 100 TB answer for fact-fact joins on a stable key
     (orders↔lineitem on orderkey): bucket both at ingestion.
@@ -138,10 +123,10 @@ def write_bucketed(
     layout rather than the default warehouse.
     """
     writer = (
-        df.write.format(fmt)
+        df.write.format("parquet")
         .mode("overwrite")
         .option("path", path)
-        .bucketBy(n_buckets, *bucket_cols)
+        .bucketBy(4, *bucket_cols)
     )
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
@@ -177,9 +162,9 @@ def stream_upsert_latest(
     return start_batches(stream_df, checkpoint, upsert, name=UPSERT_QUERY_NAME)
 
 
-def zorder_key(df: DataFrame, cols: list[str], *, bits: int = 8) -> "F.Column":
+def zorder_key(df: DataFrame, cols: list[str]) -> "F.Column":
     """Z-order (Morton) key over numeric columns: each column is
-    bucketed into ``2^bits`` equi-width bins (bounds from one min/max
+    bucketed into 2^8 equi-width bins (bounds from one min/max
     aggregate pass), then the bucket bits are interleaved so rows close
     in the key are close in EVERY dimension — sorting by it gives
     parquet tight row-group min/max stats on all ``cols`` at once,
@@ -191,7 +176,7 @@ def zorder_key(df: DataFrame, cols: list[str], *, bits: int = 8) -> "F.Column":
     min/max (rank-based bucketing is what Delta's OPTIMIZE ZORDER
     does). Nulls land in bucket 0.
     """
-    n = 1 << bits
+    n = 1 << 8
     aggs = []
     for c in cols:
         aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
@@ -209,7 +194,7 @@ def zorder_key(df: DataFrame, cols: list[str], *, bits: int = 8) -> "F.Column":
         b = F.least(F.lit(n - 1), F.greatest(F.lit(0), b)).cast("long")
         buckets.append(F.coalesce(b, F.lit(0).cast("long")))
     z = F.lit(0).cast("long")
-    for bit in range(bits):
+    for bit in range(8):
         for ci in range(k):
             z = z + F.shiftleft(
                 F.shiftright(buckets[ci], bit).bitwiseAND(F.lit(1)),
@@ -223,7 +208,6 @@ def compact_table(
     path: str,
     *,
     target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: list[str] | None = None,
     sort_within_by: list[str] | None = None,
     zorder_by: list[str] | None = None,
 ) -> int:
@@ -266,8 +250,6 @@ def compact_table(
             .sortWithinPartitions("__z")
             .drop("__z")
         )
-    elif partition_by:
-        out = df.repartition(n_files, *[F.col(c) for c in partition_by])
     else:
         out = df.repartition(n_files)
     if sort_within_by and not zorder_by:
@@ -276,10 +258,7 @@ def compact_table(
     # parquet has no transaction log, so the swap is the commit point
     # (Delta/Iceberg would commit a new snapshot instead)
     tmp = path.rstrip("/") + ".__compact_tmp__"
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
+    out.write.mode("overwrite").parquet(tmp)
     shutil.rmtree(path)
     os.replace(tmp, path)
     return sum(
@@ -297,7 +276,6 @@ def incremental_refresh(
     silver_path: str,
     gold_path: str,
     build_gold: Callable[[DataFrame], DataFrame],
-    partition_col: str = "date",
 ) -> list:
     """M1 at scale: land ``batch`` in silver, then rebuild ONLY the gold
     partitions the batch touched — never the whole table.
@@ -305,7 +283,7 @@ def incremental_refresh(
     The reference's refresh (web.py:344-363) recomputes everything per
     request; at 100 TB a day's append must not re-aggregate years of
     history. Steps: (1) append the batch to silver partitioned by
-    ``partition_col``; (2) collect the batch's distinct partition
+    ``date``; (2) collect the batch's distinct partition
     values (tiny — one value per touched day); (3) re-run
     ``build_gold`` over silver *filtered to those partitions* (the
     filter is on the partition column, so the scan prunes to the
@@ -319,16 +297,16 @@ def incremental_refresh(
     upgrade when readers race refreshes. Returns the affected
     partition values.
     """
-    batch.write.mode("append").partitionBy(partition_col).parquet(silver_path)
-    affected = [r[0] for r in batch.select(partition_col).distinct().collect()]
+    batch.write.mode("append").partitionBy("date").parquet(silver_path)
+    affected = [r[0] for r in batch.select("date").distinct().collect()]
     silver = spark.read.parquet(silver_path).filter(
-        F.col(partition_col).isin(affected)
+        F.col("date").isin(affected)
     )
     (
         build_gold(silver)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
+        .partitionBy("date")
         .parquet(gold_path)
     )
     return affected

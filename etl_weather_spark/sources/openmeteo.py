@@ -111,15 +111,7 @@ class NetworkError(RuntimeError):
     (reference fetch.py:18,37)."""
 
 
-def with_retries(
-    fn,
-    *,
-    retries: int = 3,
-    initial_delay: float = 0.8,
-    backoff: float = 1.6,
-    retry_on: tuple[type[BaseException], ...] = (Exception,),
-    sleep=None,
-):
+def with_retries(fn, *, sleep=None):
     """Retry-with-exponential-backoff for ingestion calls (reference
     fetch.py:21-37: 3 attempts, delay 0.8 ×1.6, raises NetworkError).
 
@@ -131,17 +123,17 @@ def with_retries(
     import time as _time
 
     do_sleep = sleep if sleep is not None else _time.sleep
-    delay = initial_delay
+    delay = 0.8
     last_exc: BaseException | None = None
-    for _attempt in range(1, retries + 1):
+    for _attempt in range(1, 4):
         try:
             return fn()
-        except retry_on as exc:  # noqa: PERF203 — retry loop
+        except Exception as exc:  # noqa: PERF203 — retry loop
             last_exc = exc
-            if _attempt < retries:
+            if _attempt < 3:
                 do_sleep(delay)
-                delay *= backoff
-    raise NetworkError(f"fetch failed after {retries} attempts: {last_exc}") from last_exc
+                delay *= 1.6
+    raise NetworkError(f"fetch failed after 3 attempts: {last_exc}") from last_exc
 
 
 # ---------------------------------------------------------------------------
@@ -191,7 +183,6 @@ def land_raw(
     offline: bool = False,
     sample_dir: str | None = None,
     fallback: bool = True,
-    retries: int = 3,
     sleep=None,
     now: str | None = None,
 ) -> dict:
@@ -246,12 +237,10 @@ def land_raw(
         try:
             weather = with_retries(
                 lambda: tp(WEATHER_URL, {**base, "hourly": hourly_w}),
-                retries=retries,
                 sleep=sleep,
             )
             air = with_retries(
                 lambda: tp(AIR_URL, {**base, "hourly": hourly_a}),
-                retries=retries,
                 sleep=sleep,
             )
         except NetworkError:

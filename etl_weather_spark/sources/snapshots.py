@@ -238,7 +238,6 @@ def snapshot_write_checked(
     table: str,
     *,
     checks: list,
-    mode: str = "overwrite",
     ingest_ts: str | None = None,
 ) -> int:
     """Constraint-enforced commit: evaluate Deequ-style checks
@@ -257,7 +256,7 @@ def snapshot_write_checked(
     failures = [(r["check"], r["violations"]) for r in results if not r["passed"]]
     if failures:
         raise CheckViolation(failures)
-    return snapshot_write(df, table, mode=mode, ingest_ts=ingest_ts)
+    return snapshot_write(df, table, mode="overwrite", ingest_ts=ingest_ts)
 
 
 def snapshot_rollback(table: str, *, to_version: int) -> int:

@@ -92,11 +92,10 @@ def stream_apply_changes(
     table: str,
     checkpoint: str,
     on: list[str],
-    seq_col: str | None = None,
-    op_col: str | None = None,
 ):
-    """Wire a streaming change feed into the snapshot table. Returns the
-    started StreamingQuery (``availableNow``: drains, then stops)."""
+    """Wire a streaming change feed (ordered by ``seq``, ``op`` marking
+    deletes) into the snapshot table. Returns the started
+    StreamingQuery (``availableNow``: drains, then stops)."""
     return start_batches(
         changes,
         checkpoint,
@@ -104,6 +103,6 @@ def stream_apply_changes(
         name=QUERY_NAME,
         table=table,
         on=on,
-        seq_col=seq_col,
-        op_col=op_col,
+        seq_col="seq",
+        op_col="op",
     )

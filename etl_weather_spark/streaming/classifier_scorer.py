@@ -164,11 +164,10 @@ def stream_classifier_scorer(
     stats_dir: str,
     checkpoint_dir: str,
     weights: dict[str, float],
-    train_keep_rate: float | None = None,
-    tol: float = 0.2,
 ):
     """Wire the scorer onto a document stream: one keep-rate row per
-    micro-batch under ``stats_dir``."""
+    micro-batch under ``stats_dir``, flagged drifted when the keep rate
+    leaves 0.9 ± 0.3."""
 
     return start_batches(
         docs_stream,
@@ -176,6 +175,6 @@ def stream_classifier_scorer(
         process_classifier_batch,
         stats_dir=stats_dir,
         weights=weights,
-        train_keep_rate=train_keep_rate,
-        tol=tol,
+        train_keep_rate=0.9,
+        tol=0.3,
     )

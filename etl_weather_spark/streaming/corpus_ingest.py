@@ -118,9 +118,6 @@ def stream_corpus_ingest(
     stats_dir: str,
     checkpoint: str,
     bench_shingles: DataFrame,
-    lang: str = "en",
-    min_quality: float = 0.5,
-    shingle_n: int = 5,
 ):
     """Wire the batch body into a streaming query."""
     return start_batches(
@@ -131,7 +128,4 @@ def stream_corpus_ingest(
         accepted_table=accepted_table,
         stats_dir=stats_dir,
         bench_shingles=bench_shingles,
-        lang=lang,
-        min_quality=min_quality,
-        shingle_n=shingle_n,
     )

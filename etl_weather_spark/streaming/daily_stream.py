@@ -37,25 +37,24 @@ EVENT_SCHEMA = T.StructType(
 def read_event_stream(
     spark: SparkSession,
     path: str,
-    fmt: str = "json",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source event stream with an explicit schema (streaming
     sources cannot infer)."""
-    reader = spark.readStream.schema(EVENT_SCHEMA).format(fmt)
+    reader = spark.readStream.schema(EVENT_SCHEMA).format("json")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(path)
 
 
-def daily_stream_agg(events: DataFrame, watermark: str = "1 day") -> DataFrame:
+def daily_stream_agg(events: DataFrame) -> DataFrame:
     """Tumbling 1-day window aggregate matching the batch daily table.
 
     Same aggregates (and the same decimal-exact accumulation) as
     queries._daily, keyed by the window start date.
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day").alias("win"))
         .agg(
             rnd(F.min("value"), 2).alias("vmin"),

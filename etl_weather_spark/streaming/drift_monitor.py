@@ -226,9 +226,6 @@ def stream_drift_monitor(
     ref_hist: DataFrame,
     stats_dir: str,
     checkpoint_dir: str,
-    value_col: str = "n_chars",
-    threshold: float = 0.2,
-    bucket_width: float | None = None,
 ):
     """Wire the monitor onto a document stream: one KS row per
     micro-batch under ``stats_dir``."""
@@ -238,7 +235,4 @@ def stream_drift_monitor(
         process_drift_batch,
         ref_hist=fence(ref_hist),
         stats_dir=stats_dir,
-        value_col=value_col,
-        threshold=threshold,
-        bucket_width=bucket_width,
     )

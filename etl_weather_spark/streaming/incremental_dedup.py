@@ -75,8 +75,6 @@ def stream_incremental_dedup(
     index_table: str,
     flags_dir: str,
     checkpoint: str,
-    num_hashes: int = 16,
-    bands: int = 8,
 ):
     """Wire the batch body into a streaming query."""
     return start_batches(
@@ -86,6 +84,4 @@ def stream_incremental_dedup(
         name=QUERY_NAME,
         index_table=index_table,
         flags_dir=flags_dir,
-        num_hashes=num_hashes,
-        bands=bands,
     )

@@ -106,8 +106,6 @@ def stream_media_ingest(
     index_table: str,
     flags_dir: str,
     checkpoint: str,
-    max_hamming: int = 3,
-    hot_band_cap: int | None = 64,
 ):
     """Wire the batch body into a streaming query."""
     return start_batches(
@@ -117,6 +115,4 @@ def stream_media_ingest(
         name=QUERY_NAME,
         index_table=index_table,
         flags_dir=flags_dir,
-        max_hamming=max_hamming,
-        hot_band_cap=hot_band_cap,
     )

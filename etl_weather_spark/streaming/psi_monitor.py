@@ -95,9 +95,6 @@ def stream_psi_monitor(
     ref_hist: DataFrame,
     stats_dir: str,
     checkpoint_dir: str,
-    value_col: str = "n_chars",
-    threshold: float = 0.25,
-    bucket_width: float | None = None,
 ):
     """Wire the monitor onto a document stream: one PSI row per
     micro-batch under ``stats_dir``."""
@@ -107,7 +104,4 @@ def stream_psi_monitor(
         process_psi_batch,
         ref_hist=fence(ref_hist),
         stats_dir=stats_dir,
-        value_col=value_col,
-        threshold=threshold,
-        bucket_width=bucket_width,
     )

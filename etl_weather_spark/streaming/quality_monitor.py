@@ -99,7 +99,6 @@ def stream_quality_monitor(
     *,
     stats_dir: str,
     checkpoint_dir: str,
-    threshold: float = 0.5,
     **gate_kwargs,
 ):
     """Wire the monitor onto a document stream: one quality-rate row
@@ -109,6 +108,5 @@ def stream_quality_monitor(
         checkpoint_dir,
         process_quality_batch,
         stats_dir=stats_dir,
-        threshold=threshold,
         **gate_kwargs,
     )

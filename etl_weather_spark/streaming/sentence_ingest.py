@@ -82,7 +82,6 @@ def stream_sentence_dedup(
     index_table: str,
     clean_dir: str,
     checkpoint: str,
-    sent_tokens: int = 8,
 ):
     """Wire the batch body into a streaming query."""
     return start_batches(
@@ -92,5 +91,5 @@ def stream_sentence_dedup(
         name=QUERY_NAME,
         index_table=index_table,
         clean_dir=clean_dir,
-        sent_tokens=sent_tokens,
+        sent_tokens=2,
     )

@@ -35,14 +35,14 @@ __all__ = [
 N_SHARDS = 64
 
 
-def shard_id_col(doc_id_col: str = "doc_id") -> F.Column:
+def shard_id_col() -> F.Column:
     """The registry's content-addressed shard assignment
     (queries.shard_assignment_stats): md5 hex prefix → BIGINT % 64."""
     return (
         F.conv(
             F.substring(
                 F.md5(
-                    F.concat(F.lit("shard|"), F.col(doc_id_col).cast("string"))
+                    F.concat(F.lit("shard|"), F.col("doc_id").cast("string"))
                 ),
                 1,
                 8,

@@ -133,14 +133,9 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def dedup_stream(
-    events: DataFrame,
-    *,
-    key_cols: list[str] | None = None,
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: drop repeated keys with bounded state.
+def dedup_stream(events: DataFrame) -> DataFrame:
+    """Streaming exact dedup: drop repeated ``event_id`` keys with
+    bounded state (1-hour watermark on ``ts``).
 
     ``dropDuplicatesWithinWatermark`` keeps a key in the dedup state
     only until the watermark passes it — at 100 TB/day the state is
@@ -148,9 +143,8 @@ def dedup_stream(
     makes exact dedup feasible on an unbounded stream (the streaming
     counterpart of queries.dedup_exact's fingerprint groupBy).
     """
-    key_cols = key_cols or ["event_id"]
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        key_cols
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
+        ["event_id"]
     )
 
 
@@ -162,13 +156,13 @@ class EwmaAnomalyProcessor:
     Keeps one ValueState row (ewma, n) per user; each trigger folds the
     user's events in event-time order and emits rows flagged anomalous
     when the value deviates from the running EWMA by more than
-    ``threshold`` × the EWMA (after a warm-up of ``min_n`` events).
+    2 × the EWMA (after a warm-up of 3 events).
     """
 
-    def __init__(self, alpha: float = 0.3, threshold: float = 2.0, min_n: int = 3):
+    def __init__(self, alpha: float = 0.3):
         self.alpha = alpha
-        self.threshold = threshold
-        self.min_n = min_n
+        self.threshold = 2.0
+        self.min_n = 3
 
     def init(self, handle) -> None:
         self._state = handle.getValueState("ewma", "ewma double, n long")
@@ -197,13 +191,7 @@ class EwmaAnomalyProcessor:
         pass
 
 
-def ewma_anomalies(
-    events: DataFrame,
-    *,
-    alpha: float = 0.3,
-    threshold: float = 2.0,
-    min_n: int = 3,
-) -> DataFrame:
+def ewma_anomalies(events: DataFrame) -> DataFrame:
     """Per-user EWMA anomaly stream via ``transformWithStateInPandas``.
 
     Scale: state is one (ewma, n) row per user, sharded by the grouping
@@ -225,7 +213,7 @@ def ewma_anomalies(
         events.select("user_id", "ts", "value")
         .groupBy("user_id")
         .transformWithStateInPandas(
-            EwmaAnomalyProcessor(alpha=alpha, threshold=threshold, min_n=min_n),
+            EwmaAnomalyProcessor(),
             outputStructType=(
                 "user_id long, ts timestamp, value double, "
                 "ewma double, is_anomaly boolean"

@@ -24,12 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def enrich_stream(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: list[str] | str,
-    how: str = "left",
-) -> DataFrame:
+def enrich_stream(stream: DataFrame, dim: DataFrame, on: list[str] | str) -> DataFrame:
     """Stream-static dimension enrichment: the most common streaming
     join — each micro-batch of facts joins a (small) dimension table.
 
@@ -41,19 +36,14 @@ def enrich_stream(
     dim when small: Spark plans a broadcast hash join inside every
     micro-batch, so the stream side never shuffles.
     """
-    return stream.join(F.broadcast(dim), on, how)
+    return stream.join(F.broadcast(dim), on, "left")
 
 
-def attributed_purchases(
-    views: DataFrame,
-    purchases: DataFrame,
-    horizon: str = "30 minutes",
-    watermark: str = "0 seconds",
-) -> DataFrame:
+def attributed_purchases(views: DataFrame, purchases: DataFrame) -> DataFrame:
     """Join each purchase to every view by the same user in the
-    preceding ``horizon`` — works identically on static frames (batch
-    parity tests) and on streaming frames (watermarks applied, state
-    bounded by ``horizon + watermark``).
+    preceding 30 minutes — works identically on static frames (batch
+    parity tests) and on streaming frames (0-second watermarks applied,
+    state bounded by the 30-minute horizon).
 
     Returns (user_id, view_id, view_ts, purchase_id, purchase_ts,
     lag_sec).
@@ -69,13 +59,13 @@ def attributed_purchases(
         F.col("ts").alias("purchase_ts"),
     )
     if v.isStreaming:
-        v = v.withWatermark("view_ts", watermark)
+        v = v.withWatermark("view_ts", "0 seconds")
     if p.isStreaming:
-        p = p.withWatermark("purchase_ts", watermark)
+        p = p.withWatermark("purchase_ts", "0 seconds")
     cond = (
         (v["user_id"] == p["p_user"])
         & (p["purchase_ts"] >= v["view_ts"])
-        & (p["purchase_ts"] <= v["view_ts"] + F.expr(f"INTERVAL {horizon}"))
+        & (p["purchase_ts"] <= v["view_ts"] + F.expr("INTERVAL 30 minutes"))
     )
     return (
         v.join(p, cond, "inner")
@@ -92,16 +82,11 @@ def attributed_purchases(
     )
 
 
-def view_attribution_outer(
-    views: DataFrame,
-    purchases: DataFrame,
-    horizon: str = "30 minutes",
-    watermark: str = "0 seconds",
-) -> DataFrame:
+def view_attribution_outer(views: DataFrame, purchases: DataFrame) -> DataFrame:
     """LEFT OUTER stream-stream interval join: EVERY view eventually
     emits — matched views carry their purchase(s) immediately (inner
     results don't wait), unmatched views emit with a NULL purchase once
-    the watermark passes ``view_ts + horizon`` and no match can still
+    the watermark passes ``view_ts`` + 30 minutes and no match can still
     arrive. The "did this impression convert?" feed, nulls included.
 
     Same code runs on static frames (plain left join, everything emits
@@ -128,13 +113,13 @@ def view_attribution_outer(
         F.col("ts").alias("purchase_ts"),
     )
     if v.isStreaming:
-        v = v.withWatermark("view_ts", watermark)
+        v = v.withWatermark("view_ts", "0 seconds")
     if p.isStreaming:
-        p = p.withWatermark("purchase_ts", watermark)
+        p = p.withWatermark("purchase_ts", "0 seconds")
     cond = (
         (v["user_id"] == p["p_user"])
         & (p["purchase_ts"] >= v["view_ts"])
-        & (p["purchase_ts"] <= v["view_ts"] + F.expr(f"INTERVAL {horizon}"))
+        & (p["purchase_ts"] <= v["view_ts"] + F.expr("INTERVAL 30 minutes"))
     )
     return v.join(p, cond, "leftOuter").select(
         "user_id",

@@ -145,13 +145,13 @@ def test_fingerprint_tracks_data_and_params(tmp_path):
     sf.mkdir()
     f = sf / "documents.parquet"
     f.write_bytes(b"abc")
-    fp1 = dataset_fingerprint(str(sf), ("documents",), {"k": 1})
-    assert fp1 == dataset_fingerprint(str(sf), ("documents",), {"k": 1})
+    fp1 = dataset_fingerprint(str(sf), {"k": 1})
+    assert fp1 == dataset_fingerprint(str(sf), {"k": 1})
     # param change -> new fingerprint
-    assert fp1 != dataset_fingerprint(str(sf), ("documents",), {"k": 2})
+    assert fp1 != dataset_fingerprint(str(sf), {"k": 2})
     # data change (size or mtime) -> new fingerprint
     f.write_bytes(b"abcd")
-    assert fp1 != dataset_fingerprint(str(sf), ("documents",), {"k": 1})
+    assert fp1 != dataset_fingerprint(str(sf), {"k": 1})
 
 
 def test_dataset_key_distinguishes_same_basename(tmp_path):

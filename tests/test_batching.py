@@ -97,7 +97,7 @@ def test_cross_pairs_only_cross_side(spark):
     )
     pairs = {
         (r.index_id, r.new_id)
-        for r in minhash_lsh_cross_pairs(index, new, num_hashes=16, bands=8).collect()
+        for r in minhash_lsh_cross_pairs(index, new, bands=8).collect()
     }
     # cross-side dups found
     assert (1, 11) in pairs

@@ -16,7 +16,7 @@ from etl_weather_spark.operators.bloom import (
 
 
 def test_optimal_params_reasonable():
-    m, k = optimal_params(1000, 0.01)
+    m, k = optimal_params(1000)
     assert m % 64 == 0
     assert 9000 <= m <= 11000  # ~9.6 bits/key at 1% fp
     assert 6 <= k <= 8
@@ -26,7 +26,7 @@ def test_optimal_params_reasonable():
 def test_no_false_negatives(spark):
     keys = [f"key-{i}" for i in range(500)]
     df = spark.createDataFrame([(k,) for k in keys], "fp string")
-    m, k = optimal_params(500, 0.01)
+    m, k = optimal_params(500)
     bm = bloom_build(df, "fp", m_bits=m, k=k)
     got = (
         df.withColumn("hit", bloom_might_contain(df, F.col("fp"), bm, m_bits=m, k=k))
@@ -39,7 +39,7 @@ def test_no_false_negatives(spark):
 def test_definitely_absent_mostly_true_negatives(spark):
     idx = spark.createDataFrame([(f"in-{i}",) for i in range(500)], "fp string")
     probe = spark.createDataFrame([(f"out-{i}",) for i in range(500)], "fp string")
-    m, k = optimal_params(500, 0.01)
+    m, k = optimal_params(500)
     bm = bloom_build(idx, "fp", m_bits=m, k=k)
     fp_hits = (
         probe.withColumn(
@@ -93,7 +93,7 @@ def test_partial_bitmap_build_equals_single_partition(spark):
     vals = [(f"v{i}",) for i in range(300)]
     many = spark.createDataFrame(vals, "fp string").repartition(13)
     one = spark.createDataFrame(vals, "fp string").coalesce(1)
-    m, k = optimal_params(300, 0.01)
+    m, k = optimal_params(300)
     assert np.array_equal(
         bloom_build(many, "fp", m_bits=m, k=k),
         bloom_build(one, "fp", m_bits=m, k=k),

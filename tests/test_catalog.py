@@ -102,7 +102,7 @@ def test_catalog_expire_keeps_pinned_old_versions(spark, tmp_path):
     for i in range(1, 4):
         catalog_commit_tables(spark, cat, {"docs": _docs(spark, [(1, f"d{i}")])})
 
-    expired = catalog_expire(cat, keep_last=2)
+    expired = catalog_expire(cat)
     # catalog v2, v3 survive -> docs v2, v3 pinned; docs v0, v1 expired
     assert expired == {"docs": [0, 1]}
     d, e = _pairs(spark, cat)

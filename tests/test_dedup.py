@@ -62,6 +62,185 @@ def test_materialization_is_spelled_once():
     assert strays == []
 
 
+#: defaulted parameters that every call leaves at one value on purpose,
+#: keyed (package-relative function, parameter)
+ONE_VALUE_OK = {
+    ("serve.py::EngineAPI.__init__", "geocode_dim"): "seam: injects a geocode table",
+    ("serve.py::EngineAPI.__init__", "funfact_model"): "seam: injects a model",
+    ("serve.py::make_server", "geocode_dim"): "seam: forwarded to EngineAPI",
+    ("serve.py::make_server", "funfact_model"): "seam: forwarded to EngineAPI",
+    ("sources/snapshots.py::snapshot_write_checked", "ingest_ts"): "seam: the commit clock",
+    ("sources/catalog.py::catalog_commit_tables", "table_root"): "deployment: a directory",
+    ("streaming/sketch_maintain.py::load_cms_state", "lineage"): "deployment: a checkpoint",
+}
+
+
+def _one_value_parameters() -> dict[tuple[str, str], str]:
+    """Defaulted parameters of package functions that every call in the
+    repo (package, tests, scripts, perfbench, bench.py) leaves at one
+    value: (function, parameter) -> that value.
+
+    A call that omits the parameter passes its default; a literal
+    argument is its value; a bare name forwarding a defaulted parameter
+    of the enclosing function passes whatever values THAT parameter
+    takes. Anything else — an expression, a ``*``/``**`` splat, or the
+    function used as a value (a callback, a decorator, the registry) —
+    counts as "any value". Calls resolve by bare name, so a name shared
+    by several functions pools their calls (conservative); ``from m
+    import f as g`` makes ``g(...)`` a call of ``f``.
+    """
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "etl_weather_spark"
+    callers = [p for p in sorted(pkg.rglob("*.py")) if "_vendor" not in p.parts]
+    for d in ("tests", "scripts", "perfbench"):
+        callers += sorted((root / d).rglob("*.py"))
+    callers += [root / "bench.py", root / "__spark_entry__.py"]
+    transparent = {"staticmethod", "classmethod", "contextmanager", "lru_cache", "cache"}
+    ANY = ("any",)
+
+    def literal(node):
+        try:
+            return ("lit", repr(ast.literal_eval(node)))
+        except ValueError:
+            return None
+
+    def name_of(node):
+        node = node.func if isinstance(node, ast.Call) else node
+        return node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", "")
+
+    funcs = {}  # id(def node) -> record
+    by_name: dict[str, list] = {}
+    trees = [(p, ast.parse(p.read_text())) for p in callers]
+    for path, tree in trees:
+        if pkg not in path.parents:
+            continue
+        rel = path.relative_to(pkg).as_posix()
+
+        def visit(node, prefix, cls):
+            for ch in ast.iter_child_nodes(node):
+                if isinstance(ch, ast.ClassDef):
+                    visit(ch, f"{prefix}{ch.name}.", ch.name)
+                elif isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    a = ch.args
+                    pos = [x.arg for x in a.posonlyargs + a.args]
+                    defaults = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+                    defaults.update(
+                        (x.arg, d) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d
+                    )
+                    decos = {name_of(d) for d in ch.decorator_list}
+                    f = {
+                        "key": f"{rel}::{prefix}{ch.name}",
+                        "name": ch.name,
+                        "pos": pos,
+                        "self": int(cls is not None and "staticmethod" not in decos),
+                        "defaults": defaults,
+                        "values": {p: set() for p in defaults},
+                        "any": bool(decos - transparent),
+                        "stores": {
+                            n.id for n in ast.walk(ch)
+                            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+                        },
+                    }
+                    funcs[id(ch)] = f
+                    by_name.setdefault(ch.name, []).append(f)
+                    if cls and ch.name == "__init__":
+                        by_name.setdefault(cls, []).append(f)
+                    visit(ch, f"{prefix}{ch.name}.", None)
+                else:
+                    visit(ch, prefix, cls)
+
+        visit(tree, "", None)
+
+    def value(node, scopes):
+        lit = literal(node)
+        if lit is not None or not isinstance(node, ast.Name):
+            return lit or ANY
+        for fn in reversed(scopes):
+            f = funcs.get(id(fn))
+            a = fn.args
+            if node.id in {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}:
+                ok = f and node.id in f["defaults"] and node.id not in f["stores"]
+                return ("fwd", id(fn), node.id) if ok else ANY
+        return ANY
+
+    def record(call, scopes, aliases):
+        bare = isinstance(call.func, ast.Name)
+        called = aliases.get(name_of(call), name_of(call)) if bare else name_of(call)
+        for f in by_name.get(called, ()):
+            # self is bound unless a method is called by its bare name
+            skip = 0 if bare and called == f["name"] else f["self"]
+            given, star = {}, None
+            for i, arg in enumerate(call.args):
+                if isinstance(arg, ast.Starred):
+                    star = i + skip
+                    break
+                if i + skip < len(f["pos"]):
+                    given[f["pos"][i + skip]] = value(arg, scopes)
+            splat = any(kw.arg is None for kw in call.keywords)
+            given.update((kw.arg, value(kw.value, scopes)) for kw in call.keywords if kw.arg)
+            for p in f["defaults"]:
+                late = star is not None and p in f["pos"] and f["pos"].index(p) >= star
+                f["values"][p].add(given.get(p, ANY if splat or late else ("default",)))
+
+    def walk(node, scopes, aliases):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scopes = scopes + [node]
+        if isinstance(node, ast.Call):
+            record(node, scopes, aliases)
+        for ch in ast.iter_child_nodes(node):
+            called = isinstance(node, ast.Call) and node.func is ch
+            loaded = isinstance(ch, (ast.Name, ast.Attribute)) and isinstance(ch.ctx, ast.Load)
+            if loaded and not called:
+                name = name_of(ch)
+                for f in by_name.get(aliases.get(name, name), ()):
+                    f["any"] = True  # used as a value
+            walk(ch, scopes, aliases)
+
+    for _, tree in trees:
+        aliases = {
+            a.asname: a.name
+            for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+            for a in n.names if a.asname
+        }
+        walk(tree, [], aliases)
+
+    def resolve(f, p, seen):
+        if f["any"]:
+            return {ANY}
+        out = set()
+        for v in f["values"][p] or {("default",)}:
+            if v == ("default",):
+                out.add(literal(f["defaults"][p]) or ("expr", ast.dump(f["defaults"][p])))
+            elif v[0] == "fwd":
+                hop = (v[1], v[2])
+                out |= {ANY} if hop in seen else resolve(funcs[v[1]], v[2], seen | {hop})
+            else:
+                out.add(v)
+        return out
+
+    one = {}
+    for f in funcs.values():
+        for p in f["defaults"]:
+            vals = resolve(f, p, {(id(f), p)})
+            if len(vals) == 1 and ANY not in vals:
+                one[(f["key"], p)] = next(iter(vals))[1]
+    return one
+
+
+def test_every_defaulted_parameter_takes_two_values():
+    """A defaulted parameter that every call leaves at one value is a
+    configuration no test and no workload runs: give it that value and
+    delete the code only other values reach. Seams that inject an
+    effectful dependency and deployment settings stay, listed in
+    ``ONE_VALUE_OK`` with a reason."""
+    one = _one_value_parameters()
+    assert sorted(set(one) - set(ONE_VALUE_OK)) == []
+    assert sorted(set(ONE_VALUE_OK) - set(one)) == []  # no stale entries
+
+
 def test_exact_dedup(spark):
     out = exact_dedup(_docs(spark))
     ids = sorted(r.doc_id for r in out.collect())
@@ -77,7 +256,7 @@ def test_minhash_signature_identity(spark):
 
 
 def test_minhash_lsh_finds_near_dups(spark):
-    pairs = minhash_lsh_pairs(_docs(spark), num_hashes=8, bands=4, shingle_n=2)
+    pairs = minhash_lsh_pairs(_docs(spark), num_hashes=8, shingle_n=2)
     got = {(r.id_a, r.id_b): r.est_jaccard for r in pairs.collect()}
     assert got[(1, 4)] == 1.0 and got[(1, 5)] == 1.0
     assert (1, 2) in got and got[(1, 2)] >= 0.5  # near-dup caught by some band
@@ -98,7 +277,7 @@ def test_simhash_distance(spark):
 
 def test_ngram_jaccard_exact_value(spark):
     # doc1 vs doc2: 7 distinct 3-gram shingles each, 6 shared
-    pairs = ngram_jaccard_pairs(_docs(spark), shingle_n=3).collect()
+    pairs = ngram_jaccard_pairs(_docs(spark)).collect()
     got = {(r.id_a, r.id_b): r.jaccard for r in pairs}
     assert abs(got[(1, 2)] - 6 / 8) < 1e-9
     assert got[(1, 4)] == 1.0
@@ -120,8 +299,8 @@ def test_range_join_bucketed_matches_naive(spark):
     right = spark.createDataFrame(rrows, "user_id long, rts timestamp")
 
     got = range_join_bucketed(
-        left, right, left_ts="lts", right_ts="rts", by=["user_id"],
-        lower_sec=0, upper_sec=600,
+        left, right, left_ts="lts", right_ts="rts",
+        upper_sec=600,
     )
     naive = (
         left.join(right, "user_id")
@@ -552,7 +731,7 @@ def test_verify_candidates_jaccard_prunes_and_scores(spark):
            for r in verify_candidates_jaccard(docs, cand, min_jaccard=0.5).collect()}
     assert set(got) == {(1, 2)}
     full = {(r.id_a, r.id_b): r.jaccard
-            for r in ngram_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5).collect()}
+            for r in ngram_jaccard_pairs(docs, min_jaccard=0.5).collect()}
     assert got[(1, 2)] == full[(1, 2)]
 
 
@@ -594,16 +773,16 @@ def test_verified_pipelines_detect_planted_mutations(spark):
         docs = spark.createDataFrame(docs_rows, "doc_id long, text string")
         truth = {
             (r.id_a, r.id_b)
-            for r in ngram_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5).collect()
+            for r in ngram_jaccard_pairs(docs, min_jaccard=0.5).collect()
         }
         assert truth, f"seed {seed}: generator planted no >=0.5 pairs"
-        mh_cand = minhash_lsh_pairs(docs, num_hashes=16, bands=4, hash_family="xxhash64")
+        mh_cand = minhash_lsh_pairs(docs, num_hashes=16, hash_family="xxhash64")
         mh = {
             (r.id_a, r.id_b)
             for r in verify_candidates_jaccard(docs, mh_cand, min_jaccard=0.5).collect()
         }
         assert mh == truth, f"seed {seed}: minhash missed {truth - mh}"
-        wn_cand = winnow_candidates(docs, min_shared=10, max_doc_freq=100)
+        wn_cand = winnow_candidates(docs, min_shared=10)
         wn = {
             (r.id_a, r.id_b)
             for r in verify_candidates_jaccard(docs, wn_cand, min_jaccard=0.5).collect()
@@ -645,10 +824,10 @@ def test_prefix_filter_candidates_complete_and_pruned(spark):
 
         truth = {
             (r.id_a, r.id_b)
-            for r in ngram_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5).collect()
+            for r in ngram_jaccard_pairs(docs, min_jaccard=0.5).collect()
         }
         assert truth, f"seed {seed}: no planted pairs"
-        cand = prefix_filter_candidates(docs, shingle_n=3, min_jaccard=0.5)
+        cand = prefix_filter_candidates(docs, min_jaccard=0.5)
         cand_set = {(r.id_a, r.id_b) for r in cand.collect()}
         assert truth <= cand_set, f"seed {seed}: prefix filter dropped a true pair"
 
@@ -668,7 +847,7 @@ def test_prefix_filter_candidates_complete_and_pruned(spark):
         verified = {
             (r.id_a, r.id_b)
             for r in verify_candidates_jaccard(
-                docs, cand, shingle_n=3, min_jaccard=0.5
+                docs, cand, min_jaccard=0.5
             ).collect()
         }
         assert verified == truth
@@ -686,7 +865,7 @@ def test_prefix_filter_candidates_complete_and_pruned(spark):
         exact = {
             (r.id_a, r.id_b): round(r.jaccard, 9)
             for r in ngram_jaccard_pairs(
-                docs, shingle_n=3, min_jaccard=0.5
+                docs, min_jaccard=0.5
             ).collect()
         }
         assert fused == exact
@@ -721,7 +900,7 @@ def test_cluster_safe_split_no_cross_split_near_dups(spark, sf_dir):
     assert all(len(s) == 1 for s in by_cluster.values())
 
     # and therefore no near-dup pair straddles two splits
-    pairs = ngram_jaccard_pairs(docs, shingle_n=3, min_jaccard=0.5).collect()
+    pairs = ngram_jaccard_pairs(docs, min_jaccard=0.5).collect()
     assert len(pairs) > 0  # corpus has planted near-dups; test is live
     for p in pairs:
         assert out[p.id_a][1] == out[p.id_b][1], (p.id_a, p.id_b)
@@ -790,7 +969,7 @@ def test_strip_boilerplate_sentences_threshold_and_restore(spark):
     got = {
         r.doc_id: r.asDict()
         for r in strip_boilerplate_sentences(
-            df, sent_tokens=2, frac_num=2, frac_den=5
+            df, sent_tokens=2
         ).collect()
     }
     assert got[1]["clean_text"] == "w1 w2" and got[1]["boiler_removed"] == 1

@@ -38,7 +38,7 @@ def test_empty_sides_through_joins(spark):
     eright = spark.createDataFrame([], "user_id long, rts timestamp")
     assert (
         range_join_bucketed(
-            eleft, eright, left_ts="lts", right_ts="rts", by=["user_id"]
+            eleft, eright, left_ts="lts", right_ts="rts"
         ).count()
         == 0
     )

@@ -50,7 +50,6 @@ def test_incremental_index_loop(spark, tmp_path):
     verified = verify_pairs_jaccard_inline(
         union_docs,
         cand.selectExpr("index_id AS id_a", "new_id AS id_b"),
-        min_jaccard=0.5,
     )
     assert {(r.id_a, r.id_b) for r in verified.collect()} == {(1, 11)}
 

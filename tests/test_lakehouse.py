@@ -19,7 +19,7 @@ def test_csv_roundtrip_with_bad_dates(spark, tmp_path):
         [("a", "2024-01-01 10:00:00"), ("b", "not-a-date")], "name string, ts string"
     )
     write_table(df, p, fmt="csv")
-    back = read_csv_tolerant(spark, p, timestamp_cols=["ts"])
+    back = read_csv_tolerant(spark, p)
     rows = {r.name: r.ts for r in back.collect()}
     assert rows["a"] is not None and rows["b"] is None  # coerce, don't fail
 
@@ -198,7 +198,7 @@ def test_incremental_refresh_rebuilds_only_touched_partitions(spark, tmp_path):
     b1 = hourly([("x", d1, 25.0, 0.0, 10.0, 20.0), ("x", d2, 26.0, 1.0, 30.0, 40.0)])
     aff = incremental_refresh(
         spark, b1, silver_path=silver, gold_path=gold,
-        build_gold=daily_from_hourly, partition_col="date",
+        build_gold=daily_from_hourly,
     )
     assert sorted(aff) == [d1, d2]
 
@@ -212,7 +212,7 @@ def test_incremental_refresh_rebuilds_only_touched_partitions(spark, tmp_path):
     b2 = hourly([("x", d2, 31.0, 0.5, 50.0, 60.0), ("x", d3, 24.0, 3.0, 70.0, 80.0)])
     aff = incremental_refresh(
         spark, b2, silver_path=silver, gold_path=gold,
-        build_gold=daily_from_hourly, partition_col="date",
+        build_gold=daily_from_hourly,
     )
     assert sorted(aff) == [d2, d3]
     assert file_hashes(d1) == day1_before  # untouched partition untouched

@@ -10,7 +10,7 @@ from etl_weather_spark.operators.linkage import char_ngrams, fuzzy_join_blocked
 def test_char_ngrams_padded(spark):
     row = (
         spark.createDataFrame([("ab",)], "s string")
-        .select(char_ngrams(F.col("s"), 3).alias("g"))
+        .select(char_ngrams(F.col("s")).alias("g"))
         .first()
     )
     # "##ab##" -> 4 padded trigrams; boundary grams carry the prefix
@@ -27,7 +27,7 @@ def test_finds_planted_typos_across_tables(spark):
     got = {
         (r.name_a, r.name_b): r.edit_dist
         for r in fuzzy_join_blocked(
-            left, right, left_col="name", right_col="name", max_dist=2
+            left, right, left_col="name", right_col="name"
         ).collect()
     }
     assert got[("acme corp", "acme c0rp")] == 1
@@ -46,7 +46,7 @@ def test_matches_exact_all_pairs_on_random_typos(spark):
     blocked = {
         (r.name_a, r.name_b)
         for r in fuzzy_join_blocked(
-            df, df, left_col="name", right_col="name", max_dist=2
+            df, df, left_col="name", right_col="name"
         ).filter(F.col("name_a") < F.col("name_b")).collect()
     }
     a = df.select(F.col("name").alias("x")).distinct()
@@ -68,7 +68,7 @@ def test_max_gram_freq_drops_stopword_grams(spark):
     names = [(f"company{i} inc",) for i in range(10)] + [("company1 ink",)]
     df = spark.createDataFrame(names, "name string")
     capped = fuzzy_join_blocked(
-        df, df, left_col="name", right_col="name", max_dist=2, max_gram_freq=5
+        df, df, left_col="name", right_col="name", max_gram_freq=5
     ).filter(F.col("name_a") < F.col("name_b"))
     got = {(r.name_a, r.name_b) for r in capped.collect()}
     # "company1 inc" ~ "company1 ink" share the rare "ny1 " grams

@@ -42,7 +42,7 @@ def test_foreachbatch_upsert_latest(spark, tmp_path):
     (src / "b1.json").write_text("\n".join(json.dumps(e) for e in events))
     (src / "b2.json").write_text(json.dumps(update))
 
-    stream = read_event_stream(spark, str(src), fmt="json", max_files_per_trigger=1)
+    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     gold = str(tmp_path / "gold")
     q = stream_upsert_latest(
         stream.withColumn("ingest_ts", F.col("ts")),
@@ -53,6 +53,6 @@ def test_foreachbatch_upsert_latest(spark, tmp_path):
 
     raw = spark.read.parquet(gold)
     assert raw.count() == 3  # blind appends: both versions of event 1
-    latest = latest_view(raw, ["event_id"], ts_col="ingest_ts")
+    latest = latest_view(raw, ["event_id"])
     got = {r.event_id: r.value for r in latest.collect()}
     assert got == {1: 9.0, 2: 2.0}  # view serves the newest per key

@@ -47,14 +47,12 @@ def _multiset(rows, columns):
     return sorted("|".join(_norm(r[i]) for i in idx) for r in rows)
 
 
-#: queries whose plans may hold ArrowEvalPython / MapInPandas stages;
-#: every other registered query must plan without them
+#: exactly the queries whose plans (or the plans of the frames they
+#: fence) hold ArrowEvalPython / MapInPandas stages
 ARROW_OK = {
     # pandas/Arrow kernels by design
-    "slugify_parts", "geo_mean_values", "winnow_candidates",
-    "heavy_hitter_users", "media_payload_stats", "doc_pagerank",
-    "dup_canonicals", "udtf_melt_events", "word_freq",
-    "recommendation_text", "ann_cosine_lsh", "ann_cosine_ivf",
+    "winnow_candidates", "heavy_hitter_users", "media_payload_stats",
+    "udtf_melt_events", "word_freq", "ann_cosine_lsh", "ann_cosine_ivf",
     # round-2 wave 2/3: Bloom probe, PQ encode/ADC, CMS probe are
     # Arrow kernels
     "bloom_screen_new_docs", "ann_cosine_pq", "cms_user_freq",
@@ -65,9 +63,11 @@ ARROW_OK = {
     "media_pixel_stats", "media_wav_stats", "png_meta_probe",
     "media_resize_stats", "media_decimate_stats", "image_dhash_dedup",
     # round-5: fractional-ratio conform stages (same codec path);
-    # rank-based BPE encode (vocab-bound Arrow pass by design)
+    # rank-based BPE encode (vocab-bound Arrow pass by design); the
+    # tokenizer cost report fences its encode, and the token-mixture
+    # plan fences the cost report
     "media_area_resize_stats", "media_resample_stats",
-    "bpe_ranked_encode_stats",
+    "bpe_ranked_encode_stats", "tokenizer_cost_report", "token_mixture_plan",
     # persisted-PQ serving (ADC scan is an Arrow kernel by design)
     "ann_pq_index_roundtrip",
     # round-6: real baseline-JPEG decode runs inside mapInPandas by
@@ -86,7 +86,7 @@ ARROW_OK = {
     "corpus_release_report", "corpus_release_report_v2",
     "ann_ivf_recall_audit", "matryoshka_truncation_audit",
     "ann_cosine_topk", "hybrid_search_rrf",
-    "embedding_near_dupes", "semantic_dedup", "semantic_dedup_ivf",
+    "embedding_near_dupes", "semantic_dedup",
     # round-11 (optimization): portable-SimHash votes kernel — one
     # ArrowEvalPython projection over the Catalyst token array,
     # bit-parity with the 64-sum aggregate form pinned in
@@ -98,10 +98,31 @@ ORACLES = q.oracle_sql()
 NAMES = sorted(q.queries())
 
 
+@pytest.fixture
+def fenced_plans(monkeypatch):
+    """Formatted plans of the frames fenced while a query is built: a
+    fence shows in the query's own plan as an ``ExistingRDD`` leaf, so
+    whatever runs below it is only visible here. ``operators.fence`` is
+    the only caller of ``localCheckpoint``
+    (``test_dedup.test_materialization_is_spelled_once``)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans: list[str] = []
+    real = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(formatted_plan(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    return plans
+
+
 @pytest.mark.parametrize("name", NAMES)
-def test_query_matches_oracle(spark, sf_dir, duck, name):
+def test_query_matches_oracle(spark, sf_dir, duck, fenced_plans, name):
     """Rows equal the DuckDB oracle's, no cache entry is left behind,
-    and the plan holds the registry-wide invariants:
+    and the plan — with the plans of the frames fenced while building
+    it — holds the registry-wide invariants:
 
     - no BatchEvalPython anywhere (row-at-a-time Python UDFs are the
       canonical 100 TB anti-pattern; all Python here must be
@@ -109,13 +130,13 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     - no CartesianProduct (a true cartesian of two multi-row relations
       is always a bug at scale; 1-row scalar joins plan as broadcast
       nested loop, which is allowed);
-    - ArrowEvalPython / mapInPandas stages only in the known
+    - ArrowEvalPython / mapInPandas stages exactly in the known
       kernel-backed pipelines (``ARROW_OK``).
     """
     fn = q.queries()[name]
     try:
         sdf = fn(spark, sf_dir)
-        plan = formatted_plan(sdf)
+        plans = [formatted_plan(sdf), *fenced_plans]
         spark_cols = sdf.columns
         spark_rows = [tuple(r) for r in sdf.collect()]
     finally:
@@ -124,16 +145,16 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
         pinned = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
         spark.catalog.clearCache()
     assert not pinned, f"{name}: left a CacheManager entry after the query"
-    assert "BatchEvalPython" not in plan, f"{name}: BatchEvalPython"
-    assert "CartesianProduct" not in plan, f"{name}: CartesianProduct"
-    if "ArrowEvalPython" in plan or "MapInPandas" in plan:
+    for plan in plans:
+        assert "BatchEvalPython" not in plan, f"{name}: BatchEvalPython"
+        assert "CartesianProduct" not in plan, f"{name}: CartesianProduct"
+    arrow = any("ArrowEvalPython" in p or "MapInPandas" in p for p in plans)
+    if arrow:
         assert name in ARROW_OK, f"{name}: unexpected Arrow/pandas stage"
+    else:
+        assert name not in ARROW_OK, f"{name}: listed in ARROW_OK, no Arrow/pandas stage"
 
-    if name not in ORACLES:
-        # weaker rows-only check for non-SQL-expressible ops
-        assert len(spark_rows) >= 0
-        return
-
+    assert name in ORACLES
     res = duck.execute(ORACLES[name])
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()

@@ -105,6 +105,10 @@ def test_provinces_and_regencies_routes(server):
     assert len(body["results"]) == 5  # 25 nations over 5 regions
     status, body = _get(server, "/regencies/notanumber")
     assert status == 400
+    # "²".isdigit() is True but int("²") raises: a digit that is not a
+    # decimal must be refused, not reach the generic 500 handler
+    status, body = server.api.handle("/regencies/²", {})
+    assert status == 400 and "bad province code" in body["error"]
 
 
 def test_funfact_route_fresh_fast_semantics(server, tmp_path):
@@ -146,10 +150,12 @@ def test_search_count_validation(server):
     assert status == 400
     status, body = _get(server, "/search?q=in&count=-1")
     assert status == 400
+    status, body = _get(server, "/search?q=in&count=%C2%B2")  # "²"
+    assert status == 400 and "bad count" in body["error"]
 
 
 def test_limit_validation(server):
-    for bad in ("abc", "0"):
+    for bad in ("abc", "0", "%C2%B2"):  # "%C2%B2" decodes to "²"
         status, body = _get(server, f"/data/hourly?limit={bad}")
         assert status == 400 and "bad limit" in body["error"]
 

@@ -37,7 +37,7 @@ def test_lsh_recall_against_bruteforce(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5)
     exact = cosine_topk_bruteforce(emb, queries, k=10).collect()
-    approx = cosine_topk_lsh(emb, queries, k=10, n_planes=6, n_tables=8).collect()
+    approx = cosine_topk_lsh(emb, queries, n_tables=8).collect()
     exact_sets = {}
     for r in exact:
         exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -134,7 +134,7 @@ def test_ivf_recall_against_bruteforce(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5)
     exact = cosine_topk_bruteforce(emb, queries, k=10).collect()
-    approx = cosine_topk_ivf(emb, queries, k=10, n_clusters=16, n_probe=8).collect()
+    approx = cosine_topk_ivf(emb, queries).collect()
     exact_sets, approx_sets = {}, {}
     for r in exact:
         exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -223,10 +223,10 @@ def test_pq_recall_and_compression(spark, sf_dir):
     )
 
     emb = q.load(spark, sf_dir, "embeddings")
-    books = pq_train_codebooks(emb, n_subspaces=8, n_codes=16, seed=42)
+    books = pq_train_codebooks(emb)
     assert books.shape == (8, 16, 8)
     # training is deterministic (ordered sample + seeded init)
-    books2 = pq_train_codebooks(emb, n_subspaces=8, n_codes=16, seed=42)
+    books2 = pq_train_codebooks(emb)
     assert np.array_equal(books, books2)
 
     codes = pq_encode(emb, books).collect()
@@ -268,7 +268,7 @@ def test_pq_query_chunking_equivalent_at_1k_queries(spark, sf_dir):
     qs = emb.unionByName(
         emb.withColumn("vec_id", F.col("vec_id") + F.lit(10_000))
     )
-    books = pq_train_codebooks(emb, n_subspaces=8, n_codes=16, seed=42)
+    books = pq_train_codebooks(emb)
     one_pass = cosine_topk_pq(
         emb, qs, k=3, shortlist=20, books=books, query_chunk=1_000_000
     )
@@ -508,7 +508,7 @@ def test_power_iteration_replay_and_convergence(spark, sf_dir):
         dtype=np.float64,
     )
     want_x, want_eig = replay(X)
-    rows = power_iteration_top_component(emb, dim=64, iters=3).collect()
+    rows = power_iteration_top_component(emb, dim=64).collect()
     got = np.array([r.component6 for r in sorted(rows, key=lambda r: r.pos)])
     assert np.array_equal(got, want_x)
     assert rows[0].eig_mean_gram6 == want_eig
@@ -521,7 +521,7 @@ def test_power_iteration_replay_and_convergence(spark, sf_dir):
     df = spark.createDataFrame(
         [(i, A[i].tolist()) for i in range(300)], "vec_id long, embedding array<double>"
     )
-    rows = power_iteration_top_component(df, dim=16, iters=3).collect()
+    rows = power_iteration_top_component(df, dim=16).collect()
     x = np.array([r.component6 for r in sorted(rows, key=lambda r: r.pos)])
     G = A.T @ A / len(A)
     w, V = np.linalg.eigh(G)

@@ -58,11 +58,11 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     )
     write_bucketed(
         orders, "t_orders_b", str(tmp_path / "t_orders_b"),
-        bucket_cols=["o_key"], n_buckets=4, sort_cols=["o_key"],
+        bucket_cols=["o_key"], sort_cols=["o_key"],
     )
     write_bucketed(
         items, "t_items_b", str(tmp_path / "t_items_b"),
-        bucket_cols=["i_key"], n_buckets=4, sort_cols=["i_key"],
+        bucket_cols=["i_key"], sort_cols=["i_key"],
     )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:

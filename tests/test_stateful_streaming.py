@@ -38,7 +38,7 @@ def _write_batches(tmp_path):
 
 def test_session_window_stream_matches_batch(spark, tmp_path):
     src = _write_batches(tmp_path)
-    stream = read_event_stream(spark, str(src), fmt="json", max_files_per_trigger=1)
+    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     agg = session_user_agg(stream, gap="2 hours", watermark="0 seconds")
     q = (
         agg.writeStream.format("memory")
@@ -71,7 +71,7 @@ def test_session_window_stream_matches_batch(spark, tmp_path):
 
 def test_running_user_totals_across_batches(spark, tmp_path):
     src = _write_batches(tmp_path)
-    stream = read_event_stream(spark, str(src), fmt="json", max_files_per_trigger=1)
+    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     q = (
         running_user_totals(stream)
         .writeStream.format("memory")
@@ -102,9 +102,9 @@ def test_dedup_stream_drops_repeats(spark, tmp_path):
     (src / "b1.json").write_text("\n".join(json.dumps(e) for e in BATCH1))
     (src / "b2.json").write_text("\n".join(json.dumps(e) for e in [dup] + BATCH2))
 
-    stream = read_event_stream(spark, str(src), fmt="json", max_files_per_trigger=1)
+    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     q = (
-        dedup_stream(stream, key_cols=["event_id"], watermark="1 hour")
+        dedup_stream(stream)
         .writeStream.format("memory")
         .queryName("t_dedup")
         .outputMode("append")
@@ -155,7 +155,7 @@ def test_ewma_anomalies_across_batches(spark, tmp_path):
     (src / "b1.json").write_text("\n".join(json.dumps(e) for e in normal))
     (src / "b2.json").write_text("\n".join(json.dumps(e) for e in spike))
 
-    stream = read_event_stream(spark, str(src), fmt="json", max_files_per_trigger=1)
+    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     # transformWithState requires the RocksDB state store
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
@@ -210,7 +210,7 @@ def test_ewma_processor_logic_direct():
         def update(self, v):
             self.val = v
 
-    proc = EwmaAnomalyProcessor(alpha=0.3, threshold=2.0, min_n=3)
+    proc = EwmaAnomalyProcessor(alpha=0.3)
     proc._state = FakeState()
 
     b1 = pd.DataFrame(
@@ -259,9 +259,9 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     (psrc / "b1.json").write_text("\n".join(json.dumps(e) for e in purchases_b1))
     (psrc / "b2.json").write_text("\n".join(json.dumps(e) for e in purchases_b2))
 
-    vstream = read_event_stream(spark, str(vsrc), fmt="json", max_files_per_trigger=1)
-    pstream = read_event_stream(spark, str(psrc), fmt="json", max_files_per_trigger=1)
-    joined = attributed_purchases(vstream, pstream, horizon="30 minutes")
+    vstream = read_event_stream(spark, str(vsrc), max_files_per_trigger=1)
+    pstream = read_event_stream(spark, str(psrc), max_files_per_trigger=1)
+    joined = attributed_purchases(vstream, pstream)
     q = (
         joined.writeStream.format("memory")
         .queryName("t_attrib")
@@ -282,7 +282,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     batch = {
         (r.user_id, r.view_id, r.purchase_id, r.lag_sec)
         for r in attributed_purchases(
-            as_df(views), as_df(purchases_b1 + purchases_b2[:-1]), horizon="30 minutes"
+            as_df(views), as_df(purchases_b1 + purchases_b2[:-1])
         ).collect()
     }
 
@@ -326,10 +326,10 @@ def test_stream_stream_outer_join_emits_unmatched_after_watermark(spark, tmp_pat
     for name, rows in [("b1", purchases_b1), ("b2", purchases_b2), ("b3", purchases_b3)]:
         (psrc / f"{name}.json").write_text("\n".join(json.dumps(e) for e in rows))
 
-    vstream = read_event_stream(spark, str(vsrc), fmt="json", max_files_per_trigger=1)
-    pstream = read_event_stream(spark, str(psrc), fmt="json", max_files_per_trigger=1)
+    vstream = read_event_stream(spark, str(vsrc), max_files_per_trigger=1)
+    pstream = read_event_stream(spark, str(psrc), max_files_per_trigger=1)
     q = (
-        view_attribution_outer(vstream, pstream, horizon="30 minutes")
+        view_attribution_outer(vstream, pstream)
         .writeStream.format("memory")
         .queryName("t_outer_attrib")
         .outputMode("append")
@@ -356,7 +356,6 @@ def test_stream_stream_outer_join_emits_unmatched_after_watermark(spark, tmp_pat
         for r in view_attribution_outer(
             as_df(views_b1 + views_b2 + views_b3),
             as_df(purchases_b1 + purchases_b2 + purchases_b3),
-            horizon="30 minutes",
         )
         .filter(F.col("user_id").isin(1, 2))
         .collect()
@@ -373,7 +372,7 @@ def test_timer_sessions_match_declarative_session_window(spark, tmp_path):
     from etl_weather_spark.streaming.stateful import timer_sessions
 
     src = _write_batches(tmp_path)
-    stream = read_event_stream(spark, str(src), fmt="json", max_files_per_trigger=1)
+    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -433,7 +432,7 @@ def test_map_state_type_counts_match_batch(spark, tmp_path):
     from etl_weather_spark.streaming.stateful import user_type_counts
 
     src = _write_batches(tmp_path)
-    stream = read_event_stream(spark, str(src), fmt="json", max_files_per_trigger=1)
+    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -485,7 +484,7 @@ def test_initial_state_seeds_map_counts(spark, tmp_path):
         "user_id long, event_type string, n_events long",
     )
     src = _write_batches(tmp_path)
-    stream = read_event_stream(spark, str(src), fmt="json", max_files_per_trigger=1)
+    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -561,7 +560,7 @@ def test_timer_sessions_out_of_order_within_lateness(spark, tmp_path):
     src.mkdir()
     (src / "b1.json").write_text("\n".join(json.dumps(e) for e in b1))
     (src / "b2.json").write_text("\n".join(json.dumps(e) for e in b2))
-    stream = read_event_stream(spark, str(src), fmt="json", max_files_per_trigger=1)
+    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -633,7 +632,7 @@ def test_timer_sessions_null_ts_rows_carry_no_session_mass(spark, tmp_path):
     src.mkdir()
     (src / "b1.json").write_text("\n".join(json.dumps(e) for e in b1))
     (src / "b2.json").write_text("\n".join(json.dumps(e) for e in b2))
-    stream = read_event_stream(spark, str(src), fmt="json", max_files_per_trigger=1)
+    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",

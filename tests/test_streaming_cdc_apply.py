@@ -100,7 +100,7 @@ def test_stream_apply_changes_end_to_end(spark, tmp_path):
         .parquet(src + "/*")
     )
     q = stream_apply_changes(
-        feed, table=table, checkpoint=ckpt, on=["k"], seq_col="seq", op_col="op"
+        feed, table=table, checkpoint=ckpt, on=["k"]
     )
     q.awaitTermination(120)
     assert _rows(spark, table) == [(1, "a"), (2, "b")]
@@ -114,8 +114,6 @@ def test_stream_apply_changes_end_to_end(spark, tmp_path):
         table=table,
         checkpoint=ckpt,
         on=["k"],
-        seq_col="seq",
-        op_col="op",
     )
     q2.awaitTermination(120)
     assert _rows(spark, table) == [(1, "A2")]

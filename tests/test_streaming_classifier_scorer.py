@@ -116,8 +116,6 @@ def test_stream_parity_and_drift_flag(spark, tmp_path):
         stats_dir=stats,
         checkpoint_dir=str(tmp_path / "ckpt"),
         weights=W,
-        train_keep_rate=0.9,
-        tol=0.3,
     )
     sq.awaitTermination(180)
 

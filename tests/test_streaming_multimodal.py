@@ -30,7 +30,7 @@ def test_streaming_daily_matches_batch(spark, tmp_path):
     src.mkdir()
     (src / "part1.json").write_text("\n".join(json.dumps(e) for e in EVENTS))
 
-    stream = read_event_stream(spark, str(src), fmt="json")
+    stream = read_event_stream(spark, str(src))
     assert stream.isStreaming
     rows = run_available_now(daily_stream_agg(stream), query_name="t_daily_stream")
     by_date = {str(r.date): r for r in rows}
@@ -340,7 +340,7 @@ def test_resized_pixel_stats_distributed(spark):
         (2, "image", b"junk", ("image/png", None, None, None, None)),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r.media_id: r for r in resized_pixel_stats(media, factor=2).collect()}
+    got = {r.media_id: r for r in resized_pixel_stats(media).collect()}
     assert set(got) == {1}
     exp = resize_box(px, 2).reshape(-1).astype(np.int64)
     r = got[1]
@@ -449,7 +449,7 @@ def test_decimated_audio_stats_distributed(spark):
         (2, "audio", b"junk", ("audio/wav", None, None, None, None)),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r.media_id: r for r in decimated_audio_stats(media, factor=2).collect()}
+    got = {r.media_id: r for r in decimated_audio_stats(media).collect()}
     assert set(got) == {1}
     exp = decimate_frames(s, 2).reshape(-1)
     r = got[1]
@@ -462,7 +462,7 @@ def test_decimated_audio_stats_distributed(spark):
 def test_frame_sample_plan(spark):
     rows = [(3, "video", None, ("video/mp4", 640, 480, 3500, None))]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    plan = frame_sample_plan(media, every_ms=1000)
+    plan = frame_sample_plan(media)
     frames = sorted(r.frame_ms for r in plan.collect())
     assert frames == [0, 1000, 2000, 3000]
 
@@ -516,7 +516,7 @@ def test_streaming_sliding_window_matches_batch(spark, tmp_path):
             .select(F.col("win.start").alias("ws"), "n", "vsum")
         )
 
-    stream = read_event_stream(spark, str(src), fmt="json").withWatermark(
+    stream = read_event_stream(spark, str(src)).withWatermark(
         "ts", "1 hour"
     )
     got = sorted(

@@ -37,7 +37,6 @@ def _run_stream(spark, src, idx, clean, ckpt):
         index_table=idx,
         clean_dir=clean,
         checkpoint=ckpt,
-        sent_tokens=2,
     )
     q.awaitTermination(120)
 

@@ -46,7 +46,7 @@ def test_chunk_documents_invariants(spark):
         (4, ""),                                      # empty -> [''] -> 1 chunk
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = chunk_documents(df, size=50, stride=40).collect()
+    out = chunk_documents(df).collect()
     by_doc: dict[int, list] = {}
     for r in sorted(out, key=lambda r: (r.doc_id, r.chunk_id)):
         by_doc.setdefault(r.doc_id, []).append(r)
@@ -109,7 +109,7 @@ def test_shared_shingle_fraction_hand_values(spark):
         [(0, "x y z p q"), (1, "x y z r s"), (2, "m n o u v")],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in shared_shingle_fraction(docs, min_df=2).collect()}
+    out = {r.doc_id: r for r in shared_shingle_fraction(docs).collect()}
     assert (out[0].n_shingles, out[0].n_shared) == (3, 1)
     assert out[0].shared_fraction == round(1 / 3, 6)
     assert (out[2].n_shingles, out[2].n_shared, out[2].shared_fraction) == (3, 0, 0.0)
