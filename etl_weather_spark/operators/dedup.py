@@ -839,7 +839,7 @@ def verify_candidates_jaccard(
     """
     jaccard = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return _verify_candidates(
-        docs, cand, text_col="text", id_col="doc_id", shingle_n=3,
+        docs, cand,
         score=lambda sized: sized.select("id_a", "id_b", jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= min_jaccard),
     )
@@ -849,39 +849,37 @@ def _verify_candidates(
     docs: DataFrame,
     cand: DataFrame,
     *,
-    text_col: str,
-    id_col: str,
-    shingle_n: int,
     score: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
     """Shared verify skeleton of :func:`verify_candidates_jaccard` and
-    :func:`verify_candidates_containment`: exact shingle intersections
-    for the candidate pairs, as (id_b, id_a, n_inter, n_a, n_b), handed
+    :func:`verify_candidates_containment`: exact trigram intersections
+    of ``text`` for the candidate pairs, as (id_b, id_a, n_inter, n_a,
+    n_b), handed
     to ``score`` (the measure + threshold filter); its result is the
     eagerly checkpointed output, so both caches are released on return."""
     with persisted(cand.select("id_a", "id_b")) as pairs:
         cand_ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .union(pairs.select(F.col("id_b").alias(id_col)))
+            pairs.select(F.col("id_a").alias("doc_id"))
+            .union(pairs.select(F.col("id_b").alias("doc_id")))
             .distinct()
         )
         shingled = exploded_shingles(
-            docs.join(cand_ids, id_col, "left_semi"),
-            text_col=text_col, keep_cols=[id_col], n=shingle_n,
+            docs.join(cand_ids, "doc_id", "left_semi"),
+            text_col="text", keep_cols=["doc_id"], n=3,
         )
         with persisted(shingled) as sh:
-            sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+            sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
             inter = (
-                pairs.join(sh.select(F.col(id_col).alias("id_a"), "sh"), "id_a")
-                .join(sh.select(F.col(id_col).alias("id_b"), "sh"), ["id_b", "sh"])
+                pairs.join(sh.select(F.col("doc_id").alias("id_a"), "sh"), "id_a")
+                .join(sh.select(F.col("doc_id").alias("id_b"), "sh"), ["id_b", "sh"])
                 .groupBy("id_a", "id_b")
                 .agg(F.count(F.lit(1)).alias("n_inter"))
             )
             sized = inter.join(
-                sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")),
+                sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")),
                 "id_a",
             ).join(
-                sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")),
+                sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b")),
                 "id_b",
             )
             return fence(score(sized), eager=True)
@@ -1052,37 +1050,31 @@ def prefix_filter_candidates(docs: DataFrame, *, min_jaccard: float = 0.5) -> Da
     consumers see. The ``size()``-on-array improvement from r10 (vs the
     old explode→groupBy(sizes)→join size shuffle) is kept.
     """
-    with persisted(_shingle_sets(docs, "text", "doc_id", 3)) as shsets:
+    with persisted(_shingle_sets(docs, 3)) as shsets:
         sh = shsets.select("doc_id", "n_sh", F.explode("__sh_arr").alias("sh"))
-        return fence(_candidates_from_sized_shingles(
-            sh, id_col="doc_id", t=min_jaccard
-        ), eager=True)
+        return fence(_candidates_from_sized_shingles(sh, t=min_jaccard), eager=True)
 
 
-def _shingle_sets(
-    docs: DataFrame, text_col: str, id_col: str, shingle_n: int
-) -> DataFrame:
-    """(id, __sh_arr, n_sh): each doc's DISTINCT shingle array and its
+def _shingle_sets(docs: DataFrame, shingle_n: int) -> DataFrame:
+    """(doc_id, __sh_arr, n_sh): each ``text``'s DISTINCT shingle array and its
     size — the relation the prefix-filter operators cache per call.
     Tokens are bound in their OWN projection first: passing the
     tokens() expression straight into the shingle lambda would
     re-evaluate the regex+split per element (the CollapseProject
     inlining trap, see :func:`shingles`)."""
-    toked = widen_narrow_input(docs, id_col).select(
-        F.col(id_col), tokens(F.col(text_col)).alias("__toks")
+    toked = widen_narrow_input(docs, "doc_id").select(
+        F.col("doc_id"), tokens(F.col("text")).alias("__toks")
     )
     return toked.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_distinct(
             shingles_of_tokens(F.col("__toks"), shingle_n)
         ).alias("__sh_arr"),
     ).withColumn("n_sh", F.size("__sh_arr"))
 
 
-def _candidates_from_sized_shingles(
-    sh: DataFrame, *, id_col: str, t: float
-) -> DataFrame:
-    """PPJoin candidate pairs from a (id, n_sh, sh) relation — the ONE
+def _candidates_from_sized_shingles(sh: DataFrame, *, t: float) -> DataFrame:
+    """PPJoin candidate pairs from a (doc_id, n_sh, sh) relation — the ONE
     implementation of the prefix/length/positional filter bounds,
     shared by :func:`prefix_filter_candidates` (docs input) and
     :func:`pruned_jaccard_pairs` (precomputed shingle-array input) so
@@ -1091,7 +1083,7 @@ def _candidates_from_sized_shingles(
     from pyspark.sql import Window
 
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy(id_col).orderBy("df", "sh")
+    w = Window.partitionBy("doc_id").orderBy("df", "sh")
     prefix = (
         sh.join(dfreq, "sh")
         .withColumn("rnk", F.row_number().over(w))
@@ -1101,13 +1093,13 @@ def _candidates_from_sized_shingles(
         )
     )
     a = prefix.select(
-        F.col(id_col).alias("id_a"),
+        F.col("doc_id").alias("id_a"),
         "sh",
         F.col("n_sh").alias("n_a"),
         F.col("rnk").alias("rnk_a"),
     )
     b = prefix.select(
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         "sh",
         F.col("n_sh").alias("n_b"),
         F.col("rnk").alias("rnk_b"),
@@ -1165,9 +1157,9 @@ def pruned_jaccard_pairs(
     # once and the eager count is the single materialization barrier
     # (same AQE-race rationale as verify_candidates_jaccard, one
     # barrier instead of two).
-    with persisted(_shingle_sets(docs, "text", "doc_id", shingle_n)) as shsets:
+    with persisted(_shingle_sets(docs, shingle_n)) as shsets:
         sh = shsets.select("doc_id", "n_sh", F.explode("__sh_arr").alias("sh"))
-        cand = _candidates_from_sized_shingles(sh, id_col="doc_id", t=min_jaccard)
+        cand = _candidates_from_sized_shingles(sh, t=min_jaccard)
         # verify: per-pair exact intersection over the cached shingle
         # ARRAYS (JVM array_intersect), not a re-exploded shingle join —
         # the join moves |cand| rows with two array payloads instead of
@@ -1209,8 +1201,9 @@ _WB = np.uint64(1000003)  # polynomial base; uint64 wraparound = mod 2^64
 _WBINV = np.uint64(pow(1000003, -1, 1 << 64))  # modular inverse mod 2^64
 
 
-def _winnow_docwise(texts: list, k: int, window: int) -> list:
-    """Per-doc vectorized winnowing (module-level: testable without Spark)."""
+def _winnow_docwise(texts: list, k: int) -> list:
+    """Per-doc vectorized winnowing over windows of 4 hashes (module-level:
+    testable without Spark)."""
     out = []
     for t in texts:
         b = np.frombuffer((t or "").encode("utf-8"), dtype=np.uint8).astype(np.uint64)
@@ -1232,10 +1225,10 @@ def _winnow_docwise(texts: list, k: int, window: int) -> list:
         if n - k > 0:
             np.cumprod(np.full(n - k, _WBINV, dtype=np.uint64), out=inv[1:])
         hashes = seg * inv[::-1]
-        if len(hashes) <= window:
+        if len(hashes) <= 4:
             mins = np.array([hashes.min()], dtype=np.uint64)
         else:
-            mins = np.lib.stride_tricks.sliding_window_view(hashes, window).min(axis=1)
+            mins = np.lib.stride_tricks.sliding_window_view(hashes, 4).min(axis=1)
         out.append(np.unique(mins).view(np.int64).tolist())
     return out
 
@@ -1267,7 +1260,7 @@ def winnow_fingerprints(docs: DataFrame, *, k: int = 12) -> DataFrame:
 
     @pandas_udf("array<long>")
     def winnow(texts: pd.Series) -> pd.Series:
-        return pd.Series(_winnow_docwise(list(texts), k, 4))
+        return pd.Series(_winnow_docwise(list(texts), k))
 
     norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
     # Widened: with the fingerprint table consumed exactly once (see
@@ -1741,7 +1734,7 @@ def containment_candidates(docs: DataFrame) -> DataFrame:
 
     w = Window.partitionBy("doc_id").orderBy("df", "sh")
     t = 0.8
-    with persisted(_shingle_sets(docs, "text", "doc_id", 3)) as shsets:
+    with persisted(_shingle_sets(docs, 3)) as shsets:
         sized = shsets.select("doc_id", "n_sh", F.explode("__sh_arr").alias("sh"))
         dfreq = sized.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
         prefix = (
@@ -1777,7 +1770,7 @@ def verify_candidates_containment(docs: DataFrame, cand: DataFrame) -> DataFrame
     caches as :func:`verify_candidates_jaccard`."""
     containment = F.col("n_inter") / F.least(F.col("n_a"), F.col("n_b"))
     return _verify_candidates(
-        docs, cand, text_col="text", id_col="doc_id", shingle_n=3,
+        docs, cand,
         score=lambda sized: sized.withColumn("containment", containment)
         .filter(F.col("containment") >= 0.8),
     )

@@ -415,43 +415,6 @@ def frame_sample_plan(media: DataFrame) -> DataFrame:
     )
 
 
-def extract_features_arrow(media: DataFrame) -> DataFrame:
-    """`mapInArrow` variant of :func:`extract_features`: consumes raw
-    ``pyarrow.RecordBatch``es, skipping the Arrow→pandas conversion.
-
-    For binary-heavy columns the pandas hop costs a per-cell Python
-    bytes materialization on BOTH edges; pure-Arrow batches keep the
-    payload buffers zero-copy until the hash actually reads them. Same
-    outputs bit-for-bit as the pandas path (asserted in tests); prefer
-    this one when payloads dominate batch size.
-    """
-    import pyarrow as pa
-
-    def run(batches):
-        for batch in batches:
-            media_ids = batch.column("media_id")
-            modalities = batch.column("modality")
-            payloads = batch.column("payload").to_pylist()
-            n_bytes = [0 if p is None else len(p) for p in payloads]
-            shas = [
-                None if p is None else hashlib.sha256(p).hexdigest()
-                for p in payloads
-            ]
-            feats = [None if p is None else _fake_feature(p) for p in payloads]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    media_ids,
-                    modalities,
-                    pa.array(n_bytes, type=pa.int32()),
-                    pa.array(shas, type=pa.string()),
-                    pa.array(feats, type=pa.list_(pa.float32())),
-                ],
-                names=["media_id", "modality", "n_bytes", "content_sha", "feature"],
-            )
-
-    return media.mapInArrow(run, schema=FEATURE_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # REAL header metadata decode — pure byte arithmetic, no codec libraries.
 # The container lacks Pillow/ffmpeg for pixel/sample decode (stubbed
@@ -558,18 +521,29 @@ def _decode_image(payload: bytes):
     return decode_png(payload)
 
 
-def pixel_stats(media: DataFrame) -> DataFrame:
-    """Per-image pixel statistics through the REAL decode path
-    (:func:`decode_png` or the baseline JPEG decoder, by content magic)
-    — Arrow-batched ``mapInPandas``, one decode per payload, all
-    stats as EXACT integers (sum / sum-of-squares / min / max over the
-    uint8 pixel bytes) so a SQL oracle that regenerates the same pixels
-    can match hash-for-hash with no float drift.
+def _media_kernel(media: DataFrame, decode, conform, schema: T.StructType) -> DataFrame:
+    """The one per-row media kernel behind every decode → conform →
+    summary operator here: ``(media_id, payload)`` in, one
+    ``(media_id, *conform(decode(payload)))`` row per payload out, in
+    one Arrow-batched ``mapInPandas`` pass.
 
-    Scale: decode is per-row CPU with no shuffle — partition count =
-    parallelism; a 100 TB image corpus fans out embarrassingly. Rows
-    whose payload fails to decode are dropped (the audit query for
-    failures is extract_features(decode=True).decode_error)."""
+    Per-row isolation: a null payload, or one whose decode, conform or
+    summary raises, is dropped, so a single bad payload never kills a
+    stage. A zero-size conformed array is dropped the same way (its
+    ``min()`` raises in :func:`_int_stats`). Dropped rows are not
+    reported; :func:`extract_features` with ``decode=True`` keeps every
+    row and names the failure in ``decode_error``.
+
+    Exact integers: :func:`_int_stats` sums int64 values into Python
+    ints, and the output frame is built as ``object`` so those ints (and
+    a NULL beside them) reach Arrow as they are, never via float64. A
+    SQL oracle that regenerates the same pixels or samples therefore
+    matches hash-for-hash.
+
+    Scale: decode is per-row CPU with no shuffle, so a 100 TB corpus
+    fans out by input split; peak memory is one Arrow batch of payloads.
+    """
+    names = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -578,28 +552,39 @@ def pixel_stats(media: DataFrame) -> DataFrame:
                 if payload is None:
                     continue
                 try:
-                    px = _decode_image(bytes(payload))
+                    rows.append((mid, *conform(decode(bytes(payload)))))
                 except Exception:  # noqa: BLE001 — per-row isolation
                     continue
-                flat = px.reshape(-1).astype("int64")
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": px.shape[1],
-                        "height": px.shape[0],
-                        "channels": px.shape[2],
-                        "px_sum": int(flat.sum()),
-                        "px_sqsum": int((flat * flat).sum()),
-                        "px_min": int(flat.min()),
-                        "px_max": int(flat.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in PIXEL_STATS_SCHEMA.fields],
-            )
+            yield pd.DataFrame(rows, columns=names, dtype=object)
 
-    return media.mapInPandas(run, schema=PIXEL_STATS_SCHEMA)
+    return media.mapInPandas(run, schema=schema)
+
+
+def _int_stats(dims: tuple, values) -> tuple:
+    """``dims`` + exact (sum, sum of squares, min, max) of ``values``;
+    raises on a zero-size array."""
+    flat = values.reshape(-1).astype("int64")
+    return (
+        *dims,
+        int(flat.sum()),
+        int((flat * flat).sum()),
+        int(flat.min()),
+        int(flat.max()),
+    )
+
+
+def _image_stats(px) -> tuple:
+    h, w, c = px.shape
+    return _int_stats((w, h, c), px)
+
+
+def _audio_stats(samples, rate: int) -> tuple:
+    return _int_stats((samples.shape[0], samples.shape[1], rate), samples)
+
+
+def pixel_stats(media: DataFrame) -> DataFrame:
+    """Stats of each image as decoded (PNG or baseline JPEG, by magic)."""
+    return _media_kernel(media, _decode_image, _image_stats, PIXEL_STATS_SCHEMA)
 
 
 def resize_box(pixels, factor: int = 2):
@@ -649,6 +634,8 @@ def resize_area(pixels, out_h: int, out_w: int):
     if out_h < 1 or out_w < 1:
         raise ValueError(f"target must be >= 1x1, got {out_h}x{out_w}")
     h, w, _c = pixels.shape
+    if h == 0 or w == 0:
+        raise ValueError(f"source must be >= 1x1, got {h}x{w}")
 
     def weights(n_in: int, n_out: int):
         # (n_out, n_in) integer overlap of output cell i = [i*n_in,
@@ -715,92 +702,20 @@ RESIZE_STATS_SCHEMA = T.StructType(
 
 
 def resized_pixel_stats(media: DataFrame) -> DataFrame:
-    """Decode → :func:`resize_box` (2×2 blocks) → exact-integer stats, Arrow-batched:
-    the resize stage of a multimodal training-data pipeline (thumbnail /
-    fixed-resolution conform before feature extraction), end-to-end on
-    the REAL PNG codec. Same oracle-stability contract as
-    :func:`pixel_stats`: every output is integer, so a SQL oracle that
-    regenerates the source pixels and floor-averages the same blocks
-    matches hash-for-hash.
-
-    Scale: per-row CPU, no shuffle — at 100 TB this fans out by input
-    split exactly like decode; the resized payload is strictly smaller
-    than the input so the stage shrinks the corpus it forwards.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                try:
-                    px = decode_png(bytes(payload))
-                except Exception:  # noqa: BLE001 — per-row isolation
-                    continue
-                out = resize_box(px, 2)
-                flat = out.reshape(-1).astype("int64")
-                if flat.size == 0:
-                    continue
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "out_width": out.shape[1],
-                        "out_height": out.shape[0],
-                        "channels": out.shape[2],
-                        "px_sum": int(flat.sum()),
-                        "px_sqsum": int((flat * flat).sum()),
-                        "px_min": int(flat.min()),
-                        "px_max": int(flat.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in RESIZE_STATS_SCHEMA.fields],
-            )
-
-    return media.mapInPandas(run, schema=RESIZE_STATS_SCHEMA)
+    """Stats of each PNG after :func:`resize_box` by 2 (the thumbnail conform)."""
+    return _media_kernel(
+        media, decode_png, lambda px: _image_stats(resize_box(px, 2)), RESIZE_STATS_SCHEMA
+    )
 
 
 def area_resized_pixel_stats(media: DataFrame, out_h: int, out_w: int) -> DataFrame:
-    """Decode → :func:`resize_area` → exact-integer stats: the
-    fixed-target-resolution conform stage (fractional ratios included),
-    end-to-end on the real PNG codec. Same Arrow-batched per-row shape
-    and oracle-stability contract as :func:`resized_pixel_stats`.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                try:
-                    px = decode_png(bytes(payload))
-                except Exception:  # noqa: BLE001 — per-row isolation
-                    continue
-                out = resize_area(px, out_h, out_w)
-                flat = out.reshape(-1).astype("int64")
-                if flat.size == 0:
-                    continue
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "out_width": out.shape[1],
-                        "out_height": out.shape[0],
-                        "channels": out.shape[2],
-                        "px_sum": int(flat.sum()),
-                        "px_sqsum": int((flat * flat).sum()),
-                        "px_min": int(flat.min()),
-                        "px_max": int(flat.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in RESIZE_STATS_SCHEMA.fields],
-            )
-
-    return media.mapInPandas(run, schema=RESIZE_STATS_SCHEMA)
+    """Stats of each PNG after :func:`resize_area` to ``out_h`` x ``out_w``."""
+    return _media_kernel(
+        media,
+        decode_png,
+        lambda px: _image_stats(resize_area(px, out_h, out_w)),
+        RESIZE_STATS_SCHEMA,
+    )
 
 
 AUDIO_STATS_SCHEMA = T.StructType(
@@ -818,39 +733,10 @@ AUDIO_STATS_SCHEMA = T.StructType(
 
 
 def audio_stats(media: DataFrame) -> DataFrame:
-    """Per-clip PCM sample statistics through the REAL
-    :func:`decode_wav` path — exact-integer aggregates for the same
-    oracle-stability reason as :func:`pixel_stats`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                try:
-                    samples, rate = decode_wav(bytes(payload))
-                except Exception:  # noqa: BLE001
-                    continue
-                flat = samples.reshape(-1).astype("int64")
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "n_frames": int(samples.shape[0]),
-                        "n_channels": int(samples.shape[1]),
-                        "sample_rate": int(rate),
-                        "s_sum": int(flat.sum()),
-                        "s_sqsum": int((flat * flat).sum()),
-                        "s_min": int(flat.min()),
-                        "s_max": int(flat.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in AUDIO_STATS_SCHEMA.fields],
-            )
-
-    return media.mapInPandas(run, schema=AUDIO_STATS_SCHEMA)
+    """Stats of each WAV clip's PCM samples as decoded."""
+    return _media_kernel(
+        media, decode_wav, lambda wav: _audio_stats(*wav), AUDIO_STATS_SCHEMA
+    )
 
 
 def decimate_frames(samples, factor: int = 2):
@@ -890,88 +776,23 @@ DECIMATE_STATS_SCHEMA = T.StructType(
 
 
 def decimated_audio_stats(media: DataFrame) -> DataFrame:
-    """Decode → :func:`decimate_frames` → exact-integer stats: the
-    resample-to-target-rate stage of an audio training-data pipeline
-    (e.g. 16 kHz → 8 kHz conform before featurization), end-to-end on
-    the REAL WAV codec. Arrow-batched ``mapInPandas``, per-row CPU, no
-    shuffle — fans out by input split at 100 TB like the other media
-    stages, and emits 2× fewer frames than it reads.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                try:
-                    samples, rate = decode_wav(bytes(payload))
-                except Exception:  # noqa: BLE001 — per-row isolation
-                    continue
-                out = decimate_frames(samples, 2)
-                flat = out.reshape(-1)
-                if flat.size == 0:
-                    continue
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "out_frames": int(out.shape[0]),
-                        "n_channels": int(out.shape[1]),
-                        "out_rate": int(rate) // 2,
-                        "s_sum": int(flat.sum()),
-                        "s_sqsum": int((flat * flat).sum()),
-                        "s_min": int(flat.min()),
-                        "s_max": int(flat.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in DECIMATE_STATS_SCHEMA.fields],
-            )
-
-    return media.mapInPandas(run, schema=DECIMATE_STATS_SCHEMA)
+    """Stats of each WAV clip after :func:`decimate_frames` by 2, at half its rate."""
+    return _media_kernel(
+        media,
+        decode_wav,
+        lambda wav: _audio_stats(decimate_frames(wav[0], 2), wav[1] // 2),
+        DECIMATE_STATS_SCHEMA,
+    )
 
 
 def resampled_audio_stats(media: DataFrame, out_rate: int) -> DataFrame:
-    """Decode → :func:`resample_linear` → exact-integer stats: the
-    conform-to-target-rate stage for FRACTIONAL ratios (every clip
-    lands on ``out_rate`` regardless of its native rate). Same
-    Arrow-batched per-row shape and oracle contract as
-    :func:`decimated_audio_stats`.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                try:
-                    samples, rate = decode_wav(bytes(payload))
-                except Exception:  # noqa: BLE001 — per-row isolation
-                    continue
-                out = resample_linear(samples, int(rate), out_rate)
-                flat = out.reshape(-1)
-                if flat.size == 0:
-                    continue
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "out_frames": int(out.shape[0]),
-                        "n_channels": int(out.shape[1]),
-                        "out_rate": out_rate,
-                        "s_sum": int(flat.sum()),
-                        "s_sqsum": int((flat * flat).sum()),
-                        "s_min": int(flat.min()),
-                        "s_max": int(flat.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in DECIMATE_STATS_SCHEMA.fields],
-            )
-
-    return media.mapInPandas(run, schema=DECIMATE_STATS_SCHEMA)
+    """Stats of each WAV clip after :func:`resample_linear` to ``out_rate`` Hz."""
+    return _media_kernel(
+        media,
+        decode_wav,
+        lambda wav: _audio_stats(resample_linear(wav[0], wav[1], out_rate), out_rate),
+        DECIMATE_STATS_SCHEMA,
+    )
 
 
 def probe_media_meta(media: DataFrame) -> DataFrame:
@@ -1008,8 +829,8 @@ def dhash_bits(pixels):
     import numpy as np
 
     h, w, c = pixels.shape
-    if h % 8 or w % 9:
-        raise ValueError(f"dims {h}x{w} not divisible by grid 8x9")
+    if h == 0 or w == 0 or h % 8 or w % 9:
+        raise ValueError(f"dims {h}x{w} not a nonzero multiple of grid 8x9")
     gray = pixels.astype(np.int64).sum(axis=2) // c
     bh, bw = h // 8, w // 9
     m = gray.reshape(8, bh, 9, bw).sum(axis=(1, 3)) // (bh * bw)
@@ -1021,29 +842,36 @@ def dhash_bits(pixels):
 
 
 def image_dhash(media: DataFrame) -> DataFrame:
-    """(media_id, sig_hi, sig_lo) — perceptual dHash per image, decode
-    and hash fused in ONE Arrow-batched ``mapInPandas`` pass (pixels
-    never leave the task that decoded them; only 2 longs per image
-    shuffle afterwards). Undecodable or non-grid-divisible rows are
-    dropped (per-row isolation, same contract as the stats extractors).
+    """(media_id, sig_hi, sig_lo): :func:`dhash_bits` of each PNG, fused
+    with its decode so pixels never leave the task that decoded them
+    (2 longs per image shuffle afterwards). A PNG whose dimensions are
+    not a multiple of the 8 x 9 grid is dropped like an undecodable one.
     """
+    return _media_kernel(media, decode_png, dhash_bits, DHASH_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                try:
-                    hi, lo = dhash_bits(decode_png(bytes(payload)))
-                except Exception:  # noqa: BLE001 — per-row isolation
-                    continue
-                rows.append({"media_id": mid, "sig_hi": hi, "sig_lo": lo})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DHASH_SCHEMA.fields]
-            )
 
-    return media.mapInPandas(run, schema=DHASH_SCHEMA)
+ENVELOPE_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("n_frames", T.LongType()),
+        T.StructField("sample_rate", T.LongType()),
+        T.StructField("fp", T.LongType()),
+    ]
+)
+
+
+def _envelope(samples, rate: int, n_bands: int) -> tuple:
+    """(n_frames, sample_rate, fp) of one decoded clip; fp is None for a
+    clip shorter than ``n_bands`` frames."""
+    import numpy as np
+
+    mono = np.abs(samples.astype("int64")).sum(axis=1)
+    band_len = len(mono) // n_bands
+    if band_len == 0:
+        return samples.shape[0], rate, None
+    e = mono[: band_len * n_bands].reshape(n_bands, band_len).sum(axis=1)
+    bits = (e[1:] > e[:-1]).astype(np.int64)  # bit k = E_{k+1} > E_k
+    return samples.shape[0], rate, int((bits << np.arange(n_bands - 1)).sum())
 
 
 def audio_envelope_fingerprint(media: DataFrame, n_bands: int = 64) -> DataFrame:
@@ -1068,78 +896,28 @@ def audio_envelope_fingerprint(media: DataFrame, n_bands: int = 64) -> DataFrame
     which :func:`audio_envelope_pairs` bounds with a star-edge cap.
     ``n_bands`` must be 2..64 so fp packs into one signed 64-bit long.
 
-    Visibility contract: undecodable payloads (corrupt/None bytes) are
-    SKIPPED, but clips that decode with fewer than ``n_bands`` frames
-    emit their row with a NULL ``fp`` — short clips stay visible to a
-    dedup audit instead of silently vanishing from the output. Frames
+    Visibility contract: undecodable payloads are dropped (per-row
+    isolation of :func:`_media_kernel`), but clips that decode with
+    fewer than ``n_bands`` frames emit their row with a NULL ``fp`` —
+    short clips stay visible to a dedup audit instead of silently
+    vanishing from the output. Frames
     that do not divide evenly truncate to ``n_bands`` equal bands
     (tail samples dropped) so every clip yields the same bit width.
     Exact-integer arithmetic end to end (int64 abs-sums, integer
-    comparisons) — the same oracle-stability discipline as
-    :func:`pixel_stats` / :func:`audio_stats`.
+    comparisons), so a SQL oracle rebuilds every fp bit-for-bit.
 
-    Scale: one Arrow-batched decode pass per clip (the codec cost IS
-    the floor, as with every real-decode path here); the fingerprint
-    is 8 bytes per clip, and dedup downstream is an equi-join on fp —
-    never signal-to-signal comparison.
+    Scale: one decode pass per clip (the codec cost IS the floor, as
+    with every real-decode path here); the fingerprint is 8 bytes per
+    clip, and dedup downstream is an equi-join on fp — never
+    signal-to-signal comparison.
     """
     if not 2 <= n_bands <= 64:
         raise ValueError(
             f"n_bands={n_bands}: need 2 <= n_bands <= 64 — the "
             "(n_bands-1)-bit fingerprint must fit a signed 64-bit long"
         )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                try:
-                    samples, rate = decode_wav(bytes(payload))
-                except Exception:  # noqa: BLE001
-                    continue
-                mono = np.abs(samples.astype("int64")).sum(axis=1)
-                band_len = len(mono) // n_bands
-                if band_len == 0:
-                    # decodable but too short to band: visible NULL fp
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "n_frames": int(samples.shape[0]),
-                            "sample_rate": int(rate),
-                            "fp": None,
-                        }
-                    )
-                    continue
-                e = (
-                    mono[: band_len * n_bands]
-                    .reshape(n_bands, band_len)
-                    .sum(axis=1)
-                )
-                fp = 0
-                for k in range(n_bands - 1):
-                    if int(e[k + 1]) > int(e[k]):
-                        fp |= 1 << k
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "n_frames": int(samples.shape[0]),
-                        "sample_rate": int(rate),
-                        "fp": fp,
-                    }
-                )
-            pdf_out = pd.DataFrame(
-                rows, columns=["media_id", "n_frames", "sample_rate", "fp"]
-            )
-            # object→nullable-int so Arrow ships int64+null, not float64
-            pdf_out["fp"] = pdf_out["fp"].astype("Int64")
-            yield pdf_out
-
-    return media.mapInPandas(
-        run, schema="media_id long, n_frames long, sample_rate long, fp long"
+    return _media_kernel(
+        media, decode_wav, lambda wav: _envelope(*wav, n_bands), ENVELOPE_SCHEMA
     )
 
 

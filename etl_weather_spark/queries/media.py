@@ -1,15 +1,116 @@
 """Multimodal tier: real PNG/JPEG/WAV decode statistics, perceptual dHash dedup, audio-envelope fingerprints over binary payload columns.
 
-Split from the original queries.py (round 9); unit order and bodies
-are byte-identical to the monolith — only module boundaries and
-imports changed.
+Every query but media_payload_stats builds its payloads through one
+fixture scaffold, :func:`_payloads`, from one payload function per
+formula (:func:`png_grid`, :func:`pcm_stream`, and one each for the
+JPEG, dHash and envelope fixtures); the oracles replay those formulas
+in SQL.
 """
 
 from __future__ import annotations
+from collections.abc import Callable
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from etl_weather_spark.operators.dedup import simhash_band_pairs
 from etl_weather_spark.operators.fence import fence
+from etl_weather_spark.operators.jpeg import encode_jpeg_baseline
+from etl_weather_spark.operators.multimodal import (
+    area_resized_pixel_stats,
+    audio_envelope_fingerprint,
+    audio_envelope_pairs,
+    audio_stats,
+    decimated_audio_stats,
+    encode_png,
+    encode_wav,
+    extract_features,
+    image_dhash,
+    pixel_stats,
+    png_header_meta,
+    resampled_audio_stats,
+    resized_pixel_stats,
+)
 from etl_weather_spark.queries._registry import load, query
+
+
+def _payloads(
+    spark: SparkSession, sf_dir: str, n: int, payload_of: Callable[[int], bytes]
+) -> DataFrame:
+    """(media_id, payload) fixture: the first ``n`` documents by doc_id,
+    each given the bytes ``payload_of(doc_id)`` in one ``mapInPandas``
+    pass. Every media query builds its payloads here, so a query's
+    oracle only has to replay its payload formula in SQL."""
+    docs = load(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(n)
+
+    def synth(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                [(int(did), payload_of(int(did))) for did in pdf["doc_id"]],
+                columns=["media_id", "payload"],
+            )
+
+    return docs.mapInPandas(synth, schema="media_id long, payload binary")
+
+
+def png_grid(did: int) -> bytes:
+    """The image queries' PNG: (16 + did % 17) wide, (16 + did % 13)
+    high, RGB, byte i of the raster = (did * 7 + i * 13) % 256, with
+    the five scanline filters cycled by row."""
+    w, h = 16 + did % 17, 16 + did % 13
+    v = ((did * 7 + np.arange(w * h * 3, dtype=np.int64) * 13) % 256).astype(np.uint8)
+    return encode_png(v.reshape(h, w, 3), filter_types=[y % 5 for y in range(h)])
+
+
+def pcm_stream(did: int) -> bytes:
+    """The audio queries' 16-bit WAV: 200 + did % 100 frames of
+    1 + did % 2 channels at 8000 + (did % 3) * 4000 Hz, sample i =
+    (did * 31 + i * 17) % 65536 - 32768."""
+    n_frames, n_ch = 200 + did % 100, 1 + did % 2
+    rate = 8000 + (did % 3) * 4000
+    v = ((did * 31 + np.arange(n_frames * n_ch, dtype=np.int64) * 17) % 65536) - 32768
+    return encode_wav(v.reshape(n_frames, n_ch), rate)
+
+
+def _jpeg_blocks(did: int) -> bytes:
+    """Baseline-JPEG gray image of (2 + did % 4) x (1 + did % 3)
+    constant 8x8 blocks, block b = (did * 7 + b * 29) % 256."""
+    wb, hb = 2 + did % 4, 1 + did % 3
+    v = ((did * 7 + np.arange(wb * hb, dtype=np.int64) * 29) % 256).astype(np.uint8)
+    img = np.repeat(np.repeat(v.reshape(hb, wb), 8, axis=0), 8, axis=1)
+    return encode_jpeg_baseline(img, quant=16, dc_quant=8)
+
+
+def _dhash_gray(did: int) -> bytes:
+    """36 x 16 gray PNG shared by the doc pair (did - did % 2); the odd
+    twin adds +1 on the sparse lattice (x + y) % 29 == 0."""
+    x = np.arange(36)[None, :]
+    y = np.arange(16)[:, None]
+    bid = did - did % 2
+    p = (bid * 31 + x * x * 7 + y * 13 + ((bid + x) % 7) * 29) % 251
+    if did % 2 == 1:
+        p = (p + (((x + y) % 29) == 0)) % 251
+    return encode_png(p.astype(np.uint8))
+
+
+def _envelope_clip(did: int) -> bytes:
+    """256-frame mono WAV of signal group did % 12, at amplitude 1 or
+    1/2 and rate 8, 12 or 16 kHz by replica did // 12."""
+    g = did % 12
+    # amplitude and rate vary ACROSS a group's replicas (did // 12),
+    # never with the group id itself — so every group contains
+    # gain-adjusted and re-rated copies of the same waveform
+    s = 1 + (did // 12) % 2
+    rate = 8000 + ((did // 12) % 3) * 4000
+    i = np.arange(256, dtype=np.int64)
+    # per-band amplitude pattern keyed by the signal group (7 is
+    # invertible mod 12, so all 12 groups get DISTINCT envelope
+    # shapes); the carrier sawtooth is shared. Samples stay even so the
+    # s=2 copy is an exact bit-derivable halving.
+    amp = 1 + ((g * 7 + (i // 16) * 5) % 12)
+    base = amp * (2 * (((i * 17) % 128) - 64))
+    return encode_wav((base // s).reshape(256, 1), rate)
 
 
 @query(
@@ -35,27 +136,7 @@ def png_meta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata scans). The oracle regenerates the dimensions from the
     same formulas.
     """
-    import numpy as np
-
-    from etl_weather_spark.operators.multimodal import encode_png, png_header_meta
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(64)
-
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 16 + did % 17, 16 + did % 13
-                v = (
-                    (did * 7 + np.arange(w * h * 3, dtype=np.int64) * 13) % 256
-                ).astype(np.uint8)
-                rows.append({"media_id": did, "payload": encode_png(v.reshape(h, w, 3))})
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, schema="media_id long, payload binary")
+    media = _payloads(spark, sf_dir, 64, png_grid)
     meta = png_header_meta(F.col("payload"))
     return (
         media.select("media_id", meta.alias("m"))
@@ -94,8 +175,6 @@ def media_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit (a corrupted payload changes its sha and breaks the
     distinct count).
     """
-    from etl_weather_spark.operators.multimodal import extract_features
-
     docs = load(spark, sf_dir, "documents")
     media = docs.select(
         F.col("doc_id").alias("media_id"),
@@ -159,36 +238,7 @@ def media_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: decode is per-row CPU inside mapInPandas — no shuffle until
     the final tiny sort; a 100 TB corpus fans out by input split.
     """
-    import numpy as np
-
-    from etl_weather_spark.operators.multimodal import encode_png, pixel_stats
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(48)
-
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 16 + did % 17, 16 + did % 13
-                v = (
-                    (did * 7 + np.arange(w * h * 3, dtype=np.int64) * 13) % 256
-                ).astype(np.uint8)
-                rows.append(
-                    {
-                        "media_id": did,
-                        "payload": encode_png(
-                            v.reshape(h, w, 3),
-                            filter_types=[y % 5 for y in range(h)],
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, schema="media_id long, payload binary")
-    return pixel_stats(media).orderBy("media_id")
+    return pixel_stats(_payloads(spark, sf_dir, 48, png_grid)).orderBy("media_id")
 
 @query(
     "media_jpeg_stats",
@@ -243,35 +293,7 @@ def media_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final tiny sort; a 100 TB crawl (mostly JPEG) fans out by
     input split.
     """
-    import numpy as np
-
-    from etl_weather_spark.operators.jpeg import encode_jpeg_baseline
-    from etl_weather_spark.operators.multimodal import pixel_stats
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(48)
-
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                wb, hb = 2 + did % 4, 1 + did % 3
-                v = ((did * 7 + np.arange(wb * hb, dtype=np.int64) * 29) % 256).astype(
-                    np.uint8
-                )
-                img = np.repeat(np.repeat(v.reshape(hb, wb), 8, axis=0), 8, axis=1)
-                rows.append(
-                    {
-                        "media_id": did,
-                        "payload": encode_jpeg_baseline(img, quant=16, dc_quant=8),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, schema="media_id long, payload binary")
-    return pixel_stats(media).orderBy("media_id")
+    return pixel_stats(_payloads(spark, sf_dir, 48, _jpeg_blocks)).orderBy("media_id")
 
 @query(
     "media_wav_stats",
@@ -310,33 +332,7 @@ def media_wav_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     back by operators/multimodal.decode_wav inside ``audio_stats``; the
     oracle regenerates the identical sample formula SQL-side and the
     exact integer sums must agree."""
-    import numpy as np
-
-    from etl_weather_spark.operators.multimodal import audio_stats, encode_wav
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(48)
-
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n_frames = 200 + did % 100
-                n_ch = 1 + did % 2
-                rate = 8000 + (did % 3) * 4000
-                v = ((did * 31 + np.arange(n_frames * n_ch, dtype=np.int64) * 17) % 65536) - 32768
-                rows.append(
-                    {
-                        "media_id": did,
-                        "payload": encode_wav(v.reshape(n_frames, n_ch), rate),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, schema="media_id long, payload binary")
-    return audio_stats(media).orderBy("media_id")
+    return audio_stats(_payloads(spark, sf_dir, 48, pcm_stream)).orderBy("media_id")
 
 @query(
     "media_decimate_stats",
@@ -393,35 +389,7 @@ def media_decimate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-row CPU inside one Arrow-batched ``mapInPandas``, no
     shuffle; the stage emits factor× fewer frames than it reads.
     """
-    import numpy as np
-
-    from etl_weather_spark.operators.multimodal import (
-        decimated_audio_stats,
-        encode_wav,
-    )
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(48)
-
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n_frames = 200 + did % 100
-                n_ch = 1 + did % 2
-                rate = 8000 + (did % 3) * 4000
-                v = ((did * 31 + np.arange(n_frames * n_ch, dtype=np.int64) * 17) % 65536) - 32768
-                rows.append(
-                    {
-                        "media_id": did,
-                        "payload": encode_wav(v.reshape(n_frames, n_ch), rate),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, schema="media_id long, payload binary")
+    media = _payloads(spark, sf_dir, 48, pcm_stream)
     return decimated_audio_stats(media).orderBy("media_id")
 
 @query(
@@ -482,38 +450,7 @@ def media_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits strictly smaller images than it reads (≈4× byte reduction at
     factor 2), so at 100 TB it SHRINKS the corpus it forwards.
     """
-    import numpy as np
-
-    from etl_weather_spark.operators.multimodal import (
-        encode_png,
-        resized_pixel_stats,
-    )
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(48)
-
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 16 + did % 17, 16 + did % 13
-                v = (
-                    (did * 7 + np.arange(w * h * 3, dtype=np.int64) * 13) % 256
-                ).astype(np.uint8)
-                rows.append(
-                    {
-                        "media_id": did,
-                        "payload": encode_png(
-                            v.reshape(h, w, 3),
-                            filter_types=[y % 5 for y in range(h)],
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, schema="media_id long, payload binary")
+    media = _payloads(spark, sf_dir, 48, png_grid)
     return resized_pixel_stats(media).orderBy("media_id")
 
 @query(
@@ -583,38 +520,7 @@ def media_area_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fixed 10×7×3 thumbnail regardless of input size, so the stage
     emits a bounded, uniform corpus downstream.
     """
-    import numpy as np
-
-    from etl_weather_spark.operators.multimodal import (
-        area_resized_pixel_stats,
-        encode_png,
-    )
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(48)
-
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 16 + did % 17, 16 + did % 13
-                v = (
-                    (did * 7 + np.arange(w * h * 3, dtype=np.int64) * 13) % 256
-                ).astype(np.uint8)
-                rows.append(
-                    {
-                        "media_id": did,
-                        "payload": encode_png(
-                            v.reshape(h, w, 3),
-                            filter_types=[y % 5 for y in range(h)],
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, schema="media_id long, payload binary")
+    media = _payloads(spark, sf_dir, 48, png_grid)
     return area_resized_pixel_stats(media, out_h=7, out_w=10).orderBy("media_id")
 
 @query(
@@ -672,35 +578,7 @@ def media_resample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; every clip lands on the same rate, so downstream stages
     see a uniform corpus.
     """
-    import numpy as np
-
-    from etl_weather_spark.operators.multimodal import (
-        encode_wav,
-        resampled_audio_stats,
-    )
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(48)
-
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n_frames = 200 + did % 100
-                n_ch = 1 + did % 2
-                rate = 8000 + (did % 3) * 4000
-                v = ((did * 31 + np.arange(n_frames * n_ch, dtype=np.int64) * 17) % 65536) - 32768
-                rows.append(
-                    {
-                        "media_id": did,
-                        "payload": encode_wav(v.reshape(n_frames, n_ch), rate),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, schema="media_id long, payload binary")
+    media = _payloads(spark, sf_dir, 48, pcm_stream)
     return resampled_audio_stats(media, out_rate=6000).orderBy("media_id")
 
 @query(
@@ -757,32 +635,7 @@ def image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the image-side twin of text near-dup dedup in a multimodal
     training pipeline.
     """
-    import numpy as np
-
-    from etl_weather_spark.operators.dedup import simhash_band_pairs
-    from etl_weather_spark.operators.multimodal import encode_png, image_dhash
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(48)
-
-    W, H = 36, 16
-
-    def synth(batches):
-        import pandas as pd
-
-        x = np.arange(W)[None, :]
-        y = np.arange(H)[:, None]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                bid = did - did % 2
-                p = (bid * 31 + x * x * 7 + y * 13 + ((bid + x) % 7) * 29) % 251
-                if did % 2 == 1:
-                    p = (p + (((x + y) % 29) == 0)) % 251
-                rows.append({"media_id": did, "payload": encode_png(p.astype(np.uint8))})
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, schema="media_id long, payload binary")
+    media = _payloads(spark, sf_dir, 48, _dhash_gray)
     # fence the 3-long-per-row signature table so the decode+dhash
     # Arrow stage runs ONCE — the banding plan consumes it several
     # times (bucket-size agg + both self-join sides)
@@ -884,50 +737,7 @@ def audio_envelope_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     clip), then an equi-join on fp — the audio analog of dHash
     banding, never signal-to-signal comparison.
     """
-    import numpy as np
-
-    from etl_weather_spark.operators.multimodal import (
-        audio_envelope_fingerprint,
-        audio_envelope_pairs,
-        encode_wav,
-    )
-
-    docs = (
-        load(spark, sf_dir, "documents").select("doc_id").orderBy("doc_id").limit(48)
-    )
-
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g = did % 12
-                # amplitude and rate vary ACROSS a group's replicas
-                # (did // 12), never with the group id itself — so
-                # every group contains gain-adjusted and re-rated
-                # copies of the same waveform
-                s = 1 + (did // 12) % 2
-                rate = 8000 + ((did // 12) % 3) * 4000
-                i = np.arange(256, dtype=np.int64)
-                # per-band amplitude pattern keyed by the signal group
-                # (7 is invertible mod 12, so all 12 groups get
-                # DISTINCT envelope shapes); the carrier sawtooth is
-                # shared. Samples stay even so the s=2 copy is an
-                # exact bit-derivable halving.
-                amp = 1 + ((g * 7 + (i // 16) * 5) % 12)
-                base = amp * (2 * (((i * 17) % 128) - 64))
-                v = base // s  # exact: base is even, s in {1, 2}
-                rows.append(
-                    {
-                        "media_id": did,
-                        "payload": encode_wav(v.reshape(256, 1), rate),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, schema="media_id long, payload binary")
+    media = _payloads(spark, sf_dir, 48, _envelope_clip)
     fps = fence(audio_envelope_fingerprint(media, n_bands=64))
     pairs = audio_envelope_pairs(fps, hot_bucket_cap=8)
     ra = fps.select(

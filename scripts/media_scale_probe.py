@@ -25,29 +25,16 @@ def _media(spark, n_rows: int, kind: str):
     ids = spark.range(0, n_rows, 1, 32).select(F.col("id").alias("doc_id"))
 
     def synth(batches):
-        import numpy as np
         import pandas as pd
 
-        from etl_weather_spark.operators.multimodal import encode_png, encode_wav
+        from etl_weather_spark.queries.media import pcm_stream, png_grid
 
+        payload_of = png_grid if kind == "png" else pcm_stream
         for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if kind == "png":
-                    w, h = 16 + did % 17, 16 + did % 13
-                    v = ((did * 7 + np.arange(w * h * 3, dtype=np.int64) * 13) % 256).astype(
-                        np.uint8
-                    )
-                    payload = encode_png(v.reshape(h, w, 3), filter_types=[y % 5 for y in range(h)])
-                else:
-                    n_frames = 200 + did % 100
-                    n_ch = 1 + did % 2
-                    rate = 8000 + (did % 3) * 4000
-                    v = ((did * 31 + np.arange(n_frames * n_ch, dtype=np.int64) * 17) % 65536) - 32768
-                    payload = encode_wav(v.reshape(n_frames, n_ch), rate)
-                rows.append({"media_id": did, "payload": payload})
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+            yield pd.DataFrame(
+                [(int(did), payload_of(int(did))) for did in pdf["doc_id"]],
+                columns=["media_id", "payload"],
+            )
 
     return ids.mapInPandas(synth, schema="media_id long, payload binary")
 

@@ -122,8 +122,19 @@ def test_empty_and_tiny_inputs_round5_wave2_ops(spark):
 
 
 def test_empty_through_skew_profile_and_audio_fp(spark):
+    import numpy as np
+
     from etl_weather_spark.operators.multimodal import (
+        area_resized_pixel_stats,
         audio_envelope_fingerprint,
+        audio_stats,
+        decimated_audio_stats,
+        encode_png,
+        encode_wav,
+        image_dhash,
+        pixel_stats,
+        resampled_audio_stats,
+        resized_pixel_stats,
     )
     from etl_weather_spark.operators.skew import key_skew_profile
 
@@ -140,3 +151,38 @@ def test_empty_through_skew_profile_and_audio_fp(spark):
         [(1, bytearray(b"not a wav"))], "media_id long, payload binary"
     )
     assert audio_envelope_fingerprint(junk).count() == 0
+
+    # a null payload, junk bytes, a valid WAV with an empty data chunk
+    # and a valid PNG of height 0 (width 18 fits dHash's 8 x 9 grid):
+    # every media stage drops each row, none fails the job
+    bad = spark.createDataFrame(
+        [
+            (2, None),
+            (3, bytearray(b"junk")),
+            (4, bytearray(encode_wav(np.zeros((0, 1), np.int64), 8000))),
+            (5, bytearray(encode_png(np.zeros((0, 18, 3), np.uint8)))),
+        ],
+        "media_id long, payload binary",
+    )
+    stages = {
+        "pixel_stats": pixel_stats,
+        "resized_pixel_stats": resized_pixel_stats,
+        "area_resized_pixel_stats": lambda m: area_resized_pixel_stats(m, 7, 10),
+        "audio_stats": audio_stats,
+        "decimated_audio_stats": decimated_audio_stats,
+        "resampled_audio_stats": lambda m: resampled_audio_stats(m, 6000),
+        "image_dhash": image_dhash,
+    }
+    for name, stage in stages.items():
+        assert stage(bad).collect() == [], name
+    # the envelope keeps a decodable clip visible with a NULL fp, and a
+    # full 63-bit fp in the same Arrow batch keeps every bit (band k of
+    # the loud clip holds amplitude k + 1, so every delta bit is set)
+    loud = np.repeat(np.arange(1, 65, dtype=np.int64), 4).reshape(256, 1)
+    clips = bad.union(
+        spark.createDataFrame(
+            [(6, bytearray(encode_wav(loud, 8000)))], "media_id long, payload binary"
+        )
+    ).coalesce(1)
+    got = sorted(tuple(r) for r in audio_envelope_fingerprint(clips).collect())
+    assert got == [(4, 0, 8000, None), (6, 256, 8000, 2**63 - 1)]

@@ -41,6 +41,26 @@ def test_audio_envelope_default_is_63_bit(spark):
     assert audio_envelope_fingerprint(df2).collect()[0]["fp"] == fp
 
 
+def test_envelope_bits_match_per_band_loop():
+    """The vectorized delta-sign packing of ``_envelope`` equals the
+    per-band loop: bit k set iff band k+1 holds more |PCM| energy than
+    band k, tail frames that do not fill a band dropped."""
+    from etl_weather_spark.operators.multimodal import _envelope
+
+    rng = np.random.RandomState(3)
+    for n_bands in (2, 16, 64):
+        for n in (n_bands, 3 * n_bands + 5, 1000):
+            s = rng.randint(-32768, 32768, size=(n, 2)).astype(np.int32)
+            mono = np.abs(s.astype(np.int64)).sum(axis=1)
+            bl = n // n_bands
+            e = [int(mono[k * bl : (k + 1) * bl].sum()) for k in range(n_bands)]
+            fp = 0
+            for k in range(n_bands - 1):
+                if e[k + 1] > e[k]:
+                    fp |= 1 << k
+            assert _envelope(s, 8000, n_bands) == (n, 8000, fp)
+
+
 def test_audio_envelope_nbands_guard(spark):
     df = spark.createDataFrame([], "media_id long, payload binary")
     with pytest.raises(ValueError, match="n_bands"):

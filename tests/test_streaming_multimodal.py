@@ -528,25 +528,30 @@ def test_streaming_sliding_window_matches_batch(spark, tmp_path):
     assert got == exp and len(got) >= 6  # every event in exactly 2 windows
 
 
-def test_arrow_and_pandas_feature_paths_agree(spark):
-    from etl_weather_spark.operators.multimodal import (
-        extract_features,
-        extract_features_arrow,
-    )
+def test_media_map_stages_are_spelled_once():
+    """Every decode → conform → summary operator of
+    ``operators/multimodal.py`` runs through ``_media_kernel`` and every
+    payload fixture of ``queries/media.py`` through ``_payloads``: no
+    other function there calls ``mapInPandas``/``mapInArrow``.
+    ``extract_features`` keeps its own pass (one row per payload, decode
+    errors included)."""
+    import ast
+    import pathlib
 
-    rows = [
-        (1, "image", b"\x89PNG fake bytes", ("image/png", 4, 4, None, None)),
-        (2, "audio", b"RIFF fake wav", ("audio/wav", None, None, 2500, 16000)),
-        (4, "image", None, ("image/png", 1, 1, None, None)),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    via_pandas = {r.media_id: r for r in extract_features(media).collect()}
-    via_arrow = {r.media_id: r for r in extract_features_arrow(media).collect()}
-    assert set(via_pandas) == set(via_arrow)
-    for k in via_pandas:
-        assert via_pandas[k].n_bytes == via_arrow[k].n_bytes
-        assert via_pandas[k].content_sha == via_arrow[k].content_sha
-        assert via_pandas[k].feature == via_arrow[k].feature
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "etl_weather_spark"
+
+    def callers(rel: str) -> list[str]:
+        return sorted(
+            getattr(top, "name", "<module>")
+            for top in ast.parse((pkg / rel).read_text()).body
+            for node in ast.walk(top)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("mapInPandas", "mapInArrow")
+        )
+
+    assert callers("operators/multimodal.py") == ["_media_kernel", "extract_features"]
+    assert callers("queries/media.py") == ["_payloads"]
 
 
 def test_dhash_bits_matches_naive_loop():
