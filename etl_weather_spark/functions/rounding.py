@@ -34,7 +34,8 @@ def r2(col: Column) -> Column:
 
 
 def sql_round(expr: str, decimals: int = 2) -> str:
-    """The identical rounding as a SQL text fragment for oracle queries."""
+    """The identical rounding as a SQL text fragment, for oracle queries
+    and Spark ``selectExpr``/``F.expr`` builders alike."""
     scale = 10 ** decimals
     return f"FLOOR(({expr}) * {scale} + 0.5) / {scale}"
 
@@ -105,3 +106,13 @@ def sql_dsum(expr: str, scale: int = 2) -> str:
 
 def sql_davg(expr: str) -> str:
     return f"({sql_dsum(expr)} / COUNT({expr}))"
+
+
+def spark_dsum(expr: str, over: str) -> str:
+    """:func:`dsum` at scale 2 as Spark SQL text (the same plan at a few
+    py4j round trips); ``over`` is a window clause or ``""``."""
+    return f"CAST(SUM(CAST(CAST(FLOOR(({expr}) * 100 + 0.5D) AS BIGINT) AS DECIMAL(28,0))) {over} AS DOUBLE) / 100"
+
+
+def spark_davg(expr: str, over: str) -> str:
+    return f"{spark_dsum(expr, over)} / COUNT({expr}) {over}"

@@ -87,16 +87,16 @@ def widen_narrow_input(df: DataFrame, *cols: str) -> DataFrame:
 
 
 def exploded_shingles(
-    docs: DataFrame, *, text_col: str, keep_cols: list[str], n: int = 2
+    docs: DataFrame, *, keep_cols: list[str], n: int = 2
 ) -> DataFrame:
-    """(keep_cols..., sh) — one row per distinct shingle per doc.
+    """(keep_cols..., sh) — one row per distinct shingle of ``text`` per doc.
 
     Tokenizes in its OWN projection so the Generate consumes a bound
     array column: without the boundary, Catalyst inlines the
     regex+split into the shingle lambda and re-runs it per element.
     """
     docs = widen_narrow_input(docs, *keep_cols)
-    toked = docs.select(*keep_cols, tokens(F.col(text_col)).alias("__toks"))
+    toked = docs.select(*keep_cols, tokens(F.col("text")).alias("__toks"))
     return toked.select(
         *keep_cols,
         F.explode(F.array_distinct(shingles_of_tokens(F.col("__toks"), n))).alias("sh"),
@@ -126,7 +126,7 @@ def minhash_signatures(
     map-side-partially. At 100 TB, H mins per doc ≈ H*8 bytes/doc state.
     """
     sh = exploded_shingles(
-        docs, text_col="text", keep_cols=["doc_id"], n=shingle_n
+        docs, keep_cols=["doc_id"], n=shingle_n
     )
     aggs = [
         F.min(_hash_expr(F.col("sh"), i, hash_family)).alias(f"s{i}")
@@ -268,7 +268,7 @@ def minhash_lsh_cross_pairs(
             new_docs.select(F.col("doc_id"), F.col("text")).withColumn("__side", F.lit(1))
         )
     )
-    sh = exploded_shingles(tagged, text_col="text", keep_cols=["doc_id", "__side"], n=2)
+    sh = exploded_shingles(tagged, keep_cols=["doc_id", "__side"], n=2)
     aggs = [
         F.min(_hash_expr(F.col("sh"), i, "xxhash64")).alias(f"s{i}")
         for i in range(16)
@@ -865,7 +865,7 @@ def _verify_candidates(
         )
         shingled = exploded_shingles(
             docs.join(cand_ids, "doc_id", "left_semi"),
-            text_col="text", keep_cols=["doc_id"], n=3,
+            keep_cols=["doc_id"], n=3,
         )
         with persisted(shingled) as sh:
             sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -989,7 +989,7 @@ def ngram_jaccard_pairs(docs: DataFrame, *, min_jaccard: float = 0.0) -> DataFra
     union size from per-doc distinct counts (|A|+|B|−|A∩B|). Pairs with
     zero shared shingles never materialize. Shingles are word 3-grams.
     """
-    sh = exploded_shingles(docs, text_col="text", keep_cols=["doc_id"], n=3)
+    sh = exploded_shingles(docs, keep_cols=["doc_id"], n=3)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
     a = sh.select(F.col("doc_id").alias("id_a"), "sh")

@@ -121,20 +121,21 @@ def cosine_topk_bruteforce(
     return topk_per_group(scored, group_col="query_id", k=k)
 
 
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic hyperplane normals for sign-LSH (public numpy RNG)."""
+def random_hyperplanes(seed: int) -> list[list[float]]:
+    """Deterministic normals of 6 hyperplanes in 64 dimensions for
+    sign-LSH (public numpy RNG)."""
     rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).tolist()
+    return rng.standard_normal((6, 64)).tolist()
 
 
-def _buckets_udf(tables: list[list[list[float]]], n_planes: int):
+def _buckets_udf(tables: list[list[list[float]]]):
     """All tables' sign-LSH bucket ids in one Arrow-batched matmul:
     vec → array<int> of length n_tables (bucket per table). Bit i of a
     table's bucket = sign(vec · plane_i)."""
     from pyspark.sql.functions import pandas_udf
 
     m = np.concatenate([np.asarray(t, dtype=np.float64) for t in tables], axis=0).T
-    n_tables = len(tables)
+    n_tables, n_planes = len(tables), len(tables[0])
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @pandas_udf("array<int>")
@@ -168,8 +169,7 @@ def cosine_topk_lsh(
     order functions don't codegen), costing 17 s at 5k vectors × 24
     tables; the matmul does the identical signs in milliseconds.
     """
-    tables = [random_hyperplanes(64, 6, 42 + t) for t in range(n_tables)]
-    buckets = _buckets_udf(tables, 6)
+    buckets = _buckets_udf([random_hyperplanes(42 + t) for t in range(n_tables)])
 
     def bucketed(df: DataFrame, out_id: str) -> DataFrame:
         v = as_double_array(F.col("embedding"))

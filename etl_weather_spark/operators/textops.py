@@ -406,7 +406,7 @@ def shared_shingle_fraction(docs: DataFrame) -> DataFrame:
     """
     from etl_weather_spark.operators.dedup import exploded_shingles
 
-    sh = exploded_shingles(docs, text_col="text", keep_cols=["doc_id"], n=3)
+    sh = exploded_shingles(docs, keep_cols=["doc_id"], n=3)
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
     joined = sh.join(dfreq, "sh")
     out = joined.groupBy("doc_id").agg(

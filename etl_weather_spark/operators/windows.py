@@ -1,6 +1,9 @@
 """Window/analytic operators (reference parity: W1-W4, A6, A8).
 
-Scale notes: an unpartitioned ``Window.orderBy`` collapses to a single
+Every operator is one ``selectExpr`` of SQL window text: the Column
+API's plan at a few py4j round trips.
+
+Scale notes: an unpartitioned ``OVER (ORDER BY ...)`` collapses to a single
 task — fine for one city's 16-day series, catastrophic at 100 TB.
 ``trailing_mean`` and ``pct_diff_vs_next`` order one such series (by
 ``date`` / ``rank``) in a single window; ``centered_mean`` partitions by
@@ -9,49 +12,24 @@ task — fine for one city's 16-day series, catastrophic at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, WindowSpec
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from etl_weather_spark.functions.rounding import rnd
-
-
-def _frame_avg(value_col: str, frame, exact_scale: int | None):
-    """avg over a window frame; with exact_scale, decimal-sum / count —
-    order-independent and bitwise-reproducible across engines (see
-    functions/rounding.py)."""
-    if exact_scale is None:
-        return F.avg(value_col).over(frame)
-    # scaled-long decimal accumulation: same value, compact-decimal fast
-    # path (see functions/rounding.dsum)
-    sc = 10 ** exact_scale
-    scaled = F.floor(F.col(value_col) * sc + F.lit(0.5)).cast("long").cast("decimal(28,0)")
-    s = F.sum(scaled).over(frame).cast("double") / sc
-    return s / F.count(value_col).over(frame)
+from etl_weather_spark.functions.rounding import spark_davg, sql_round
 
 
-def _spec(partition_by: list[str], order_by: str) -> WindowSpec:
-    w = Window.partitionBy(*partition_by) if partition_by else Window.partitionBy()
-    return w.orderBy(order_by)
-
-
-def trailing_mean(
-    df: DataFrame,
-    value_col: str,
-    out_col: str,
-    *,
-    exact_scale: int | None = None,
-) -> DataFrame:
+def trailing_mean(df: DataFrame, value_col: str, out_col: str) -> DataFrame:
     """7-row trailing moving average over ``date`` with pandas
-    ``rolling(7).mean()`` parity.
+    ``rolling(7).mean()`` parity, decimal-accumulated at scale 2
+    (order-independent and bitwise-reproducible across engines; see
+    functions/rounding.py).
 
     Reference viz.py:77 uses pandas' default ``min_periods=window`` —
     the first 6 rows yield null. Spark's ``rowsBetween`` averages
     partial frames, so we gate on the frame row count (SURVEY.md §7.3).
     """
-    frame = _spec([], "date").rowsBetween(-6, 0)
-    avg = _frame_avg(value_col, frame, exact_scale)
-    cnt = F.count(value_col).over(frame)
-    return df.withColumn(out_col, F.when(cnt >= 7, rnd(avg, 2)))
+    over = "OVER (ORDER BY date ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)"
+    avg = sql_round(spark_davg(value_col, over))
+    return df.selectExpr("*", f"CASE WHEN count({value_col}) {over} >= 7 THEN {avg} END AS {out_col}")
 
 
 def centered_mean(df: DataFrame, value_col: str, out_col: str) -> DataFrame:
@@ -61,35 +39,24 @@ def centered_mean(df: DataFrame, value_col: str, out_col: str) -> DataFrame:
     The JS version averages whatever neighbors exist (edges use partial
     windows), so no min_periods gate here.
     """
-    frame = _spec(["event_type"], "date").rowsBetween(-1, 1)
-    return df.withColumn(out_col, rnd(_frame_avg(value_col, frame, 2), 2))
+    over = "OVER (PARTITION BY event_type ORDER BY date ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING)"
+    return df.selectExpr("*", f"{sql_round(spark_davg(value_col, over))} AS {out_col}")
 
 
-def minmax_normalize(
-    df: DataFrame,
-    value_col: str,
-    out_col: str,
-    *,
-    partition_by: list[str],
-) -> DataFrame:
-    """Per-group min-max normalization, zero-range guarded to 1.
+def minmax_normalize(df: DataFrame, value_col: str, out_col: str) -> DataFrame:
+    """Per-``event_type`` min-max normalization, zero-range guarded to 1.
 
     Reference app.js:851-857: ``(v - min)/(max - min)``, and if
     max == min every value maps to 1.
     """
-    w = Window.partitionBy(*partition_by)
-    mn = F.min(value_col).over(w)
-    mx = F.max(value_col).over(w)
-    norm = F.when(mx == mn, F.lit(1.0)).otherwise((F.col(value_col) - mn) / (mx - mn))
-    return df.withColumn(out_col, rnd(norm, 4))
+    mn, mx = (f"{f}({value_col}) OVER (PARTITION BY event_type)" for f in ("min", "max"))
+    norm = f"CASE WHEN {mx} = {mn} THEN 1.0D ELSE ({value_col} - {mn}) / ({mx} - {mn}) END"
+    return df.selectExpr("*", f"{sql_round(norm, 4)} AS {out_col}")
 
 
 def pct_diff_vs_next(df: DataFrame, value_col: str) -> DataFrame:
     """``pct_diff_vs_next``: % difference of each row vs the next row by
     ``rank`` (reference app.js:975-979)."""
-    w = Window.partitionBy().orderBy("rank")
-    nxt = F.lead(value_col).over(w)
-    return df.withColumn(
-        "pct_diff_vs_next",
-        rnd((F.col(value_col) - nxt) / F.abs(nxt) * 100.0, 1),
-    )
+    nxt = f"lead({value_col}) OVER (ORDER BY `rank`)"
+    diff = f"({value_col} - {nxt}) / abs({nxt}) * 100.0D"
+    return df.selectExpr("*", f"{sql_round(diff, 1)} AS pct_diff_vs_next")

@@ -6,9 +6,11 @@ imports changed.
 """
 
 from __future__ import annotations
+import os
+import stat
 from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType, TimestampNTZType
 
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -103,6 +105,35 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
     return deco
 
+_SCHEMAS: dict[tuple, StructType] = {}  # (path, file identity) -> schema; see load
+
+
+def _identity(path: str) -> tuple:
+    """What changes when a table is rewritten: (mtime_ns, size, inode) of
+    a file, the sorted (name, mtime_ns, size) of a directory's entries."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_mtime_ns, st.st_size, st.st_ino)
+    return tuple(sorted(
+        (e.name, e.stat().st_mtime_ns, e.stat().st_size) for e in os.scandir(path)
+    ))
+
+
+def _normalized(table: str, f: StructField) -> str:
+    """One column of :func:`load`'s projection as SQL text. events.ts is
+    TIMESTAMP(NANOS), read as long nanos (nanosAsLong): it becomes µs
+    timestamps, truncated like DuckDB's parquet reader (integer div:
+    ts/1000 in double would lose µs precision past 2^53). Tz-naive
+    TIMESTAMP_NTZ columns (Spark 4's inferTimestampNTZ default) become
+    session-tz TIMESTAMP (UTC), so epoch arithmetic (cast to double) stays
+    legal and the values match DuckDB's naive-as-UTC reading."""
+    if table == "events" and f.name == "ts" and isinstance(f.dataType, LongType):
+        return "timestamp_micros(ts div 1000) AS ts"
+    if isinstance(f.dataType, TimestampNTZType):
+        return f"CAST(`{f.name}` AS TIMESTAMP) AS `{f.name}`"
+    return f"`{f.name}`"
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read one synthetic table, normalizing timestamps for oracle parity.
 
@@ -112,28 +143,37 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     timestamps match DuckDB's naive-as-UTC reading regardless of the
     driver session's default timezone — unconditional, so behavior never
     depends on which table loads first.
+
+    Schema memo: inferring a parquet schema runs a Spark job, so only a
+    table's first load infers it; later loads pass the remembered
+    ``StructType`` to the reader. The key is (path, :func:`_identity`):
+    a table rewritten at the same path is inferred again, and a path
+    ``os.stat`` cannot see (remote, missing) is never memoized, so Spark
+    raises its own error. Entries live for the process and hold only
+    ``StructType``\\ s, no data, JVM handle or CacheManager entry: nothing
+    persisted outlives the call. The key leaves out Spark's parquet
+    inference settings, which no caller changes.
     """
     # runtime-settable; required so a caller-provided session (the
     # driver's) can read TIMESTAMP(NANOS) parquet (events.ts) at all
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-    # events.ts is TIMESTAMP(NANOS) in the source parquet; Spark reads it
-    # as long nanos (see session.py nanosAsLong) — convert to µs
-    # timestamps, truncating exactly like DuckDB's parquet reader does.
-    from pyspark.sql import types as T
-
-    if table == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
-        # integer div — ts/1000 in double would lose µs precision
-        # (int64 nanos exceed double's 53-bit mantissa)
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # tz-naive parquet timestamps surface as TIMESTAMP_NTZ under Spark 4's
-    # inferTimestampNTZ default; normalize to session-tz TIMESTAMP (UTC)
-    # so epoch arithmetic (cast to double) stays legal everywhere and the
-    # values match DuckDB's naive-as-UTC reading.
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, T.TimestampNTZType)]
-    if ntz:
-        df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
+    path = f"{sf_dir}/{table}.parquet"
+    try:
+        key = (path, _identity(path))
+    except OSError:
+        key = None
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if key is not None:
+            _SCHEMAS[key] = schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    cols = [_normalized(table, f) for f in schema.fields]
+    if cols != [f"`{f.name}`" for f in schema.fields]:
+        df = df.selectExpr(*cols)
     return df
 
 # The driver's correctness gate samples the registry head (observed: the

@@ -1011,8 +1011,8 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     train = docs.filter(F.col("doc_id") % 50 != 0)
-    bsh = exploded_shingles(bench, text_col="text", keep_cols=["doc_id"], n=5)
-    tsh = exploded_shingles(train, text_col="text", keep_cols=["doc_id"], n=5)
+    bsh = exploded_shingles(bench, keep_cols=["doc_id"], n=5)
+    tsh = exploded_shingles(train, keep_cols=["doc_id"], n=5)
     hits = tsh.join(
         F.broadcast(bsh.withColumnRenamed("doc_id", "bench_doc_id")), "sh"
     )
@@ -1891,7 +1891,7 @@ def corpus_resemblance_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # versions, where two scans are the semantics)
     docs = load(spark, sf_dir, "documents")
     half = (
-        exploded_shingles(docs, text_col="text", keep_cols=["doc_id"], n=3)
+        exploded_shingles(docs, keep_cols=["doc_id"], n=3)
         .select((F.col("doc_id") % 2).cast("int").alias("h"), "sh")
         .distinct()
     )
@@ -1908,7 +1908,7 @@ def corpus_resemblance_core(a: DataFrame, b: DataFrame) -> DataFrame:
 
     def shingles(df: DataFrame, h: int) -> DataFrame:
         return exploded_shingles(
-            df, text_col="text", keep_cols=[], n=3
+            df, keep_cols=[], n=3
         ).select(F.lit(h).alias("h"), "sh")
 
     half = shingles(a, 0).unionByName(shingles(b, 1)).distinct()

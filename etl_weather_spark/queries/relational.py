@@ -21,6 +21,8 @@ from etl_weather_spark.functions.rounding import (
     davg,
     dsum,
     rnd,
+    spark_davg,
+    spark_dsum,
     sql_davg,
     sql_dsum,
     sql_round,
@@ -37,6 +39,25 @@ from etl_weather_spark.operators.windows import (
 from etl_weather_spark.queries._registry import load, query
 
 
+#: the exact 2-dp average of events.value, Spark SQL text
+_VALUE_AVG = sql_round(spark_davg("value", ""))
+
+#: the daily table's aggregates of events.value, Spark SQL text; the
+#: streaming daily (streaming/daily_stream.py) groups the same ones
+DAILY_AGGS = (
+    f"{sql_round('min(value)')} AS vmin",
+    f"{sql_round('max(value)')} AS vmax",
+    sql_round("coalesce(" + spark_dsum("value", "") + ", 0.0D)") + " AS vsum",
+    f"{_VALUE_AVG} AS vavg",
+    "count(1) AS n",
+)
+
+
+def _events_by(ev: DataFrame, keep: str, key: str, *aggs: str) -> DataFrame:
+    """``aggs`` per ``key`` over the events rows ``keep`` keeps (SQL text)."""
+    return ev.filter(keep).groupBy(F.expr(key)).agg(*map(F.expr, aggs))
+
+
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared daily aggregate over events: the weather daily-table analog.
 
@@ -44,16 +65,8 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     (date) per mapper. Timestamp→date is codegen'd; the parquet scan
     prunes to (ts, value).
     """
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.to_date("ts").alias("date"))
-        .agg(
-            rnd(F.min("value"), 2).alias("vmin"),
-            rnd(F.max("value"), 2).alias("vmax"),
-            rnd(F.coalesce(dsum("value"), F.lit(0.0)), 2).alias("vsum"),
-            rnd(davg("value"), 2).alias("vavg"),
-            F.count(F.lit(1)).alias("n"),
-        )
+    return load(spark, sf_dir, "events").groupBy(F.expr("to_date(ts) AS date")).agg(
+        *map(F.expr, DAILY_AGGS)
     )
 
 _DAILY_SQL = """
@@ -66,6 +79,9 @@ SELECT CAST(ts AS DATE) AS date,
 FROM events
 GROUP BY CAST(ts AS DATE)
 """
+
+#: A4 count_if rainy days over the daily table, Spark SQL text
+_RAINY_DAYS = "sum(CASE WHEN vsum > 0 THEN 1 ELSE 0 END)"
 
 @query("daily_agg", _DAILY_SQL)
 def daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,16 +139,9 @@ def hourly_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     coalesce post-shuffle partitions.
     """
     ev = load(spark, sf_dir, "events")
-    w = (
-        ev.filter(F.col("event_type").isin("view", "click"))
-        .groupBy(F.date_trunc("hour", "ts").alias("hour"))
-        .agg(rnd(davg("value"), 2).alias("wavg"), F.count(F.lit(1)).alias("wn"))
-    )
-    a = (
-        ev.filter(F.col("event_type").isin("error", "purchase"))
-        .groupBy(F.date_trunc("hour", "ts").alias("hour"))
-        .agg(rnd(davg("value"), 2).alias("aavg"), F.count(F.lit(1)).alias("an"))
-    )
+    hour = "date_trunc('hour', ts) AS hour"
+    w = _events_by(ev, "event_type IN ('view', 'click')", hour, f"{_VALUE_AVG} AS wavg", "count(1) AS wn")
+    a = _events_by(ev, "event_type IN ('error', 'purchase')", hour, f"{_VALUE_AVG} AS aavg", "count(1) AS an")
     return w.join(a, on="hour", how="outer")
 
 @query(
@@ -158,18 +167,18 @@ def global_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3-A5: grand aggregates, count_if, max_by argmax (report.py:81-106)."""
     d = _daily(spark, sf_dir)
     s = d.agg(
-        rnd(F.min("vmin"), 2).alias("period_min"),
-        rnd(F.max("vmax"), 2).alias("period_max"),
-        rnd(davg("vavg"), 2).alias("period_avg"),
-        F.sum(F.when(F.col("vsum") > 0, 1).otherwise(0)).alias("rainy_days"),
-        F.count(F.lit(1)).alias("n_days"),
+        F.expr(f"{sql_round('min(vmin)')} AS period_min"),
+        F.expr(f"{sql_round('max(vmax)')} AS period_max"),
+        F.expr(f"{sql_round(spark_davg('vavg', ''))} AS period_avg"),
+        F.expr(f"{_RAINY_DAYS} AS rainy_days"),
+        F.expr("count(1) AS n_days"),
     )
     # wettest day via deterministic top-1 (vsum desc, date) instead of
     # max_by, whose tie-breaking is engine-defined (A5 parity with a
     # total order; max_by itself is exercised in pipeline.summary_from_daily)
     w = (
-        d.select(F.col("date").alias("wettest_date"), F.col("vsum").alias("wettest_sum"))
-        .orderBy(F.col("wettest_sum").desc(), F.col("wettest_date"))
+        d.selectExpr("date AS wettest_date", "vsum AS wettest_sum")
+        .orderBy("wettest_sum", "wettest_date", ascending=[False, True])
         .limit(1)
     )
     return s.crossJoin(w)
@@ -196,11 +205,10 @@ FROM s
 )
 def recommendation_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3: threshold-triggered advice concat with default (report.py:28-49)."""
-    d = _daily(spark, sf_dir)
-    s = d.agg(
-        rnd(davg("vavg"), 2).alias("period_avg"),
-        rnd(F.max("vmax"), 2).alias("period_max"),
-        F.sum(F.when(F.col("vsum") > 0, 1).otherwise(0)).alias("rainy_days"),
+    s = _daily(spark, sf_dir).agg(
+        F.expr(f"{sql_round(spark_davg('vavg', ''))} AS period_avg"),
+        F.expr(f"{sql_round('max(vmax)')} AS period_max"),
+        F.expr(f"{_RAINY_DAYS} AS rainy_days"),
     )
     rec = recommendation("period_avg", "period_max", "rainy_days")
     return s.selectExpr("*", f"{rec} AS recommendation")
@@ -224,8 +232,13 @@ def rolling_avg_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the daily series is one row per day — tiny post-agg; on a
     per-city table this window is partitioned by city.
     """
-    d = _daily(spark, sf_dir).select("date", "vsum")
-    return trailing_mean(d, "vsum", "ma7", exact_scale=2)
+    return trailing_mean(_daily(spark, sf_dir).select("date", "vsum"), "vsum", "ma7")
+
+def _et_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per (event_type, date) exact average of events.value."""
+    return load(spark, sf_dir, "events").groupBy(
+        "event_type", F.expr("to_date(ts) AS date")
+    ).agg(F.expr(f"{_VALUE_AVG} AS vavg"))
 
 @query(
     "centered_ma3",
@@ -243,11 +256,7 @@ WINDOW win AS (PARTITION BY event_type ORDER BY date ROWS BETWEEN 1 PRECEDING AN
 )
 def centered_ma3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2: centered window=3 smoothing per series (app.js:859-872)."""
-    ev = load(spark, sf_dir, "events")
-    d = ev.groupBy(
-        "event_type", F.to_date("ts").alias("date")
-    ).agg(rnd(davg("value"), 2).alias("vavg"))
-    return centered_mean(d, "vavg", "ma3")
+    return centered_mean(_et_daily(spark, sf_dir), "vavg", "ma3")
 
 @query(
     "minmax_norm",
@@ -266,11 +275,7 @@ WINDOW w AS (PARTITION BY event_type)
 )
 def minmax_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3: per-group min-max normalization, zero-range→1 (app.js:851-857)."""
-    ev = load(spark, sf_dir, "events")
-    d = ev.groupBy(
-        "event_type", F.to_date("ts").alias("date")
-    ).agg(rnd(davg("value"), 2).alias("vavg"))
-    return minmax_normalize(d, "vavg", "vnorm", partition_by=["event_type"])
+    return minmax_normalize(_et_daily(spark, sf_dir), "vavg", "vnorm")
 
 @query(
     "rank_pct_diff",
@@ -294,14 +299,12 @@ def rank_pct_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ranking runs on the *aggregated* table (one row per key), so
     the unpartitioned window sees #keys rows, not raw data.
     """
-    ev = load(spark, sf_dir, "events")
-    s = ev.groupBy("event_type").agg(
-        rnd(davg("value"), 2).alias("avg_value"),
-        rnd(F.max("value"), 2).alias("max_value"),
+    s = load(spark, sf_dir, "events").groupBy("event_type").agg(
+        F.expr(f"{_VALUE_AVG} AS avg_value"),
+        F.expr(f"{sql_round('max(value)')} AS max_value"),
     )
     # deterministic tie-break on event_type to match the oracle exactly
-    w = Window.orderBy(F.col("avg_value").desc(), F.col("event_type"))
-    ranked = s.withColumn("rank", F.row_number().over(w))
+    ranked = s.selectExpr("*", "row_number() OVER (ORDER BY avg_value DESC, event_type) AS `rank`")
     return pct_diff_vs_next(ranked, "avg_value")
 
 @query(
@@ -319,7 +322,7 @@ def top5_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark plans TakeOrderedAndProject — no global sort materialization.
     """
     return _daily(spark, sf_dir).select("date", "vsum").orderBy(
-        F.col("vsum").desc(), F.col("date")
+        "vsum", "date", ascending=[False, True]
     ).limit(5)
 
 @query(
@@ -592,16 +595,9 @@ FROM dw LEFT JOIN da ON dw.date = da.date
 def daily_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: daily weather ⟕ daily air averages on date (web.py:506)."""
     ev = load(spark, sf_dir, "events")
-    dw = (
-        ev.filter(F.col("event_type").isin("view", "click"))
-        .groupBy(F.to_date("ts").alias("date"))
-        .agg(rnd(davg("value"), 2).alias("wavg"))
-    )
-    da = (
-        ev.filter(F.col("event_type") == "error")
-        .groupBy(F.to_date("ts").alias("date"))
-        .agg(rnd(davg("value"), 2).alias("aavg"))
-    )
+    day = "to_date(ts) AS date"
+    dw = _events_by(ev, "event_type IN ('view', 'click')", day, f"{_VALUE_AVG} AS wavg")
+    da = _events_by(ev, "event_type = 'error'", day, f"{_VALUE_AVG} AS aavg")
     return dw.join(da, on="date", how="left")
 
 @query(
@@ -805,10 +801,8 @@ def today_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: key lookup by date with first-row fallback (app.js:764-765;
     'today' parameterized to a fixed date for determinism)."""
     d = _daily(spark, sf_dir)
-    hit = d.filter(F.col("date") == F.lit("2024-01-15").cast("date")).withColumn(
-        "pref", F.lit(0)
-    )
-    fallback = d.orderBy("date").limit(1).withColumn("pref", F.lit(1))
+    hit = d.filter("date = CAST('2024-01-15' AS DATE)").selectExpr("*", "0 AS pref")
+    fallback = d.orderBy("date").limit(1).selectExpr("*", "1 AS pref")
     return (
         hit.unionByName(fallback)
         .orderBy("pref")

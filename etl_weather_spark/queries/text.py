@@ -338,7 +338,7 @@ def rare_bigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_weather_spark.operators.dedup import exploded_shingles
 
     docs = load(spark, sf_dir, "documents")
-    sh = exploded_shingles(docs, text_col="text", keep_cols=["doc_id"], n=2)
+    sh = exploded_shingles(docs, keep_cols=["doc_id"], n=2)
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     ratio = F.lit(10000.0) * F.col("n_unique_bigrams") / F.col("n_bigrams")
     return (

@@ -99,8 +99,8 @@ def corpus_prep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").alias("doc_id")
     )
     s4 = s3.join(drop4, "doc_id", "left_anti")
-    bsh = exploded_shingles(bench, text_col="text", keep_cols=[], n=5).select("sh").distinct()
-    tsh = exploded_shingles(s4, text_col="text", keep_cols=["doc_id"], n=5)
+    bsh = exploded_shingles(bench, keep_cols=[], n=5).select("sh").distinct()
+    tsh = exploded_shingles(s4, keep_cols=["doc_id"], n=5)
     contaminated = tsh.join(F.broadcast(bsh), "sh").select("doc_id").distinct()
     s5 = s4.join(contaminated, "doc_id", "left_anti")
 

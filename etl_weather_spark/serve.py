@@ -39,6 +39,12 @@ bounded per-key cache (M3, utils.py:62-92) — so a dashboard polling the
 same route doesn't re-run the job; ``refresh`` recomputes and
 re-populates.
 
+A recompute builds its query again: the served builders are SQL text
+(a few py4j round trips per stage, not ~10 per Column call) and
+``queries.load`` remembers each table's parquet schema, so no recompute
+runs a schema-inference job. Request values (``kinds``, ``q``, a
+province code) stay Column literals, never SQL text.
+
 Scale: one Spark driver can back many serving threads (ThreadingHTTP
 server; Spark sessions are thread-safe for read queries). For real
 deployments put the gold tables behind this process and size the cache
@@ -97,16 +103,13 @@ def default_geocode_dim(spark, sf_dir: str):
 
     n = q.load(spark, sf_dir, "nation")
     r = q.load(spark, sf_dir, "region")
-    return (
-        n.join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .select(
-            F.initcap(F.lower(F.col("n_name"))).alias("name"),
-            F.col("n_name").alias("country"),
-            F.initcap(F.lower(F.col("r_name"))).alias("admin1"),
-            (F.pmod(F.col("n_nationkey") * 7, F.lit(180)) - 90.0).alias("lat"),
-            (F.pmod(F.col("n_nationkey") * 29, F.lit(360)) - 180.0).alias("lon"),
-            F.lit("UTC").alias("timezone"),
-        )
+    return n.join(F.broadcast(r), F.expr("n_regionkey = r_regionkey")).selectExpr(
+        "initcap(lower(n_name)) AS name",
+        "n_name AS country",
+        "initcap(lower(r_name)) AS admin1",
+        "pmod(n_nationkey * 7, 180) - 90.0D AS lat",
+        "pmod(n_nationkey * 29, 360) - 180.0D AS lon",
+        "'UTC' AS timezone",
     )
 
 
@@ -154,8 +157,6 @@ class EngineAPI:
 
     # -- fun-fact enrichment (web.py /city/funfact) ----------------------
     def _compute_funfact(self, city: str) -> str:
-        from pyspark.sql import functions as F
-
         from etl_weather_spark.functions.enrich import enrich_batched
 
         one = self.spark.createDataFrame([(city,)], "city string")
@@ -320,14 +321,12 @@ class EngineAPI:
             def compute():
                 from pyspark.sql import functions as F
 
+                # the request's kinds stay Column literals, never SQL text
                 ev = self.q.load(self.spark, self.sf_dir, "events")
                 daily = (
                     ev.filter(F.col("event_type").isin(kinds))
-                    .groupBy(
-                        F.to_date("ts").alias("date"),
-                        F.col("event_type").alias("kind"),
-                    )
-                    .agg(F.count(F.lit(1)).alias("value"))
+                    .groupBy(F.expr("to_date(ts) AS date"), F.expr("event_type AS kind"))
+                    .agg(F.expr("count(1) AS value"))
                     .orderBy("date", "kind")
                 )
                 return records(daily, limit)
@@ -351,14 +350,9 @@ class EngineAPI:
             return 200, {"query": qstr, "count": len(results), "results": results}
         if path == "/provinces":
             def compute():
-                from pyspark.sql import functions as F
-
                 r = self.q.load(self.spark, self.sf_dir, "region")
                 return records(
-                    r.select(
-                        F.col("r_regionkey").alias("code"),
-                        F.initcap(F.lower("r_name")).alias("name"),
-                    ).orderBy("code")
+                    r.selectExpr("r_regionkey AS code", "initcap(lower(r_name)) AS name").orderBy("code")
                 )
 
             return 200, {"results": self._cached("provinces", compute, refresh)}
@@ -370,13 +364,11 @@ class EngineAPI:
             def compute():
                 from pyspark.sql import functions as F
 
+                # the request's code stays a Column literal, never SQL text
                 n = self.q.load(self.spark, self.sf_dir, "nation")
                 return records(
                     n.filter(F.col("n_regionkey") == int(code))
-                    .select(
-                        F.col("n_nationkey").alias("code"),
-                        F.initcap(F.lower("n_name")).alias("name"),
-                    )
+                    .selectExpr("n_nationkey AS code", "initcap(lower(n_name)) AS name")
                     .orderBy("code")
                 )
 

@@ -87,7 +87,7 @@ def process_corpus_batch(
         idx = snapshot_read(spark, accepted_table).select("fingerprint").distinct()
         s3 = s3.join(idx, "fingerprint", "left_anti")
 
-    tsh = exploded_shingles(s3, text_col="text", keep_cols=["doc_id"], n=shingle_n)
+    tsh = exploded_shingles(s3, keep_cols=["doc_id"], n=shingle_n)
     contaminated = (
         tsh.join(F.broadcast(bench_shingles.select("sh").distinct()), "sh")
         .select("doc_id")

@@ -20,8 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_weather_spark.functions.rounding import davg, dsum, rnd
-
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -53,16 +51,12 @@ def daily_stream_agg(events: DataFrame) -> DataFrame:
     Same aggregates (and the same decimal-exact accumulation) as
     queries._daily, keyed by the window start date.
     """
+    from etl_weather_spark.queries.relational import DAILY_AGGS
+
     return (
         events.withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day").alias("win"))
-        .agg(
-            rnd(F.min("value"), 2).alias("vmin"),
-            rnd(F.max("value"), 2).alias("vmax"),
-            rnd(F.coalesce(dsum("value"), F.lit(0.0)), 2).alias("vsum"),
-            rnd(davg("value"), 2).alias("vavg"),
-            F.count(F.lit(1)).alias("n"),
-        )
+        .agg(*map(F.expr, DAILY_AGGS))
         .select(F.to_date(F.col("win.start")).alias("date"), "vmin", "vmax", "vsum", "vavg", "n")
     )
 

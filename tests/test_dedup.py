@@ -833,7 +833,7 @@ def test_prefix_filter_candidates_complete_and_pruned(spark):
 
         # every doc shares the boilerplate shingles -> the naive join
         # proposes ~all pairs; the prefix index must propose fewer
-        naive_sh = exploded_shingles(docs, text_col="text", keep_cols=["doc_id"], n=3)
+        naive_sh = exploded_shingles(docs, keep_cols=["doc_id"], n=3)
         naive_pairs = (
             naive_sh.alias("a")
             .join(naive_sh.alias("b"), "sh")

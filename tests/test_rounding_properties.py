@@ -19,6 +19,9 @@ from decimal import Decimal
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
+from etl_weather_spark.functions.rounding import davg, dsum, spark_davg, spark_dsum
 
 
 @given(
@@ -60,3 +63,33 @@ def test_rnd_form_is_pure_ieee(x: float):
     a = math.floor(x * 100 + 0.5) / 100
     b = math.floor(x * 100 + 0.5) / 100
     assert a == b and not math.isnan(a)
+
+
+def test_spark_text_sum_matches_column_form_bitwise(spark):
+    """``spark_dsum``/``spark_davg`` (the SQL text the served builders
+    use) give the same bits as ``dsum``/``davg``, grouped and windowed,
+    on random 2-dp values with negatives and x.xx5 item boundaries."""
+    rng = random.Random(7)
+    vals = [rng.randint(-10**6, 10**6) / 100 for _ in range(600)]
+    vals += [k / 1000 for k in (5, -5, 15, -15, 1005, -1005, 2675, -2675, 99995)]
+    rows = [(i % 7, i, v) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "g int, i int, x double")
+    got = df.groupBy("g").agg(
+        dsum("x").alias("s"), davg("x").alias("a"),
+        F.expr(f"{spark_dsum('x', '')} AS ts"), F.expr(f"{spark_davg('x', '')} AS ta"),
+    ).collect()
+    assert len(got) == 7
+    for r in got:
+        assert (r.ts.hex(), r.ta.hex()) == (r.s.hex(), r.a.hex()), r
+
+    # windowed: the same scaled-integer sum, computed in Python
+    over = "OVER (PARTITION BY g ORDER BY i ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)"
+    win = df.selectExpr("g", "i", f"{spark_dsum('x', over)} AS ts", f"{spark_davg('x', over)} AS ta")
+    by_group: dict[int, list[float]] = {}
+    for g, _, v in rows:
+        by_group.setdefault(g, []).append(v)
+    for r in win.collect():
+        j = r.i // 7  # row i is the (i // 7)-th of group i % 7
+        frame = by_group[r.g][max(0, j - 2): j + 1]
+        total = float(sum(math.floor(v * 100 + 0.5) for v in frame)) / 100
+        assert (r.ts.hex(), r.ta.hex()) == (total.hex(), (total / len(frame)).hex()), r

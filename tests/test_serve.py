@@ -2,12 +2,17 @@
 
 from __future__ import annotations
 
+import gc
 import json
 import threading
 import urllib.request
+import uuid
 
 import pytest
+from py4j.clientserver import ClientServerConnection
+from pyspark.errors import AnalysisException
 
+from etl_weather_spark.queries import load, queries
 from etl_weather_spark.serve import make_server
 
 
@@ -261,3 +266,61 @@ def test_ai_status_reports_model_failure(server):
         assert "quota exceeded" in body["error"]
     finally:
         server.api._funfact_model = orig
+
+
+def _jobs_in_group(spark, fn):
+    """(fn(), number of Spark jobs fn ran on this thread)."""
+    sc = spark.sparkContext
+    group = f"serve-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_remembers_schema_per_table_identity(spark, tmp_path):
+    """Only the first load of a table infers its parquet schema (a Spark
+    job); a rewrite at the same path is a new table, and a missing table
+    still fails in Spark."""
+    sf = str(tmp_path)
+    path = f"{sf}/t.parquet"
+    spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(path)
+    _, first = _jobs_in_group(spark, lambda: load(spark, sf, "t"))
+    df, second = _jobs_in_group(spark, lambda: load(spark, sf, "t"))
+    assert first >= 1 and second == 0, (first, second)
+    assert df.collect() == [(1, "a")]
+    spark.createDataFrame([(2, "b", 0.5)], "k long, v string, w double").write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert load(spark, sf, "t").columns == ["k", "v", "w"]
+    with pytest.raises(AnalysisException):
+        load(spark, sf, "missing")
+
+
+@pytest.mark.parametrize("name", ["daily_flags", "rolling_avg_7d", "hourly_outer_join"])
+def test_served_build_round_trips(spark, sf_dir, name):
+    """A served recompute builds its query from SQL text: a few py4j
+    round trips per stage, not ~10 per Column call (about 520, 740 and
+    540 for these three when built from Column calls). Counts the calls
+    of this thread after one warm build; see
+    tests/test_weather_pipeline.py::test_spine_construction_round_trips."""
+    build = queries()[name]
+    build(spark, sf_dir)
+    sent = [0]
+    send = ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counting(self, command):
+        sent[0] += threading.get_ident() == me
+        return send(self, command)
+
+    gc.collect()
+    ClientServerConnection.send_command = counting
+    try:
+        build(spark, sf_dir)
+    finally:
+        ClientServerConnection.send_command = send
+    assert sent[0] <= 150, sent[0]

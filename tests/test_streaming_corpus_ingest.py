@@ -49,7 +49,7 @@ def corpus(spark, tmp_path):
     spark.createDataFrame(b0, schema).coalesce(1).write.parquet(str(src / "b0"))
     spark.createDataFrame(b1, schema).coalesce(1).write.parquet(str(src / "b1"))
     bench = spark.createDataFrame([(5, bench_text)], "doc_id long, text string")
-    bench_sh = exploded_shingles(bench, text_col="text", keep_cols=[], n=5)
+    bench_sh = exploded_shingles(bench, keep_cols=[], n=5)
     return str(src), bench_sh
 
 
@@ -104,7 +104,7 @@ def test_stream_funnel_matches_batch_and_replays_safely(spark, tmp_path, corpus)
     fp = s2.select("doc_id", doc_fingerprint(F.col("text")).alias("fingerprint"))
     keep = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("doc_id"))
     s3 = s2.join(keep.select("doc_id"), "doc_id")
-    tsh = exploded_shingles(s3, text_col="text", keep_cols=["doc_id"], n=5)
+    tsh = exploded_shingles(s3, keep_cols=["doc_id"], n=5)
     bad = tsh.join(F.broadcast(bench_sh.select("sh").distinct()), "sh").select("doc_id").distinct()
     batch_ids = {
         r.doc_id for r in s3.join(bad, "doc_id", "left_anti").collect()
